@@ -1,5 +1,5 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the usable core count).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -16,50 +16,72 @@ pandas UDFs, dedup exact + MinHash-LSH, vector search brute-force +
 LSH/IVF, text analysis, multimodal) plus every cheap contract/IO shape.
 Nothing is excluded: n_queries in the output always equals the registry
 size, so a regression in any registered query is visible per-round.
+
+BENCH_DETAIL.json splits each query's time into build (the query
+function call: Python plan construction, Catalyst analysis and any eager
+checkpoints) and exec (the noop write).
+
+Options (this is the repo's only query-timing loop):
+  --only NAME ...  time just these registry queries (A/B work); the
+                   full-registry BENCH_DETAIL.json is left untouched
+  --plans TAG      write each timed query's explain("formatted") to
+                   plans/<TAG>/<query>.txt
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--only", nargs="+", metavar="NAME")
+    ap.add_argument("--plans", metavar="TAG")
+    args = ap.parse_args()
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from compile_time_data_contracts_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config(
-            "spark.cleaner.referenceTracking.cleanCheckpoints", "true"
-        )  # GC-reclaim per-call checkpoint files during long runs
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-bench",
+        **{
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "64MB",
+            "spark.driver.memory": os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", "16g"
+            ),
+            # GC-reclaim per-call checkpoint files during long runs
+            "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
     # The headline set is STRUCTURAL: every queries() registry entry is
     # benchmarked — no silent exclusions (the no-silent-caps rule
     # applies to the bench itself), so n_queries in the output always
     # equals the registry size and a new query can never be silently
-    # missing from BENCH_r{N}.json.
+    # missing from BENCH_r{N}.json.  --only narrows it for A/B work,
+    # and such a run never overwrites the full-registry detail file.
     headline = sorted(qs)
+    if args.only:
+        unknown = sorted(set(args.only) - set(qs))
+        if unknown:
+            raise SystemExit(f"unknown queries: {unknown}")
+        headline = list(dict.fromkeys(args.only))
+    plan_dir = None
+    if args.plans:
+        plan_dir = os.path.join(ROOT, "plans", args.plans)
+        os.makedirs(plan_dir, exist_ok=True)
 
     # Warm-up protocol (mirrors the reference benchmark's warmup+measured
     # batches, benchmarks/run-benchmarks.sh): one untimed run of every
@@ -90,26 +112,19 @@ def main() -> None:
     # instead of every sample of one query.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     samples: dict[str, list[float]] = {name: [] for name in headline}
+    # (build, exec) seconds per pass, same order as samples
+    phases: dict[str, list[tuple[float, float]]] = {
+        name: [] for name in headline
+    }
     errors: dict[str, str] = {}
     # Host-noise self-diagnosis: each pass opens with a FIXED synthetic
-    # probe (sum over range(10^8) — pure CPU, no IO, identical plan every
-    # time).  Its per-pass wall time is a query-independent contention
-    # meter: a loaded host slows the probe and the queries together, so
-    # a run can label itself noisy in the artifact instead of requiring
-    # forensic cross-round comparison (round 9's driver artifact flagged
-    # a phantom q84 regression that was exactly this).
+    # JVM probe (sum over range(10^8) — pure CPU, no IO, identical plan
+    # every time), recorded for information only (see noise_flag).
     probe_sec: list[float] = []
-    # Aging-free contention meter (r11): the JVM probe ratio conflates
-    # host contention with JVM session aging (an IDLE host ages the
-    # 10^8-row sum ~2-4x across passes — r10's round-close run read
-    # probe_ratio 2.3 while genuinely quiet), which is why the ratio
-    # branch needed a hand-calibrated absolute floor that then silently
-    # suppressed a REAL contention flag in the r10 driver run
-    # (probe 0.13→0.36 s, 11 noisy queries, no flag).  A fixed
-    # pure-Python busy loop has no JVM state to age: its per-pass time
-    # moves ONLY with CPU contention, so its max/min ratio needs no
-    # host-specific floor at all.  min-of-2 per pass kills one-off
-    # scheduler jitter.
+    # Aging-free contention meter (r11): a fixed pure-Python busy loop
+    # has no JVM state to age, so its per-pass time moves ONLY with CPU
+    # contention and its max/min ratio needs no host-specific floor.
+    # min-of-2 per pass kills one-off scheduler jitter.
     def _py_busy() -> float:
         best = float("inf")
         for _ in range(2):
@@ -122,8 +137,7 @@ def main() -> None:
 
     busy_sec: list[float] = []
     # one UNRECORDED warm-up of the probe plan: pass 1 would otherwise
-    # carry its codegen/JIT compile and read as 2x+ the later passes,
-    # tripping the probe_ratio threshold on a perfectly quiet host
+    # carry its codegen/JIT compile and read as 2x+ the later passes
     spark.range(100_000_000).selectExpr("sum(id)").collect()
     _py_busy()  # warm the loop's bytecode/allocator path the same way
     for _ in range(repeats):
@@ -133,10 +147,12 @@ def main() -> None:
         probe_sec.append(round(time.time() - t0, 3))
         for name in headline:
             fn = qs[name]
-            t0 = time.time()
+            t0 = time.perf_counter()
             try:
                 df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
                 df.write.mode("overwrite").format("noop").save()
+                t2 = time.perf_counter()
             except Exception as ex:  # noqa: BLE001
                 # one failing query must not abort the whole bench and
                 # discard every completed sample: record the failure in
@@ -144,9 +160,25 @@ def main() -> None:
                 # keep timing the other queries
                 errors[name] = repr(ex)[:200]
                 continue
-            samples[name].append(round(time.time() - t0, 3))
+            samples[name].append(round(t2 - t0, 3))
+            phases[name].append((round(t1 - t0, 3), round(t2 - t1, 3)))
+            if plan_dir and len(samples[name]) == 1:
+                # after the timed write, so planning here cannot warm it
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
+                    f.write(plan)
     timings = {
         name: min(ts) for name, ts in samples.items() if ts
+    }
+    # build/exec split of each query's fastest pass (sums to its timing)
+    split = {
+        name: dict(
+            zip(("build", "exec"), phases[name][ts.index(min(ts))])
+        )
+        for name, ts in samples.items()
+        if ts
     }
 
     # record the SPREAD next to the min (p50/p95 over the repeats) so a
@@ -164,7 +196,7 @@ def main() -> None:
 
     # noise verdict: count queries whose p95 ran >2.5x their own min
     # (ignoring sub-0.2s queries where scheduler jitter dominates), and
-    # compare the probe's spread.  Either signal past threshold marks
+    # compare the busy loop's spread.  Either signal past threshold marks
     # the ARTIFACT as contended — timings themselves are untouched (the
     # min-of-n estimator already defends against one noisy window).
     n_noisy = sum(
@@ -177,23 +209,11 @@ def main() -> None:
         if probe_sec
         else None
     )
-    # the probe branch needs an ABSOLUTE floor as well as the ratio:
-    # pass 1 consistently runs the probe ~4x faster than later passes
-    # on an IDLE host (JVM session aging — GC pressure and broadcast
-    # cleanup accumulate over the ~400 queries of each pass), so a
-    # pure ratio reads aging as contention.  0.06 s -> 0.28 s is
-    # aging; a genuinely loaded host pushes the 10^8-row sum past the
-    # floor, and only then does the ratio mean what the flag says.
-    # The floor is calibrated to THIS container's 32 cores (idle
-    # probe ~0.06 s); override SPARK_GRAFT_NOISE_PROBE_FLOOR on a
-    # slower host where even an idle probe exceeds it (or a faster
-    # one where contention hides below it).
-    probe_floor = float(
-        os.environ.get("SPARK_GRAFT_NOISE_PROBE_FLOOR", "0.75")
-    )
-    # the python busy-loop ratio needs no floor: nothing ages, so >1.4x
-    # between passes is contention, full stop (an idle host holds the
-    # min-of-2 loop within a few percent)
+    # the JVM probe ratio is informational only: it mixes contention
+    # with JVM session aging (an IDLE host ages the 10^8-row sum ~2-4x
+    # across passes), so it feeds no verdict.  The busy-loop ratio
+    # does: >1.4x between passes is contention, full stop (an idle host
+    # holds the min-of-2 loop within a few percent)
     busy_ratio = (
         round(max(busy_sec) / max(min(busy_sec), 1e-9), 3)
         if busy_sec
@@ -208,17 +228,12 @@ def main() -> None:
         "noise_flag": bool(
             n_noisy > max(10, len(samples) // 33)
             or (busy_ratio is not None and busy_ratio > 1.4)
-            or (
-                probe_ratio is not None
-                and probe_ratio > 2.0
-                and max(probe_sec) >= probe_floor
-            )
         ),
     }
     if noise["noise_flag"]:
         print(
             f"(noise_flag: {n_noisy} queries p95>2.5x min, "
-            f"probe_ratio={probe_ratio} — treat regressions in this run "
+            f"busy_ratio={busy_ratio} — treat regressions in this run "
             "as suspect)",
             file=sys.stderr,
         )
@@ -237,22 +252,14 @@ def main() -> None:
         # queries have already run by this point
         matched = [
             (int(m.group(1)), p)
-            for p in glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*.json",
-                )
-            )
+            for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
             if (m := _re.search(r"_r(\d+)\.json$", p))
         ]
         prev_files = [p for _, p in sorted(matched)]
         # prefer the sidecar detail file (full per-query dict); the
         # driver's BENCH_r{N}.json wraps a tail-truncated stdout whose
         # "parsed" is often null
-        detail_prev = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_DETAIL.json",
-        )
+        detail_prev = os.path.join(ROOT, "BENCH_DETAIL.json")
         if os.path.exists(detail_prev):
             prev_files.append(detail_prev)
         if not prev_files:
@@ -284,7 +291,7 @@ def main() -> None:
                     f"{name:40s} {t:7.2f}  {d:+6.2f}{flag}"
                 )
         pt = prev.get("value")
-        if isinstance(pt, (int, float)):
+        if isinstance(pt, (int, float)) and not args.only:
             lines.append(f"{'TOTAL':40s} {total:7.2f}  {total - pt:+6.2f}")
         print("\n".join(lines), file=sys.stderr)
     except Exception as e:  # delta report must never break the bench
@@ -304,43 +311,41 @@ def main() -> None:
         "estimator": "min_per_query",
         "unit": "sec",
         "queries": timings,
+        "split": split,
         "spread": spread,
         "errors": errors,
         "noise": noise,
         "sf": sf_val,
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
     try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
+        if not args.only:
+            with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
+                json.dump(detail, f, indent=1, sort_keys=True)
     except OSError as e:  # read-only checkout must not kill the bench
         print(f"(detail file unavailable: {e})", file=sys.stderr)
 
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:20]
     )
-    print(
-        json.dumps(
-            {
-                "metric": "query_inventory_wall_seconds",
-                "value": total,
-                "repeats": repeats,
-                "estimator": "min_per_query",
-                "unit": "sec",
-                "n_queries": len(timings),
-                "n_errors": len(errors),
-                "errors": errors,
-                "noise": noise,
-                "queries": slowest,
-                "queries_truncated": True,
-                "detail_file": "BENCH_DETAIL.json",
-                "sf": sf_val,
-            },
-            separators=(",", ":"),
-        )
-    )
+    line = {
+        "metric": "query_inventory_wall_seconds",
+        "value": total,
+        "repeats": repeats,
+        "estimator": "min_per_query",
+        "unit": "sec",
+        "n_queries": len(timings),
+        "n_errors": len(errors),
+        "errors": errors,
+        "noise": noise,
+        "queries": slowest,
+        "queries_truncated": True,
+        "detail_file": "BENCH_DETAIL.json",
+        "sf": sf_val,
+    }
+    if args.only:  # a subset run's whole detail is the line itself
+        line.update(queries=timings, queries_truncated=False,
+                    detail_file=None, split=split)
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
 
 

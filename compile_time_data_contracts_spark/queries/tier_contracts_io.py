@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ._shared import _ORACLES, _QUERIES, _ts_str, q  # noqa: F401
+from ..operators.materialize import scratch_dir
 
 
 # =========================================================================
@@ -33,7 +34,7 @@ def q02(spark: SparkSession, sf: str) -> DataFrame:
     from ..catalog import Customer
     from ..sources.io import Source, read_df
 
-    path = "/tmp/ctdc_q02_customer_csv"
+    path = scratch_dir("ctdc_q02_customer_csv_")
     load_table(spark, sf, "customer").write.mode("overwrite").option(
         "header", "true"
     ).csv(path)
@@ -64,7 +65,7 @@ def q04(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.io import Sink, write_df
 
     df = load_table(spark, sf, "region")
-    path = "/tmp/ctdc_q04_region_parquet"
+    path = scratch_dir("ctdc_q04_region_parquet_")
     write_df(df, Sink(Region, path), SchemaPolicy.EXACT)
     return spark.read.parquet(path).select("r_regionkey", "r_name")
 
@@ -113,7 +114,7 @@ def q52(spark: SparkSession, sf: str) -> DataFrame:
         enveloped.schema, spark_schema(DocEnvelope), SchemaPolicy.EXACT,
         context="q52 envelope",
     )
-    path = "/tmp/ctdc_q52_envelope_parquet"
+    path = scratch_dir("ctdc_q52_envelope_parquet_")
     enveloped.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return back.select(
@@ -139,7 +140,7 @@ def q92(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.io import Sink, Source, read_df, write_df
 
     docs = load_table(spark, sf, "documents")
-    path = "/tmp/ctdc_q92_documents_orc"
+    path = scratch_dir("ctdc_q92_documents_orc_")
     write_df(docs, Sink(Documents, path, format="orc"), SchemaPolicy.EXACT)
     back = read_df(spark, Source(Documents, "orc", path))
     return back.groupBy("lang").agg(
@@ -164,7 +165,7 @@ def q94(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.io import Sink, Source, read_df, write_df
 
     docs = load_table(spark, sf, "documents")
-    path = "/tmp/ctdc_q94_documents_json"
+    path = scratch_dir("ctdc_q94_documents_json_")
     write_df(docs, Sink(Documents, path, format="json"), SchemaPolicy.EXACT)
     back = read_df(spark, Source(Documents, "json", path))
     return back.groupBy("lang").agg(
@@ -189,7 +190,7 @@ def q95(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.io import Sink, Source, read_df, write_df
 
     docs = load_table(spark, sf, "documents")
-    path = "/tmp/ctdc_q95_documents_csv"
+    path = scratch_dir("ctdc_q95_documents_csv_")
     write_df(
         docs,
         Sink(Documents, path, format="csv", options={"header": "true"}),
@@ -1143,7 +1144,7 @@ def q191(spark: SparkSession, sf: str) -> DataFrame:
             ["AUTOMOBILE", "BUILDING", "HOUSEHOLD", "MACHINERY"],
         ),
     ]
-    qpath = "/tmp/ctdc_q191_quarantine_parquet"
+    qpath = scratch_dir("ctdc_q191_quarantine_parquet_")
     clean, _quarantined = apply_expectations(
         customer, rules, quarantine_sink=Sink(QuarantinedCustomer, qpath)
     )

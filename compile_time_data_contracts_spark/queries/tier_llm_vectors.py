@@ -819,7 +819,7 @@ def q218(spark: SparkSession, sf: str) -> DataFrame:
     # r11: the 36 output cells used to be an in-plan explode over a
     # literal struct array referencing the 46 aggregate outputs — ~90
     # more named expressions whose Catalyst analysis cost 3-4x the
-    # execution itself (plan_snapshot: build 1.63 s vs exec_warm 0.20 s).
+    # execution itself (r11 plan snapshot: build 1.63 s vs warm exec 0.20 s).
     # The aggregate is ONE row; collect it and do the 36 divisions on
     # exact Python integers (arbitrary precision ⊇ the BIGINT range both
     # engines declare; float() of an int64-range int is the same

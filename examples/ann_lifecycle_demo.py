@@ -33,7 +33,6 @@ import shutil
 import sys
 import tempfile
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from compile_time_data_contracts_spark.catalog import load_table
@@ -48,18 +47,12 @@ from compile_time_data_contracts_spark.operators.similarity import (
     ivf_stats,
     topk_cosine,
 )
+from compile_time_data_contracts_spark.session import local_session
 
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ctdc-ann-lifecycle")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-ann-lifecycle", cores=8)
 
     emb = load_table(spark, sf, "embeddings")
     idx = tempfile.mkdtemp(prefix="ctdc_ann_demo_")

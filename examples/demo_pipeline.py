@@ -52,21 +52,16 @@ class UserRegion:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+
+    from compile_time_data_contracts_spark.session import local_session
 
     tmp = tempfile.mkdtemp(prefix="ctdc_demo_")
     csv = os.path.join(tmp, "users.csv")
     with open(csv, "w") as f:
         f.write("id,email,age,segment\n1,a@b.com,21,S\n2,b@c.com,,L\n")
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("ctdc-demo")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-demo", cores=4)
 
     # Green path (CtdcPoc.scala:110-163): CSV -> normalize -> Parquet.
     # The conformance proof runs at add_sink — before any Spark action.

@@ -26,7 +26,6 @@ import dataclasses
 import sys
 import tempfile
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from compile_time_data_contracts_spark.catalog import load_table
@@ -48,6 +47,7 @@ from compile_time_data_contracts_spark.operators.text import (
     gopher_quality,
     quality_score,
 )
+from compile_time_data_contracts_spark.session import local_session
 from compile_time_data_contracts_spark.sources.io import Sink, write_df
 
 
@@ -63,14 +63,11 @@ class CuratedDoc:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("ctdc-curation-demo")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-curation-demo",
+        cores=4,
+        **{"spark.sql.shuffle.partitions": "8"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     docs = load_table(spark, sf_dir, "documents")
     n0 = docs.count()

@@ -1,8 +1,9 @@
 """Shared pytest fixtures.
 
-SparkSession config mirrors the reference's deterministic test setup
-(SparkRuntimeSpec.scala:14-20, PipelineBuilderSpec.scala:15-22): local
-master, tiny shuffle partitioning, UI off.
+The session comes from the shared ``local_session`` factory and mirrors
+the reference's deterministic test setup (SparkRuntimeSpec.scala:14-20,
+PipelineBuilderSpec.scala:15-22): local master, tiny shuffle
+partitioning, UI off.
 """
 
 from __future__ import annotations
@@ -20,17 +21,10 @@ SF_DIR = os.environ.get("CTDC_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("ctdc-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    # a fixed 4 cores: tests assert partition and file counts
+    spark = local_session("ctdc-spark-tests", cores=4)
     yield spark
     spark.stop()
 

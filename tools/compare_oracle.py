@@ -17,12 +17,13 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -71,20 +72,21 @@ def main() -> int:
     only = set(argv[1:])
     results: dict[str, dict] = {}
 
-    from pyspark.sql import SparkSession
+    import tempfile
+
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
+    from compile_time_data_contracts_spark.session import local_session
 
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ctdc-oracle-compare")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # a private temp dir per run, inherited by the Python workers: the
+    # registry keeps fingerprinted reuse caches (IVF indexes, merge
+    # snapshots, state stores) under gettempdir(), and two concurrent
+    # runs writing one cache path break each other
+    tempfile.tempdir = os.environ["TMPDIR"] = scratch_dir("ctdc-oracle-")
+    spark = local_session("ctdc-oracle-compare", cores=8)
 
     con = duckdb.connect()
     for t in TABLES:

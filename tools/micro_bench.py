@@ -20,12 +20,13 @@ Usage: python tools/micro_bench.py [ops_per_iter] (default 20000)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from dataclasses import dataclass
 from typing import Optional
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import types as T
 

@@ -14,9 +14,10 @@ Prints one line per check; exits 1 if any required check fails.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKS = {
     "q216_distributed_centroids": [
@@ -3697,20 +3698,11 @@ CHECKS_UNPINNED = {
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("ctdc-plan-audit")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-plan-audit", cores=4)
     qs = entrymod.queries()
 
     CHECKS.update(CHECKS_R8)

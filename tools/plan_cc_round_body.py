@@ -17,24 +17,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.catalog import load_table
     from compile_time_data_contracts_spark.operators.materialize import pin
+    from compile_time_data_contracts_spark.session import local_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-plan-cc-round")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-plan-cc-round",
+        **{
+            "spark.sql.autoBroadcastJoinThreshold": "64MB",
+            "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     # the q101 edge shape (consecutive event ids per user), materialized
     # the same way the operator materializes its round inputs

@@ -40,7 +40,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 100_000
@@ -108,26 +108,16 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else DIM_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.similarity import (
         cosine_pairs,
         cosine_pairs_lsh,
         lsh_auto_bits,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-scale-probe", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n": n + PLANTED_PAIRS, "dim": dim, "threshold": THRESHOLD}
     path = f"/tmp/ctdc-scale-probe-v2-{n}x{dim}"

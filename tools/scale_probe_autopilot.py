@@ -37,7 +37,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_drift import BATCH, load_probe_frames  # noqa: E402
@@ -46,9 +46,9 @@ from scalebench import merge_entry  # noqa: E402
 
 
 def main(n: int = 1_000_000, dim: int = 64) -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_build,
         ivf_drift,
@@ -56,17 +56,10 @@ def main(n: int = 1_000_000, dim: int = 64) -> None:
         ivf_search,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-autopilot")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-autopilot",
+        **{"spark.driver.memory": "16g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     results: dict = {
         "n": n, "dim": dim, "n_clusters": N_CLUSTERS, "batch": BATCH,

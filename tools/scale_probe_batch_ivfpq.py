@@ -32,7 +32,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
@@ -66,27 +66,19 @@ def main() -> int:
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 200
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_pq_search_batch,
         ivf_pq_topk,
         topk_cosine_multi,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-batch-ivfpq")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.maxMetadataStringLength", "100000")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-batch-ivfpq",
+        **{"spark.driver.memory": "16g", "spark.sql.maxMetadataStringLength": "100000"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     total = n + 2 * N_PLANTS
     results: dict = {

@@ -22,20 +22,21 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.stats import (
         mutual_information,
         two_proportion_ztest,
@@ -44,16 +45,10 @@ def main() -> int:
         cusum_changepoint,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-billion")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-billion",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     # the planted contracts are exact only over whole residue cycles:
     # truncate to a multiple of lcm(16, 200, 1000) = 2000 so ANY argv
     # n yields exact closed forms instead of a spurious ok:false

@@ -32,7 +32,7 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 20_000_000
@@ -74,32 +74,28 @@ def group_shuffle(spark, group: str) -> tuple[int, int]:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-bloom")
-        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # AQE would re-plan the tiny probe dim into a broadcast join at
-        # runtime, which removes the fact-side shuffle in BOTH runs and
-        # hides the effect being measured; at the modeled scale the
-        # filtered dim is past broadcast size, so pin the shuffle join.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        .config(
+    from compile_time_data_contracts_spark.session import local_session
+
+    spark = local_session(
+        "ctdc-scale-probe-bloom",
+        **{
+            "spark.sql.shuffle.partitions": SHUFFLE_PARTITIONS,
+            "spark.ui.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            # AQE would re-plan the tiny probe dim into a broadcast join
+            # at runtime, which removes the fact-side shuffle in BOTH
+            # runs and hides the effect being measured; at the modeled
+            # scale the filtered dim is past broadcast size, so pin the
+            # shuffle join.
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
             "spark.sql.optimizer.runtime.bloomFilter"
-            ".applicationSideScanSizeThreshold",
-            "0",
-        )
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+            ".applicationSideScanSizeThreshold": "0",
+            "spark.driver.memory": "16g",
+        },
     )
     sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
 
     results: dict = {
         "n_rows": n,

@@ -30,7 +30,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 1_000_000
@@ -105,24 +105,14 @@ def reference_bpe(
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
 
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
     from compile_time_data_contracts_spark.operators.bpe import (
         bpe_merge_steps,
         word_frequencies,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-bpe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-scale-probe-bpe", **{"spark.driver.memory": "16g"})
 
     path = f"/tmp/ctdc-scale-probe-bpe-{n}"
     results: dict = {

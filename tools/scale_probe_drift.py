@@ -32,7 +32,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
@@ -124,24 +124,14 @@ def load_probe_frames(spark, n: int, dim: int, held_slices: int = 1):
 
 
 def main(n: int = 1_000_000, dim: int = 64) -> None:
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_build_or_reuse,
         ivf_drift,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-drift")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-scale-probe-drift", **{"spark.driver.memory": "16g"})
 
     results: dict = {
         "n": n, "dim": dim, "n_clusters": N_CLUSTERS, "batch": BATCH,

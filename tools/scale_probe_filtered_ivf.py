@@ -43,7 +43,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -106,7 +106,6 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -114,21 +113,17 @@ def main() -> int:
         ivf_search,
         topk_cosine,
     )
+    from compile_time_data_contracts_spark.session import local_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-filtered-ivf")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        # default 100-char metadata truncation would cut the INSET list
-        # out of PartitionFilters before dirs_probed can parse it
-        .config("spark.sql.maxMetadataStringLength", "100000")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-filtered-ivf",
+        **{
+            "spark.driver.memory": "16g",
+            # default 100-char metadata truncation would cut the INSET
+            # list out of PartitionFilters before dirs_probed can parse it
+            "spark.sql.maxMetadataStringLength": "100000",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     total = n + 2 * N_PLANTS
     results: dict = {

@@ -21,20 +21,21 @@ Writes `funnel_interval_n{n}` into SCALEBENCH.json.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.asof import (
         interval_overlap_join,
     )
@@ -42,16 +43,10 @@ def main() -> int:
         funnel_conversion,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-funnel-interval")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-funnel-interval",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     results: dict = {"n_rows": n}
 
     # ---- funnel: planted per-user step structure over n events

@@ -23,31 +23,26 @@ Writes the `graph_n{n}` entry into SCALEBENCH.json.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scalebench import merge_entry  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.graph import pagerank
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-graph")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-graph",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     A, B = 2654435761, 40503
     nodes = spark.range(n).select(F.col("id").cast("long").alias("id"))

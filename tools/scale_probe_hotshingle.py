@@ -40,7 +40,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 1_000_000
@@ -91,26 +91,19 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
     small_n = int(sys.argv[2]) if len(sys.argv) > 2 else SMALL_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
         containment_pairs,
         hot_shingle_report,
         shingle_rows,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-hotshingle")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-hotshingle",
+        **{"spark.driver.memory": "16g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     results: dict = {
         "n_docs": n + PLANTED,

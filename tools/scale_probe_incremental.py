@@ -30,7 +30,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -77,25 +77,19 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     b = int(sys.argv[2]) if len(sys.argv) > 2 else 51_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
         minhash_index_build,
         minhash_near_dup_pairs,
         near_dup_against,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-incremental")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-incremental",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     cpath = f"/tmp/ctdc-incr-corpus-{n}"
     bpath = f"/tmp/ctdc-incr-batch-{n}-{b}"

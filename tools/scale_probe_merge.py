@@ -33,7 +33,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -47,9 +47,9 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 256
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.merge import (
         _bucket_of,
         merge_upsert,
@@ -57,17 +57,7 @@ def main() -> int:
         snapshot_write,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-merge")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-scale-probe-merge", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n": n, "n_buckets": n_buckets}
     path = f"/tmp/ctdc-scale-probe-merge-{n}x{n_buckets}"

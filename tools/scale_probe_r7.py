@@ -39,7 +39,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -49,7 +49,7 @@ def main() -> int:
     kmv_n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
     graph_n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
     from pyspark.sql import functions as F
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
     from compile_time_data_contracts_spark.operators.graph import (
         link_prediction_ra,
@@ -59,15 +59,10 @@ def main() -> int:
         kmv_union_intersection,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-r7")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-r7",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     ok = True
 

@@ -45,28 +45,23 @@ entries into SCALEBENCH.json.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
 
 
 def _spark():
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-r7c")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-r7c",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     return spark
 
 

@@ -44,7 +44,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -56,18 +56,14 @@ def main() -> int:
     srm_m = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000_000
 
     from pyspark import StorageLevel
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-r8")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from compile_time_data_contracts_spark.session import local_session
+
+    spark = local_session(
+        "ctdc-scale-r8",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     ok = True
 
     # ---- 1. capped two-hop reach with a planted megahub -----------

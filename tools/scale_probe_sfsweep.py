@@ -33,7 +33,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SFS = ["0.001", "0.01", "0.1"]
@@ -257,23 +257,17 @@ EXPECTED = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from compile_time_data_contracts_spark.session import local_session
 
     import __spark_entry__ as entrymod
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-sfsweep")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-sfsweep",
+        **{
+            "spark.sql.autoBroadcastJoinThreshold": "64MB",
+            "spark.driver.memory": "16g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
     names = list(EXPECTED)

@@ -24,7 +24,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -36,18 +36,14 @@ EPS = 1e-4
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-sketch")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from compile_time_data_contracts_spark.session import local_session
+
+    spark = local_session(
+        "ctdc-scale-sketch",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     # every HOT_PCT-th row is key 0; the rest mix over KEYSPACE keys
     rows = spark.range(n).select(

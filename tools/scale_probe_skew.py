@@ -34,7 +34,7 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 20_000_000
@@ -74,26 +74,23 @@ def max_task_ms(spark, group: str) -> float:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.skew import salted_join
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-skew")
-        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "false")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-skew",
+        **{
+            "spark.sql.shuffle.partitions": str(SHUFFLE_PARTITIONS),
+            "spark.ui.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": "false",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.driver.memory": "16g",
+        },
     )
     sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
 
     results: dict = {
         "n_rows": n,

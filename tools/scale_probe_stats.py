@@ -24,30 +24,27 @@ Writes `stats_n{n}` into SCALEBENCH.json.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-stats")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    from compile_time_data_contracts_spark.session import local_session
+
+    spark = local_session(
+        "ctdc-scale-stats",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
     results: dict = {"n_rows": n}
 
     # ---- OLS: one partial-combined moment aggregate over 10^8 rows

@@ -33,7 +33,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 100_000
@@ -73,25 +73,15 @@ def generate(spark, path: str, n: int) -> None:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components,
         minhash_near_dup_pairs,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-text")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("ctdc-scale-probe-text", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n_docs": n + PLANTED, "threshold": 0.5}
     path = f"/tmp/ctdc-scale-probe-text-{n}"

@@ -26,7 +26,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DEFAULT = 200_000
@@ -35,24 +35,17 @@ N_DEFAULT = 200_000
 def main() -> None:
     n_cliques = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.graph import (
         triangle_count,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ctdc-scale-probe-triangles")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = local_session(
+        "ctdc-scale-probe-triangles",
+        **{"spark.driver.memory": "16g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     # clique c occupies vertices 5c..5c+4; all 10 edges per clique,
     # emitted BOTH directions (canonicalization must halve them);

@@ -29,7 +29,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scalebench import merge_entry  # noqa: E402
@@ -41,20 +41,14 @@ SPIKE_EVERY = 25  # by event index within user stream
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ctdc-scale-window")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    from compile_time_data_contracts_spark.session import local_session
+
+    spark = local_session(
+        "ctdc-scale-window",
+        **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     n_users = n // EVENTS_PER_USER
     # event i of user u: ts steps 60s, each SESSION_EVERY-th event adds

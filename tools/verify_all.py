@@ -8,7 +8,9 @@ checks, in order, stopping on the first failure.
      never reappear unseen), each writing its ORACLE artifact
   3. tools/plan_audit.py      — physical-plan property assertions
   4. tools/micro_bench.py     — comparator ns/op vs BASELINE.md
-  5. bench.py (optional, --bench) — headline timings at sf0.1
+  5. pytest perfbench/        — the benchmark harness, which loads
+     tools/compare_oracle.py and tools/micro_bench.py by path
+  6. bench.py (optional, --bench) — headline timings at sf0.1
 
 Usage: python tools/verify_all.py [sf_dir ...] [--bench]
   (default sf dirs: /root/testdata/sf0.001 AND /root/testdata/sf0.01)
@@ -58,6 +60,10 @@ def main() -> None:
         )
     run("plan-audit", [py, "tools/plan_audit.py", sf_dirs[-1]])
     run("micro-bench", [py, "tools/micro_bench.py", "2000"])
+    run(
+        "perfbench-tests",
+        [py, "-m", "pytest", "perfbench", "-q", "-p", "no:cacheprovider"],
+    )
     if with_bench:
         run("bench", [py, "bench.py"])
     print("ALL GATES GREEN")
