@@ -1036,12 +1036,42 @@ def contamination_check(
     )
 
 
+def _component_min_labels(u, v):
+    """``(nodes, mins)``: every node of the edge list ``u[i] -- v[i]``
+    (NumPy arrays) and its component's minimum node, by vectorized
+    hook-and-pointer-jump over dense ``np.unique`` indices.  The indices
+    are in id order, so a component's smallest index is its min id.
+
+    Each pass hooks every root onto the smallest root it shares an
+    edge with (a root's label only ever decreases and every label
+    points at a smaller-or-equal index, so no cycle can form), then
+    pointer-jumps until every node points straight at its root.  It
+    stops when both ends of every edge carry the same root, which is
+    then its component's min."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u) :]
+    label = np.arange(len(nodes))
+    while True:
+        la, lb = label[a], label[b]
+        differ = la != lb
+        if not differ.any():
+            return nodes, nodes[label]
+        la, lb = la[differ], lb[differ]
+        np.minimum.at(label, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
 def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 30,
-    checkpoint_every: int = 1,
     windowed_min_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
@@ -1090,28 +1120,38 @@ def connected_components_star(
     component min.  Convergence is detected by (count,
     order-independent xor-hash) equality of the edge set, collected by
     ``observe`` from the SAME job that materializes each round's
-    checkpoint (materialize.pin_with_signature) — one action per round,
-    no driver-side edge materialization anywhere.
+    checkpoint (materialize.pin_with_signature) — one action per round.
 
-    Lineage management: every round takes a RELIABLE checkpoint by
-    default (``checkpoint_every=1``).  We MEASURED the alternative
-    (persist MEMORY_AND_DISK between checkpoints, checkpoint every
-    N rounds) at sf0.1 and it is strictly WORSE: 17.3 s (every round)
-    vs 29.4 s (every 2nd) vs 43.4 s (every 3rd) for the q152 gate.
-    Persisting materializes the DATA but does not truncate the LOGICAL
-    PLAN — each skipped checkpoint leaves the next round's plan two
-    alternations deep, and Catalyst re-analysis/optimization time grows
-    superlinearly with plan depth, dwarfing the ~1 s checkpoint-write
-    fixed cost it saves.  Checkpoint is the only lineage cut that also
-    resets the plan, which is exactly what an iterative loop needs;
-    ``checkpoint_every`` stays as an escape hatch but the measured
-    default is 1 (localCheckpoint is still never used — it dies with
-    an executor at cluster scale).
+    Local finish: the rounds exist for graphs too big for one machine.
+    The initial edge checkpoint observes the edge count for free, and
+    when the edge set (16 bytes an edge: two 64-bit ids) is at most the
+    session's ``spark.sql.autoBroadcastJoinThreshold``, it is collected
+    once as Arrow and the component minima are computed on the driver
+    (:func:`_component_min_labels`) instead of in ~8 rounds of 4 jobs
+    each.  The broadcast threshold is the bound because it is the
+    session's existing statement of how large a relation the driver
+    may collect and ship: the label table (one row per non-root node,
+    never more rows than edges) is broadcast into the final join under
+    that same bound anyway.  A threshold of -1 disables the local
+    finish, and every larger edge set runs the rounds.
+
+    Lineage management: every round takes a RELIABLE checkpoint.  We
+    MEASURED the alternative (persist MEMORY_AND_DISK between
+    checkpoints, checkpoint every N rounds) at sf0.1 and it is strictly
+    WORSE: 17.3 s (every round) vs 29.4 s (every 2nd) vs 43.4 s (every
+    3rd) for the q152 gate.  Persisting materializes the DATA but does
+    not truncate the LOGICAL PLAN — each skipped checkpoint leaves the
+    next round's plan two alternations deep, and Catalyst
+    re-analysis/optimization time grows superlinearly with plan depth,
+    dwarfing the ~1 s checkpoint-write fixed cost it saves.  Checkpoint
+    is the only lineage cut that also resets the plan, which is exactly
+    what an iterative loop needs (localCheckpoint is still never used —
+    it dies with an executor at cluster scale).
     """
     from pyspark import StorageLevel
 
-    sc = pairs.sparkSession.sparkContext
-    _ensure_checkpoint_dir(sc)
+    spark = pairs.sparkSession
+    _ensure_checkpoint_dir(spark.sparkContext)
 
     # pairs feeds the initial edge build, the convergence signature,
     # both all_nodes branches, and round 1 — ~5 evaluations of the
@@ -1145,19 +1185,41 @@ def connected_components_star(
     finally:
         cached.unpersist()
 
-    def _signature(e: DataFrame) -> tuple[int, int]:
-        # explicit-action form, used only for the persist-between-
-        # checkpoints escape hatch (checkpoint_every > 1), where the
-        # signature action doubles as the cache materializer
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
+    def labelled(lbl: DataFrame) -> DataFrame:
+        # (node, __lbl) covers the non-root nodes; roots and self-loop
+        # singletons keep their own id
+        return all_nodes.join(lbl, "node", "left").select(
+            F.col("node").alias("doc_id"),
+            F.coalesce(F.col("__lbl"), F.col("node")).alias("cluster_id"),
+        )
 
-    live_cache: DataFrame | None = None
     n_edges = sig[0]
-    for it in range(max_iterations):
+    # a bound of -1 (broadcast disabled) is below every edge-set size,
+    # so it always takes the rounds
+    bound = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    if n_edges * 16 <= bound:
+        import pyarrow as pa
+
+        tbl = edges.toArrow()
+        nodes, mins = _component_min_labels(
+            tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
+        )
+        moved = nodes != mins
+        id_type = tbl.schema.field("u").type
+        return labelled(
+            spark.createDataFrame(
+                pa.table(
+                    {
+                        "node": pa.array(nodes[moved], id_type),
+                        "__lbl": pa.array(mins[moved], id_type),
+                    }
+                )
+            )
+        )
+
+    for _ in range(max_iterations):
         # ---- large-star: symmetrize, attach larger neighbors to the min
         sym = edges.union(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1220,45 +1282,16 @@ def connected_components_star(
             .select("__e.u", "__e.v")
             .distinct()
         )
-        durable = (it + 1) % max(checkpoint_every, 1) == 0
-        if durable:
-            # one action: checkpoint materialization + observed signature
-            edges, new_sig = _pin_with_signature(small, "u", "v")
-        else:
-            edges = small.persist(StorageLevel.MEMORY_AND_DISK)
-            # the signature action also materializes a persisted round;
-            # only AFTER that is the previous round's cache safe to drop
-            # (dropping first would force this round to recompute from
-            # the last durable checkpoint)
-            new_sig = _signature(edges)
-        if live_cache is not None:
-            live_cache.unpersist()
-            live_cache = None
-        if not durable:
-            live_cache = edges
+        # one action: checkpoint materialization + observed signature
+        edges, new_sig = _pin_with_signature(small, "u", "v")
         if new_sig == sig:
-            if live_cache is not None:
-                # converged on a cache-only round: make the fixed point
-                # durable so the returned (lazy) frame neither leaks a
-                # cache into session LRU nor recomputes rounds when the
-                # caller finally evaluates it
-                edges = edges.transform(_pin)
-                live_cache.unpersist()
-                live_cache = None
-            return all_nodes.join(
+            return labelled(
                 edges.select(
                     F.col("u").alias("node"), F.col("v").alias("__lbl")
-                ),
-                "node",
-                "left",
-            ).select(
-                F.col("node").alias("doc_id"),
-                F.coalesce(F.col("__lbl"), F.col("node")).alias("cluster_id"),
+                )
             )
         sig = new_sig
         n_edges = new_sig[0]
-    if live_cache is not None:
-        live_cache.unpersist()
     raise RuntimeError(
         f"connected_components_star: no fixed point after {max_iterations} "
         "alternations — raise max_iterations"
@@ -1351,7 +1384,6 @@ def connected_components_incremental(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 30,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Grow an existing component labeling with a NEW batch of edges
     without re-walking the old graph: the prior (doc_id, cluster_id)
@@ -1391,9 +1423,7 @@ def connected_components_incremental(
             F.col(b_col).cast("long").alias(b_col),
         )
     )
-    return connected_components_star(
-        combined, a_col, b_col, max_iterations, checkpoint_every
-    )
+    return connected_components_star(combined, a_col, b_col, max_iterations)
 
 
 def containment_pairs(

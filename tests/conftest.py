@@ -32,3 +32,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def cc_star_sides(spark):
+    """``run(fn)`` calls ``fn`` on both sides of
+    ``connected_components_star``'s local finish and returns both
+    results: first with the session as it is (the small test graphs
+    finish on the driver), then with the broadcast threshold at -1,
+    which forces the distributed star rounds.  ``fn`` must collect
+    what it checks before it returns."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def run(fn):
+        local = fn()
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            distributed = fn()
+        finally:
+            spark.conf.set(key, old)
+        return local, distributed
+
+    return run

@@ -1178,7 +1178,9 @@ def test_bigram_lm_conditional_probabilities(spark):
     assert out2["x"]["top_w2"] == "a"
 
 
-def test_connected_components_star_matches_label_propagation(spark):
+def test_connected_components_star_matches_label_propagation(
+    spark, cc_star_sides
+):
     import random
 
     from compile_time_data_contracts_spark.operators.dedup import (
@@ -1197,14 +1199,16 @@ def test_connected_components_star_matches_label_propagation(spark):
         (r["doc_id"], r["cluster_id"])
         for r in connected_components(df).collect()
     }
-    b = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components_star(df).collect()
-    }
-    assert a == b
+    local, distributed = cc_star_sides(
+        lambda: {
+            (r["doc_id"], r["cluster_id"])
+            for r in connected_components_star(df).collect()
+        }
+    )
+    assert a == local == distributed
 
 
-def test_connected_components_star_deep_chain(spark):
+def test_connected_components_star_deep_chain(spark, cc_star_sides):
     """A 400-link chain needs ~400 min-label rounds but only O(log n)
     star alternations — the case the star variant exists for."""
     from compile_time_data_contracts_spark.operators.dedup import (
@@ -1214,17 +1218,22 @@ def test_connected_components_star_deep_chain(spark):
     chain = [Row(doc_a=i, doc_b=i + 1) for i in range(400)]
     # second component: a chain offset by 1000
     chain += [Row(doc_a=1000 + i, doc_b=1001 + i) for i in range(50)]
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(
-            spark.createDataFrame(chain), max_iterations=30
-        ).collect()
-    }
-    assert all(out[i] == 0 for i in range(401))
-    assert all(out[1000 + i] == 1000 for i in range(51))
+    df = spark.createDataFrame(chain)
+    for out in cc_star_sides(
+        lambda: {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components_star(
+                df, max_iterations=30
+            ).collect()
+        }
+    ):
+        assert all(out[i] == 0 for i in range(401))
+        assert all(out[1000 + i] == 1000 for i in range(51))
 
 
-def test_connected_components_star_self_loops_and_singletons(spark):
+def test_connected_components_star_self_loops_and_singletons(
+    spark, cc_star_sides
+):
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components_star,
     )
@@ -1232,12 +1241,110 @@ def test_connected_components_star_self_loops_and_singletons(spark):
     df = spark.createDataFrame(
         [Row(doc_a=5, doc_b=5), Row(doc_a=7, doc_b=9)]
     )
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(df).collect()
-    }
     # self-loop node is its own singleton component; 7-9 share min 7
-    assert out == {5: 5, 7: 7, 9: 7}
+    assert cc_star_sides(
+        lambda: {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components_star(df).collect()
+        }
+    ) == ({5: 5, 7: 7, 9: 7},) * 2
+
+
+@pytest.mark.parametrize(
+    "rows, want",
+    [([], []), ([(5, 5), (6, 6), (5, 5)], [(5, 5), (6, 6)])],
+    ids=["empty", "self_loops_only"],
+)
+def test_connected_components_star_no_edges(spark, cc_star_sides, rows, want):
+    from compile_time_data_contracts_spark.operators.dedup import (
+        connected_components_star,
+    )
+
+    df = spark.createDataFrame(rows, "doc_a long, doc_b long")
+
+    def run():
+        labels = connected_components_star(df)
+        return labels.schema.simpleString(), sorted(
+            tuple(r) for r in labels.collect()
+        )
+
+    schema = "struct<doc_id:bigint,cluster_id:bigint>"
+    assert cc_star_sides(run) == ((schema, want),) * 2
+
+
+def test_component_min_labels_matches_union_find():
+    """The driver-side finish against a plain union-find reference on
+    random multigraphs (repeated edges, negative ids, many components)."""
+    import random
+
+    import numpy as np
+
+    from compile_time_data_contracts_spark.operators.dedup import (
+        _component_min_labels,
+    )
+
+    def union_find(edges):
+        parent: dict = {}
+
+        def root(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return {x: root(x) for x in list(parent)}
+
+    rng = random.Random(7)
+    for _ in range(200):
+        n = rng.randrange(1, 60)
+        edges = [
+            (rng.randrange(n) * 7 - 20, rng.randrange(n) * 7 - 20)
+            for _ in range(rng.randrange(0, 80))
+        ]
+        edges = [(max(a, b), min(a, b)) for a, b in edges if a != b]
+        nodes, mins = _component_min_labels(
+            np.array([a for a, _ in edges], dtype=np.int64),
+            np.array([b for _, b in edges], dtype=np.int64),
+        )
+        assert dict(zip(nodes.tolist(), mins.tolist())) == union_find(edges)
+
+
+def test_connected_components_star_local_finish_boundary(spark, monkeypatch):
+    """The edge set finishes on the driver exactly while its 16 bytes
+    an edge fit under the broadcast threshold: one signature pin (the
+    initial edge checkpoint) at the bound, star rounds one byte below."""
+    from compile_time_data_contracts_spark.operators import dedup
+
+    calls = []
+    real = dedup._pin_with_signature
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_pin_with_signature", spy)
+    # a 10-link chain: 10 edges = 160 bytes
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "doc_a long, doc_b long"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def run(threshold: int):
+        calls.clear()
+        spark.conf.set(key, str(threshold))
+        labels = dedup.connected_components_star(df)
+        return dict(tuple(r) for r in labels.collect()), len(calls)
+
+    old = spark.conf.get(key)
+    try:
+        at_bound, below_bound = run(160), run(159)
+    finally:
+        spark.conf.set(key, old)
+    want = {i: 0 for i in range(11)}
+    assert at_bound == (want, 1)
+    assert below_bound[0] == want and below_bound[1] > 1
 
 
 def test_embedding_dim_stats_and_normalize(spark):

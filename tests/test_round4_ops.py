@@ -67,7 +67,7 @@ def test_row_fingerprint_column_order_insensitive(spark):
 
 # ------------------------------------------------- incremental components
 
-def test_incremental_cc_equals_full_recompute(spark):
+def test_incremental_cc_equals_full_recompute(spark, cc_star_sides):
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components_incremental,
         connected_components_star,
@@ -80,17 +80,22 @@ def test_incremental_cc_equals_full_recompute(spark):
     b2 = spark.createDataFrame(
         [(3, 10), (20, 21)], "doc_a long, doc_b long"
     )
-    labels1 = connected_components_star(b1)
-    incr = connected_components_incremental(labels1, b2)
-    full = connected_components_star(b1.union(b2))
-    got = {r["doc_id"]: r["cluster_id"] for r in incr.collect()}
-    want = {r["doc_id"]: r["cluster_id"] for r in full.collect()}
-    assert got == want
-    # the bridge merged both old components into min-label 1
-    assert got[11] == 1 and got[3] == 1 and got[21] == 20
+
+    def run():
+        labels1 = connected_components_star(b1)
+        incr = connected_components_incremental(labels1, b2)
+        full = connected_components_star(b1.union(b2))
+        got = {r["doc_id"]: r["cluster_id"] for r in incr.collect()}
+        want = {r["doc_id"]: r["cluster_id"] for r in full.collect()}
+        return got, want
+
+    for got, want in cc_star_sides(run):
+        assert got == want
+        # the bridge merged both old components into min-label 1
+        assert got[11] == 1 and got[3] == 1 and got[21] == 20
 
 
-def test_incremental_cc_untouched_components_survive(spark):
+def test_incremental_cc_untouched_components_survive(spark, cc_star_sides):
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components_incremental,
         connected_components_star,
@@ -98,12 +103,15 @@ def test_incremental_cc_untouched_components_survive(spark):
 
     b1 = spark.createDataFrame([(5, 6)], "doc_a long, doc_b long")
     b2 = spark.createDataFrame([(100, 101)], "doc_a long, doc_b long")
-    labels1 = connected_components_star(b1)
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_incremental(labels1, b2).collect()
-    }
-    assert got == {5: 5, 6: 5, 100: 100, 101: 100}
+
+    def run():
+        labels1 = connected_components_star(b1)
+        return {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components_incremental(labels1, b2).collect()
+        }
+
+    assert cc_star_sides(run) == ({5: 5, 6: 5, 100: 100, 101: 100},) * 2
 
 
 # ------------------------------------------------------ weighted reservoir

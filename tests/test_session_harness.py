@@ -6,7 +6,8 @@
     concurrent runs never share a path;
   * ``pin_if_input_large`` stops stat-ing input files once the running
     total crosses its threshold, with the same pin-or-skip answer;
-  * ``connected_components_star`` labels a graph identically whichever
+  * ``connected_components_star`` labels a graph identically whether it
+    finishes on the driver or runs star rounds, whichever
     neighborhood-min branch (window, or groupBy + join) each round takes.
 """
 
@@ -117,7 +118,7 @@ def test_pin_if_input_large_stops_stat_at_threshold(
     assert len(stat_calls) == len(sizes)
 
 
-def test_cc_star_branches_label_identically(spark):
+def test_cc_star_branches_label_identically(spark, cc_star_sides):
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components_star,
     )
@@ -140,6 +141,10 @@ def test_cc_star_branches_label_identically(spark):
     want = {n: 3 for n in (3, 7, 50, 60, 70, 80)}
     want.update({n: 100 for n in range(100, 111)})
     want.update({200: 200, 201: 200, 300: 300})
-    group_by_join = labels(0)  # edge count > 0: groupBy + join every round
-    window = labels(10**12)  # never above: window every round
+    # on the distributed side, an edge count > 0 takes groupBy + join
+    # every round and 10**12 the window every round
+    local, (group_by_join, window) = cc_star_sides(
+        lambda: (labels(0), labels(10**12))
+    )
+    assert local == (want, want)
     assert group_by_join == window == want

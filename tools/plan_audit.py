@@ -2677,10 +2677,11 @@ WAIVERS = {
     "q369_stream_srm_monitor": "streaming — SRM monitor replays batches; "
         "result is the post-replay snapshot (state bound asserted in "
         "SCALEBENCH srm probe)",
-    "q73_neardup_clusters": "driver union-find over the collected "
-        "candidate pairs; pair generation audited via q54/q188 pipelines",
-    "q101_components_deep_chain": "iterative large/small-star rounds are "
-        "checkpointed; per-round plan pinned in tests/test_graph*.py",
+    "q73_neardup_clusters": "min-label propagation rounds, each "
+        "checkpointed; pair generation audited via q54/q188 pipelines",
+    "q101_components_deep_chain": "star rounds are checkpointed, or the "
+        "edge set finishes on the driver under the broadcast threshold; "
+        "labels on both sides pinned in tests/test_operators.py",
     "q152_components_incremental": "incremental CC re-runs the q101 "
         "rounds on the delta; per-round plan pinned in tests",
     "q140_observe_scan_metrics": "result is the observe() metrics dict "

@@ -15,6 +15,13 @@ Two synthetic graphs, both one giant star + a control chain:
     takes BOTH star mins with a partial-agg groupBy + equi-join, so
     neither phase buffers the hub's neighborhood in one window task.
 
+Both graphs' edge sets are small enough (16 bytes an edge: ~16 MB at
+10^6 leaves) to finish on the driver under a 64 MB broadcast threshold,
+which would skip the star rounds this probe compares.  The session
+therefore sets ``spark.sql.autoBroadcastJoinThreshold=-1``, which forces
+the distributed rounds, and keeps the 64 MB bound for the joins AQE
+re-plans at run time through ``spark.sql.adaptive.autoBroadcastJoinThreshold``.
+
 Asserts the exact labeling (every node -> component min) and writes
 timings to SCALEBENCH.json as cc_hotkey_{lowroot,highroot}_n{N}.
 
@@ -46,7 +53,9 @@ def main() -> int:
         "ctdc-scale-probe-cc-hotkey",
         **{
             "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.autoBroadcastJoinThreshold": "64MB",
+            # -1 forces the star rounds (see the module docstring)
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "64MB",
             "spark.driver.memory": "16g",
             "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         },
