@@ -49,9 +49,19 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    import tempfile
+
     import __spark_entry__ as entrymod
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
 
+    # a private temp dir per run, inherited by the Python workers: the
+    # registry keeps fingerprinted reuse caches (IVF indexes, merge
+    # snapshots, state stores) under gettempdir(), and two concurrent
+    # runs writing one cache path break each other
+    tempfile.tempdir = os.environ["TMPDIR"] = scratch_dir("ctdc-bench-")
     spark = local_session(
         "ctdc-bench",
         **{

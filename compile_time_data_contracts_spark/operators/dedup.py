@@ -1067,6 +1067,32 @@ def _component_min_labels(u, v):
             label = jumped
 
 
+def _local_star_labels(spark, a, b) -> DataFrame:
+    """:func:`connected_components_star`'s output computed on the driver
+    from the collected pair columns ``a``, ``b`` (Arrow arrays of one
+    type), row for row what the star rounds return: every non-null id
+    of either column is a node, labels come only from pairs of two
+    non-null ids (a null beside an id leaves it a singleton, as
+    ``greatest``/``least`` do in the rounds), and any null id adds one
+    ``(null, null)`` row, as the rounds' ``all_nodes`` join does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u, v = pc.coalesce(a, b), pc.coalesce(b, a)
+    some = u.is_valid()
+    nodes, mins = _component_min_labels(
+        u.filter(some).to_numpy(), v.filter(some).to_numpy()
+    )
+    nulls = pa.nulls(1 if a.null_count or b.null_count else 0, a.type)
+
+    def column(ids):
+        return pa.chunked_array([pa.array(ids, a.type), nulls])
+
+    return spark.createDataFrame(
+        pa.table({"doc_id": column(nodes), "cluster_id": column(mins)})
+    )
+
+
 def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -1123,17 +1149,21 @@ def connected_components_star(
     checkpoint (materialize.pin_with_signature) — one action per round.
 
     Local finish: the rounds exist for graphs too big for one machine.
-    The initial edge checkpoint observes the edge count for free, and
-    when the edge set (16 bytes an edge: two 64-bit ids) is at most the
-    session's ``spark.sql.autoBroadcastJoinThreshold``, it is collected
-    once as Arrow and the component minima are computed on the driver
-    (:func:`_component_min_labels`) instead of in ~8 rounds of 4 jobs
-    each.  The broadcast threshold is the bound because it is the
-    session's existing statement of how large a relation the driver
-    may collect and ship: the label table (one row per non-root node,
-    never more rows than edges) is broadcast into the final join under
-    that same bound anyway.  A threshold of -1 disables the local
-    finish, and every larger edge set runs the rounds.
+    Before any distributed step, the persisted pair projection is
+    counted, and ``cap`` is the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` over 16 bytes a pair row
+    (two 64-bit ids).  At most ``cap`` rows are collected once as Arrow
+    from the cache the count filled, the component minima are computed
+    on the driver (:func:`_local_star_labels`) and handed back as a
+    local relation: no node pin, no edge checkpoint, no join, and the
+    checkpoint dir is never touched.  The broadcast threshold is the
+    bound because it is the session's existing statement of how large a
+    relation the driver may collect and ship.  The guard counts raw
+    pair rows (duplicates and reversed pairs included), so it is a
+    little more conservative than a distinct-edge count.  More rows pay
+    only the count (one job with no shuffle, whose scan fills the cache
+    the rounds read anyway) before the rounds.  A threshold below 16
+    bytes, -1 included, skips the count and disables the local finish.
 
     Lineage management: every round takes a RELIABLE checkpoint.  We
     MEASURED the alternative (persist MEMORY_AND_DISK between
@@ -1151,19 +1181,36 @@ def connected_components_star(
     from pyspark import StorageLevel
 
     spark = pairs.sparkSession
-    _ensure_checkpoint_dir(spark.sparkContext)
-
-    # pairs feeds the initial edge build, the convergence signature,
-    # both all_nodes branches, and round 1 — ~5 evaluations of the
-    # (expensive) upstream pair pipeline without persistence.  Persist
-    # an INTERNAL projection (never the caller's object — its storage
-    # semantics stay untouched), checkpoint the two derived frames
-    # eagerly, and drop the cache in a finally block so nothing leaks
-    # to session LRU.
-    cached = pairs.select(F.col(a_col), F.col(b_col)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    cached = pairs.select(F.col(a_col), F.col(b_col))
+    a_type, b_type = (f.dataType for f in cached.schema)
+    if a_type != b_type:
+        # both sides label the one type the rounds' union would widen to
+        common = (
+            cached.select(a_col).union(cached.select(b_col)).schema[0].dataType
+        )
+        cached = cached.select(
+            F.col(a_col).cast(common).alias(a_col),
+            F.col(b_col).cast(common).alias(b_col),
+        )
+    # the pairs feed the size guard, the initial edge build, the
+    # convergence signature, both all_nodes branches, and round 1 —
+    # ~6 evaluations of the (expensive) upstream pair pipeline without
+    # persistence.  Persist an INTERNAL projection (never the caller's
+    # object — its storage semantics stay untouched), checkpoint the two
+    # derived frames eagerly, and drop the cache in a finally block so
+    # nothing leaks to session LRU.
+    cached = cached.persist(StorageLevel.MEMORY_AND_DISK)
+    bound = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     )
+    cap = bound // 16
     try:
+        # an RDD count is one job with no shuffle; DataFrame.count adds
+        # a shuffle and, under AQE, a second job
+        if cap > 0 and cached._jdf.queryExecution().toRdd().count() <= cap:
+            tbl = cached.toArrow()
+            return _local_star_labels(spark, tbl.column(0), tbl.column(1))
+        _ensure_checkpoint_dir(spark.sparkContext)
         all_nodes = (
             cached.select(F.col(a_col).alias("node"))
             .union(cached.select(F.col(b_col).alias("node")))
@@ -1185,40 +1232,7 @@ def connected_components_star(
     finally:
         cached.unpersist()
 
-    def labelled(lbl: DataFrame) -> DataFrame:
-        # (node, __lbl) covers the non-root nodes; roots and self-loop
-        # singletons keep their own id
-        return all_nodes.join(lbl, "node", "left").select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("__lbl"), F.col("node")).alias("cluster_id"),
-        )
-
     n_edges = sig[0]
-    # a bound of -1 (broadcast disabled) is below every edge-set size,
-    # so it always takes the rounds
-    bound = (
-        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    )
-    if n_edges * 16 <= bound:
-        import pyarrow as pa
-
-        tbl = edges.toArrow()
-        nodes, mins = _component_min_labels(
-            tbl.column("u").to_numpy(), tbl.column("v").to_numpy()
-        )
-        moved = nodes != mins
-        id_type = tbl.schema.field("u").type
-        return labelled(
-            spark.createDataFrame(
-                pa.table(
-                    {
-                        "node": pa.array(nodes[moved], id_type),
-                        "__lbl": pa.array(mins[moved], id_type),
-                    }
-                )
-            )
-        )
-
     for _ in range(max_iterations):
         # ---- large-star: symmetrize, attach larger neighbors to the min
         sym = edges.union(
@@ -1285,10 +1299,14 @@ def connected_components_star(
         # one action: checkpoint materialization + observed signature
         edges, new_sig = _pin_with_signature(small, "u", "v")
         if new_sig == sig:
-            return labelled(
-                edges.select(
-                    F.col("u").alias("node"), F.col("v").alias("__lbl")
-                )
+            # (u, v) covers the non-root nodes; roots and self-loop
+            # singletons keep their own id
+            lbl = edges.select(
+                F.col("u").alias("node"), F.col("v").alias("__lbl")
+            )
+            return all_nodes.join(lbl, "node", "left").select(
+                F.col("node").alias("doc_id"),
+                F.coalesce(F.col("__lbl"), F.col("node")).alias("cluster_id"),
             )
         sig = new_sig
         n_edges = new_sig[0]

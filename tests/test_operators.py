@@ -1311,40 +1311,99 @@ def test_component_min_labels_matches_union_find():
         assert dict(zip(nodes.tolist(), mins.tolist())) == union_find(edges)
 
 
+@pytest.mark.parametrize(
+    "schema", ["doc_a long, doc_b long", "doc_a int, doc_b long"]
+)
+def test_connected_components_star_null_ids(spark, cc_star_sides, schema):
+    """A null beside an id leaves that id a singleton, and any null id
+    adds one (null, null) row, on both sides of the local finish; ids
+    of two types come back as the wider one."""
+    from compile_time_data_contracts_spark.operators.dedup import (
+        connected_components_star,
+    )
+
+    df = spark.createDataFrame(
+        [(None, 5), (1, 2), (2, None), (7, 7)], schema
+    )
+
+    def run():
+        labels = connected_components_star(df)
+        return labels.schema.simpleString(), {
+            r["doc_id"]: r["cluster_id"] for r in labels.collect()
+        }
+
+    assert cc_star_sides(run) == (
+        (
+            "struct<doc_id:bigint,cluster_id:bigint>",
+            {1: 1, 2: 1, 5: 5, 7: 7, None: None},
+        ),
+    ) * 2
+
+
 def test_connected_components_star_local_finish_boundary(spark, monkeypatch):
-    """The edge set finishes on the driver exactly while its 16 bytes
-    an edge fit under the broadcast threshold: one signature pin (the
-    initial edge checkpoint) at the bound, star rounds one byte below."""
+    """The pairs finish on the driver exactly while their 16 bytes a
+    pair row fit under the broadcast threshold: one Arrow collect and no
+    signature pin at the bound, star rounds and no collect one byte
+    below.  Duplicated and reversed pairs count as rows, and a threshold
+    past the Java int range still finishes locally."""
     from compile_time_data_contracts_spark.operators import dedup
 
-    calls = []
-    real = dedup._pin_with_signature
+    pins, collects = [], []
+    real_pin = dedup._pin_with_signature
+    frame = type(spark.range(1))
+    real_collect = frame.toArrow
 
-    def spy(*args, **kwargs):
-        calls.append(args)
-        return real(*args, **kwargs)
+    def spy_pin(*args, **kwargs):
+        pins.append(args)
+        return real_pin(*args, **kwargs)
 
-    monkeypatch.setattr(dedup, "_pin_with_signature", spy)
-    # a 10-link chain: 10 edges = 160 bytes
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(10)], "doc_a long, doc_b long"
-    )
+    def spy_collect(self):
+        collects.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(dedup, "_pin_with_signature", spy_pin)
+    monkeypatch.setattr(frame, "toArrow", spy_collect)
+    chain = [(i, i + 1) for i in range(10)]
     key = "spark.sql.autoBroadcastJoinThreshold"
 
-    def run(threshold: int):
-        calls.clear()
+    def run(rows, threshold: int):
+        pins.clear()
+        collects.clear()
         spark.conf.set(key, str(threshold))
+        df = spark.createDataFrame(rows, "doc_a long, doc_b long")
         labels = dedup.connected_components_star(df)
-        return dict(tuple(r) for r in labels.collect()), len(calls)
+        out = dict(tuple(r) for r in labels.collect())
+        return out, len(collects), len(pins)
 
+    want = {i: 0 for i in range(11)}
     old = spark.conf.get(key)
     try:
-        at_bound, below_bound = run(160), run(159)
+        for rows in (chain, chain + [(0, 1), (2, 1), (3, 2)]):
+            assert run(rows, 16 * len(rows)) == (want, 1, 0)
+            labels, n_collects, n_pins = run(rows, 16 * len(rows) - 1)
+            assert labels == want and n_collects == 0 and n_pins > 0
+        assert run(chain, 2**40) == (want, 1, 0)
     finally:
         spark.conf.set(key, old)
-    want = {i: 0 for i in range(11)}
-    assert at_bound == (want, 1)
-    assert below_bound[0] == want and below_bound[1] > 1
+
+
+def test_connected_components_star_leaves_no_cache(spark, cc_star_sides):
+    """The internal pair cache is dropped on both sides of the guard."""
+    from compile_time_data_contracts_spark.operators.dedup import (
+        connected_components_star,
+    )
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
+    )
+    jsc = spark.sparkContext._jsc
+
+    def run():
+        before = jsc.getPersistentRDDs().size()
+        labels = connected_components_star(df).collect()
+        return len(labels), jsc.getPersistentRDDs().size() - before
+
+    assert cc_star_sides(run) == ((21, 0),) * 2
 
 
 def test_embedding_dim_stats_and_normalize(spark):

@@ -2680,10 +2680,12 @@ WAIVERS = {
     "q73_neardup_clusters": "min-label propagation rounds, each "
         "checkpointed; pair generation audited via q54/q188 pipelines",
     "q101_components_deep_chain": "star rounds are checkpointed, or the "
-        "edge set finishes on the driver under the broadcast threshold; "
-        "labels on both sides pinned in tests/test_operators.py",
+        "raw pairs finish on the driver from one Arrow collect when their "
+        "row count fits the broadcast threshold; labels on both sides "
+        "pinned in tests/test_operators.py",
     "q152_components_incremental": "incremental CC re-runs the q101 "
-        "rounds on the delta; per-round plan pinned in tests",
+        "rounds on the delta, or its pairs finish on the driver from one "
+        "Arrow collect; labels on both sides pinned in tests",
     "q140_observe_scan_metrics": "result is the observe() metrics dict "
         "re-entered driver-side; the audited property is the "
         "instrumentation, not a plan shape",

@@ -15,7 +15,7 @@ Two synthetic graphs, both one giant star + a control chain:
     takes BOTH star mins with a partial-agg groupBy + equi-join, so
     neither phase buffers the hub's neighborhood in one window task.
 
-Both graphs' edge sets are small enough (16 bytes an edge: ~16 MB at
+Both graphs' pairs are small enough (16 bytes a pair row: ~16 MB at
 10^6 leaves) to finish on the driver under a 64 MB broadcast threshold,
 which would skip the star rounds this probe compares.  The session
 therefore sets ``spark.sql.autoBroadcastJoinThreshold=-1``, which forces
