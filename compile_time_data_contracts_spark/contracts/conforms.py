@@ -159,10 +159,25 @@ def _compare_shape(
 def _compare_by_name(
     path: str, out: StructShape, exp: StructShape, ci: bool
 ) -> list[Drift]:
-    """Unordered by-name comparer (ContractsCore.scala:237-284)."""
+    """Unordered by-name comparer (ContractsCore.scala:237-284).  Names
+    that collide under the active normalization make the by-name index
+    ill-defined, so each colliding group is a mismatch — the runtime pin
+    rejects the same struct (SparkCore.scala:72-78)."""
     drifts: list[Drift] = []
     out_by = { _norm(f.name, ci): f for f in out.fields }
     exp_by = { _norm(f.name, ci): f for f in exp.fields }
+    for side, s, by_name in (("found", out, out_by), ("expected", exp, exp_by)):
+        if len(by_name) != len(s.fields):
+            for key in by_name:
+                group = [f.name for f in s.fields if _norm(f.name, ci) == key]
+                if len(group) > 1:
+                    drifts.append(
+                        Drift(
+                            "mismatch",
+                            _join(path, group[0]),
+                            f"duplicate field names in {side}: {group}",
+                        )
+                    )
     for key, ef in exp_by.items():
         if key not in out_by:
             drifts.append(

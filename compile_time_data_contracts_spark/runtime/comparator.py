@@ -1,9 +1,9 @@
 """Policy-aware runtime schema comparator over live ``StructType``s.
 
-Python re-expression of `RuntimeSchemaComparator`
-(/root/reference/src/main/scala/ctdc/SparkCore.scala:30-147).  Operates on
-driver-side metadata only (``df.schema``) — never touches rows, so cost is
-microseconds per pipeline boundary regardless of data scale.
+Python re-expression of `RuntimeSchemaComparator` (SparkCore.scala:30-147).
+Operates on driver-side metadata only (``df.schema``) — never touches
+rows, so cost is microseconds per pipeline boundary regardless of data
+scale.
 
 The comparison *mode* (unordered / ordered / backward / forward /
 by-position, each with its case sensitivity) is threaded through every
@@ -59,22 +59,6 @@ class StructMode:
 # comparison (the behavior the public helper always had).
 _ORDERED_CS = StructMode("ordered", case_insensitive=False)
 
-# Interned mode instances: comparator entry points run once per pipeline
-# boundary but over every nesting level, so avoid re-allocating the
-# frozen dataclass on each call.
-_MODES = {
-    (kind, ci): StructMode(kind, ci)
-    for kind in ("unordered", "ordered", "backward", "forward", "by_position")
-    for ci in (False, True)
-}
-
-# Hoisted instances for the public entry points: skips the per-call
-# tuple-key construction + dict probe (~10% of a whole by-position
-# comparison at the reference's 6-field benchmark schema).
-_BY_POSITION = _MODES[("by_position", False)]
-_UNORDERED_CI = _MODES[("unordered", True)]
-_UNORDERED_CS = _MODES[("unordered", False)]
-
 
 def duplicate_names(
     schema: T.StructType, case_insensitive: bool = True
@@ -89,106 +73,22 @@ def duplicate_names(
     ]
 
 
-def _has_default(field: T.StructField) -> bool:
-    meta = field.metadata or {}
-    return bool(meta.get(HAS_DEFAULT_KEY, False))
-
-
 def _missing_allowed(field: T.StructField) -> bool:
-    return field.nullable or _has_default(field)
+    return field.nullable or bool((field.metadata or {}).get(HAS_DEFAULT_KEY))
 
 
 def _unique_fields_by_name(
     schema: T.StructType, mode: StructMode
 ) -> dict[str, T.StructField] | None:
     """Unique-by-name index, or None when duplicates make by-name matching
-    ill-defined (SparkCore.scala:72-78).  Single pass: the duplicate check
-    and the index are the same dict insert.
-
-    The index is memoized on the StructType instance (per case mode),
-    keyed to a content token — a tuple snapshot of the StructField
-    objects — so ``schema.add(...)``, ``fields[i] = other``, and any
-    other field-list edit invalidates it.  Validation is C-speed:
-    ``tuple(list)`` is a memcpy and tuple ``==`` short-circuits on
-    element identity, so the unmutated case never calls
-    ``StructField.__eq__``; a replaced-but-``==`` field validates the
-    cache, which is semantically sound because the cached index is then
-    still correct.  The index stores StructField *references*, so
-    in-place ``field.dataType = X`` mutation reads through correctly;
-    in-place ``field.name = ...`` assignment on a schema you keep
-    comparing is the one mutation the token cannot see (don't do that —
-    replace the field instead)."""
-    attr = "_ctdc_nameidx_ci" if mode.case_insensitive else "_ctdc_nameidx_cs"
-    fields = schema.fields
-    token = tuple(fields)
-    cached = schema.__dict__.get(attr)
-    if cached is not None and cached[0] == token:
-        return cached[1]
-    out: dict[str, T.StructField] | None = {}
-    ci = mode.case_insensitive
-    for f in fields:
-        key = f.name.lower() if ci else f.name
+    ill-defined (SparkCore.scala:72-78)."""
+    out: dict[str, T.StructField] = {}
+    for f in schema.fields:
+        key = mode.norm(f.name)
         if key in out:
-            out = None
-            break
+            return None
         out[key] = f
-    try:
-        schema.__dict__[attr] = (token, out)
-    except (AttributeError, TypeError):  # exotic StructType without __dict__
-        pass
     return out
-
-
-def _subtree_dup_free(dt: T.DataType, ci: bool) -> bool:
-    """True iff no struct anywhere in the subtree has duplicate field
-    names under the active normalization.  A dup-free subtree compared
-    against the SAME object is a match under every by-name mode (same
-    names, same order, same types), so identity + this flag
-    short-circuits the whole recursion; a dup-carrying struct must
-    still fail against itself (SparkCore.scala:72-78), which the flag
-    preserves.
-
-    Memoized per StructType instance, keyed to a tuple snapshot of its
-    field objects (same content token as the name index — identity-
-    short-circuited C-level validation), so replacing or adding any
-    direct field re-derives the flag; a replaced-but-``==`` field
-    validates the cache, which is sound because equal fields have equal
-    names and subtrees.  The cached value aggregates the whole subtree
-    but the token only snapshots the direct field list, so an edit made
-    *through* unchanged parent objects (mutating a nested struct's field
-    list, or in-place ``field.name`` / ``field.dataType`` assignment) is
-    the remaining blind spot — rebuild nested structs instead of
-    mutating them in place.  Pinned contract schemas are constructed
-    once and never mutated, so the cache is sound for the comparator's
-    whole life on the contract side; ``df.schema`` returns fresh objects
-    per call, so found-side entries are written once and never reused
-    stale."""
-    cls = dt.__class__
-    if cls is T.StructType:
-        attr = "_ctdc_dupfree_ci" if ci else "_ctdc_dupfree_cs"
-        fields = dt.fields
-        token = tuple(fields)
-        cached = dt.__dict__.get(attr)
-        if cached is not None and cached[0] == token:
-            return cached[1]
-        names = (
-            {f.name.lower() for f in fields} if ci else {f.name for f in fields}
-        )
-        clean = len(names) == len(fields) and all(
-            _subtree_dup_free(f.dataType, ci) for f in fields
-        )
-        try:
-            dt.__dict__[attr] = (token, clean)
-        except (AttributeError, TypeError):
-            pass
-        return clean
-    if cls is T.ArrayType:
-        return _subtree_dup_free(dt.elementType, ci)
-    if cls is T.MapType:
-        return _subtree_dup_free(dt.keyType, ci) and _subtree_dup_free(
-            dt.valueType, ci
-        )
-    return True
 
 
 def compare_data_type(
@@ -201,68 +101,7 @@ def compare_data_type(
 
     Do NOT replace with ``found == expected`` — Spark's equality includes
     struct-field nullability and metadata.
-
-    Hot path dispatches on the exact class (the only classes Spark's own
-    schema machinery produces) with an identity short-circuit for leaf
-    types; isinstance recursion is kept as the fallback so DataType
-    subclasses still compare structurally.  NO identity short-circuit
-    for containers: a struct with duplicate names must fail against
-    itself under by-name modes (SparkCore.scala:72-78).
     """
-    tf, te = found.__class__, expected.__class__
-    if tf is te:
-        if tf is T.StructType:
-            if found is expected and _subtree_dup_free(
-                found, mode.case_insensitive
-            ):
-                return True
-            return _compare_struct(found, expected, mode)
-        if tf is T.ArrayType:
-            return (
-                found.containsNull == expected.containsNull
-                and compare_data_type(found.elementType, expected.elementType, mode)
-            )
-        if tf is T.MapType:
-            return (
-                found.valueContainsNull == expected.valueContainsNull
-                and compare_data_type(found.keyType, expected.keyType, mode)
-                and compare_data_type(found.valueType, expected.valueType, mode)
-            )
-        if found is expected or tf in _PARAMLESS_ATOMS:
-            return True
-        if tf is T.StringType:  # one 'collation' parameter
-            return found.collation == expected.collation
-        return found == expected
-    return _compare_data_type_subclass(found, expected, mode)
-
-
-# Atomic types with no constructor parameters: same class ⇒ equal, no
-# __eq__ dunder needed.  Parameterized atoms (DecimalType precision/scale,
-# Char/Varchar length, StringType collation, interval fields) are absent
-# so they still compare by ==.
-_PARAMLESS_ATOMS = frozenset(
-    {
-        T.NullType,
-        T.BooleanType,
-        T.ByteType,
-        T.ShortType,
-        T.IntegerType,
-        T.LongType,
-        T.FloatType,
-        T.DoubleType,
-        T.BinaryType,
-        T.DateType,
-        T.TimestampType,
-        T.TimestampNTZType,
-    }
-)
-
-
-def _compare_data_type_subclass(
-    found: T.DataType, expected: T.DataType, mode: StructMode
-) -> bool:
-    """Original isinstance-based recursion — reached only when the two
-    sides have different concrete classes (e.g. a DataType subclass)."""
     if isinstance(found, T.StructType) and isinstance(expected, T.StructType):
         return _compare_struct(found, expected, mode)
     if isinstance(found, T.ArrayType) and isinstance(expected, T.ArrayType):
@@ -281,150 +120,34 @@ def _compare_data_type_subclass(
 def _compare_struct(
     found: T.StructType, expected: T.StructType, mode: StructMode
 ) -> bool:
-    """Mode-dispatched struct comparison (SparkCore.scala:79-127).
-    The unordered arm (EXACT, the default policy) is checked first and
-    keeps its leaf handling inlined — this path runs once per field per
-    pipeline boundary and the dunder/call overhead of delegating every
-    leaf dominates the metadata comparison."""
-    if found is expected:
-        # Positional modes never consult names, so duplicate field names
-        # cannot fail them (SparkCore.scala:82-91): identity alone proves
-        # the match.  By-name modes must still fail a dup-carrying struct
-        # against itself (SparkCore.scala:72-78).
-        if mode.kind in ("by_position", "ordered") or _subtree_dup_free(
-            found, mode.case_insensitive
-        ):
-            return True
-    if mode.kind == "unordered":
-        fnd_by = _unique_fields_by_name(found, mode)
-        exp_by = _unique_fields_by_name(expected, mode)
-        if fnd_by is None or exp_by is None:
+    """Mode-dispatched struct comparison (SparkCore.scala:79-127)."""
+    if mode.kind in ("ordered", "by_position"):
+        if len(found.fields) != len(expected.fields):
             return False
-        if fnd_by.keys() != exp_by.keys():  # dict views: C-level set equality
-            return False
-        ci = mode.case_insensitive
-        for k, ef in exp_by.items():
-            fd = fnd_by[k].dataType
-            ed = ef.dataType
-            if fd is ed:
-                # identical object: equal unless a nested struct carries
-                # duplicate names (cached flag)
-                if _subtree_dup_free(fd, ci):
-                    continue
-            else:
-                cf = fd.__class__
-                if cf is ed.__class__:
-                    if cf in _PARAMLESS_ATOMS:
-                        continue
-                    if cf is T.StringType:  # one 'collation' parameter
-                        if fd.collation == ed.collation:
-                            continue
-                        return False
-                    # inline the container dispatch (identity already
-                    # failed, so compare_data_type's short-circuit
-                    # cannot fire — skip its frame)
-                    if cf is T.StructType:
-                        if _compare_struct(fd, ed, mode):
-                            continue
-                        return False
-                    if cf is T.ArrayType:
-                        if fd.containsNull == ed.containsNull and (
-                            compare_data_type(fd.elementType, ed.elementType, mode)
-                        ):
-                            continue
-                        return False
-                    if cf is T.MapType:
-                        if (
-                            fd.valueContainsNull == ed.valueContainsNull
-                            and compare_data_type(fd.keyType, ed.keyType, mode)
-                            and compare_data_type(fd.valueType, ed.valueType, mode)
-                        ):
-                            continue
-                        return False
-            if not compare_data_type(fd, ed, mode):
-                return False
-        return True
-
-    if mode.kind == "by_position":
-        # Inlined fast loop (same treatment as the unordered arm): a
-        # shared dataType object is a match outright — by-position never
-        # reads names, so no dup-free check is needed — and paramless
-        # atoms match on class identity without the __eq__ dunder.
-        ffs, efs = found.fields, expected.fields
-        if len(ffs) != len(efs):
-            return False
-        for ff, ef in zip(ffs, efs):
-            fd = ff.dataType
-            ed = ef.dataType
-            if fd is ed:
-                continue
-            cf = fd.__class__
-            if cf is ed.__class__:
-                if cf in _PARAMLESS_ATOMS:
-                    continue
-                if cf is T.StringType:  # one 'collation' parameter
-                    if fd.collation == ed.collation:
-                        continue
-                    return False
-            if not compare_data_type(fd, ed, mode):
-                return False
-        return True
-
-    if mode.kind == "ordered":
-        ffs, efs = found.fields, expected.fields
-        if len(ffs) != len(efs):
-            return False
-        if mode.case_insensitive:
-            for ff, ef in zip(ffs, efs):
-                if ff.name.lower() != ef.name.lower():
-                    return False
-                fd = ff.dataType
-                ed = ef.dataType
-                if fd is ed:
-                    continue
-                cf = fd.__class__
-                if cf is ed.__class__ and cf in _PARAMLESS_ATOMS:
-                    continue
-                if not compare_data_type(fd, ed, mode):
-                    return False
-            return True
-        for ff, ef in zip(ffs, efs):
-            if ff.name != ef.name:
-                return False
-            fd = ff.dataType
-            ed = ef.dataType
-            if fd is ed:
-                continue
-            cf = fd.__class__
-            if cf is ed.__class__ and cf in _PARAMLESS_ATOMS:
-                continue
-            if not compare_data_type(fd, ed, mode):
-                return False
-        return True
+        return all(
+            (mode.kind == "by_position" or mode.norm(ff.name) == mode.norm(ef.name))
+            and compare_data_type(ff.dataType, ef.dataType, mode)
+            for ff, ef in zip(found.fields, expected.fields)
+        )
+    if mode.kind not in ("unordered", "backward", "forward"):
+        raise ValueError(f"unknown struct mode {mode.kind!r}")
 
     fnd_by = _unique_fields_by_name(found, mode)
     exp_by = _unique_fields_by_name(expected, mode)
     if fnd_by is None or exp_by is None:
         return False
-
-    if mode.kind == "backward":
-        for key, ef in exp_by.items():
-            ff = fnd_by.get(key)
-            if ff is None:
-                if not _missing_allowed(ef):
-                    return False
-            elif not compare_data_type(ff.dataType, ef.dataType, mode):
+    if mode.kind == "unordered" and fnd_by.keys() != exp_by.keys():
+        return False
+    if mode.kind == "forward" and not fnd_by.keys() <= exp_by.keys():
+        return False
+    for key, ef in exp_by.items():
+        ff = fnd_by.get(key)
+        if ff is None:  # only backward and forward get here
+            if mode.kind == "backward" and not _missing_allowed(ef):
                 return False
-        return True
-
-    if mode.kind == "forward":
-        for key, ff in fnd_by.items():
-            ef = exp_by.get(key)
-            if ef is None or not compare_data_type(ff.dataType, ef.dataType, mode):
-                return False
-        return True
-
-    raise ValueError(f"unknown struct mode {mode.kind!r}")
+        elif not compare_data_type(ff.dataType, ef.dataType, mode):
+            return False
+    return True
 
 
 class RuntimeSchemaComparator:
@@ -438,7 +161,7 @@ class RuntimeSchemaComparator:
         """Unordered name equality; duplicate names on either side fail the
         match (SparkCore.scala:72-78, 93-103)."""
         return _compare_struct(
-            found, expected, _UNORDERED_CI if case_insensitive else _UNORDERED_CS
+            found, expected, StructMode("unordered", case_insensitive)
         )
 
     @staticmethod
@@ -446,14 +169,12 @@ class RuntimeSchemaComparator:
         expected: T.StructType, found: T.StructType, case_insensitive: bool = False
     ) -> bool:
         """Length + per-position name (CS/CI) + type (SparkCore.scala:86-91)."""
-        return _compare_struct(
-            found, expected, _MODES[("ordered", case_insensitive)]
-        )
+        return _compare_struct(found, expected, StructMode("ordered", case_insensitive))
 
     @staticmethod
     def by_position(expected: T.StructType, found: T.StructType) -> bool:
         """Length + per-position type only (SparkCore.scala:82-84)."""
-        return _compare_struct(found, expected, _BY_POSITION)
+        return _compare_struct(found, expected, StructMode("by_position"))
 
     @staticmethod
     def backward(
@@ -464,7 +185,7 @@ class RuntimeSchemaComparator:
         duplicates on either side fail; recursive in backward mode
         (SparkCore.scala:105-116)."""
         return _compare_struct(
-            found, expected, _MODES[("backward", case_insensitive)]
+            found, expected, StructMode("backward", case_insensitive)
         )
 
     @staticmethod
@@ -474,28 +195,26 @@ class RuntimeSchemaComparator:
         """Every found field must exist in expected with matching type;
         duplicates on either side fail; recursive in forward mode
         (SparkCore.scala:118-127)."""
-        return _compare_struct(
-            found, expected, _MODES[("forward", case_insensitive)]
-        )
+        return _compare_struct(found, expected, StructMode("forward", case_insensitive))
 
-    # Policy -> comparator dispatch (SparkCore.scala:150-189)
     @staticmethod
     def matches(
         expected: T.StructType, found: T.StructType, policy: SchemaPolicy
     ) -> bool:
-        C = RuntimeSchemaComparator
-        if policy in (SchemaPolicy.EXACT, SchemaPolicy.EXACT_UNORDERED_CI):
-            return C.unordered(expected, found, case_insensitive=True)
-        if policy is SchemaPolicy.EXACT_ORDERED:
-            return C.ordered(expected, found, case_insensitive=False)
-        if policy is SchemaPolicy.EXACT_ORDERED_CI:
-            return C.ordered(expected, found, case_insensitive=True)
-        if policy is SchemaPolicy.EXACT_BY_POSITION:
-            return C.by_position(expected, found)
-        if policy is SchemaPolicy.BACKWARD:
-            return C.backward(expected, found)
-        if policy is SchemaPolicy.FORWARD:
-            return C.forward(expected, found)
+        """Policy -> comparator dispatch (SparkCore.scala:150-189); the
+        policy's flags come from ``SchemaPolicy`` itself."""
         if policy is SchemaPolicy.FULL:
             return True
-        raise ValueError(f"unknown policy {policy!r}")
+        if policy.by_position:
+            kind = "by_position"
+        elif policy.ordered:
+            kind = "ordered"
+        elif policy is SchemaPolicy.BACKWARD:
+            kind = "backward"
+        elif policy is SchemaPolicy.FORWARD:
+            kind = "forward"
+        else:
+            kind = "unordered"
+        return _compare_struct(
+            found, expected, StructMode(kind, policy.case_insensitive)
+        )

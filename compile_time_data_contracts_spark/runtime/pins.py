@@ -1,8 +1,8 @@
 """Runtime schema pins: assert-or-throw with rendered schema trees.
 
 Python re-expression of `SchemaCheck.assertMatchesContract`
-(/root/reference/src/main/scala/ctdc/SparkCore.scala:302-340).  Driver-side
-metadata check only — no Spark job is triggered.
+(SparkCore.scala:302-340).  Driver-side metadata check only — no Spark
+job is triggered.
 """
 
 from __future__ import annotations
@@ -16,12 +16,15 @@ from ..contracts.schema import spark_schema
 from ..contracts.shape import StructShape
 from .comparator import RuntimeSchemaComparator, duplicate_names
 
-__all__ = ["SchemaMismatchError", "assert_matches_contract", "tree_string"]
+__all__ = ["SchemaMismatchError", "assert_matches_contract"]
 
 
 class SchemaMismatchError(Exception):
-    """Runtime pin failure, carrying both schema trees
-    (message shape mirrors SparkCore.scala:318-338)."""
+    """Runtime pin failure, carrying both schema trees in Spark's
+    ``printSchema`` format (message shape mirrors SparkCore.scala:318-338).
+    Duplicate field names are listed only for by-name policies, under the
+    policy's own name normalization: ordered and by-position pins never
+    index by name."""
 
     def __init__(
         self,
@@ -34,78 +37,19 @@ class SchemaMismatchError(Exception):
         self.policy = policy
         self.expected = expected
         self.found = found
-        dups = duplicate_names(found) + duplicate_names(expected)
-        dup_note = (
-            f"\nDuplicate field names (case-insensitive): {dups}" if dups else ""
-        )
+        dup_note = ""
+        if not (policy.ordered or policy.by_position):
+            ci = policy.case_insensitive
+            dups = duplicate_names(found, ci) + duplicate_names(expected, ci)
+            if dups:
+                names = "case-insensitive" if ci else "case-sensitive"
+                dup_note = f"\nDuplicate field names ({names}): {dups}"
         super().__init__(
             f"Schema mismatch at {context} under policy {policy.value}:"
             f"{dup_note}\n"
-            f"Found schema:\n{tree_string(found)}\n"
-            f"Expected schema:\n{tree_string(expected)}"
+            f"Found schema:\n{found.treeString()}"
+            f"Expected schema:\n{expected.treeString()}"
         )
-
-
-def _type_name(dt: T.DataType) -> str:
-    return dt.simpleString()
-
-
-def tree_string(schema: T.StructType) -> str:
-    """Render a StructType in Spark's ``printSchema`` tree format (PySpark's
-    StructType has no treeString; this mirrors it closely enough for
-    diagnostics)."""
-    lines = ["root"]
-
-    def walk(field: T.StructField, indent: str) -> None:
-        dt = field.dataType
-        nullable = f"(nullable = {str(field.nullable).lower()})"
-        if isinstance(dt, T.StructType):
-            lines.append(f"{indent}|-- {field.name}: struct {nullable}")
-            for f in dt.fields:
-                walk(f, indent + "|    ")
-        elif isinstance(dt, T.ArrayType):
-            if isinstance(dt.elementType, T.StructType):
-                # recurse like printSchema's "element: struct" child —
-                # flattening a wide nested struct to one simpleString
-                # line would lose exactly the per-field nullability the
-                # pin error exists to show
-                lines.append(
-                    f"{indent}|-- {field.name}: array "
-                    f"(containsNull = {str(dt.containsNull).lower()}) "
-                    f"{nullable}"
-                )
-                for f in dt.elementType.fields:
-                    walk(f, indent + "|    ")
-            else:
-                lines.append(
-                    f"{indent}|-- {field.name}: "
-                    f"array<{_type_name(dt.elementType)}> "
-                    f"(containsNull = {str(dt.containsNull).lower()}) "
-                    f"{nullable}"
-                )
-        elif isinstance(dt, T.MapType):
-            if isinstance(dt.valueType, T.StructType):
-                lines.append(
-                    f"{indent}|-- {field.name}: "
-                    f"map<{_type_name(dt.keyType)}, struct> "
-                    f"(valueContainsNull = "
-                    f"{str(dt.valueContainsNull).lower()}) {nullable}"
-                )
-                for f in dt.valueType.fields:
-                    walk(f, indent + "|    ")
-            else:
-                lines.append(
-                    f"{indent}|-- {field.name}: map<{_type_name(dt.keyType)},"
-                    f"{_type_name(dt.valueType)}> "
-                    f"(valueContainsNull = "
-                    f"{str(dt.valueContainsNull).lower()}) {nullable}"
-                )
-        else:
-            lines.append(f"{indent}|-- {field.name}: {_type_name(dt)} {nullable}")
-
-    for f in schema.fields:
-        walk(f, " ")
-    return "\n".join(lines)
 
 
 def assert_matches_contract(

@@ -9,39 +9,18 @@ executors like any file source instead of materializing on the driver.
 (id, hash32) where hash32 = (id * 2654435761) mod 2^32 — the same
 multiplicative hash the sampling operators use — so an external engine
 can regenerate identical rows for value-level verification.
-
-Availability-gated: the DataSource API needs pyspark >= 4.0; import
-errors surface as a clear RuntimeError rather than an ImportError deep
-inside a query.
 """
 
 from __future__ import annotations
 
 __all__ = ["register_synth_source", "SynthDataSource"]
 
-try:
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-        SimpleDataSourceStreamReader,
-    )
-
-    _DS_AVAILABLE = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    _DS_AVAILABLE = False
-
-    class DataSource:  # type: ignore[no-redef]
-        pass
-
-    class DataSourceReader:  # type: ignore[no-redef]
-        pass
-
-    class InputPartition:  # type: ignore[no-redef]
-        pass
-
-    class SimpleDataSourceStreamReader:  # type: ignore[no-redef]
-        pass
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
 
 class _RangePartition(InputPartition):
@@ -136,8 +115,4 @@ class SynthDataSource(DataSource):
 
 
 def register_synth_source(spark) -> None:
-    if not _DS_AVAILABLE:
-        raise RuntimeError(
-            "the Python DataSource API requires pyspark >= 4.0"
-        )
     spark.dataSource.register(SynthDataSource)

@@ -172,13 +172,16 @@ def _shape_structs(depth: int = 2):
     """Bounded-depth recursive shape generator: leaves, sequences, AND
     nested StructShapes (also wrapped in sequences), so the agreement
     property exercises the mode-aware nested-struct recursion of both
-    layers — a flat-only generator cannot catch nested-mode divergence."""
+    layers — a flat-only generator cannot catch nested-mode divergence.
+    Names are unique only case-sensitively and drawn from a small
+    mixed-case alphabet, so ``id``/``ID``-style groups (duplicates under
+    the case-insensitive policies) and cross-side name overlaps are
+    common."""
     names = st.lists(
-        st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=1,
-                max_size=6),
+        st.text(alphabet="abAB", min_size=1, max_size=2),
         min_size=1,
         max_size=4,
-        unique_by=lambda s: s.lower(),
+        unique=True,
     )
     leaf = st.sampled_from(
         ["string", "int", "long", "double", "boolean"]
@@ -219,23 +222,26 @@ def _shape_structs(depth: int = 2):
 @given(_shape_structs(), _shape_structs())
 def test_compile_and_runtime_verdicts_agree(a, b):
     """conforms(producer, expected, policy).ok must equal the runtime
-    comparator's verdict over the derived StructTypes, for the policies
-    whose semantics both layers implement (Exact unordered-CI, Backward,
-    Forward, ByPosition)."""
-    sa, sb = spark_schema(a), spark_schema(b)
-    cases = [
-        (SchemaPolicy.EXACT, lambda: C.unordered(sb, sa)),
-        (SchemaPolicy.EXACT_UNORDERED_CI, lambda: C.unordered(sb, sa, True)),
-        (SchemaPolicy.EXACT_ORDERED, lambda: C.ordered(sb, sa, False)),
-        (SchemaPolicy.EXACT_ORDERED_CI, lambda: C.ordered(sb, sa, True)),
-        (SchemaPolicy.BACKWARD, lambda: C.backward(sb, sa)),
-        (SchemaPolicy.FORWARD, lambda: C.forward(sb, sa)),
-        (SchemaPolicy.EXACT_BY_POSITION, lambda: C.by_position(sb, sa)),
-        (SchemaPolicy.FULL, lambda: True),
-    ]
-    for policy, runtime in cases:
-        compile_ok = conforms(a, b, policy, raise_on_drift=False).ok
-        assert compile_ok == runtime(), (
-            f"{policy}: compile={compile_ok} runtime={not compile_ok}\n"
-            f"A={a.render()}\nB={b.render()}"
-        )
+    comparator's verdict over the derived StructTypes, for all eight
+    policies.  Each contract is also checked against itself:
+    a case-insensitive duplicate group must fail both layers under the
+    case-insensitive by-name policies."""
+    for prod, exp in ((a, b), (a, a)):
+        sa, sb = spark_schema(prod), spark_schema(exp)
+        cases = [
+            (SchemaPolicy.EXACT, lambda: C.unordered(sb, sa)),
+            (SchemaPolicy.EXACT_UNORDERED_CI, lambda: C.unordered(sb, sa, True)),
+            (SchemaPolicy.EXACT_ORDERED, lambda: C.ordered(sb, sa, False)),
+            (SchemaPolicy.EXACT_ORDERED_CI, lambda: C.ordered(sb, sa, True)),
+            (SchemaPolicy.BACKWARD, lambda: C.backward(sb, sa)),
+            (SchemaPolicy.FORWARD, lambda: C.forward(sb, sa)),
+            (SchemaPolicy.EXACT_BY_POSITION, lambda: C.by_position(sb, sa)),
+            (SchemaPolicy.FULL, lambda: True),
+        ]
+        for policy, runtime in cases:
+            compile_ok = conforms(prod, exp, policy, raise_on_drift=False).ok
+            assert compile_ok == runtime(), (
+                f"{policy}: compile={compile_ok} runtime={not compile_ok}\n"
+                f"A={prod.render()}\nB={exp.render()}"
+            )
+            assert compile_ok == C.matches(sb, sa, policy), policy

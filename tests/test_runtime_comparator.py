@@ -8,6 +8,9 @@ SparkRuntimeSpec.scala:26-27).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Optional
+
 from pyspark.sql import types as T
 
 from compile_time_data_contracts_spark import (
@@ -17,7 +20,11 @@ from compile_time_data_contracts_spark import (
     assert_matches_contract,
     compare_data_type,
 )
-from compile_time_data_contracts_spark.contracts.schema import HAS_DEFAULT_KEY
+from compile_time_data_contracts_spark.contracts.schema import (
+    HAS_DEFAULT_KEY,
+    spark_schema,
+)
+from compile_time_data_contracts_spark.contracts.shape import contract
 
 import pytest
 
@@ -65,7 +72,17 @@ def test_ci_duplicates_fail_unordered():
     assert not C.unordered(dup, BASE)
     with pytest.raises(SchemaMismatchError) as exc:
         assert_matches_contract(dup, BASE, SchemaPolicy.EXACT, context="test")
-    assert "Duplicate field names" in str(exc.value)
+    assert "Duplicate field names (case-insensitive)" in str(exc.value)
+    # Backward names are case-sensitive and by-position ignores names, so
+    # 'Email'/'email' are no duplicates there and the message lists none
+    for policy in (SchemaPolicy.BACKWARD, SchemaPolicy.EXACT_BY_POSITION):
+        with pytest.raises(SchemaMismatchError) as exc:
+            assert_matches_contract(dup, BASE, policy, context="test")
+        assert "Duplicate field names" not in str(exc.value)
+    same = _s(_f("email", T.StringType()), _f("email", T.StringType()))
+    with pytest.raises(SchemaMismatchError) as exc:
+        assert_matches_contract(same, BASE, SchemaPolicy.BACKWARD, context="test")
+    assert "Duplicate field names (case-sensitive)" in str(exc.value)
 
 
 # --- ordered / orderedCI / unorderedCI (SparkRuntimeSpec.scala:104-187) ----
@@ -332,24 +349,22 @@ def test_compile_runtime_agree_on_reordered_nested_struct():
 
 
 def test_name_index_cache_invalidated_by_add():
-    """The memoized per-instance name index must not serve stale results
-    after an in-place schema.add() (the documented mutation the
-    field-count guard catches)."""
+    """A verdict is fresh after an in-place ``schema.add()``: comparing,
+    editing either side, and comparing again reflects the edit."""
     from pyspark.sql import types as T
 
     a = T.StructType([T.StructField("x", T.LongType())])
     b = T.StructType([T.StructField("x", T.LongType())])
     assert C.unordered(a, b)
     b.add(T.StructField("y", T.StringType()))
-    assert not C.unordered(a, b)  # stale cache would still say True
+    assert not C.unordered(a, b)
     a.add(T.StructField("y", T.StringType()))
     assert C.unordered(a, b)
 
 
 def test_duplicate_names_fail_self_comparison():
     """A dup-name struct must fail against the SAME object under by-name
-    modes — the identity short-circuit may not bypass the dup check
-    (SparkCore.scala:72-78)."""
+    modes (SparkCore.scala:72-78)."""
     from pyspark.sql import types as T
 
     dup = T.StructType(
@@ -363,7 +378,7 @@ def test_duplicate_names_fail_self_comparison():
     assert not C.forward(dup, dup, case_insensitive=True)
     # case-sensitive: 'x' and 'X' are distinct names -> self-match holds
     assert C.forward(dup, dup, case_insensitive=False)
-    # nested dup inside an array element struct, reached via identity
+    # nested dup inside an array element struct
     nested = T.StructType(
         [T.StructField("arr", T.ArrayType(dup))]
     )
@@ -371,9 +386,9 @@ def test_duplicate_names_fail_self_comparison():
 
 
 def test_name_index_cache_invalidated_by_same_length_mutation():
-    """Same-length in-place field REPLACEMENT (the round-3 ADVICE failure
-    mode): a length-keyed cache would serve a stale verdict; the tuple-
-    snapshot token must invalidate on ``fields[i] = other``."""
+    """A verdict is fresh after a same-length in-place field replacement
+    (``fields[i] = other``): renames and type changes made that way are
+    seen by the next comparison, and restoring the field matches again."""
     from pyspark.sql import types as T
 
     a = T.StructType(
@@ -382,7 +397,7 @@ def test_name_index_cache_invalidated_by_same_length_mutation():
     b = T.StructType(
         [T.StructField("x", T.LongType()), T.StructField("y", T.StringType())]
     )
-    assert C.unordered(a, b)  # primes both caches
+    assert C.unordered(a, b)
     # rename by replacement, same field count
     b.fields[1] = T.StructField("z", T.StringType())
     assert not C.unordered(a, b)
@@ -395,14 +410,15 @@ def test_name_index_cache_invalidated_by_same_length_mutation():
 
 
 def test_dupfree_cache_invalidated_by_same_length_mutation():
-    """Replacing a field to introduce a (CI) duplicate name must defeat
-    the identity short-circuit's cached dup-free flag."""
+    """A verdict is fresh after an in-place field replacement that
+    introduces a case-insensitive duplicate name: the struct then fails
+    against itself under by-name modes."""
     from pyspark.sql import types as T
 
     s = T.StructType(
         [T.StructField("x", T.LongType()), T.StructField("y", T.StringType())]
     )
-    assert C.unordered(s, s, case_insensitive=True)  # primes dup-free cache
+    assert C.unordered(s, s, case_insensitive=True)
     s.fields[1] = T.StructField("X", T.StringType())  # CI duplicate of 'x'
     assert not C.unordered(s, s, case_insensitive=True)
     # by-position never reads names, so the dup struct still self-matches
@@ -411,8 +427,7 @@ def test_dupfree_cache_invalidated_by_same_length_mutation():
 
 def test_positional_modes_self_match_with_duplicates():
     """Ordered/by-position never consult the name index, so duplicate
-    names cannot fail them (SparkCore.scala:82-91) — including via the
-    identity short-circuit."""
+    names cannot fail them (SparkCore.scala:82-91)."""
     from pyspark.sql import types as T
 
     dup = T.StructType(
@@ -421,3 +436,66 @@ def test_positional_modes_self_match_with_duplicates():
     assert C.by_position(dup, dup)
     assert C.ordered(dup, dup, case_insensitive=False)
     assert C.ordered(dup, dup, case_insensitive=True)
+
+
+class _ArraySubclass(T.ArrayType):
+    pass
+
+
+@pytest.mark.parametrize(
+    "found, expected, verdict",
+    [
+        (T.StringType("UTF8_LCASE"), T.StringType(), False),
+        (T.DecimalType(10, 2), T.DecimalType(38, 18), False),
+        (T.VarcharType(5), T.VarcharType(6), False),
+        (_ArraySubclass(T.LongType(), True), T.ArrayType(T.LongType(), True), True),
+        (_ArraySubclass(T.LongType(), True), T.ArrayType(T.LongType(), False), False),
+    ],
+    ids=["collation", "decimal", "varchar", "array-subclass", "array-subclass-null"],
+)
+def test_leaf_parameters_and_subclasses(found, expected, verdict):
+    """Parameterized leaves compare with their parameters; a DataType
+    subclass compares structurally with its base class."""
+    assert compare_data_type(found, expected) is verdict
+
+
+@contract
+@dataclass
+class _Geo:
+    lat: float
+    lon: float
+
+
+@contract
+@dataclass
+class _Address:
+    street: str
+    zip: Optional[int]
+    geo: _Geo
+
+
+@contract
+@dataclass
+class _Order:
+    id: int
+    email: str
+    address: _Address
+    tags: list[Optional[str]]
+    metrics: dict[str, Optional[int]]
+
+
+def test_pin_leaves_schema_equality_intact():
+    """Pinning writes nothing onto the schemas it compares: after a pin
+    under every policy, the contract's schema and a struct nested in it
+    still equal their JSON round-trips."""
+
+    def round_trip(s: T.StructType) -> T.StructType:
+        return T.StructType.fromJson(s.jsonValue())
+
+    expected = spark_schema(_Order)
+    nested = expected["address"].dataType
+    for policy in SchemaPolicy:
+        assert_matches_contract(round_trip(expected), _Order, policy)
+        assert_matches_contract(expected, _Order, policy)
+        assert expected == round_trip(expected), policy
+        assert nested == round_trip(nested), policy

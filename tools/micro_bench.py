@@ -118,8 +118,8 @@ def main() -> None:
         lambda: RuntimeSchemaComparator.unordered(expected, expected),
         ops,
     )
-    # distinct-object match: defeats the identity short-circuit, so this
-    # is the df.schema-vs-pin cost a real pipeline boundary pays
+    # distinct-object match: the df.schema-vs-pin cost a real pipeline
+    # boundary pays (df.schema builds fresh objects on every call)
     clone = T.StructType.fromJson(expected.jsonValue())
     results["custom_exact_unordered_match_distinct"] = run_case(
         "custom_exact_unordered_match_distinct",

@@ -3780,12 +3780,9 @@ def main() -> int:
     # there.  Iterative operators (CC/graph loops) are excluded — their
     # per-round checkpoints are load-bearing for plan depth; their
     # build structure is audited via the inner pipelines instead.
-    try:
-        # Spark 4: the concrete class (method lookup target) lives in
-        # the classic module; the pyspark.sql.DataFrame base is abstract
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-    except ImportError:  # pragma: no cover - Spark 3.x fallback
-        from pyspark.sql import DataFrame as _DF
+    # the concrete class (method lookup target) lives in the classic
+    # module; the pyspark.sql.DataFrame base is abstract
+    from pyspark.sql.classic.dataframe import DataFrame as _DF
 
     _orig_ckpt = _DF.checkpoint
     _DF.checkpoint = lambda self, eager=True: self
