@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "ensure_checkpoint_dir",
+    "path_bytes",
     "pin",
     "pin_if_input_large",
     "pin_with_signature",
@@ -107,22 +108,44 @@ def scan_input_bytes(df: DataFrame) -> int | None:
 
 
 def _scan_input_bytes(df: DataFrame, stop_at: float) -> int | None:
-    # stops stat-ing once the running total reaches ``stop_at``: past a
-    # size threshold the exact total cannot change a pin-or-skip answer
-    import os
-
     try:
-        total = 0
-        for uri in df.inputFiles():
+        return path_bytes(df.inputFiles(), stop_at)
+    except Exception:
+        return None
+
+
+def path_bytes(paths, stop_at: float = float("inf")) -> int | None:
+    """Total on-disk bytes under ``paths`` (files, and directories
+    walked recursively), or None when one cannot be stat-ed locally:
+    a remote filesystem, a glob, a missing path.  Stops
+    stat-ing once the running total reaches ``stop_at``: past a size
+    threshold the exact total cannot change the caller's answer."""
+    import os
+    import stat
+
+    total = 0
+    try:
+        for uri in paths:
             path = uri.removeprefix("file:")
             if "://" in path:  # hdfs://, s3a://, ... — not stat-able here
                 return None
-            total += os.stat(path).st_size
-            if total >= stop_at:
-                break
-        return total
-    except Exception:
+            info = os.stat(path)
+            sizes = (
+                (
+                    os.stat(os.path.join(d, f)).st_size
+                    for d, _, fs in os.walk(path)
+                    for f in fs
+                )
+                if stat.S_ISDIR(info.st_mode)
+                else (info.st_size,)
+            )
+            for size in sizes:
+                total += size
+                if total >= stop_at:
+                    return total
+    except OSError:
         return None
+    return total
 
 
 def pin_if_input_large(

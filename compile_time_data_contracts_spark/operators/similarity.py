@@ -34,7 +34,6 @@ __all__ = [
     "ivf_search_batch",
     "mmr_select",
     "cosine_pairs",
-    "cosine_pairs_exact",
     "cosine_pairs_exact_blas",
     "cosine_pairs_exact_blocked",
     "hyperplanes",
@@ -418,33 +417,6 @@ def topk_cosine_multi(
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def cosine_pairs_exact(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All-pairs cosine >= threshold — O(n²) correctness baseline.
-    Norms are precomputed once per row so the pair loop only does the dot
-    product."""
-    normed = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("n", l2_norm(F.col("v")))
-    a, b = normed.alias("a"), normed.alias("b")
-    return (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-            (dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))).alias(
-                "sim"
-            ),
-        )
-        .filter(F.col("sim") >= threshold)
     )
 
 

@@ -46,7 +46,6 @@ from ..operators.dedup import (
 from ..operators.multimodal import attach_fake_media, extract_media_features
 from ..operators.similarity import (
     cosine_pairs,
-    cosine_pairs_exact,
     cosine_pairs_exact_blas,
     cosine_pairs_lsh,
     topk_cosine,

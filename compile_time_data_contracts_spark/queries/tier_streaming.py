@@ -286,7 +286,7 @@ def q145(spark: SparkSession, sf: str) -> DataFrame:
     from ..streaming.windows import gate_state_partitions
 
     stream = events_stream(spark, feed, max_files_per_trigger=mft)
-    with gate_state_partitions(spark):
+    with gate_state_partitions(stream):
         q = write_stream_idempotent(stream, out, ckpt)
         q.awaitTermination()
     # post-crash redelivery of batch 0: same rows, same batch id
@@ -508,10 +508,10 @@ def q212(spark: SparkSession, sf: str) -> DataFrame:
     handler = versioned_state_merger(state, keys, **spec)
     from ..streaming.windows import gate_state_partitions
 
-    with gate_state_partitions(spark):
+    stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
+    with gate_state_partitions(stream):
         qh = (
-            keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-            .writeStream.foreachBatch(handler)
+            stream.writeStream.foreachBatch(handler)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -606,10 +606,10 @@ def q304(spark: SparkSession, sf: str) -> DataFrame:
     )
     from ..streaming.windows import gate_state_partitions
 
-    with gate_state_partitions(spark):
+    stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
+    with gate_state_partitions(stream):
         qh = (
-            keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-            .writeStream.foreachBatch(handler)
+            stream.writeStream.foreachBatch(handler)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -680,10 +680,10 @@ def q331(spark: SparkSession, sf: str) -> DataFrame:
     handler = versioned_state_merger(state, ["user_id"], bors=["hbit"])
     from ..streaming.windows import gate_state_partitions
 
-    with gate_state_partitions(spark):
+    stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
+    with gate_state_partitions(stream):
         qh = (
-            keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-            .writeStream.foreachBatch(handler)
+            stream.writeStream.foreachBatch(handler)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -761,10 +761,10 @@ def q369(spark: SparkSession, sf: str) -> DataFrame:
     handler = versioned_state_merger(state, ["user_id"])
     from ..streaming.windows import gate_state_partitions
 
-    with gate_state_partitions(spark):
+    stream = events_stream(spark, feed, max_files_per_trigger=mft)
+    with gate_state_partitions(stream):
         qh = (
-            events_stream(spark, feed, max_files_per_trigger=mft)
-            .select("user_id")
+            stream.select("user_id")
             .writeStream.foreachBatch(handler)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

@@ -146,15 +146,7 @@ def interval_join_gate(
         right_watermark="2 hours",
     )
     pairs = joined.select(F.col("l.user_id").alias("user_id"))
-    # stream-stream joins keep FOUR state stores per partition per side
-    # pair (keyWithIndex + keyToNumValues x left/right), so the
-    # per-trigger init/commit fixed cost is ~4x an aggregation's; for
-    # this KB-sized bounded replay 4 partitions beat the gate-default 8
-    # (A/B min-of-4 at sf0.1: 3.30 -> 2.68 s).  Production sizes state
-    # partitions to state volume, as documented on run_gate_to_memory.
-    table, _ = run_gate_to_memory(
-        pairs, query_name, "append", state_partitions=4
-    )
+    table, _ = run_gate_to_memory(pairs, query_name, "append")
     return table.groupBy("user_id").agg(F.count("*").alias("n_pairs"))
 
 
@@ -345,12 +337,7 @@ def outer_interval_join_gate(
         F.col("l.user_id").alias("user_id"),
         F.col("r.event_id").alias("r_event_id"),
     )
-    # same 4-store-per-partition argument as interval_join_gate: the
-    # outer-join replay's fixed cost scales with state partitions, and
-    # 4 beat the gate-default 8 (A/B min-of-4 at sf0.1: 4.32 -> 3.58 s)
-    table, _ = run_gate_to_memory(
-        out, query_name, "append", state_partitions=4
-    )
+    table, _ = run_gate_to_memory(out, query_name, "append")
     return (
         table
         .filter(F.col("user_id") >= 0)  # the left sentinel, if flushed

@@ -13,6 +13,7 @@ timeout evicts idle keys).
 from __future__ import annotations
 
 import typing
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -148,6 +149,42 @@ def stateful_totals_gate(
     )
 
 
+@contextmanager
+def _rocksdb_state(spark):
+    """Queries started inside this block keep their state in RocksDB;
+    the session's own provider setting is restored on exit."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _run_to_checkpoint(agg: DataFrame, ckpt: str) -> None:
+    """Run ``agg`` to completion into a noop sink, leaving its committed
+    state in the checkpoint ``ckpt``."""
+    from .windows import gate_state_partitions
+
+    with gate_state_partitions(agg):
+        q = (
+            agg.writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
 def tws_available() -> bool:
     """transformWithStateInPandas drives a Python state-server over a
     protobuf protocol; the `protobuf` package is not installed in every
@@ -248,20 +285,8 @@ def tws_totals_gate(
     totals = running_user_totals_tws(stream)
     from .windows import run_gate_to_memory
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state(spark):
         table, _ = run_gate_to_memory(totals, query_name, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         table
@@ -301,12 +326,6 @@ def rocksdb_totals_gate(
     from ..catalog import load_table
     from .windows import write_sliced_feed
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-    )
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -326,25 +345,14 @@ def rocksdb_totals_gate(
     )
     from .windows import run_gate_to_memory
 
-    try:
-        prev = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        prev = None
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-    try:
+    with _rocksdb_state(spark):
         table, q = run_gate_to_memory(totals, query_name, "complete")
-        progress = q.lastProgress
-        # `or [{}]` (not a .get default): a no-data final progress event
-        # can carry 'stateOperators': [] — an empty list, which the
-        # .get default would not replace, and [0] would IndexError
-        ops = (progress or {}).get("stateOperators") or [{}]
-        metrics = ops[0].get("customMetrics") or {}
-        engaged = any("rocksdb" in k.lower() for k in metrics)
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)
+    # `or [{}]` (not a .get default): a no-data final progress event
+    # can carry 'stateOperators': [] — an empty list, which the .get
+    # default would not replace, and [0] would IndexError
+    ops = (q.lastProgress or {}).get("stateOperators") or [{}]
+    metrics = ops[0].get("customMetrics") or {}
+    engaged = any("rocksdb" in k.lower() for k in metrics)
 
     return table.select(
         "event_type",
@@ -389,18 +397,7 @@ def state_store_snapshot_totals(spark, sf_dir: str) -> DataFrame:
     agg = stream.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
-    from .windows import gate_state_partitions
-
-    with gate_state_partitions(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    _run_to_checkpoint(agg, ckpt)
     return spark.read.format("statestore").load(ckpt).select(
         F.col("key.user_id").alias("user_id"),
         F.col("value.count").cast("bigint").alias("n_events"),
@@ -439,18 +436,7 @@ def state_metadata_gate(spark, sf_dir: str) -> DataFrame:
 
     stream = spark.readStream.schema(ev.schema).parquet(src)
     agg = stream.groupBy("user_id").agg(F.count("*").alias("n_events"))
-    from .windows import gate_state_partitions
-
-    with gate_state_partitions(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    _run_to_checkpoint(agg, ckpt)
     return spark.read.format("state-metadata").load(ckpt).select(
         F.col("operatorId").cast("bigint").alias("operator_id"),
         F.col("operatorName").alias("operator_name"),

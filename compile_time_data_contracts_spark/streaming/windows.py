@@ -149,24 +149,76 @@ def run_stream_to_memory(
     return table
 
 
-@contextmanager
-def gate_state_partitions(spark, n: int = 8):
-    """Scoped ``spark.sql.shuffle.partitions`` override for starting a
-    BOUNDED-replay streaming gate: state partition count freezes at
-    query start, and a KB-sized replay paying the session's 32
-    state-store inits/commits per trigger per stateful operator is pure
-    fixed cost (measured 24 s → 5.5 s on q199).  Restores the session
-    value on exit; semantics unchanged — production streams size this
-    to state volume.
+_PYTHON_STATE = {
+    "FlatMapGroupsInPandasWithState",
+    "TransformWithStateInPySpark",
+}
 
-    SINGLE-THREADED by design: the override mutates the session-global
-    ``spark.sql.shuffle.partitions`` for the whole start→awaitTermination
-    span, so any query PLANNED concurrently in the same SparkSession
-    would inherit it (or restore a stale saved value on nested use).
-    The bench and gate suites run strictly sequentially; if gates ever
-    run concurrently, scope the setting via a cloned session
-    (``spark.newSession()``) per gate instead."""
+
+def _feed_paths(stream: DataFrame) -> list[str] | None:
+    """The file paths behind ``stream``'s streaming sources, or None
+    when the plan holds Python state or a source that is not a file
+    source (Python data source, Kafka, rate).  A directory counts every
+    file under it, whatever glob filter the source applies, which can
+    only over-count.  One walk of the analyzed plan over py4j: no job
+    runs and no explain string is parsed."""
+    paths: list[str] = []
+    nodes = [stream._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name in _PYTHON_STATE:
+            return None
+        if name == "StreamingRelation":
+            source = node.dataSource()
+            listed = source.paths()
+            found = [listed.apply(i) for i in range(listed.size())]
+            option = source.options().get("path")
+            if option.isDefined():
+                found.append(option.get())
+            if not found:
+                return None
+            paths += found
+        elif name.startswith("StreamingRelation"):
+            return None
+        children = node.children()
+        nodes += [children.apply(i) for i in range(children.size())]
+    return paths
+
+
+@contextmanager
+def gate_state_partitions(stream: DataFrame):
+    """Start ``stream``'s query inside this block to size its state
+    partitions from its input.  Spark reads the count from
+    ``spark.sql.shuffle.partitions`` at query start and freezes it, and
+    each state partition costs a state-store commit per trigger per
+    stateful operator whatever it holds.  With JVM state the count is
+    ``ceil(feed bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+    clamped to ``[1, spark.sql.shuffle.partitions]``: the count AQE's
+    size-based coalescing would pick for a batch shuffle of the same
+    input, which AQE cannot do for state.  Python state, or a feed of
+    unknown size, keeps the session count: per-row Python work needs
+    every core.  The session value is restored on exit, also when the
+    block raises.
+
+    SINGLE-THREADED: the setting is session-global for the whole
+    start→awaitTermination span, so a query planned concurrently in the
+    same session would inherit it; concurrent gates need a
+    ``spark.newSession()`` each."""
+    from ..operators.materialize import path_bytes
+
+    spark = stream.sparkSession
     saved = spark.conf.get("spark.sql.shuffle.partitions")
+    n = int(saved)
+    paths = _feed_paths(stream)
+    if paths is not None:
+        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        advisory = java_utils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        size = path_bytes(paths, stop_at=advisory * n)
+        if size is not None:
+            n = max(1, min(n, -(-size // advisory)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
@@ -175,34 +227,18 @@ def gate_state_partitions(spark, n: int = 8):
 
 
 def run_gate_to_memory(
-    df: DataFrame, query_name: str, output_mode: str = "append",
-    state_partitions: int = 8,
+    df: DataFrame, query_name: str, output_mode: str = "append"
 ):
     """Shared tail of every streaming gate: drop a stale same-name temp
-    view, run ``df`` to a memory sink under an availableNow trigger,
+    view, run ``df`` to a memory sink under an availableNow trigger
+    with its state partitions sized by :func:`gate_state_partitions`,
     await completion, and return (result table, terminated query) —
     the query so gates that read ``lastProgress`` (q167) share the same
-    path.  One owner for what seven call sites used to copy and drift
-    on.
-
-    ``state_partitions``: streaming STATE partition count is frozen at
-    query start from ``spark.sql.shuffle.partitions``; a gate replaying
-    a bounded feed with the session's 32 pays 32 state-store
-    inits/commits per trigger per stateful operator for KB-sized state
-    — measured 24 s → 5.5 s on the q199 outer-join replay at sf0.1 by
-    right-sizing to 8.  The override is scoped to the query start and
-    RESTORED before returning (batch reads of the sink table use the
-    session value); it changes no semantics, only state parallelism.
-    Production streams size this to state volume — gate replays are
-    bounded by construction.  Pass 0 to keep the session setting."""
+    path.  Batch reads of the result table use the session's own
+    shuffle partitions."""
     spark = df.sparkSession
-    if query_name in [t.name for t in spark.catalog.listTables()]:
-        spark.catalog.dropTempView(query_name)
-    with gate_state_partitions(
-        spark, state_partitions
-        if state_partitions
-        else int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ):
+    spark.catalog.dropTempView(query_name)
+    with gate_state_partitions(df):
         q = (
             df.writeStream.format("memory")
             .queryName(query_name)

@@ -38,7 +38,6 @@ from compile_time_data_contracts_spark.operators.multimodal import (
 )
 from compile_time_data_contracts_spark.operators.similarity import (
     cosine,
-    cosine_pairs_exact,
     cosine_pairs_exact_blas,
     cosine_pairs_lsh,
     topk_cosine,
@@ -216,11 +215,26 @@ def test_cosine_expression_matches_python(vecs):
             )
 
 
+def _cosine_pairs_exact(df, threshold):
+    """All pairs with cosine >= threshold, one JVM expression a pair:
+    the O(n²) reference the BLAS form is checked against."""
+    a, b = df.alias("a"), df.alias("b")
+    return (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("sim"),
+        )
+        .filter(F.col("sim") >= threshold)
+    )
+
+
 def test_exact_pairs_expression_and_blas_agree(vecs):
     t = 0.4
     a = {
         (r.vec_a, r.vec_b): r.sim
-        for r in cosine_pairs_exact(vecs, t).collect()
+        for r in _cosine_pairs_exact(vecs, t).collect()
     }
     b = {
         (r.vec_a, r.vec_b): r.sim

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from compile_time_data_contracts_spark.streaming.windows import (
     dedup_within_watermark,
     events_stream,
+    run_gate_to_memory,
     run_stream_to_memory,
     tumbling_counts,
 )
@@ -412,3 +413,126 @@ def test_idempotent_sink_redelivery_is_a_noop(spark, tmp_path):
     assert sorted(
         map(tuple, spark.read.parquet(out).drop("__batch_id").collect())
     ) == [(3, "c"), (9, "z")]
+
+
+# --- gate state partitions ---------------------------------------------
+
+
+def _state_partitions_run(q) -> list[int]:
+    ops = next(p["stateOperators"] for p in q.recentProgress if p["stateOperators"])
+    return [op["numShufflePartitions"] for op in ops]
+
+
+def _q44_gate(spark, name):
+    agg = tumbling_counts(events_stream(spark, SF_DIR, glob="events.parquet"))
+    return run_gate_to_memory(agg, name, "complete")
+
+
+def test_gate_state_partitions_follow_feed_size(spark):
+    """A KB-sized feed under JVM state gets one state partition."""
+    _, q = _q44_gate(spark, "t_gate_small")
+    assert _state_partitions_run(q) == [1]
+
+
+def test_gate_state_partitions_follow_advisory_size(spark):
+    """``min(cores, ceil(feed bytes / advisoryPartitionSizeInBytes))``
+    state partitions, on both sides of the cap."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the stream reads SF_DIR through a glob; the whole directory counts
+    size = sum(os.path.getsize(e.path) for e in os.scandir(SF_DIR))
+    saved = spark.conf.get(key)
+    try:
+        # 2 partitions, under the cap; then 4 * cores, clamped to cores
+        for advisory, want in ((size // 2 + 1, 2), (size // (4 * cores), cores)):
+            spark.conf.set(key, str(advisory))
+            _, q = _q44_gate(spark, "t_gate_advisory")
+            assert _state_partitions_run(q) == [want]
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_gate_python_state_keeps_session_partitions(spark, tmp_path):
+    """Python state is per-row Python time: one state partition per
+    core however small the feed."""
+    from compile_time_data_contracts_spark.streaming.stateful import (
+        running_user_totals,
+    )
+
+    base = str(tmp_path / "feed")
+    _write_feed(spark, base, [[(1, 1, datetime.datetime(2024, 1, 1), 2.0)]])
+    stream = spark.readStream.schema(
+        "event_id long, user_id long, ts timestamp, value double"
+    ).parquet(base)
+    _, q = run_gate_to_memory(running_user_totals(stream), "t_gate_py", "update")
+    cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _state_partitions_run(q) == [cores]
+
+
+def test_gate_unknown_size_source_keeps_session_partitions(spark):
+    """A Python data source has no size to stat: the session count."""
+    from compile_time_data_contracts_spark.sources.pysource import (
+        register_synth_source,
+    )
+
+    register_synth_source(spark)
+    stream = spark.readStream.format("ctdc_synth").option("n", "100").load()
+    agg = stream.groupBy((F.col("id") % 7).alias("k")).count()
+    table, q = run_gate_to_memory(agg, "t_gate_pysource", "complete")
+    cores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _state_partitions_run(q) == [cores]
+    assert sum(r["count"] for r in table.collect()) == 100
+
+
+def test_gate_restores_session_shuffle_partitions(spark):
+    """The override ends with the gate, also when the gate raises."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    _q44_gate(spark, "t_gate_restore")
+    assert spark.conf.get(key) == before
+    raw = events_stream(spark, SF_DIR, glob="events.parquet")
+    # complete mode needs an aggregation: the query fails at start
+    with pytest.raises(Exception, match="(?i)complete"):
+        run_gate_to_memory(raw, "t_gate_raises", "complete")
+    assert spark.conf.get(key) == before
+
+
+def test_gate_rerun_under_one_name_returns_second_result(spark, tmp_path):
+    for n in (3, 5):
+        spark.range(n).write.parquet(str(tmp_path / f"feed{n}"))
+        stream = spark.readStream.schema("id long").parquet(
+            str(tmp_path / f"feed{n}")
+        )
+        table, _ = run_gate_to_memory(
+            stream.groupBy().count(), "t_gate_rerun", "complete"
+        )
+        assert table.collect()[0]["count"] == n
+
+
+def _marker_job(spark, tag: str) -> int:
+    """Run a one-task job in its own group; return its id once the
+    status store has recorded it, and so every earlier job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    sc.parallelize([1], 1).count()
+    sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 10.0
+    while time.monotonic() < deadline:
+        ids = sc.statusTracker().getJobIdsForGroup(tag)
+        if ids and sc.statusTracker().getJobInfo(ids[0]).status == "SUCCEEDED":
+            return ids[0]
+        time.sleep(0.002)
+    raise RuntimeError(f"marker job {tag} never finished")
+
+
+def test_q44_gate_job_count(spark):
+    """q44 built and executed as the bench runs it costs exactly two
+    Spark jobs: its one micro-batch and the noop write of its result.
+    Job ids are global and sequential, so the bracket also counts the
+    streaming query's own thread."""
+    run_stream_to_memory(spark, SF_DIR)  # warm: the footer probe caches
+    first = _marker_job(spark, "t_q44_jobs_first")
+    result = run_stream_to_memory(spark, SF_DIR)
+    result.write.format("noop").mode("overwrite").save()
+    last = _marker_job(spark, "t_q44_jobs_last")
+    assert last - first - 1 == 2
