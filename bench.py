@@ -3,7 +3,7 @@ sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the usable core count).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q01_...": sec, ...}, "sf": ...}
+   "queries": {"q01_...": sec, ...}, "sf": ..., "cpus": ...}
 
 Each query is materialized with a noop-format write so the full plan
 (including projections) executes without driver-side row transfer, and
@@ -249,6 +249,8 @@ def main() -> None:
         )
 
     total = round(sum(timings.values()), 3)
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    cpus = spark.sparkContext.defaultParallelism
 
     # per-query delta vs the newest BENCH_r{N}.json so regressions
     # surface at build time, not judge time (stderr: stdout must stay
@@ -279,11 +281,15 @@ def main() -> None:
         # the driver wraps the bench line under "parsed"
         prev = prev.get("parsed") or prev
         prev_sf = prev.get("sf")
-        cur_sf = float(sf) if sf.replace(".", "").isdigit() else sf
-        if prev_sf is not None and prev_sf != cur_sf:
+        if prev_sf is not None and prev_sf != sf_val:
             raise ValueError(
                 f"prior bench ran at sf={prev_sf}, this run at "
-                f"sf={cur_sf} — cross-sf deltas are meaningless"
+                f"sf={sf_val} — cross-sf deltas are meaningless"
+            )
+        if prev.get("cpus") != cpus:
+            raise ValueError(
+                f"prior bench ran on cpus={prev.get('cpus')}, this run on "
+                f"cpus={cpus} — cross-core-count deltas are meaningless"
             )
         prev_q = prev.get("queries", {})
         prev_name = os.path.basename(prev_files[-1])
@@ -313,7 +319,6 @@ def main() -> None:
     # every BENCH_r{N}.json since r04 with "parsed": null.  The stdout
     # line must stay ONE short JSON line the driver can actually parse,
     # so it carries the total plus only the slowest queries.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     detail = {
         "metric": "query_inventory_wall_seconds",
         "value": total,
@@ -326,6 +331,7 @@ def main() -> None:
         "errors": errors,
         "noise": noise,
         "sf": sf_val,
+        "cpus": cpus,
     }
     try:
         if not args.only:
@@ -351,6 +357,7 @@ def main() -> None:
         "queries_truncated": True,
         "detail_file": "BENCH_DETAIL.json",
         "sf": sf_val,
+        "cpus": cpus,
     }
     if args.only:  # a subset run's whole detail is the line itself
         line.update(queries=timings, queries_truncated=False,

@@ -43,7 +43,6 @@ __all__ = [
     "minhash_index_reuse_or_build",
     "near_dup_against",
     "keep_best_dedup",
-    "connected_components",
     "connected_components_star",
     "connected_components_incremental",
     "simhash",
@@ -813,114 +812,6 @@ from .materialize import pin as _pin
 from .materialize import pin_with_signature as _pin_with_signature
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Cluster near-duplicate pairs into groups: (doc_id, cluster_id)
-    where cluster_id is the minimum doc id reachable through the pair
-    graph — the standard final step of near-dup dedup (keep one doc per
-    cluster).
-
-    Iterative min-label propagation: each round every node adopts the
-    smallest label among itself and its neighbors; converges in
-    O(graph diameter) rounds (near-dup clusters are shallow — usually
-    2-4).  Each round is one edge-label join + ONE union-min aggregate
-    on (node, label) pairs (the node's own label enters the aggregate
-    through the union branch, so no second join re-attaches it);
-    iteration stops early when the label table's (count, xor-hash)
-    signature stops moving — labels only decrease, so signature
-    equality is exactly "no label changed".  Lineage is cut per round with a RELIABLE checkpoint
-    (``DataFrame.checkpoint``), not ``localCheckpoint``: localCheckpoint
-    blocks live on executors and are not recomputable, so on a large
-    cluster a single lost executor kills the whole iterative job.  The
-    reliable checkpoint writes each round's labels to the configured
-    checkpoint directory (set ``sc.setCheckpointDir`` to durable storage
-    — HDFS/S3 — on a real cluster; a local temp dir is auto-configured
-    when unset so library users don't crash).  Diameters beyond
-    ``max_iterations`` raise rather than silently mislabel.
-    """
-    from pyspark import StorageLevel
-
-    sc = pairs.sparkSession.sparkContext
-    _ensure_checkpoint_dir(sc)
-    edges = (
-        pairs.select(
-            F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-        )
-        .union(
-            pairs.select(
-                F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-            )
-        )
-        .distinct()
-    )
-    # the edge set joins into EVERY round: without persistence each
-    # round re-evaluates the whole upstream pair pipeline (for near-dup
-    # inputs that is the full MinHash/cosine machinery — the dominant
-    # repeated cost).  persist keeps lineage (recoverable), and the
-    # labels checkpoint per round makes it safe to drop at the end.
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # seed with one propagation round fused into initialization:
-        # lbl = min(self, direct neighbors) — saves a full join+
-        # checkpoint+count cycle; diameter-2 components converge
-        # immediately.
-        #
-        # Convergence via the (count, order-independent xor-hash)
-        # signature of the label table — the same convention the star
-        # operator uses for its edge set.  Labels only ever DECREASE, so
-        # an unchanged signature is exactly "no label changed".  r11:
-        # the signature is collected from the SAME job that materializes
-        # each round's checkpoint (observe-fused, materialize.py) — the
-        # former per-round aggregation action re-reading the checkpoint
-        # is gone (2 actions/round -> 1).
-        labels, sig = _pin_with_signature(
-            edges.groupBy(F.col("src").alias("node")).agg(
-                F.least(F.first("src"), F.min("dst")).alias("lbl")
-            ),
-            "node",
-            "lbl",
-        )
-        for _ in range(max_iterations):
-            # min(own, neighbors') in ONE aggregate: neighbor labels come
-            # from the edge join, the node's own label rides in via the
-            # union branch — the old shape paid a second (left) join to
-            # re-attach labels after the aggregate; this one exchanges
-            # the label table once per round.  A/B-measured at sf0.1
-            # (100k-node, diameter-4 clusters): 5.4 s -> 4.8 s warm,
-            # labels byte-identical.
-            neighbor_lbls = edges.join(
-                labels.withColumnRenamed("node", "dst").withColumnRenamed(
-                    "lbl", "__nl"
-                ),
-                "dst",
-            ).select(F.col("src").alias("node"), F.col("__nl").alias("lbl"))
-            updated, new_sig = _pin_with_signature(
-                neighbor_lbls.union(labels)
-                .groupBy("node")
-                .agg(F.min("lbl").alias("lbl")),
-                "node",
-                "lbl",
-            )
-            labels = updated
-            if new_sig == sig:
-                # labels are checkpoint-materialized — lineage no longer
-                # reaches edges, so the cache can go
-                return labels.select(
-                    F.col("node").alias("doc_id"),
-                    F.col("lbl").alias("cluster_id"),
-                )
-            sig = new_sig
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
-        )
-    finally:
-        edges.unpersist()
-
-
 def simhash(col: str = "text", bits: int = 64) -> F.Column:
     """SimHash signature: per-token xxhash64, majority vote per bit,
     packed into one bigint.
@@ -1067,6 +958,11 @@ def _component_min_labels(u, v):
             label = jumped
 
 
+# the star reaches its fixed point in O(log n) alternations, far
+# below this; running out means a bug, not a big graph
+_CC_MAX_ALTERNATIONS = 30
+
+
 def _local_star_labels(spark, a, b) -> DataFrame:
     """:func:`connected_components_star`'s output computed on the driver
     from the collected pair columns ``a``, ``b`` (Arrow arrays of one
@@ -1097,19 +993,22 @@ def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iterations: int = 30,
     windowed_min_max_edges: int = 4_000_000,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the deep-graph scale path.  Same output contract as
-    :func:`connected_components`: (doc_id, cluster_id = component min).
+    """Cluster a pair graph into connected components via alternating
+    large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond").  Output: one ``(doc_id, cluster_id)`` row
+    per distinct id of either pair column, where ``cluster_id`` is the
+    smallest id reachable through the pairs (a self-loop or an id whose
+    partner is null is its own cluster); any null id adds one
+    ``(null, null)`` row.
 
     Min-label propagation needs O(diameter) rounds — fine for shallow
     near-dup clusters, hopeless for chain-shaped graphs (a 1000-link
     chain is 1000 rounds).  The star operations instead contract toward
     the component minimum in O(log n) alternations regardless of
-    diameter:
+    diameter (no fixed point within ``_CC_MAX_ALTERNATIONS`` raises
+    rather than mislabel):
 
       * large-star: every node's strictly-larger neighbors re-attach to
         the minimum of its neighborhood,
@@ -1233,7 +1132,7 @@ def connected_components_star(
         cached.unpersist()
 
     n_edges = sig[0]
-    for _ in range(max_iterations):
+    for _ in range(_CC_MAX_ALTERNATIONS):
         # ---- large-star: symmetrize, attach larger neighbors to the min
         sym = edges.union(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1311,8 +1210,8 @@ def connected_components_star(
         sig = new_sig
         n_edges = new_sig[0]
     raise RuntimeError(
-        f"connected_components_star: no fixed point after {max_iterations} "
-        "alternations — raise max_iterations"
+        "connected_components_star: no fixed point after "
+        f"{_CC_MAX_ALTERNATIONS} alternations"
     )
 
 
@@ -1401,7 +1300,6 @@ def connected_components_incremental(
     new_edges: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iterations: int = 30,
 ) -> DataFrame:
     """Grow an existing component labeling with a NEW batch of edges
     without re-walking the old graph: the prior (doc_id, cluster_id)
@@ -1441,7 +1339,7 @@ def connected_components_incremental(
             F.col(b_col).cast("long").alias(b_col),
         )
     )
-    return connected_components_star(combined, a_col, b_col, max_iterations)
+    return connected_components_star(combined, a_col, b_col)
 
 
 def containment_pairs(

@@ -74,8 +74,9 @@ def pagerank(
     Lineage: when ``iters > checkpoint_every``, the degree-annotated
     edge list is persisted for the loop and ``pr`` is cut with a
     RELIABLE checkpoint every ``checkpoint_every`` rounds and once at
-    loop exit (same durability argument as ``connected_components``:
-    localCheckpoint blocks die with executors) — a 20+ iteration run
+    loop exit (same durability argument as
+    ``connected_components_star``: localCheckpoint blocks die with
+    executors) — a 20+ iteration run
     neither re-derives the edge join tower per round nor grows an
     O(iters)-deep plan.  At or below ``checkpoint_every`` rounds the
     result is fully lazy and plan-auditable, unchanged from before.
@@ -237,7 +238,7 @@ def triangle_count(
     # re-execute the canon/degree/orient pipeline, and the O(m^1.5)
     # wedge join would run twice.  Checkpoint the oriented edge list
     # ONCE (edge-sized write, reused by every branch — the
-    # connected_components posture), derive n_wedges ANALYTICALLY
+    # connected_components_star posture), derive n_wedges ANALYTICALLY
     # (kt is distinct within each s under the total order, so the
     # wedge join emits exactly C(out_deg, 2) rows per source — a
     # node-sized aggregate instead of a second execution of the
@@ -367,7 +368,8 @@ def label_propagation(
             )
             # each round's state is node-sized; a reliable checkpoint
             # cuts the join tower so the plan (and re-execution cost)
-            # stays linear in rounds, the connected_components pattern
+            # stays linear in rounds, the connected_components_star
+            # pattern
             labels = (
                 labels.join(mode, "id", "left")
                 .join(seeded, "id", "left")
@@ -423,7 +425,7 @@ def k_core(
     # each peel references the previous edge set three times (degree +
     # both endpoint semi-joins); a reliable per-round checkpoint keeps
     # the plan linear in peels instead of 3^peels (the
-    # connected_components pattern)
+    # connected_components_star pattern)
     cur = sym.transform(_pin)
     for peel in range(max_peels):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
@@ -469,10 +471,10 @@ def bfs_levels(
     dominant volume — is built once, and pre-partitioning it by src
     makes round joins exchange-free on the edge side (the ``pagerank``
     co-location argument).  Per-round reliable checkpoints keep the
-    visited set's plan linear in hops (the ``connected_components``
-    durability pattern).  Hop-bounded reachability is the crawl-
-    frontier / link-spam-neighborhood / citation-radius primitive of
-    corpus curation.
+    visited set's plan linear in hops (the
+    ``connected_components_star`` durability pattern).  Hop-bounded
+    reachability is the crawl-frontier / link-spam-neighborhood /
+    citation-radius primitive of corpus curation.
     """
     from .materialize import pin as _pin
     e = edges.select("src", "dst")

@@ -37,7 +37,6 @@ __all__ = [
     "cosine_pairs_exact_blas",
     "cosine_pairs_exact_blocked",
     "hyperplanes",
-    "lsh_bucket",
     "lsh_signatures",
     "lsh_auto_bits",
     "lsh_expected_recall",
@@ -2023,19 +2022,6 @@ def hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
                 plane.append(r * math.sin(2 * math.pi * u2))
         out.append(plane)
     return out
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit p = 1 iff vec · plane_p > 0.  The loop
-    over planes unrolls driver-side (plane count is small and fixed), so
-    the result is one flat codegen-friendly arithmetic expression; each
-    plane ships as an array<double> literal of a few hundred bytes."""
-    vd = F.transform(vec_col, lambda x: x.cast("double"))
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bucket = bucket + F.when(dot(vd, plane) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_signatures(

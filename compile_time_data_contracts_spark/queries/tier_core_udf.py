@@ -172,7 +172,7 @@ def q159(spark: SparkSession, sf: str) -> DataFrame:
     over a derived hierarchy (parent(k) = floor(k/2), a binary tree
     rooted at 1) — per-leaf depth, path node-sum, and chain length.
     This is the SQL-standard spec for the iterative closures the engine
-    elsewhere runs by hand (q73/q101/q152 label propagation): Spark
+    elsewhere runs by hand (q73/q101/q152 connected components): Spark
     executes it as iterated UNION ALL micro-plans, one join per level,
     terminating when the recursive leg is empty.  Rounds ∝ hierarchy
     DEPTH (log n here), and each round's shuffle carries only the still-

@@ -176,10 +176,11 @@ def q72(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q73(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup clustering: MinHash-LSH pairs -> connected components
-    (min-label propagation), the standard choose-one-per-cluster step.
+    (star contraction to the component min), the standard
+    choose-one-per-cluster step.
     Oracle computes the same clusters via transitive closure over the
     exact-Jaccard pair graph (recursive CTE)."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import connected_components_star
 
     docs = load_table(spark, sf, "documents")
     # 64 hashes / 32 bands: candidate probability at J=0.5 is
@@ -188,7 +189,7 @@ def q73(spark: SparkSession, sf: str) -> DataFrame:
     pairs = minhash_near_dup_pairs(
         docs, threshold=0.5, num_hashes=64, bands=32
     )
-    return connected_components(pairs)
+    return connected_components_star(pairs)
 
 
 @q(
@@ -280,8 +281,8 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q101(spark: SparkSession, sf: str) -> DataFrame:
     """Connected components on a DEEP graph: each user's events chained
-    consecutively (chain length = events/user, ~100 at sf0.01 — far
-    past min-label propagation's round budget).  The large-star/
+    consecutively (chain length = events/user, ~100 at sf0.01 — ~100
+    rounds for O(diameter) min-label propagation).  The large-star/
     small-star operator contracts every chain to its min in O(log n)
     alternations; the oracle knows each chain's component is simply the
     per-user min event_id."""
@@ -333,11 +334,11 @@ def q119(spark: SparkSession, sf: str) -> DataFrame:
     counts.  The oracle recomputes the identical scrub via an O(n²)
     cosine self-join + recursive transitive closure, so cluster
     formation AND representative choice are value-checked end to end."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import connected_components_star
 
     emb = load_table(spark, sf, "embeddings")
     pairs = cosine_pairs(emb, threshold=0.45)
-    clus = connected_components(pairs, "vec_a", "vec_b")
+    clus = connected_components_star(pairs, "vec_a", "vec_b")
     kept = (
         emb.join(
             clus.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
@@ -479,7 +480,7 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
     for corpora with stop-token skew.  The oracle replays matching
     exactly and closes the transitive match graph with a recursive
     CTE."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import connected_components_star
 
     parts = load_table(spark, sf, "part")
     tok = parts.select(
@@ -521,7 +522,7 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
     matched = inter.filter(
         F.col("i") / (F.col("sa") + F.col("sb") - F.col("i")) >= 0.6
     ).select("doc_a", "doc_b")
-    labels = connected_components(matched)
+    labels = connected_components_star(matched)
     return (
         labels.join(
             parts.select(
@@ -734,7 +735,7 @@ def q190(spark: SparkSession, sf: str) -> DataFrame:
     token arrays; the oracle is q150's exact SQL, proving losslessness
     end-to-end through the same connected-components clustering."""
     from ..operators.dedup import (
-        connected_components,
+        connected_components_star,
         prefix_filtered_jaccard_pairs,
     )
 
@@ -752,7 +753,7 @@ def q190(spark: SparkSession, sf: str) -> DataFrame:
     matched = prefix_filtered_jaccard_pairs(
         tok, "p_partkey", "toks", 0.6, block_col="p_brand"
     ).select("doc_a", "doc_b")
-    labels = connected_components(matched)
+    labels = connected_components_star(matched)
     return (
         labels.join(
             parts.select(

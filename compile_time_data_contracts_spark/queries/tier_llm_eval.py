@@ -290,14 +290,14 @@ def q166(spark: SparkSession, sf: str) -> DataFrame:
     yesterday's held-out set stays held out as the corpus grows — the
     auditability property an RNG-based split lacks.  Oracle: exact-
     Jaccard closure (recursive CTE) + the same integer hash."""
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import connected_components_star
     from ..operators.sampling import split_by_cluster
 
     docs = load_table(spark, sf, "documents")
     pairs = minhash_near_dup_pairs(
         docs, threshold=0.5, num_hashes=64, bands=32
     )
-    labels = connected_components(pairs)
+    labels = connected_components_star(pairs)
     allc = (
         docs.select("doc_id")
         .join(labels, "doc_id", "left")

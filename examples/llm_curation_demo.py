@@ -33,7 +33,7 @@ from compile_time_data_contracts_spark.contracts.policies import SchemaPolicy
 from compile_time_data_contracts_spark.contracts.shape import contract
 from compile_time_data_contracts_spark.contracts.types import int32
 from compile_time_data_contracts_spark.operators.dedup import (
-    connected_components,
+    connected_components_star,
     keep_best_dedup,
     minhash_near_dup_pairs,
     semantic_dedup,
@@ -93,7 +93,7 @@ def main() -> None:
 
     # 4. near-dup scrub: LSH pairs -> components -> keep representatives
     pairs = minhash_near_dup_pairs(exact, threshold=0.5)
-    clusters = connected_components(pairs)
+    clusters = connected_components_star(pairs)
     scrubbed = (
         exact.join(
             clusters.withColumnRenamed("doc_id", "__cid").withColumnRenamed(

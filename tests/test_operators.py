@@ -644,20 +644,22 @@ def test_keep_best_dedup(spark):
     assert {r.doc_id for r in first.collect()} == {1, 3}
 
 
-def test_connected_components_clusters(spark):
+def test_connected_components_clusters(spark, cc_star_sides):
     from compile_time_data_contracts_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     # two chains: 1-2-3 (via 1-2, 2-3) and 7-9; singleton edges only
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9)], ["doc_a", "doc_b"]
     )
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}
+    for got in cc_star_sides(
+        lambda: {
+            (r.doc_id, r.cluster_id)
+            for r in connected_components_star(pairs).collect()
+        }
+    ):
+        assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}
 
 
 def test_resample_ffill(spark):
@@ -764,36 +766,50 @@ def test_simhash_table_matches_expression(docs):
     assert "HashAggregate" in plan  # map-side-combined vote aggregate
 
 
-def test_connected_components_reliable_checkpoint(spark):
-    """Lineage must be cut with a RELIABLE checkpoint: files land in the
-    configured checkpoint dir (recomputable after executor loss, unlike
-    localCheckpoint) and the returned plan is rooted at the checkpointed
-    RDD with no join chain from prior rounds."""
+def test_connected_components_reliable_checkpoint(spark, cc_star_sides):
+    """The distributed star rounds cut lineage with a RELIABLE
+    checkpoint: this call writes files into the configured checkpoint
+    dir (recomputable after executor loss, unlike localCheckpoint), and
+    the returned plan is the exit's single join over two checkpointed
+    relations, with no join chain from prior rounds."""
     import os
 
     from compile_time_data_contracts_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
-    # a diameter-5 path graph forces several propagation rounds
+    def checkpoint_files():
+        ckpt_dir = spark.sparkContext.getCheckpointDir()
+        if ckpt_dir is None:
+            return set()
+        root = ckpt_dir.removeprefix("file:")
+        return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+    # a diameter-6 path graph forces several star alternations
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
     )
-    labels = connected_components(edges)
-    got = {r.doc_id: r.cluster_id for r in labels.collect()}
-    assert got == {i: 0 for i in range(7)}
 
-    ckpt_dir = spark.sparkContext.getCheckpointDir()
-    assert ckpt_dir is not None
-    local = ckpt_dir.removeprefix("file:")
-    found = [f for _, _, fs in os.walk(local) for f in fs]
-    assert found, "reliable checkpoint wrote no files"
+    def run():
+        before = checkpoint_files()
+        labels = connected_components_star(edges)
+        got = {r.doc_id: r.cluster_id for r in labels.collect()}
+        plan = labels._sc._jvm.PythonSQLUtils.explainString(
+            labels._jdf.queryExecution(), "formatted"
+        )
+        return got, checkpoint_files() - before, plan
 
-    plan = labels._sc._jvm.PythonSQLUtils.explainString(
-        labels._jdf.queryExecution(), "formatted"
-    )
-    assert "Join" not in plan  # lineage from iteration rounds is cut
-    assert "Scan ExistingRDD" in plan
+    (local_got, _, _), (got, written, plan) = cc_star_sides(run)
+    assert local_got == got == {i: 0 for i in range(7)}
+
+    assert written, "reliable checkpoint wrote no files"
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("SortMergeJoin") == 1  # lineage from rounds is cut
+    assert final.count("Scan ExistingRDD") == 2
+    # every leaf reads a checkpointed RDD, the source's included
+    scans = re.findall(r"\) Scan ExistingRDD.*\n.*\nArguments: (.*)", plan)
+    assert len(scans) == 2
+    assert all("] at checkpoint at " in a for a in scans), scans
 
 
 def test_ivf_index_persisted_and_partition_pruned(spark, tmp_path):
@@ -1192,13 +1208,26 @@ def test_bigram_lm_conditional_probabilities(spark):
     assert out2["x"]["top_w2"] == "a"
 
 
-def test_connected_components_star_matches_label_propagation(
-    spark, cc_star_sides
-):
+def union_find(edges):
+    """Plain union-find reference: every node of ``edges`` and its
+    component's minimum node."""
+    parent: dict = {}
+
+    def root(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in list(parent)}
+
+
+def test_connected_components_star_matches_union_find(spark, cc_star_sides):
     import random
 
     from compile_time_data_contracts_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -1209,17 +1238,14 @@ def test_connected_components_star_matches_label_propagation(
         for _ in range(150)
     ]
     df = spark.createDataFrame(edges)
-    a = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components(df).collect()
-    }
+    want = set(union_find((e.doc_a, e.doc_b) for e in edges).items())
     local, distributed = cc_star_sides(
         lambda: {
             (r["doc_id"], r["cluster_id"])
             for r in connected_components_star(df).collect()
         }
     )
-    assert a == local == distributed
+    assert want == local == distributed
 
 
 def test_connected_components_star_deep_chain(spark, cc_star_sides):
@@ -1236,9 +1262,7 @@ def test_connected_components_star_deep_chain(spark, cc_star_sides):
     for out in cc_star_sides(
         lambda: {
             r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(
-                df, max_iterations=30
-            ).collect()
+            for r in connected_components_star(df).collect()
         }
     ):
         assert all(out[i] == 0 for i in range(401))
@@ -1296,19 +1320,6 @@ def test_component_min_labels_matches_union_find():
     from compile_time_data_contracts_spark.operators.dedup import (
         _component_min_labels,
     )
-
-    def union_find(edges):
-        parent: dict = {}
-
-        def root(x):
-            while parent.setdefault(x, x) != x:
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = root(a), root(b)
-            parent[max(ra, rb)] = min(ra, rb)
-        return {x: root(x) for x in list(parent)}
 
     rng = random.Random(7)
     for _ in range(200):

@@ -527,12 +527,68 @@ def _marker_job(spark, tag: str) -> int:
 
 def test_q44_gate_job_count(spark):
     """q44 built and executed as the bench runs it costs exactly two
-    Spark jobs: its one micro-batch and the noop write of its result.
-    Job ids are global and sequential, so the bracket also counts the
-    streaming query's own thread."""
+    Spark jobs: its one micro-batch and the noop write of its result,
+    with the footer probe's verdict cached or not (the probe reads the
+    footer without Spark).  Job ids are global and sequential, so the
+    bracket also counts the streaming query's own thread."""
+    from compile_time_data_contracts_spark import catalog
+
+    def jobs(tag):
+        first = _marker_job(spark, f"t_q44_jobs_{tag}_first")
+        result = run_stream_to_memory(spark, SF_DIR)
+        result.write.format("noop").mode("overwrite").save()
+        return _marker_job(spark, f"t_q44_jobs_{tag}_last") - first - 1
+
     run_stream_to_memory(spark, SF_DIR)  # warm: the footer probe caches
-    first = _marker_job(spark, "t_q44_jobs_first")
-    result = run_stream_to_memory(spark, SF_DIR)
-    result.write.format("noop").mode("overwrite").save()
-    last = _marker_job(spark, "t_q44_jobs_last")
-    assert last - first - 1 == 2
+    assert jobs("warm") == 2
+    catalog._EVENTS_LAYOUT_CACHE.clear()
+    assert jobs("cold") == 2
+
+
+def test_events_layout_probe_reads_the_footer(spark, tmp_path):
+    """TIMESTAMP(NANOS) events are legacy: the probe sets nanosAsLong,
+    also from its cache, and load_table returns the same rows as from
+    the MICROS file, which leaves the conf alone.  INT96, Spark's own
+    legacy timestamp encoding, is not legacy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from compile_time_data_contracts_spark.catalog import (
+        events_ts_is_legacy_nanos,
+        load_table,
+    )
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    nanos = events.set_column(
+        1, "ts", events.column("ts").cast(pa.timestamp("ns"))
+    )
+    for name, table, kw in [
+        ("micros", events, {}),
+        ("nanos", nanos, {}),
+        ("int96", events, {"use_deprecated_int96_timestamps": True}),
+    ]:
+        (tmp_path / name).mkdir()
+        pq.write_table(table, tmp_path / name / "events.parquet", **kw)
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        for name in ("micros", "int96"):
+            path = str(tmp_path / name / "events.parquet")
+            assert not events_ts_is_legacy_nanos(spark, path)
+            assert spark.conf.get(key) == "false"
+        path = str(tmp_path / "nanos" / "events.parquet")
+        assert events_ts_is_legacy_nanos(spark, path)
+        assert spark.conf.get(key) == "true"
+        spark.conf.set(key, "false")
+        assert events_ts_is_legacy_nanos(spark, path)  # cached verdict
+        assert spark.conf.get(key) == "true"
+
+        def rows(name):
+            df = load_table(spark, str(tmp_path / name), "events")
+            return sorted(df.collect())
+
+        assert rows("nanos") == rows("micros")
+    finally:
+        spark.conf.set(key, prior)

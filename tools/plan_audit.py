@@ -2677,8 +2677,9 @@ WAIVERS = {
     "q369_stream_srm_monitor": "streaming — SRM monitor replays batches; "
         "result is the post-replay snapshot (state bound asserted in "
         "SCALEBENCH srm probe)",
-    "q73_neardup_clusters": "min-label propagation rounds, each "
-        "checkpointed; pair generation audited via q54/q188 pipelines",
+    "q73_neardup_clusters": "star rounds are checkpointed, or the raw "
+        "pairs finish on the driver from one Arrow collect; pair "
+        "generation audited via q54/q188 pipelines",
     "q101_components_deep_chain": "star rounds are checkpointed, or the "
         "raw pairs finish on the driver from one Arrow collect when their "
         "row count fits the broadcast threshold; labels on both sides "
@@ -2742,9 +2743,11 @@ def _pq_adc_pipeline(spark, sf_dir):
 
 
 def _entity_candidates_pipeline(spark, sf_dir):
-    # q150's candidate generation BEFORE connected_components checkpoints
-    # truncate the plan: inverted (brand, token) postings -> equi-join ->
-    # partial-combined intersection counts -> Jaccard filter
+    # q150's candidate generation, which leaves the query's own plan once
+    # connected_components_star collects the pairs to the driver (or
+    # checkpoints its rounds): inverted (brand, token) postings ->
+    # equi-join -> partial-combined intersection counts -> Jaccard
+    # filter
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.catalog import load_table
@@ -2871,7 +2874,7 @@ def _bpe_pair_count_pipeline(spark, sf_dir):
 def _lpa_round_pipeline(spark, sf_dir):
     # one label_propagation round (operators/graph.py:
     # label_propagation loop body) rebuilt un-checkpointed so the
-    # pre-checkpoint subtree is auditable (the connected_components
+    # pre-checkpoint subtree is auditable (the q150 candidate
     # PIPELINES pattern): edge join -> (dst, label) partial counts ->
     # row_number mode pick
     from pyspark.sql import Window
@@ -3596,11 +3599,6 @@ CHECKS_UNPINNED = {
         ("LSH side keeps the Arrow-batched signature stage; all joins "
          "keyed, never cartesian", True,
          lambda p: "MapInPandas" in p and _nocart(p)),
-    ],
-    "q150_entity_resolution": [
-        ("posting explode is a codegen Generate; co-occurrence join "
-         "keyed, never cartesian", True,
-         lambda p: "Generate" in p and _nocart(p)),
     ],
     "q156_duplicate_spans": [
         ("positional n-grams via codegen Generate; shuffle carries "

@@ -18,7 +18,7 @@ any gate.  This probe:
      against the planted pairs and asserting precision via the exact
      verify (every emitted pair has true Jaccard >= 0.5 by
      construction),
-  3. clusters the found pairs with connected_components and checks the
+  3. clusters the found pairs with connected_components_star and checks the
      planted pairs collapse to one representative each,
   4. merges a `text_n{total}` entry into SCALEBENCH.json (keyed by
      scale, so 100k and 1M runs coexist).
@@ -77,7 +77,7 @@ def main() -> None:
 
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
         minhash_near_dup_pairs,
     )
 
@@ -107,7 +107,7 @@ def main() -> None:
     results["unplanted_pairs"] = n_pairs - planted_hit
 
     t0 = time.perf_counter()
-    clusters = connected_components(pairs)
+    clusters = connected_components_star(pairs)
     n_clusters = clusters.filter(
         F.col("doc_id") == F.col("cluster_id")
     ).count()
