@@ -37,7 +37,11 @@ __all__ = [
     "pin_with_signature",
     "scan_input_bytes",
     "scratch_dir",
+    "under_scratch_dir",
 ]
+
+# every directory scratch_dir has made in this process
+_SCRATCH_DIRS: set[str] = set()
 
 
 def scratch_dir(prefix: str) -> str:
@@ -52,7 +56,19 @@ def scratch_dir(prefix: str) -> str:
 
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
+    _SCRATCH_DIRS.add(path)
     return path
+
+
+def under_scratch_dir(path: str) -> bool:
+    """Whether ``path`` lies in a directory :func:`scratch_dir` made in
+    this process, which no caller named and no other process uses."""
+    import os
+
+    path = os.path.abspath(path)
+    return any(
+        path == d or path.startswith(d + os.sep) for d in _SCRATCH_DIRS
+    )
 
 
 def ensure_checkpoint_dir(sc) -> None:

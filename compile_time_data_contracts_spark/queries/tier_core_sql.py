@@ -1576,6 +1576,8 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
     then every conf is restored, so the returned DataFrame stays lazy
     with the Bloom-filtered plan and the session is left untouched.
     """
+    from ..session import session_conf
+
     li = load_table(spark, sf, "lineitem")
     o = load_table(spark, sf, "orders").filter(
         (F.col("o_orderpriority") == "1-URGENT")
@@ -1591,10 +1593,7 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter"
         ".applicationSideScanSizeThreshold": "0",
     }
-    prior = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, confs):
         out = (
             li.join(o, li.l_orderkey == o.o_orderkey)
             .groupBy("l_returnflag")
@@ -1608,12 +1607,6 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
         out._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return out
 
 

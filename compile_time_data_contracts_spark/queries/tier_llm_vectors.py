@@ -2090,6 +2090,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
     import tempfile
 
+    from ..operators.materialize import scratch_dir
     from ..operators.similarity import (
         _ivf_fingerprint,
         ivf_build,
@@ -2097,7 +2098,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
         ivf_stream_maintainer,
         topk_cosine,
     )
-    from ..streaming.windows import write_ordered_feed_parallel
+    from ..streaming.windows import run_gate, write_ordered_feed_parallel
 
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
@@ -2122,7 +2123,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
             "vec_id", "embedding"
         )
         ivf_build(evens, idx, n_clusters=32)
-        feed = tempfile.mkdtemp(prefix="ctdc-simnt-feed-")
+        feed = scratch_dir("ctdc-simnt-feed-")
         b0 = odds.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 1)
         b1 = odds.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 3)
         # padded parallel feed: one trigger == one epoch structurally,
@@ -2130,19 +2131,13 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
         # instead of through the coalesce(1) single-writer funnel
         mft = write_ordered_feed_parallel([b0, b1], feed)
         handler = ivf_stream_maintainer(idx)
-        sq = (
+        stream = (
             spark.readStream.schema(b0.schema)
             .option("maxFilesPerTrigger", str(mft))
             .parquet(feed)
-            .writeStream.foreachBatch(handler)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="ctdc-simnt-ckpt-"),
-            )
-            .trigger(availableNow=True)
-            .start()
         )
-        sq.awaitTermination()
+        writer = stream.writeStream.foreachBatch(handler)
+        run_gate(stream, writer, scratch_dir("ctdc-simnt-ckpt-"))
         # explicit epoch redelivery: committed batch 0 must be skipped
         handler(b0, 0)
     m_after = spark.read.parquet(f"{idx}/meta").first()

@@ -271,24 +271,21 @@ def q145(spark: SparkSession, sf: str) -> DataFrame:
     aggregate exactly to the batch recompute the oracle runs.  With an
     append sink this query would double batch 0's counts and fail the
     hash gate."""
-    import tempfile
-
-    from ..streaming.joins import idempotent_batch_writer, write_stream_idempotent
+    from ..operators.materialize import scratch_dir
+    from ..streaming.joins import idempotent_batch_writer
     from ..streaming.windows import (
         events_stream,
         persistent_event_slices_feed,
+        run_gate,
     )
 
     ev = load_table(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="ctdc-idem-")
+    base = scratch_dir("ctdc-idem-")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     feed, mft = persistent_event_slices_feed(spark, sf)
-    from ..streaming.windows import gate_state_partitions
-
     stream = events_stream(spark, feed, max_files_per_trigger=mft)
-    with gate_state_partitions(stream):
-        q = write_stream_idempotent(stream, out, ckpt)
-        q.awaitTermination()
+    writer = stream.writeStream.foreachBatch(idempotent_batch_writer(out))
+    run_gate(stream, writer, ckpt)
     # post-crash redelivery of batch 0: same rows, same batch id
     slice0 = ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 0)
     idempotent_batch_writer(out)(slice0, 0)
@@ -480,12 +477,12 @@ def q212(spark: SparkSession, sf: str) -> DataFrame:
     oracle runs.  An append-style state sink would double batch 1 here
     and fail the hash gate.  Output digits are engine-deterministic the
     q206 way: DECIMAL sums, raw-double min/max, integer half-up avg."""
-    import tempfile
-
     from ..operators.incremental import versioned_state_merger
+    from ..operators.materialize import scratch_dir
     from ..streaming.windows import (
         events_stream,
         persistent_event_slices_feed,
+        run_gate,
     )
 
     spec = dict(sums=["value_dec"], mins=["value"], maxs=["value"])
@@ -502,21 +499,12 @@ def q212(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     ev = load_table(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="ctdc-incr-stream-")
+    base = scratch_dir("ctdc-incr-stream-")
     state, ckpt = f"{base}/state", f"{base}/ckpt"
     feed, mft = persistent_event_slices_feed(spark, sf)
     handler = versioned_state_merger(state, keys, **spec)
-    from ..streaming.windows import gate_state_partitions
-
     stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-    with gate_state_partitions(stream):
-        qh = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qh.awaitTermination()
+    run_gate(stream, stream.writeStream.foreachBatch(handler), ckpt)
     # post-crash redelivery of epoch 1: same batch, same epoch id
     slice1 = ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1)
     handler(keyed(slice1), 1)
@@ -573,12 +561,12 @@ def q304(spark: SparkSession, sf: str) -> DataFrame:
     table replays as 3 ordered micro-batches through foreachBatch;
     the final state must equal the batch recompute the oracle runs
     (the q44/q78 stream-equals-batch discipline)."""
-    import tempfile
-
     from ..operators.incremental import versioned_state_merger
+    from ..operators.materialize import scratch_dir
     from ..streaming.windows import (
         events_stream,
         persistent_event_slices_feed,
+        run_gate,
     )
 
     keys = ["key", "bar_ts"]
@@ -598,23 +586,14 @@ def q304(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     ev = load_table(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="ctdc-ohlc-stream-")
+    base = scratch_dir("ctdc-ohlc-stream-")
     state, ckpt = f"{base}/state", f"{base}/ckpt"
     feed, mft = persistent_event_slices_feed(spark, sf)
     handler = versioned_state_merger(
         state, keys, sums=["vm"], mins=["tick", "vm"], maxs=["tick", "vm"]
     )
-    from ..streaming.windows import gate_state_partitions
-
     stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-    with gate_state_partitions(stream):
-        qh = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qh.awaitTermination()
+    run_gate(stream, stream.writeStream.foreachBatch(handler), ckpt)
     merged = spark.read.parquet(f"{state}/v2")
     return merged.select(
         "key",
@@ -657,12 +636,12 @@ def q331(spark: SparkSession, sf: str) -> DataFrame:
     contract also checks exclusive_audience: idempotence hides
     double-delivery for masks, but the versioned merger is what
     keeps the COUNT columns (n) exact in the same state table."""
-    import tempfile
-
     from ..operators.incremental import versioned_state_merger
+    from ..operators.materialize import scratch_dir
     from ..streaming.windows import (
         events_stream,
         persistent_event_slices_feed,
+        run_gate,
     )
 
     def keyed(df: DataFrame) -> DataFrame:
@@ -674,21 +653,12 @@ def q331(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     ev = load_table(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="ctdc-bitmap-stream-")
+    base = scratch_dir("ctdc-bitmap-stream-")
     state, ckpt = f"{base}/state", f"{base}/ckpt"
     feed, mft = persistent_event_slices_feed(spark, sf)
     handler = versioned_state_merger(state, ["user_id"], bors=["hbit"])
-    from ..streaming.windows import gate_state_partitions
-
     stream = keyed(events_stream(spark, feed, max_files_per_trigger=mft))
-    with gate_state_partitions(stream):
-        qh = (
-            stream.writeStream.foreachBatch(handler)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qh.awaitTermination()
+    run_gate(stream, stream.writeStream.foreachBatch(handler), ckpt)
     # post-crash redelivery of epoch 1: same batch, same epoch id
     slice1 = ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1)
     handler(keyed(slice1), 1)
@@ -746,31 +716,23 @@ def q369(spark: SparkSession, sf: str) -> DataFrame:
     q145/q331 crash window); the final statistic must hash-match
     q334's batch recompute — an append-style user sink would
     double-count the replayed epoch's new users and flip the flag."""
-    import tempfile
-
     from ..operators.incremental import versioned_state_merger
+    from ..operators.materialize import scratch_dir
     from ..streaming.windows import (
         events_stream,
         persistent_event_slices_feed,
+        run_gate,
     )
 
     ev = load_table(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="ctdc-srm-stream-")
+    base = scratch_dir("ctdc-srm-stream-")
     state, ckpt = f"{base}/state", f"{base}/ckpt"
     feed, mft = persistent_event_slices_feed(spark, sf)
     handler = versioned_state_merger(state, ["user_id"])
-    from ..streaming.windows import gate_state_partitions
-
-    stream = events_stream(spark, feed, max_files_per_trigger=mft)
-    with gate_state_partitions(stream):
-        qh = (
-            stream.select("user_id")
-            .writeStream.foreachBatch(handler)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qh.awaitTermination()
+    users = events_stream(spark, feed, max_files_per_trigger=mft).select(
+        "user_id"
+    )
+    run_gate(users, users.writeStream.foreachBatch(handler), ckpt)
     # post-crash redelivery of epoch 1: same batch, same epoch id —
     # the versioned merger rewrites v1 idempotently
     slice1 = ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1)

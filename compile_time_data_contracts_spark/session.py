@@ -13,13 +13,17 @@ of this process.  Caller-specific settings go in ``conf`` and are
 applied last, so they override the shared ones::
 
     spark = local_session("ctdc-bench", **{"spark.driver.memory": "16g"})
+
+A setting that one block of work needs, and no other, goes through
+``session_conf``, which puts the session's own value back afterwards.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-__all__ = ["local_session"]
+__all__ = ["local_session", "session_conf"]
 
 
 def _usable_cores() -> int:
@@ -47,3 +51,21 @@ def local_session(app: str, cores: int | None = None, **conf):
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+@contextmanager
+def session_conf(spark, settings: dict):
+    """Set ``settings`` in ``spark``'s session conf for the block.  On
+    exit, also when the block raises, each key gets its earlier value
+    back, or is unset if it had none."""
+    saved = {key: spark.conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

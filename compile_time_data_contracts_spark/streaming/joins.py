@@ -117,9 +117,8 @@ def interval_join_gate(
     gates is the stream-stream plumbing itself: dual watermarks, the
     state-bounding range condition, and append-mode inner-join emission.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
     from .windows import run_gate_to_memory, write_ordered_feed_parallel
 
     ev = (
@@ -127,7 +126,7 @@ def interval_join_gate(
         .select("event_id", "user_id", "ts", "value")
         .filter(F.pmod(F.col("user_id"), F.lit(5)) == 0)
     )
-    base = tempfile.mkdtemp(prefix="ctdc-ssjoin-")
+    base = scratch_dir("ctdc-ssjoin-")
     # single-batch feed written at natural parallelism (no reader
     # maxFilesPerTrigger, so availableNow takes every file in the one
     # micro-batch the gate's semantics require)
@@ -188,6 +187,8 @@ def write_stream_idempotent(
     Readers use ``spark.read.parquet(path)`` and simply never select
     ``__batch_id``; at 100 TB the per-batch directories double as
     retention/compaction units (`compact_parquet` on aged batches).
+    ``checkpoint`` is the caller's, so the query keeps Spark's default
+    checkpoint manager, whose rename refuses a second writer.
     Returns the StreamingQuery.
     """
     writer = (

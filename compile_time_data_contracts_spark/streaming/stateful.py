@@ -13,7 +13,6 @@ timeout evicts idle keys).
 from __future__ import annotations
 
 import typing
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -109,17 +108,16 @@ def stateful_totals_gate(
     batch-they-appear-in; n_events is strictly increasing, so max-n wins)
     must equal the plain batch GROUP BY — which is the DuckDB oracle.
     """
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
     from .windows import write_sliced_feed
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    base = tempfile.mkdtemp(prefix="ctdc-statefeed-")
+    base = scratch_dir("ctdc-statefeed-")
     # one-pass sliced feed (r11): the three mod-3 batches written by ONE
     # partitioned job instead of three full scan+write jobs; padding
     # keeps one batch == one trigger structurally exactly as before
@@ -149,40 +147,29 @@ def stateful_totals_gate(
     )
 
 
-@contextmanager
 def _rocksdb_state(spark):
     """Queries started inside this block keep their state in RocksDB;
     the session's own provider setting is restored on exit."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    from ..session import session_conf
+
+    return session_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        },
     )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
-def _run_to_checkpoint(agg: DataFrame, ckpt: str) -> None:
+def _run_to_checkpoint(agg: DataFrame, ckpt: str):
     """Run ``agg`` to completion into a noop sink, leaving its committed
-    state in the checkpoint ``ckpt``."""
-    from .windows import gate_state_partitions
+    state in the checkpoint ``ckpt``; return the terminated query."""
+    from .windows import run_gate
 
-    with gate_state_partitions(agg):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = agg.writeStream.format("noop").outputMode("update")
+    return run_gate(agg, writer, ckpt)
 
 
 def tws_available() -> bool:
@@ -262,17 +249,16 @@ def tws_totals_gate(
     and max-n final-emission selection as :func:`stateful_totals_gate`.
     transformWithState requires the RocksDB state store provider; it is
     set for this query and restored afterwards."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
     from .windows import write_sliced_feed
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    base = tempfile.mkdtemp(prefix="ctdc-twsfeed-")
+    base = scratch_dir("ctdc-twsfeed-")
     mft = write_sliced_feed(
         ev, F.pmod(F.col("event_id"), F.lit(3)), 3, base
     )
@@ -321,15 +307,14 @@ def rocksdb_totals_gate(
     conf silently not applying), and the totals must equal the batch
     GROUP BY — the DuckDB oracle.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
     from .windows import write_sliced_feed
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="ctdc-rocksfeed-")
+    base = scratch_dir("ctdc-rocksfeed-")
     mft = write_sliced_feed(
         ev, F.pmod(F.col("event_id"), F.lit(3)), 3, base
     )
@@ -384,12 +369,11 @@ def state_store_snapshot_totals(spark, sf_dir: str) -> DataFrame:
     partition, the snapshot has one row per user and must equal the
     batch GROUP BY over the same input — the DuckDB oracle.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    base = tempfile.mkdtemp(prefix="ctdc-statesrc-")
+    base = scratch_dir("ctdc-statesrc-")
     src, ckpt = f"{base}/feed", f"{base}/ckpt"
     ev.write.mode("overwrite").parquet(src)
 
@@ -421,16 +405,15 @@ def state_metadata_gate(spark, sf_dir: str) -> DataFrame:
     shuffle-partition conf, which differs between runners), so the
     oracle pins the exact row.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
 
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 50)
         .select("user_id", "value")
     )
-    base = tempfile.mkdtemp(prefix="ctdc-statemeta-")
+    base = scratch_dir("ctdc-statemeta-")
     src, ckpt = f"{base}/feed", f"{base}/ckpt"
     ev.write.mode("overwrite").parquet(src)
 

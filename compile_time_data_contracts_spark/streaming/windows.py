@@ -29,6 +29,7 @@ __all__ = [
     "session_counts",
     "dedup_within_watermark",
     "run_stream_to_memory",
+    "run_gate",
     "run_gate_to_memory",
     "gate_state_partitions",
     "write_ordered_feed",
@@ -186,10 +187,20 @@ def _feed_paths(stream: DataFrame) -> list[str] | None:
     return paths
 
 
+_FILE_SYSTEM_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 @contextmanager
-def gate_state_partitions(stream: DataFrame):
-    """Start ``stream``'s query inside this block to size its state
-    partitions from its input.  Spark reads the count from
+def gate_state_partitions(stream: DataFrame, checkpoint: str | None = None):
+    """Start ``stream``'s query inside this block, with ``checkpoint``
+    its ``checkpointLocation`` (None when it sets none), to size its
+    state partitions from its input and to write a checkpoint the
+    engine owns through Hadoop's FileSystem API.
+
+    State partitions: Spark reads the count from
     ``spark.sql.shuffle.partitions`` at query start and freezes it, and
     each state partition costs a state-store commit per trigger per
     stateful operator whatever it holds.  With JVM state the count is
@@ -198,18 +209,32 @@ def gate_state_partitions(stream: DataFrame):
     size-based coalescing would pick for a batch shuffle of the same
     input, which AQE cannot do for state.  Python state, or a feed of
     unknown size, keeps the session count: per-row Python work needs
-    every core.  The session value is restored on exit, also when the
-    block raises.
+    every core.
 
-    SINGLE-THREADED: the setting is session-global for the whole
+    Checkpoint manager: Spark's default one goes through Hadoop's
+    FileContext API, which without Hadoop's native library starts a
+    ``readlink`` process for every rename and existence check of an
+    offset, commit or state file.  The FileSystem manager starts none,
+    writes the same files in the same layout, and renames them just as
+    atomically, but on local disk its rename replaces an existing file
+    where FileContext's refuses a second writer.  So it is used only
+    for a checkpoint the engine owns: Spark's temporary one (no
+    ``checkpoint`` and no session-wide
+    ``spark.sql.streaming.checkpointLocation``), or one inside a
+    :func:`~..operators.materialize.scratch_dir` this process made.  A
+    location a caller names keeps Spark's default manager.
+
+    Both settings end with the block, also when it raises.
+
+    SINGLE-THREADED: the settings are session-global for the whole
     start→awaitTermination span, so a query planned concurrently in the
-    same session would inherit it; concurrent gates need a
+    same session would inherit them; concurrent gates need a
     ``spark.newSession()`` each."""
-    from ..operators.materialize import path_bytes
+    from ..operators.materialize import path_bytes, under_scratch_dir
+    from ..session import session_conf
 
     spark = stream.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    n = int(saved)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     paths = _feed_paths(stream)
     if paths is not None:
         java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
@@ -219,34 +244,53 @@ def gate_state_partitions(stream: DataFrame):
         size = path_bytes(paths, stop_at=advisory * n)
         if size is not None:
             n = max(1, min(n, -(-size // advisory)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    settings = {"spark.sql.shuffle.partitions": n}
+    if checkpoint is None:
+        default = "spark.sql.streaming.checkpointLocation"
+        owned = spark.conf.get(default, None) is None
+    else:
+        owned = under_scratch_dir(checkpoint)
+    if owned:
+        manager = "spark.sql.streaming.checkpointFileManagerClass"
+        settings[manager] = _FILE_SYSTEM_MANAGER
+    with session_conf(spark, settings):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def run_gate(stream: DataFrame, writer, checkpoint: str | None = None):
+    """Run ``writer`` — ``stream.writeStream`` with its sink set, and no
+    trigger or checkpoint yet — to completion under an availableNow
+    trigger inside :func:`gate_state_partitions`, with ``checkpoint`` as
+    its ``checkpointLocation`` (None: Spark's temporary one, or the
+    session's default location when one is set).  Give a gate's own
+    checkpoint from :func:`~..operators.materialize.scratch_dir`, so it
+    counts as owned.  Returns the terminated query."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with gate_state_partitions(stream, checkpoint):
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    return q
 
 
 def run_gate_to_memory(
     df: DataFrame, query_name: str, output_mode: str = "append"
 ):
-    """Shared tail of every streaming gate: drop a stale same-name temp
-    view, run ``df`` to a memory sink under an availableNow trigger
-    with its state partitions sized by :func:`gate_state_partitions`,
-    await completion, and return (result table, terminated query) —
-    the query so gates that read ``lastProgress`` (q167) share the same
-    path.  Batch reads of the result table use the session's own
-    shuffle partitions."""
+    """Shared tail of every memory-sink gate: drop a stale same-name
+    temp view, :func:`run_gate` ``df`` into a memory sink on Spark's
+    temporary checkpoint, which the engine owns unless a session-wide
+    ``spark.sql.streaming.checkpointLocation`` is set, and return
+    (result table, terminated query) — the query so gates that read
+    ``lastProgress`` (q167) share the same path.  Batch reads of the
+    result table use the session's own shuffle partitions."""
     spark = df.sparkSession
     spark.catalog.dropTempView(query_name)
-    with gate_state_partitions(df):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+    )
+    q = run_gate(df, writer)
     return spark.table(query_name), q
 
 
@@ -519,9 +563,8 @@ def late_drop_counts(
     this is a value-level check of the late-drop semantics, not a
     complete-mode batch equivalence.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
@@ -531,7 +574,7 @@ def late_drop_counts(
     max_ts = nonlate.agg(F.max("ts")).first()[0]  # scalar, feed setup only
     keepalive_pred = (mod == 1) & (F.col("ts") < F.lit(max_ts))
 
-    base = tempfile.mkdtemp(prefix="ctdc-latefeed-")
+    base = scratch_dir("ctdc-latefeed-")
     # one-pass sliced feed (r11): the same three batches — non-late,
     # keepalive, late — written by ONE partitioned job instead of three
     # full event-table scan+write jobs; padding keeps one batch == one
@@ -587,14 +630,13 @@ def stream_dedup_gate(
     variant silently dropping nothing) double-counts every replayed row
     and hash-mismatches.
     """
-    import tempfile
-
     from ..catalog import load_table
+    from ..operators.materialize import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    base = tempfile.mkdtemp(prefix="ctdc-dupfeed-")
+    base = scratch_dir("ctdc-dupfeed-")
     # one-pass sliced feed (r11): every row lands in batch 0, and the
     # event_id % 10 == 0 rows are replayed AGAIN in batch 1 via an
     # in-plan explode — ONE scan+write job where the list form paid a

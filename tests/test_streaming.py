@@ -415,6 +415,25 @@ def test_idempotent_sink_redelivery_is_a_noop(spark, tmp_path):
     ) == [(3, "c"), (9, "z")]
 
 
+def test_write_stream_idempotent_runs_once_per_checkpoint(spark, tmp_path):
+    """The caller-named checkpoint path: a second start on the same
+    checkpoint commits nothing and leaves the sink as it was."""
+    from compile_time_data_contracts_spark.streaming.joins import (
+        write_stream_idempotent,
+    )
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "sink")
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    batch.write.parquet(feed)
+    stream = spark.readStream.schema("id long, v string").parquet(feed)
+    for want_rows in (2, 0):
+        q = write_stream_idempotent(stream, out, str(tmp_path / "ckpt"))
+        q.awaitTermination()
+        assert sum(p["numInputRows"] for p in q.recentProgress) == want_rows
+        rows = spark.read.parquet(out).collect()
+        assert sorted(map(tuple, rows)) == [(1, "a", 0), (2, "b", 0)]
+
+
 # --- gate state partitions ---------------------------------------------
 
 
@@ -508,6 +527,142 @@ def test_gate_rerun_under_one_name_returns_second_result(spark, tmp_path):
         )
         assert table.collect()[0]["count"] == n
 
+
+# --- gate checkpoint manager --------------------------------------------
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark) -> str:
+    """The class Spark's CheckpointFileManager.create picks under the
+    session conf as it is now."""
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(SF_DIR)
+    return managers.CheckpointFileManager.create(path, conf).getClass().getSimpleName()
+
+
+def test_gate_checkpoint_manager_scope(spark, tmp_path):
+    """Only a checkpoint the engine owns is written through the
+    FileSystem manager, and the key ends with the gate, also when the
+    gate raises: unset stays unset, a preset value survives."""
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
+    from compile_time_data_contracts_spark.streaming.windows import (
+        gate_state_partitions,
+        run_gate,
+    )
+
+    fs, fc = (
+        "FileSystemBasedCheckpointFileManager",
+        "FileContextBasedCheckpointFileManager",
+    )
+    stream = events_stream(spark, SF_DIR, glob="events.parquet")
+
+    def inside(checkpoint=None):
+        with gate_state_partitions(stream, checkpoint):
+            return _checkpoint_manager(spark)
+
+    assert _checkpoint_manager(spark) == fc
+    assert inside() == fs  # Spark's temporary checkpoint
+    assert inside(f"{scratch_dir('t-ckpt-')}/ckpt") == fs
+    assert inside(str(tmp_path / "ckpt")) == fc  # named by the caller
+    default = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(default, str(tmp_path / "default"))
+    try:
+        assert inside() == fc
+    finally:
+        spark.conf.unset(default)
+
+    # the query itself starts under the same manager
+    seen = []
+    writer = stream.writeStream.foreachBatch(
+        lambda df, i: seen.append(_checkpoint_manager(spark))
+    )
+    run_gate(stream, writer, f"{scratch_dir('t-ckpt-')}/ckpt")
+    run_gate(stream, writer, str(tmp_path / "named"))
+    assert seen == [fs, fc]
+
+    raw = events_stream(spark, SF_DIR, glob="events.parquet")
+    for preset in (None, fc):
+        if preset is not None:
+            spark.conf.set(_MANAGER_KEY, preset)
+        try:
+            _q44_gate(spark, "t_gate_manager")
+            assert spark.conf.get(_MANAGER_KEY, None) == preset
+            with pytest.raises(Exception, match="(?i)complete"):
+                run_gate_to_memory(raw, "t_gate_manager_raises", "complete")
+            assert spark.conf.get(_MANAGER_KEY, None) == preset
+        finally:
+            spark.conf.unset(_MANAGER_KEY)
+
+
+def _process_starts(spark, tmp_path, run) -> list[str]:
+    """The command lines of the processes the JVM starts during
+    ``run()``, from a JFR recording of ``jdk.ProcessStart`` alone."""
+    jvm = spark._jvm
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        run()
+    finally:
+        recording.stop()
+    dump = jvm.java.io.File(str(tmp_path / "gate.jfr")).toPath()
+    recording.dump(dump)
+    recording.close()
+    events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    return [events.get(i).getString("command") for i in range(events.size())]
+
+
+def test_q44_gate_process_budget(spark, tmp_path):
+    """q44's gate owns its checkpoint, so no offset, commit or state
+    file goes through FileContext, which starts a ``readlink`` for each
+    rename and existence check (64 for this gate) on a Hadoop client
+    without its native library.  What is left is one ``chmod`` per file
+    or directory created (25) and at most one ``rm`` of the temporary
+    checkpoint.  The count is deterministic for this plan."""
+    run_stream_to_memory(spark, SF_DIR)  # warm: first-use processes
+    commands = _process_starts(
+        spark, tmp_path, lambda: run_stream_to_memory(spark, SF_DIR)
+    )
+    assert [c for c in commands if "readlink" in c] == []
+    assert len(commands) <= 26, commands
+
+
+def test_owned_checkpoint_restart_commits_nothing(spark):
+    """Exactly-once under the FileSystem manager: a gate run again on
+    its own committed checkpoint commits no new batch, and its state
+    reads back the same."""
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
+    from compile_time_data_contracts_spark.streaming.stateful import (
+        _run_to_checkpoint,
+    )
+
+    base = scratch_dir("t-restart-")
+    feed, ckpt = f"{base}/feed", f"{base}/ckpt"
+    spark.read.parquet(f"{SF_DIR}/events.parquet").select(
+        "user_id", "value"
+    ).write.parquet(feed)
+    stream = spark.readStream.schema("user_id long, value double").parquet(feed)
+    agg = stream.groupBy("user_id").agg(F.count("*").alias("n"))
+
+    def committed():
+        state = spark.read.format("statestore").load(ckpt)
+        rows = state.select("key.user_id", "value.count").collect()
+        return sorted(os.listdir(f"{ckpt}/commits")), sorted(map(tuple, rows))
+
+    first = _run_to_checkpoint(agg, ckpt)
+    assert first.lastProgress["batchId"] == 0
+    before = committed()
+    again = _run_to_checkpoint(agg, ckpt)
+    assert all(p["numInputRows"] == 0 for p in again.recentProgress)
+    assert committed() == before
+    assert len(before[1]) > 0
 
 def _marker_job(spark, tag: str) -> int:
     """Run a one-task job in its own group; return its id once the
