@@ -11,7 +11,7 @@ through the DataFrame/SQL API so Catalyst + AQE own the physical plan.
 
 Layers (see SURVEY.md §7):
   contracts/  shape IR + policies + conforms proof      (ContractsCore.scala)
-  runtime/    live StructType comparators + pins        (SparkCore.scala:39-189)
+  runtime/    the one policy comparer + pins            (SparkCore.scala:30-189)
   plans/      typestate pipeline builder                (SparkCore.scala:395-444)
   sources/    typed sources/sinks, read_df/write_df     (SparkCore.scala:346-367)
   operators/  relational + LLM-pipeline operator surface (SURVEY §2.2)

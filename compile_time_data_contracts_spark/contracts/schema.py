@@ -47,14 +47,31 @@ _PRIM_TO_SPARK: dict[str, T.DataType] = {
 }
 
 
+class _ShapeLeaf(T.DataType):
+    """A hand-built ``PrimitiveShape`` named outside the contract set
+    (``@contract`` never makes one): it equals only a leaf of the same
+    name and renders as that name, so ``conforms`` compares such shapes
+    as the shape IR spells them.  Spark cannot read or write it."""
+
+    def __init__(self, name: str):
+        self.name = name
+
+    def simpleString(self) -> str:
+        return self.name
+
+
+def _leaf(name: str) -> T.DataType:
+    return _PRIM_TO_SPARK[name] if name in _PRIM_TO_SPARK else _ShapeLeaf(name)
+
+
 def spark_type(shape: Shape) -> T.DataType:
     if isinstance(shape, PrimitiveShape):
-        return _PRIM_TO_SPARK[shape.name]
+        return _leaf(shape.name)
     if isinstance(shape, SequenceShape):
         return T.ArrayType(spark_type(shape.element), containsNull=shape.contains_null)
     if isinstance(shape, MapShape):
         return T.MapType(
-            _PRIM_TO_SPARK[shape.key],
+            _leaf(shape.key),
             spark_type(shape.value),
             valueContainsNull=shape.value_contains_null,
         )

@@ -1049,10 +1049,11 @@ def connected_components_star(
 
     Local finish: the rounds exist for graphs too big for one machine.
     Before any distributed step, the persisted pair projection is
-    counted, and ``cap`` is the session's
+    built, and the row count its cache builder keeps is the guard's
+    count.  ``cap`` is the session's
     ``spark.sql.autoBroadcastJoinThreshold`` over 16 bytes a pair row
     (two 64-bit ids).  At most ``cap`` rows are collected once as Arrow
-    from the cache the count filled, the component minima are computed
+    from the cache the build filled, the component minima are computed
     on the driver (:func:`_local_star_labels`) and handed back as a
     local relation: no node pin, no edge checkpoint, no join, and the
     checkpoint dir is never touched.  The broadcast threshold is the
@@ -1060,9 +1061,10 @@ def connected_components_star(
     relation the driver may collect and ship.  The guard counts raw
     pair rows (duplicates and reversed pairs included), so it is a
     little more conservative than a distinct-edge count.  More rows pay
-    only the count (one job with no shuffle, whose scan fills the cache
-    the rounds read anyway) before the rounds.  A threshold below 16
-    bytes, -1 included, skips the count and disables the local finish.
+    only the cache build (one job with no shuffle, whose count comes
+    free with the cache the rounds read anyway) before the rounds.  A
+    threshold below 16 bytes, -1 included, skips the count and disables
+    the local finish.
 
     Lineage management: every round takes a RELIABLE checkpoint.  We
     MEASURED the alternative (persist MEMORY_AND_DISK between
@@ -1104,11 +1106,15 @@ def connected_components_star(
     )
     cap = bound // 16
     try:
-        # an RDD count is one job with no shuffle; DataFrame.count adds
-        # a shuffle and, under AQE, a second job
-        if cap > 0 and cached._jdf.queryExecution().toRdd().count() <= cap:
-            tbl = cached.toArrow()
-            return _local_star_labels(spark, tbl.column(0), tbl.column(1))
+        if cap > 0:
+            # filling the cache is one job with no shuffle, AQE on or
+            # off, and its builder counts the rows it stores; a retried
+            # task can only over-count, the guard's safe side
+            builder = cached._jdf.queryExecution().withCachedData().cacheBuilder()
+            builder.cachedColumnBuffers().count()
+            if builder.rowCountStats().value() <= cap:
+                tbl = cached.toArrow()
+                return _local_star_labels(spark, tbl.column(0), tbl.column(1))
         _ensure_checkpoint_dir(spark.sparkContext)
         all_nodes = (
             cached.select(F.col(a_col).alias("node"))

@@ -899,7 +899,9 @@ def _leaf_dir(spark, root: str, t, meta_cols: tuple) -> str:
     that 'removes' an emptied leaf by deleting a nonexistent raw path
     leaves the deleted rows on disk and searchable).  Null values map
     to the Hive default partition name."""
-    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    utils = getattr(
+        spark._jvm, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
+    )
     parts = [f"cluster={int(t['cluster'])}"]
     for c in meta_cols:
         v = t[c]
@@ -915,8 +917,7 @@ def _hadoop_delete(spark, path: str) -> bool:
     scheme the session can reach).  Returns whether the path existed —
     callers that KNOW it must exist treat False as an error instead of
     silently skipping (the leaf-path-mismatch failure mode)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(p):
         fs.delete(p, True)

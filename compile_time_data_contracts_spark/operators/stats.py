@@ -368,8 +368,8 @@ def count_min_frequencies(
         "count(*) AS n",
     ).collect()[0]
     jvm = spark._jvm
-    bais = jvm.java.io.ByteArrayInputStream(bytes(row.s))
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bais)
+    bais = getattr(jvm, "java.io.ByteArrayInputStream")(bytes(row.s))
+    cms = getattr(jvm, "org.apache.spark.util.sketch.CountMinSketch").readFrom(bais)
     return [(k, int(cms.estimateCount(k)), int(row.n)) for k in keys]
 
 

@@ -18,7 +18,6 @@ __all__ = [
     "stopword_ratio",
     "token_diversity",
     "quality_score",
-    "language_scores",
     "language_id",
     "fingerprint_md5",
     "winnow_fingerprint",
@@ -108,17 +107,6 @@ def quality_score(col: str = "text") -> Column:
     return F.round(
         (length_band + token_diversity(col)) / 2.0 - punct_ratio(col), 6
     )
-
-
-def language_scores(col: str = "text") -> Column:
-    """Map of language -> stopword-hit ratio."""
-    toks = tokens(col)
-    entries = []
-    for lang, words in STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-        entries += [F.lit(lang), hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")]
-    return F.create_map(*entries)
 
 
 def language_id(col: str = "text") -> Column:

@@ -1,8 +1,12 @@
-"""Runtime schema pins: assert-or-throw with rendered schema trees.
+"""Runtime schema pins: assert-or-throw with the drift report and the
+rendered schema trees.
 
 Python re-expression of `SchemaCheck.assertMatchesContract`
-(SparkCore.scala:302-340).  Driver-side metadata check only — no Spark
-job is triggered.
+(SparkCore.scala:302-340).  The verdict and the report come from
+``runtime/comparator.py``, the one implementation of the eight policies
+that the construction-time proof shares (SparkCore.scala:30-189,
+ContractsCore.scala:237-416).  Driver-side metadata check only — no
+Spark job is triggered.
 """
 
 from __future__ import annotations
@@ -11,6 +15,7 @@ import typing
 
 from pyspark.sql import types as T
 
+from ..contracts.conforms import drift_report
 from ..contracts.policies import SchemaPolicy
 from ..contracts.schema import spark_schema
 from ..contracts.shape import StructShape
@@ -20,8 +25,9 @@ __all__ = ["SchemaMismatchError", "assert_matches_contract"]
 
 
 class SchemaMismatchError(Exception):
-    """Runtime pin failure, carrying both schema trees in Spark's
-    ``printSchema`` format (message shape mirrors SparkCore.scala:318-338).
+    """Runtime pin failure: the drift report, whose paths name what
+    failed, above both schema trees in Spark's ``printSchema`` format
+    (message shape mirrors SparkCore.scala:318-338).
     Duplicate field names are listed only for by-name policies, under the
     policy's own name normalization: ordered and by-position pins never
     index by name."""
@@ -47,6 +53,7 @@ class SchemaMismatchError(Exception):
         super().__init__(
             f"Schema mismatch at {context} under policy {policy.value}:"
             f"{dup_note}\n"
+            f"{drift_report(found, expected, policy).render()}\n"
             f"Found schema:\n{found.treeString()}"
             f"Expected schema:\n{expected.treeString()}"
         )

@@ -8,7 +8,6 @@ from .windows import (
     events_stream,
     run_stream_to_memory,
     session_counts,
-    sliding_counts,
     tumbling_counts,
 )
 
@@ -21,6 +20,5 @@ __all__ = [
     "events_stream",
     "run_stream_to_memory",
     "session_counts",
-    "sliding_counts",
     "tumbling_counts",
 ]

@@ -25,7 +25,6 @@ from ..contracts.schema import spark_schema
 __all__ = [
     "events_stream",
     "tumbling_counts",
-    "sliding_counts",
     "session_counts",
     "dedup_within_watermark",
     "run_stream_to_memory",
@@ -80,25 +79,6 @@ def tumbling_counts(
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "n",
-        )
-    )
-
-
-def sliding_counts(
-    stream: DataFrame,
-    watermark: str = "1 hour",
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -237,7 +217,7 @@ def gate_state_partitions(stream: DataFrame, checkpoint: str | None = None):
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     paths = _feed_paths(stream)
     if paths is not None:
-        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        java_utils = getattr(spark._jvm, "org.apache.spark.network.util.JavaUtils")
         advisory = java_utils.byteStringAsBytes(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         )

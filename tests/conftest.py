@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -32,6 +33,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def marker_job(spark):
+    """``marker_job(tag)`` runs a one-task job in its own group and
+    returns its id once the status store has recorded it, and so every
+    earlier job.  Job ids are global and sequential, so the difference
+    of two markers' ids, less one, counts the jobs between them."""
+
+    def run(tag: str) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(tag, tag)
+        sc.parallelize([1], 1).count()
+        sc._jsc.clearJobGroup()
+        deadline = time.monotonic() + 10.0
+        while time.monotonic() < deadline:
+            ids = sc.statusTracker().getJobIdsForGroup(tag)
+            if ids and sc.statusTracker().getJobInfo(ids[0]).status == "SUCCEEDED":
+                return ids[0]
+            time.sleep(0.002)
+        raise RuntimeError(f"marker job {tag} never finished")
+
+    return run
 
 
 @pytest.fixture

@@ -12,6 +12,10 @@ from compile_time_data_contracts_spark.runtime.comparator import (
     compare_data_type,
     duplicate_names,
 )
+from compile_time_data_contracts_spark.runtime.pins import (
+    SchemaMismatchError,
+    assert_matches_contract,
+)
 
 PRIMS = [
     T.StringType(),
@@ -223,9 +227,10 @@ def _shape_structs(depth: int = 2):
 def test_compile_and_runtime_verdicts_agree(a, b):
     """conforms(producer, expected, policy).ok must equal the runtime
     comparator's verdict over the derived StructTypes, for all eight
-    policies.  Each contract is also checked against itself:
-    a case-insensitive duplicate group must fail both layers under the
-    case-insensitive by-name policies."""
+    policies, and the pin must raise exactly when conforms reports drift,
+    with the report's drift lines in its message.  Each contract is also
+    checked against itself: a case-insensitive duplicate group must fail
+    both layers under the case-insensitive by-name policies."""
     for prod, exp in ((a, b), (a, a)):
         sa, sb = spark_schema(prod), spark_schema(exp)
         cases = [
@@ -239,9 +244,17 @@ def test_compile_and_runtime_verdicts_agree(a, b):
             (SchemaPolicy.FULL, lambda: True),
         ]
         for policy, runtime in cases:
-            compile_ok = conforms(prod, exp, policy, raise_on_drift=False).ok
+            report = conforms(prod, exp, policy, raise_on_drift=False)
+            compile_ok = report.ok
             assert compile_ok == runtime(), (
                 f"{policy}: compile={compile_ok} runtime={not compile_ok}\n"
                 f"A={prod.render()}\nB={exp.render()}"
             )
             assert compile_ok == C.matches(sb, sa, policy), policy
+            if report.ok:
+                assert_matches_contract(sa, exp, policy)
+                continue
+            with pytest.raises(SchemaMismatchError) as exc:
+                assert_matches_contract(sa, exp, policy)
+            for line in report.render().splitlines()[1:]:
+                assert line in str(exc.value), policy

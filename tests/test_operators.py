@@ -1269,6 +1269,20 @@ def test_connected_components_star_deep_chain(spark, cc_star_sides):
         assert all(out[1000 + i] == 1000 for i in range(51))
 
 
+def test_q101_job_count(spark, sf_dir, marker_job):
+    """q101 built and executed as the bench runs it costs exactly four
+    Spark jobs at fixture scale, where the star finishes on the driver:
+    the local finish's guard reads its row count from the pair cache's
+    build, one job, instead of counting the filled cache again."""
+    from compile_time_data_contracts_spark.queries import queries
+
+    q101 = queries()["q101_components_deep_chain"]
+    q101(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
+    first = marker_job("t_q101_jobs_first")
+    q101(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert marker_job("t_q101_jobs_last") - first - 1 == 4
+
+
 def test_connected_components_star_self_loops_and_singletons(
     spark, cc_star_sides
 ):

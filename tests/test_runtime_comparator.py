@@ -85,6 +85,25 @@ def test_ci_duplicates_fail_unordered():
     assert "Duplicate field names (case-sensitive)" in str(exc.value)
 
 
+def test_pin_message_names_the_failing_path():
+    """A failing pin prints the drift report above the two trees, so a
+    nested type drift is named by its path."""
+    def schema(lat: T.DataType) -> T.StructType:
+        geo = _s(_f("lat", lat), _f("lon", T.DoubleType()))
+        return _s(
+            _f("id", T.LongType()),
+            _f("address", _s(_f("city", T.StringType()), _f("geo", geo))),
+        )
+
+    with pytest.raises(SchemaMismatchError) as exc:
+        assert_matches_contract(
+            schema(T.StringType()), schema(T.DoubleType()), SchemaPolicy.EXACT
+        )
+    msg = str(exc.value)
+    assert "  - address.geo.lat: expected double, found string" in msg
+    assert msg.index("address.geo.lat") < msg.index("Found schema:")
+
+
 # --- ordered / orderedCI / unorderedCI (SparkRuntimeSpec.scala:104-187) ----
 
 def test_order_case_matrix():

@@ -11,7 +11,6 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
-import time
 from typing import Optional
 
 import pytest
@@ -664,23 +663,8 @@ def test_owned_checkpoint_restart_commits_nothing(spark):
     assert committed() == before
     assert len(before[1]) > 0
 
-def _marker_job(spark, tag: str) -> int:
-    """Run a one-task job in its own group; return its id once the
-    status store has recorded it, and so every earlier job."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    sc.parallelize([1], 1).count()
-    sc._jsc.clearJobGroup()
-    deadline = time.monotonic() + 10.0
-    while time.monotonic() < deadline:
-        ids = sc.statusTracker().getJobIdsForGroup(tag)
-        if ids and sc.statusTracker().getJobInfo(ids[0]).status == "SUCCEEDED":
-            return ids[0]
-        time.sleep(0.002)
-    raise RuntimeError(f"marker job {tag} never finished")
 
-
-def test_q44_gate_job_count(spark):
+def test_q44_gate_job_count(spark, marker_job):
     """q44 built and executed as the bench runs it costs exactly two
     Spark jobs: its one micro-batch and the noop write of its result,
     with the footer probe's verdict cached or not (the probe reads the
@@ -689,10 +673,10 @@ def test_q44_gate_job_count(spark):
     from compile_time_data_contracts_spark import catalog
 
     def jobs(tag):
-        first = _marker_job(spark, f"t_q44_jobs_{tag}_first")
+        first = marker_job(f"t_q44_jobs_{tag}_first")
         result = run_stream_to_memory(spark, SF_DIR)
         result.write.format("noop").mode("overwrite").save()
-        return _marker_job(spark, f"t_q44_jobs_{tag}_last") - first - 1
+        return marker_job(f"t_q44_jobs_{tag}_last") - first - 1
 
     run_stream_to_memory(spark, SF_DIR)  # warm: the footer probe caches
     assert jobs("warm") == 2
