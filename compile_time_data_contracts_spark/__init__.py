@@ -10,7 +10,7 @@ compile-time macro proof), pinned again at runtime against live
 through the DataFrame/SQL API so Catalyst + AQE own the physical plan.
 
 Layers (see SURVEY.md §7):
-  contracts/  shape IR + policies + conforms proof      (ContractsCore.scala)
+  contracts/  StructType reflection + policies + conforms (ContractsCore.scala)
   runtime/    the one policy comparer + pins            (SparkCore.scala:30-189)
   plans/      typestate pipeline builder                (SparkCore.scala:395-444)
   sources/    typed sources/sinks, read_df/write_df     (SparkCore.scala:346-367)
@@ -19,16 +19,7 @@ Layers (see SURVEY.md §7):
   streaming/  event-time windows, watermarks, stateful dedup
 """
 
-from .contracts.shape import (
-    contract,
-    shape_of,
-    StructShape,
-    FieldShape,
-    PrimitiveShape,
-    SequenceShape,
-    MapShape,
-    UnsupportedShapeError,
-)
+from .contracts.shape import contract, UnsupportedShapeError
 from .contracts.policies import SchemaPolicy
 from .contracts.conforms import conforms, ContractDriftError, DriftReport
 from .contracts.codegen import (
@@ -44,12 +35,6 @@ from .sources.io import Source, Sink, read_df, write_df
 
 __all__ = [
     "contract",
-    "shape_of",
-    "StructShape",
-    "FieldShape",
-    "PrimitiveShape",
-    "SequenceShape",
-    "MapShape",
     "UnsupportedShapeError",
     "SchemaPolicy",
     "conforms",

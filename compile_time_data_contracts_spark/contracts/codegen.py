@@ -21,8 +21,8 @@ import re
 
 from pyspark.sql import types as T
 
-from .schema import _PRIM_TO_SPARK
-from .shape import _ATOMIC_KEYS
+from . import types as sentinel_types
+from .schema import _ATOMIC_KEYS, _LEAVES
 
 __all__ = ["contract_source", "load_contract", "UnsupportedSchemaError"]
 
@@ -31,33 +31,30 @@ class UnsupportedSchemaError(TypeError):
     """The schema uses a type outside the closed contract leaf set."""
 
 
-# annotation text per CANONICAL shape-name — the one table codegen owns;
-# the Spark-type keys and the atomic-key set are DERIVED from the
-# shape/schema layer's tables below, so a leaf added (or removed) there
-# cannot silently diverge from what codegen accepts: a missing
-# annotation fails this module's import, not a user's generation call
-_ANN_BY_SHAPE_NAME = {
-    "string": "str",
-    "long": "int",
-    "int": "int32",
-    "short": "int16",
-    "byte": "int8",
-    "double": "float",
-    "float": "float32",
-    "boolean": "bool",
-    "date": "datetime.date",
-    "timestamp": "datetime.datetime",
-    "timestamp_ntz": "timestamp_ntz",
-    "decimal(38,18)": "decimal.Decimal",
+# Spark leaf -> annotation, inverted from the one leaf table: the first
+# annotation per type wins (LongType -> int, not int64)
+_ANNOTATIONS = {dt: tp for tp, dt in reversed(_LEAVES.items())}
+_SENTINELS = {
+    tp.__name__
+    for tp in _ANNOTATIONS.values()
+    if tp.__module__ == sentinel_types.__name__
 }
-_LEAVES = {
-    dt: _ANN_BY_SHAPE_NAME[name] for name, dt in _PRIM_TO_SPARK.items()
+_BUILTINS = {
+    tp.__name__ for tp in _ANNOTATIONS.values() if tp.__module__ == "builtins"
 }
-_ATOMIC_KEY_TYPES = tuple(
-    type(_PRIM_TO_SPARK[name]) for name in sorted(_ATOMIC_KEYS)
-)
 
-_SENTINELS = {"int32", "int16", "int8", "float32", "timestamp_ntz"}
+
+def _leaf_annotation(tp: type, used: set) -> str:
+    """Annotation text for a leaf class, recording the import it needs:
+    a builtin needs none, a sentinel its own name, a stdlib class its
+    module."""
+    if tp.__module__ == "builtins":
+        return tp.__name__
+    if tp.__name__ in _SENTINELS:
+        used.add(tp.__name__)
+        return tp.__name__
+    used.add(tp.__module__)
+    return f"{tp.__module__}.{tp.__name__}"
 
 
 def _ident(name: str) -> str:
@@ -75,22 +72,13 @@ def _annotation(
     dt: T.DataType, nullable_slot: bool, classes: list[tuple[str, list[str]]],
     used: set, prefix: str,
 ) -> str:
-    if isinstance(dt, T.DecimalType):
-        if (dt.precision, dt.scale) != (38, 18):
-            raise UnsupportedSchemaError(
-                f"decimal({dt.precision},{dt.scale}) is outside the contract "
-                "set (only decimal(38,18) maps, reference "
-                "DecimalType.SYSTEM_DEFAULT)"
-            )
-        used.add("decimal")
-        inner = "decimal.Decimal"
-    elif isinstance(dt, T.ArrayType):
+    if isinstance(dt, T.ArrayType):
         elem = _annotation(
             dt.elementType, dt.containsNull, classes, used, prefix
         )
         inner = f"list[{elem}]"
     elif isinstance(dt, T.MapType):
-        if not isinstance(dt.keyType, _ATOMIC_KEY_TYPES):
+        if not isinstance(dt.keyType, _ATOMIC_KEYS):
             raise UnsupportedSchemaError(
                 f"map key type {dt.keyType.simpleString()} is not atomic"
             )
@@ -103,18 +91,18 @@ def _annotation(
         name = f"{prefix}_{len(classes)}"
         _emit_class(dt, name, classes, used)
         inner = f'"{name}"'
+    elif dt in _ANNOTATIONS:
+        inner = _leaf_annotation(_ANNOTATIONS[dt], used)
+    elif isinstance(dt, T.DecimalType):
+        raise UnsupportedSchemaError(
+            f"decimal({dt.precision},{dt.scale}) is outside the contract "
+            "set (only decimal(38,18) maps, reference "
+            "DecimalType.SYSTEM_DEFAULT)"
+        )
     else:
-        try:
-            inner = _LEAVES[dt]
-        except KeyError:
-            raise UnsupportedSchemaError(
-                f"type {dt.simpleString()} is outside the closed contract "
-                "leaf set"
-            ) from None
-        if inner in _SENTINELS:
-            used.add(inner)
-        if inner.startswith("datetime."):
-            used.add("datetime")
+        raise UnsupportedSchemaError(
+            f"type {dt.simpleString()} is outside the closed contract leaf set"
+        )
     if nullable_slot:
         used.add("Optional")
         return f"Optional[{inner}]"
@@ -132,6 +120,8 @@ def _emit_class(
         ann = _annotation(f.dataType, False, classes, used, name)
         if f.nullable:
             used.add("Optional")
+            if f.name in _BUILTINS:
+                used.add(f.name)  # shadowed: see contract_source
             lines.append(f"    {_ident(f.name)}: Optional[{ann}] = None")
         else:
             lines.append(f"    {_ident(f.name)}: {ann}")
@@ -164,7 +154,7 @@ def contract_source(schema: T.StructType, name: str = "GeneratedContract") -> st
 
     # postponed annotations FIRST: without this, a nullable column whose
     # name shadows an emitted annotation name (a column literally called
-    # 'Optional', 'str', 'datetime', ...) binds that name to None in the
+    # 'Optional', 'datetime', 'int32', ...) binds that name to None in the
     # class namespace and the NEXT annotation's evaluation crashes with
     # "'NoneType' object is not subscriptable".  The in-process
     # load_contract path only survived by accident (exec inherits this
@@ -179,6 +169,13 @@ def contract_source(schema: T.StructType, name: str = "GeneratedContract") -> st
     # stdlib imports go after the __future__ line (which MUST stay
     # first — inserting above it would be a SyntaxError in the
     # generated module)
+    # a nullable column named like a builtin annotation ('str', 'int',
+    # ...) still binds it to None in its class namespace, which
+    # get_type_hints searches before builtins but after the module: bind
+    # the builtin in the module too
+    shadowed = sorted(used & _BUILTINS)
+    if shadowed:
+        imports.insert(2, "from builtins import " + ", ".join(shadowed))
     if "datetime" in used:
         imports.insert(2, "import datetime")
     if "decimal" in used:

@@ -25,7 +25,6 @@ from pyspark.sql import types as T
 from ..runtime.comparator import Drift, schema_drifts
 from .policies import SchemaPolicy
 from .schema import spark_schema
-from .shape import StructShape
 
 __all__ = ["conforms", "drift_report", "ContractDriftError", "DriftReport", "Drift"]
 
@@ -80,8 +79,8 @@ def drift_report(
 
 
 def conforms(
-    producer: typing.Union[type, StructShape],
-    expected: typing.Union[type, StructShape],
+    producer: typing.Union[type, T.StructType],
+    expected: typing.Union[type, T.StructType],
     policy: SchemaPolicy = SchemaPolicy.EXACT,
     *,
     raise_on_drift: bool = True,

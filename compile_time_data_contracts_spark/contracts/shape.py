@@ -1,284 +1,27 @@
-"""Normalized structural type-shape IR + contract declaration.
+"""Contract declaration.
 
-Python re-expression of the reference's compile-time shape model
-(`TypeShape` at /root/reference/src/main/scala/ctdc/ContractsCore.scala:65-76,
-extraction at :176-203).  Python has no compile step, so extraction runs at
-contract-declaration time (module import); the strict closed leaf set is
-enforced here — unsupported leaves abort declaration, mirroring the
-reference's compile abort (ContractsCore.scala:153-156).
-
-Semantic quirks preserved (SURVEY.md §1.2):
-  * field-level ``Optional[T]`` unwraps to the inner shape; ``is_optional``
-    is carried as field *metadata* only and never participates in structural
-    comparison (ContractsCore.scala:195-196),
-  * ``Optional`` nested inside a sequence/map value becomes the collection's
-    ``contains_null`` / ``value_contains_null`` bit, which *is* compared
-    strictly (ContractsCore.scala:177, :247-260),
-  * all sequence flavors (list/Seq/Vector/Array/Set) collapse to one
-    sequence shape — ``set[str]`` is structurally ``list[str]``
-    (ContractsCore.scala:127-136),
-  * map keys are restricted to atomic types (ContractsCore.scala:145-148).
+``@contract`` is the Python analogue of deriving `SparkSchema[C]` at
+compile time (ContractsCore.scala:176-203, SparkCore.scala:198-299):
+it reflects the dataclass into its StructType when the class is
+declared, so an unsupported leaf fails the import that declares it.
+The reflection and its quirks live in ``contracts/schema.py``.
 """
 
 from __future__ import annotations
 
 import dataclasses
-import datetime
-import decimal
-import enum
-import types as pytypes
-import typing
-import uuid
 
-from . import types as t
+from .schema import _SCHEMA_ATTR, UnsupportedShapeError, _reflect
 
-__all__ = [
-    "PrimitiveShape",
-    "SequenceShape",
-    "MapShape",
-    "FieldShape",
-    "StructShape",
-    "UnsupportedShapeError",
-    "shape_of",
-    "struct_shape_of",
-    "contract",
-    "is_contract",
-]
-
-
-class UnsupportedShapeError(TypeError):
-    """Raised when a contract uses a leaf outside the supported closed set
-    (reference compile abort, ContractsCore.scala:153-156)."""
-
-
-# canonical leaf names; rendering matches drift-report expectations
-_PRIMITIVES = {
-    "string",
-    "int",
-    "long",
-    "short",
-    "byte",
-    "double",
-    "float",
-    "boolean",
-    "decimal(38,18)",
-    "date",
-    "timestamp",
-    "timestamp_ntz",
-}
-
-# atomic map-key restriction (ContractsCore.scala:145-148)
-_ATOMIC_KEYS = {"string", "int", "long", "short", "byte", "boolean"}
-
-_LEAF_MAP: dict[object, str] = {
-    str: "string",
-    int: "long",  # Python int is unbounded; widest integral, like Scala Long
-    float: "double",
-    bool: "boolean",
-    bytes: "string",  # no binary leaf in the reference; reject instead
-    decimal.Decimal: "decimal(38,18)",
-    datetime.date: "date",
-    datetime.datetime: "timestamp",
-    t.int8: "byte",
-    t.int16: "short",
-    t.int32: "int",
-    t.int64: "long",
-    t.float32: "float",
-    t.float64: "double",
-    t.timestamp_ntz: "timestamp_ntz",
-}
-del _LEAF_MAP[bytes]  # explicit: bytes is rejected like UUID/enum/tuple
-
-
-@dataclasses.dataclass(frozen=True)
-class PrimitiveShape:
-    name: str
-
-    def render(self) -> str:
-        return self.name
-
-
-@dataclasses.dataclass(frozen=True)
-class SequenceShape:
-    element: "Shape"
-    contains_null: bool = False
-
-    def render(self) -> str:
-        opt = "?" if self.contains_null else ""
-        return f"seq[{self.element.render()}{opt}]"
-
-
-@dataclasses.dataclass(frozen=True)
-class MapShape:
-    key: str  # atomic primitive name
-    value: "Shape"
-    value_contains_null: bool = False
-
-    def render(self) -> str:
-        opt = "?" if self.value_contains_null else ""
-        return f"map[{self.key}, {self.value.render()}{opt}]"
-
-
-@dataclasses.dataclass(frozen=True)
-class FieldShape:
-    name: str
-    shape: "Shape"
-    has_default: bool = False
-    is_optional: bool = False
-
-    def render(self) -> str:
-        return f"{self.name}: {self.shape.render()}"
-
-
-@dataclasses.dataclass(frozen=True)
-class StructShape:
-    fields: tuple[FieldShape, ...]
-
-    def render(self) -> str:
-        inner = ", ".join(f.render() for f in self.fields)
-        return f"struct{{{inner}}}"
-
-    def field_names(self) -> list[str]:
-        return [f.name for f in self.fields]
-
-
-Shape = typing.Union[PrimitiveShape, SequenceShape, MapShape, StructShape]
-
-# list/set/frozenset collapse to sequence; tuple (fixed arity) and every
-# other origin fall through to _reject in _shape_of_required
-_SEQ_ORIGINS = (list, set, frozenset)
-
-
-def _unwrap_optional(tp: object) -> tuple[object, bool]:
-    """Return (inner, was_optional) for Optional[T] / T | None annotations."""
-    origin = typing.get_origin(tp)
-    if origin is typing.Union or origin is pytypes.UnionType:
-        args = [a for a in typing.get_args(tp) if a is not type(None)]
-        if len(args) != 1 or len(typing.get_args(tp)) != 2:
-            raise UnsupportedShapeError(
-                f"Unsupported union type {tp!r}: only Optional[T] is supported"
-            )
-        return args[0], True
-    return tp, False
-
-
-def shape_of(tp: object, *, _path: str = "") -> Shape:
-    """Reflect a Python annotation into the normalized shape IR
-    (analogue of `typeShapeOf`, ContractsCore.scala:176-203)."""
-    inner, was_opt = _unwrap_optional(tp)
-    if was_opt:
-        # Optional at non-field position is meaningful only inside
-        # sequence/map values; callers that care pass it explicitly.
-        raise UnsupportedShapeError(
-            "Optional must appear at field level or directly inside a "
-            "sequence/map value"
-        )
-    return _shape_of_required(tp)
-
-
-def _shape_of_required(tp: object) -> Shape:
-    if tp in _LEAF_MAP:
-        return PrimitiveShape(_LEAF_MAP[tp])
-
-    origin = typing.get_origin(tp)
-    if origin is None:
-        if dataclasses.is_dataclass(tp):
-            return struct_shape_of(tp)
-        _reject(tp)
-    if origin in _SEQ_ORIGINS:
-        (elem,) = typing.get_args(tp)
-        elem_inner, elem_opt = _unwrap_optional(elem)
-        return SequenceShape(_shape_of_required(elem_inner), contains_null=elem_opt)
-    if origin is dict:
-        key_tp, val_tp = typing.get_args(tp)
-        if key_tp not in _LEAF_MAP or _LEAF_MAP[key_tp] not in _ATOMIC_KEYS:
-            raise UnsupportedShapeError(
-                f"Unsupported map key type {key_tp!r}: map keys must be atomic "
-                f"({sorted(_ATOMIC_KEYS)})"
-            )
-        val_inner, val_opt = _unwrap_optional(val_tp)
-        return MapShape(
-            _LEAF_MAP[key_tp],
-            _shape_of_required(val_inner),
-            value_contains_null=val_opt,
-        )
-    _reject(tp)  # tuple (fixed arity) and every other generic origin
-
-
-def _reject(tp: object) -> typing.NoReturn:
-    """Strict closed-set enforcement: UUID, enums, tuples, arbitrary classes
-    are rejected exactly as the reference rejects them
-    (tests SchemaConformsSpec.scala:181-227, SparkSchemaSpec.scala:71-114)."""
-    label = getattr(tp, "__name__", None) or repr(tp)
-    if isinstance(tp, type) and issubclass(tp, enum.Enum):
-        kind = "enum"
-    elif tp is uuid.UUID:
-        kind = "UUID"
-    elif typing.get_origin(tp) is tuple or tp is tuple:
-        kind = "tuple"
-    else:
-        kind = "type"
-    raise UnsupportedShapeError(
-        f"Unsupported contract leaf {kind} '{label}': supported leaves are "
-        f"{sorted(_PRIMITIVES)}, Optional[...], list/set[...], "
-        f"dict[atomic, ...], and nested contract dataclasses"
-    )
-
-
-def struct_shape_of(cls: type) -> StructShape:
-    """Dataclass -> StructShape with has_default / is_optional field
-    metadata (ContractsCore.scala:188-198)."""
-    if not dataclasses.is_dataclass(cls):
-        raise UnsupportedShapeError(f"{cls!r} is not a dataclass contract")
-    hints = typing.get_type_hints(cls)
-    fields = []
-    for f in dataclasses.fields(cls):
-        tp = hints[f.name]
-        inner, is_opt = _unwrap_optional(tp)
-        has_default = (
-            f.default is not dataclasses.MISSING
-            or f.default_factory is not dataclasses.MISSING  # type: ignore[misc]
-        )
-        fields.append(
-            FieldShape(
-                name=f.name,
-                shape=_shape_of_required(inner),
-                has_default=has_default,
-                is_optional=is_opt,
-            )
-        )
-    return StructShape(tuple(fields))
+__all__ = ["UnsupportedShapeError", "contract"]
 
 
 def contract(cls: type) -> type:
-    """Contract declaration decorator.
-
-    The Python analogue of deriving `SparkSchema[C]` + shape extraction at
-    compile time: runs eagerly at class-declaration time, attaching
-    ``__ctdc_shape__`` (normalized IR) and ``__ctdc_schema__`` (derived
-    StructType).  Unsupported leaves raise immediately.
-    """
+    """Contract declaration decorator: makes ``cls`` a dataclass if it is
+    not one and caches its StructType in the class's own ``__dict__``,
+    which marks it as a contract.  Unsupported leaves raise
+    immediately."""
     if not dataclasses.is_dataclass(cls):
         cls = dataclasses.dataclass(cls)
-    shape = struct_shape_of(cls)
-    cls.__ctdc_shape__ = shape  # type: ignore[attr-defined]
-    # derived lazily on first use to keep pyspark import out of pure-shape use
-    cls.__ctdc_schema__ = None  # type: ignore[attr-defined]
+    setattr(cls, _SCHEMA_ATTR, _reflect(cls))
     return cls
-
-
-def is_contract(cls: object) -> bool:
-    # __dict__, never hasattr: an UNDECORATED dataclass subclass of a
-    # @contract inherits the parent's __ctdc_shape__, and resolving it
-    # as "a contract" silently uses the PARENT's fields — a read
-    # through such a class would scan with a schema missing the
-    # subclass's own columns and never detect drift on them
-    return isinstance(cls, type) and "__ctdc_shape__" in cls.__dict__
-
-
-def shape_for(contract_cls: type) -> StructShape:
-    if is_contract(contract_cls):
-        return contract_cls.__ctdc_shape__  # type: ignore[attr-defined]
-    if dataclasses.is_dataclass(contract_cls):
-        return struct_shape_of(contract_cls)
-    raise UnsupportedShapeError(f"{contract_cls!r} is not a contract")

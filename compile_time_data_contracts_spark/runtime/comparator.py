@@ -23,7 +23,8 @@ pass.
 Drift paths use the reference's grammar: ``a.b`` nested field, ``a[]``
 sequence element, ``a<key>``/``a<value>`` map sides, ``@i(name)``
 ordered position, ``@i`` positional.  Details render leaves with the
-shape IR's names, and ``simpleString()`` outside the contract set.
+reference's names, which are ``simpleString()`` except ``long``,
+``short`` and ``byte``.
 
 Key semantics Spark's own comparators lack (ARTIFACT.md:29):
   * ``ArrayType.containsNull`` / ``MapType.valueContainsNull`` compared
@@ -46,7 +47,7 @@ import dataclasses
 from pyspark.sql import types as T
 
 from ..contracts.policies import SchemaPolicy
-from ..contracts.schema import _PRIM_TO_SPARK, HAS_DEFAULT_KEY
+from ..contracts.schema import HAS_DEFAULT_KEY, _leaf_name
 
 __all__ = [
     "Drift",
@@ -84,7 +85,6 @@ class StructMode:
 # comparison (the behavior the public helper always had).
 _ORDERED_CS = StructMode("ordered", case_insensitive=False)
 
-_SPARK_TO_PRIM = {v: k for k, v in _PRIM_TO_SPARK.items()}
 _OPTIONAL = {True: "optional", False: "required"}
 
 
@@ -101,7 +101,7 @@ def duplicate_names(
 
 
 def _render(dt: T.DataType) -> str:
-    """A DataType in the shape IR's notation (``shape.*.render``)."""
+    """A DataType in the reference's drift-report notation."""
     if isinstance(dt, T.StructType):
         inner = ", ".join(f"{f.name}: {_render(f.dataType)}" for f in dt.fields)
         return f"struct{{{inner}}}"
@@ -111,7 +111,7 @@ def _render(dt: T.DataType) -> str:
     if isinstance(dt, T.MapType):
         opt = "?" if dt.valueContainsNull else ""
         return f"map[{_render(dt.keyType)}, {_render(dt.valueType)}{opt}]"
-    return _SPARK_TO_PRIM.get(dt) or dt.simpleString()
+    return _leaf_name(dt)
 
 
 def _join(path: str, name: str) -> str:

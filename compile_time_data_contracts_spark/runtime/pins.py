@@ -18,7 +18,6 @@ from pyspark.sql import types as T
 from ..contracts.conforms import drift_report
 from ..contracts.policies import SchemaPolicy
 from ..contracts.schema import spark_schema
-from ..contracts.shape import StructShape
 from .comparator import RuntimeSchemaComparator, duplicate_names
 
 __all__ = ["SchemaMismatchError", "assert_matches_contract"]
@@ -61,7 +60,7 @@ class SchemaMismatchError(Exception):
 
 def assert_matches_contract(
     found: T.StructType,
-    contract: typing.Union[type, StructShape, T.StructType],
+    contract: typing.Union[type, T.StructType],
     policy: SchemaPolicy = SchemaPolicy.EXACT_UNORDERED_CI,
     context: str = "schema pin",
 ) -> None:
@@ -69,8 +68,6 @@ def assert_matches_contract(
     SchemaMismatchError otherwise.  The default pin is the unordered-CI
     comparator regardless of sink policy, matching the reference's
     post-transform pin (SparkCore.scala:404-415, README.md:58-59)."""
-    expected = (
-        contract if isinstance(contract, T.StructType) else spark_schema(contract)
-    )
+    expected = spark_schema(contract)
     if not RuntimeSchemaComparator.matches(expected, found, policy):
         raise SchemaMismatchError(context, policy, expected, found)

@@ -3,7 +3,10 @@ round trip."""
 
 from __future__ import annotations
 
+import keyword
+
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 
 from compile_time_data_contracts_spark.contracts.codegen import (
@@ -74,6 +77,64 @@ def test_nested_roundtrip():
             ),
         ]
     )
+    assert _strip_meta(_roundtrip(schema)) == schema
+
+
+# every contract leaf and every atomic map-key type
+LEAVES = [
+    T.StringType(), T.LongType(), T.IntegerType(), T.ShortType(),
+    T.ByteType(), T.DoubleType(), T.FloatType(), T.BooleanType(),
+    T.DecimalType(38, 18), T.DateType(), T.TimestampType(),
+    T.TimestampNTZType(),
+]
+KEYS = [
+    T.StringType(), T.IntegerType(), T.LongType(), T.ShortType(),
+    T.ByteType(), T.BooleanType(),
+]
+# names the generated module also binds (annotations, imports,
+# decorators) next to ordinary identifiers
+NAMES = st.one_of(
+    st.sampled_from(
+        ["str", "int", "float", "bool", "Optional", "datetime", "decimal",
+         "int32", "timestamp_ntz", "dataclass", "contract"]
+    ),
+    st.from_regex(r"[a-z][a-z0-9_]{0,6}", fullmatch=True).filter(
+        lambda n: not keyword.iskeyword(n)
+    ),
+)
+
+
+def data_types(depth: int = 2):
+    leaf = st.sampled_from(LEAVES)
+    if depth == 0:
+        return leaf
+    inner = data_types(depth - 1)
+    return st.one_of(
+        leaf,
+        st.builds(T.ArrayType, inner, st.booleans()),
+        st.builds(T.MapType, st.sampled_from(KEYS), inner, st.booleans()),
+        struct_types(depth - 1),
+    )
+
+
+def struct_types(depth: int = 2):
+    fields = st.lists(
+        st.tuples(NAMES, data_types(depth), st.booleans()),
+        min_size=1,
+        max_size=5,
+        unique_by=lambda t: t[0],
+    )
+    return fields.map(
+        lambda fs: T.StructType([T.StructField(*f) for f in fs])
+    )
+
+
+@settings(max_examples=60, deadline=None)
+@given(struct_types())
+def test_roundtrip_property(schema):
+    """Any schema over the contract leaves — nullable fields, nullable
+    array elements and map values, nested structs, every atomic key —
+    survives schema -> source -> contract -> schema, up to metadata."""
     assert _strip_meta(_roundtrip(schema)) == schema
 
 

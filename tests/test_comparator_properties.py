@@ -162,25 +162,22 @@ def test_nested_contains_null_strict(dt):
 
 from compile_time_data_contracts_spark.contracts.conforms import conforms
 from compile_time_data_contracts_spark.contracts.policies import SchemaPolicy
-from compile_time_data_contracts_spark.contracts.schema import spark_schema
-from compile_time_data_contracts_spark.contracts.shape import (
-    FieldShape,
-    MapShape,
-    PrimitiveShape,
-    SequenceShape,
-    StructShape,
+from compile_time_data_contracts_spark.contracts.schema import (
+    HAS_DEFAULT_KEY,
+    spark_schema,
 )
 
 
-def _shape_structs(depth: int = 2):
-    """Bounded-depth recursive shape generator: leaves, sequences, AND
-    nested StructShapes (also wrapped in sequences), so the agreement
-    property exercises the mode-aware nested-struct recursion of both
-    layers — a flat-only generator cannot catch nested-mode divergence.
-    Names are unique only case-sensitively and drawn from a small
-    mixed-case alphabet, so ``id``/``ID``-style groups (duplicates under
-    the case-insensitive policies) and cross-side name overlaps are
-    common."""
+def _contract_structs(depth: int = 2):
+    """Bounded-depth recursive StructType generator, each field with a
+    drawn ``nullable`` and ``ctdc.hasDefault`` as ``@contract`` derives
+    them: leaves, arrays, AND nested StructTypes (also wrapped in arrays
+    and map values), so the agreement property exercises the mode-aware
+    nested-struct recursion of both layers — a flat-only generator
+    cannot catch nested-mode divergence.  Names are unique only
+    case-sensitively and drawn from a small mixed-case alphabet, so
+    ``id``/``ID``-style groups (duplicates under the case-insensitive
+    policies) and cross-side name overlaps are common."""
     names = st.lists(
         st.text(alphabet="abAB", min_size=1, max_size=2),
         min_size=1,
@@ -188,42 +185,45 @@ def _shape_structs(depth: int = 2):
         unique=True,
     )
     leaf = st.sampled_from(
-        ["string", "int", "long", "double", "boolean"]
-    ).map(PrimitiveShape)
+        [T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType(),
+         T.BooleanType()]
+    )
     options = [
         leaf,
         st.tuples(leaf, st.booleans()).map(
-            lambda t: SequenceShape(t[0], t[1])
+            lambda t: T.ArrayType(t[0], t[1])
         ),
     ]
     if depth > 0:
-        inner = _shape_structs(depth - 1)
+        inner = _contract_structs(depth - 1)
         options.append(inner)
         options.append(
             st.tuples(inner, st.booleans()).map(
-                lambda t: SequenceShape(t[0], t[1])
+                lambda t: T.ArrayType(t[0], t[1])
             )
         )
         options.append(
             st.tuples(inner, st.booleans()).map(
-                lambda t: MapShape("string", t[0], t[1])
+                lambda t: T.MapType(T.StringType(), t[0], t[1])
             )
         )
-    shape = st.one_of(*options)
+    data_type = st.one_of(*options)
     return names.flatmap(
         lambda ns: st.tuples(
             *[
-                st.tuples(shape, st.booleans(), st.booleans()).map(
-                    lambda t, n=n: FieldShape(n, t[0], t[1], t[2])
+                st.tuples(data_type, st.booleans(), st.booleans()).map(
+                    lambda t, n=n: T.StructField(
+                        n, t[0], t[1], {HAS_DEFAULT_KEY: t[2]}
+                    )
                 )
                 for n in ns
             ]
-        ).map(StructShape)
+        ).map(lambda fs: T.StructType(list(fs)))
     )
 
 
 @settings(max_examples=80, deadline=None)
-@given(_shape_structs(), _shape_structs())
+@given(_contract_structs(), _contract_structs())
 def test_compile_and_runtime_verdicts_agree(a, b):
     """conforms(producer, expected, policy).ok must equal the runtime
     comparator's verdict over the derived StructTypes, for all eight
@@ -248,7 +248,7 @@ def test_compile_and_runtime_verdicts_agree(a, b):
             compile_ok = report.ok
             assert compile_ok == runtime(), (
                 f"{policy}: compile={compile_ok} runtime={not compile_ok}\n"
-                f"A={prod.render()}\nB={exp.render()}"
+                f"A={prod.simpleString()}\nB={exp.simpleString()}"
             )
             assert compile_ok == C.matches(sb, sa, policy), policy
             if report.ok:

@@ -10,7 +10,10 @@ the strict closed leaf set.  `typeCheckErrors` assertions become
 cannot be resolved for function-local contract classes.)
 """
 
+import dataclasses
 import enum
+import re
+import typing
 import uuid
 from dataclasses import dataclass, field
 from typing import Optional
@@ -347,10 +350,89 @@ def test_rejects_non_atomic_map_keys():
             m: dict[float, str]
 
 
+class Color(enum.Enum):
+    RED = 1
+
+
+SUPPORTED = (
+    "supported leaves are ['boolean', 'byte', 'date', 'decimal(38,18)', "
+    "'double', 'float', 'int', 'long', 'short', 'string', 'timestamp', "
+    "'timestamp_ntz'], Optional[...], list/set[...], dict[atomic, ...], and "
+    "nested contract dataclasses"
+)
+ATOMIC = (
+    "map keys must be atomic "
+    "(['boolean', 'byte', 'int', 'long', 'short', 'string'])"
+)
+
+
+@pytest.mark.parametrize(
+    "annotation, message",
+    [
+        (uuid.UUID, f"Unsupported contract leaf UUID 'UUID': {SUPPORTED}"),
+        (Color, f"Unsupported contract leaf enum 'Color': {SUPPORTED}"),
+        (tuple[int, str], f"Unsupported contract leaf tuple 'tuple': {SUPPORTED}"),
+        (bytes, f"Unsupported contract leaf type 'bytes': {SUPPORTED}"),
+        (typing.Any, f"Unsupported contract leaf type 'Any': {SUPPORTED}"),
+        (list, f"Unsupported contract leaf type 'list': {SUPPORTED}"),
+        (dict, f"Unsupported contract leaf type 'dict': {SUPPORTED}"),
+        (typing.List, f"Unsupported contract leaf type 'List': {SUPPORTED}"),
+        (list[int, str], f"Unsupported contract leaf type 'list': {SUPPORTED}"),
+        (int | str, "Unsupported union type int | str: only Optional[T] is supported"),
+        (dict[float, str], f"Unsupported map key type <class 'float'>: {ATOMIC}"),
+        (
+            dict[Optional[str], int],
+            f"Unsupported map key type typing.Optional[str]: {ATOMIC}",
+        ),
+    ],
+    ids=[
+        "uuid", "enum", "tuple", "bytes", "any", "bare_list", "bare_dict",
+        "bare_typing_list", "list_of_two", "union", "float_key",
+        "optional_key",
+    ],
+)
+def test_rejects_unsupported_annotation(annotation, message):
+    """Every refused annotation aborts declaration with its message, the
+    supported-leaf or atomic-key list spelled out."""
+    cls = dataclasses.make_dataclass("Bad", [("f", annotation)])
+    with pytest.raises(UnsupportedShapeError, match=f"^{re.escape(message)}$"):
+        contract(cls)
+
+
+@dataclass
+class Node:
+    id: int
+    children: list["Node"]
+
+
+@dataclass
+class Left:
+    right: Optional["Right"]
+
+
+@dataclass
+class Right:
+    lefts: dict[str, "Left"]
+
+
+def test_rejects_recursive_contracts():
+    """A self-referential contract has no finite StructType: declaration
+    names the cycle instead of recursing until RecursionError."""
+    with pytest.raises(
+        UnsupportedShapeError, match=re.escape("children[] refers back to Node")
+    ):
+        contract(Node)
+    with pytest.raises(
+        UnsupportedShapeError,
+        match=re.escape("right.lefts<value> refers back to Left"),
+    ):
+        contract(Left)
+
+
 # --- mode-aware nested recursion (ContractsCore.scala:314-337, 364-378) -----
 
 def test_ordered_rejects_reordered_nested_struct():
-    """ADVICE r1: compareOrdered recurses into nested StructShapes in
+    """ADVICE r1: compareOrdered recurses into nested structs in
     ordered mode — a reordered nested struct drifts under ExactOrdered."""
     @contract
     @dataclass

@@ -341,24 +341,12 @@ def test_compile_runtime_agree_on_reordered_nested_struct():
     the runtime unordered pin must give the same verdict for reordered
     nested structs (the round-1 divergence aborted pipelines mid-run)."""
     from compile_time_data_contracts_spark.contracts.conforms import conforms
-    from compile_time_data_contracts_spark.contracts.shape import (
-        FieldShape, PrimitiveShape, StructShape,
-    )
 
-    geo = StructShape((
-        FieldShape("lat", PrimitiveShape("double")),
-        FieldShape("lon", PrimitiveShape("double")),
-    ))
-    geo_rev = StructShape((
-        FieldShape("lon", PrimitiveShape("double")),
-        FieldShape("lat", PrimitiveShape("double")),
-    ))
-    a = StructShape((FieldShape("id", PrimitiveShape("long")),
-                     FieldShape("geo", geo)))
-    b = StructShape((FieldShape("id", PrimitiveShape("long")),
-                     FieldShape("geo", geo_rev)))
+    geo = _s(_f("lat", T.DoubleType()), _f("lon", T.DoubleType()))
+    geo_rev = _s(_f("lon", T.DoubleType()), _f("lat", T.DoubleType()))
+    a = _s(_f("id", T.LongType()), _f("geo", geo))
+    b = _s(_f("id", T.LongType()), _f("geo", geo_rev))
     ok_ct = conforms(a, b, SchemaPolicy.EXACT, raise_on_drift=False).ok
-    from compile_time_data_contracts_spark.contracts.schema import spark_schema
     ok_rt = C.matches(spark_schema(b), spark_schema(a), SchemaPolicy.EXACT)
     assert ok_ct and ok_rt
     # and under ExactOrdered both layers reject

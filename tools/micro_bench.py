@@ -110,42 +110,35 @@ def main() -> None:
 
     expected = spark_schema(Contract)
     renamed = rename_struct(expected, "col")
-    results = {}
-
-    # R29: runtime comparator ns/op (RuntimeSchemaBenchmark.scala:49-77)
-    results["custom_exact_unordered_match"] = run_case(
-        "custom_exact_unordered_match",
-        lambda: RuntimeSchemaComparator.unordered(expected, expected),
-        ops,
-    )
     # distinct-object match: the df.schema-vs-pin cost a real pipeline
     # boundary pays (df.schema builds fresh objects on every call)
     clone = T.StructType.fromJson(expected.jsonValue())
-    results["custom_exact_unordered_match_distinct"] = run_case(
-        "custom_exact_unordered_match_distinct",
-        lambda: RuntimeSchemaComparator.unordered(expected, clone),
-        ops,
-    )
-    results["custom_exact_unordered_mismatch"] = run_case(
-        "custom_exact_unordered_mismatch",
-        lambda: RuntimeSchemaComparator.unordered(expected, renamed),
-        ops,
-    )
-    results["custom_by_position_match"] = run_case(
-        "custom_by_position_match",
-        lambda: RuntimeSchemaComparator.by_position(expected, renamed),
-        ops,
-    )
-    results["spark_structtype_eq"] = run_case(
-        "spark_structtype_eq (built-in analogue)",
-        lambda: expected == expected,
-        ops,
-    )
+    C = RuntimeSchemaComparator
+    # R29: runtime comparator ns/op (RuntimeSchemaBenchmark.scala:49-77),
+    # each case with the verdict it is named for; StructType equality is
+    # the built-in analogue
+    cases = [
+        ("custom_exact_unordered_match",
+         lambda: C.unordered(expected, expected), True),
+        ("custom_exact_unordered_match_distinct",
+         lambda: C.unordered(expected, clone), True),
+        ("custom_exact_unordered_mismatch",
+         lambda: C.unordered(expected, renamed), False),
+        ("custom_by_position_match",
+         lambda: C.by_position(expected, renamed), True),
+        ("spark_structtype_eq", lambda: expected == expected, True),
+    ]
+    results = {}
+    for name, fn, verdict in cases:
+        # a timing of the wrong verdict measures nothing
+        if fn() is not verdict:
+            raise AssertionError(f"{name}: expected {verdict}, got {not verdict}")
+        results[name] = run_case(name, fn, ops)
 
     # R30 analogue in the reference's A/B form (run-benchmarks.sh:94-200):
     # generate N synthetic producer/contract pairs as SOURCE TEXT, then
     # time executing it WITHOUT the witness (baseline: classes declared,
-    # shapes derived — the cost of having contracts at all) vs WITH the
+    # schemas derived — the cost of having contracts at all) vs WITH the
     # witness (contract: + a conforms() proof per pair).  The delta is the
     # pure proof overhead at pipeline-construction time, the same
     # baseline/contract delta BASELINE.md tabulates for scalac.
