@@ -10,7 +10,8 @@ the contracts' derived StructTypes, the runtime pins over live
 ``df.schema``s; both read driver-side metadata only, never rows.
 
 One recursion, :func:`_drifts`, walks ``found`` against ``expected`` and
-returns :class:`Drift`s; a verdict is "no drifts".  The comparison
+yields :class:`Drift`s in report order; a verdict is "no first drift",
+so it stops at the first one and a report lists them all.  The comparison
 *mode* (unordered / ordered / backward / forward / by-position, each with
 its case sensitivity) is threaded through every nesting level, like the
 reference's ``StructMode`` passed from ``compareStruct`` into
@@ -43,6 +44,7 @@ Key semantics Spark's own comparators lack (ARTIFACT.md:29):
 from __future__ import annotations
 
 import dataclasses
+from typing import Iterator
 
 from pyspark.sql import types as T
 
@@ -123,47 +125,48 @@ def _missing(path: str, field: T.StructField, detail: str) -> Drift:
     return Drift("missing", path, detail, field.nullable, has_default)
 
 
-def _nulls(path: str, what: str, found: bool, expected: bool) -> list[Drift]:
-    if found == expected:
-        return []
-    detail = f"expected {_OPTIONAL[expected]} {what}, found {_OPTIONAL[found]}"
-    return [Drift("mismatch", path, detail)]
+def _nulls(path: str, what: str, found: bool, expected: bool) -> Iterator[Drift]:
+    if found != expected:
+        detail = f"expected {_OPTIONAL[expected]} {what}, found {_OPTIONAL[found]}"
+        yield Drift("mismatch", path, detail)
 
 
 def _drifts(
     path: str, found: T.DataType, expected: T.DataType, mode: StructMode
-) -> list[Drift]:
+) -> Iterator[Drift]:
     """Deep DataType comparer (SparkCore.scala:132-147,
     ContractsCore.scala:247-260): recurses Struct/Array/Map carrying the
     active mode, requires containsNull/valueContainsNull equality,
     ignores StructField.nullable, leaf equality otherwise.
 
     Leaves compare with ``==``, never by rendered name, so collations,
-    decimal parameters and varchar lengths all count."""
+    decimal parameters and varchar lengths all count.
+
+    A generator, in report order: a verdict stops at the first drift."""
     if isinstance(found, T.StructType) and isinstance(expected, T.StructType):
         if mode.kind in ("ordered", "by_position"):
-            return _positional(path, found, expected, mode)
-        return _by_name(path, found, expected, mode)
-    if isinstance(found, T.ArrayType) and isinstance(expected, T.ArrayType):
+            yield from _positional(path, found, expected, mode)
+        else:
+            yield from _by_name(path, found, expected, mode)
+    elif isinstance(found, T.ArrayType) and isinstance(expected, T.ArrayType):
         path += "[]"
-        drifts = _nulls(path, "element", found.containsNull, expected.containsNull)
-        return drifts + _drifts(path, found.elementType, expected.elementType, mode)
-    if isinstance(found, T.MapType) and isinstance(expected, T.MapType):
+        yield from _nulls(path, "element", found.containsNull, expected.containsNull)
+        yield from _drifts(path, found.elementType, expected.elementType, mode)
+    elif isinstance(found, T.MapType) and isinstance(expected, T.MapType):
         value = f"{path}<value>"
-        drifts = _drifts(f"{path}<key>", found.keyType, expected.keyType, mode)
-        drifts += _nulls(
+        yield from _drifts(f"{path}<key>", found.keyType, expected.keyType, mode)
+        yield from _nulls(
             value, "value", found.valueContainsNull, expected.valueContainsNull
         )
-        return drifts + _drifts(value, found.valueType, expected.valueType, mode)
-    if found == expected:
-        return []
-    detail = f"expected {_render(expected)}, found {_render(found)}"
-    return [Drift("mismatch", path, detail)]
+        yield from _drifts(value, found.valueType, expected.valueType, mode)
+    elif found != expected:
+        detail = f"expected {_render(expected)}, found {_render(found)}"
+        yield Drift("mismatch", path, detail)
 
 
 def _positional(
     path: str, found: T.StructType, expected: T.StructType, mode: StructMode
-) -> list[Drift]:
+) -> Iterator[Drift]:
     """Ordered: per-position name (in the mode's case) and type, nested
     fields at the name-joined path, the type compared whether or not the
     names matched (SparkCore.scala:86-91, ContractsCore.scala:286-340).
@@ -172,7 +175,6 @@ def _positional(
     name moved into the detail (SparkCore.scala:82-84,
     ContractsCore.scala:342-381)."""
     by_position = mode.kind == "by_position"
-    drifts: list[Drift] = []
     for i, (ff, ef) in enumerate(zip(found.fields, expected.fields)):
         if by_position:
             at = _join(path, f"@{i}")
@@ -181,30 +183,27 @@ def _positional(
             if mode.norm(ff.name) != mode.norm(ef.name):
                 # the literal "(name)" marker is the reference's grammar
                 # (ContractsCore.scala:323)
-                drifts.append(
-                    Drift(
-                        "mismatch",
-                        _join(path, f"@{i}(name)"),
-                        f"expected {ef.name}, found {ff.name}",
-                    )
+                yield Drift(
+                    "mismatch",
+                    _join(path, f"@{i}(name)"),
+                    f"expected {ef.name}, found {ff.name}",
                 )
-        drifts += _drifts(at, ff.dataType, ef.dataType, mode)
+        yield from _drifts(at, ff.dataType, ef.dataType, mode)
     n = min(len(found.fields), len(expected.fields))
     tail = _join(path, f"@{n}")
     for ef in expected.fields[n:]:
         if by_position:
-            drifts.append(_missing(tail, ef, f"{ef.name}: {_render(ef.dataType)}"))
+            yield _missing(tail, ef, f"{ef.name}: {_render(ef.dataType)}")
         else:
-            drifts.append(_missing(_join(path, ef.name), ef, _render(ef.dataType)))
+            yield _missing(_join(path, ef.name), ef, _render(ef.dataType))
     for ff in found.fields[n:]:
         at = tail if by_position else _join(path, ff.name)
-        drifts.append(Drift("extra", at, _render(ff.dataType)))
-    return drifts
+        yield Drift("extra", at, _render(ff.dataType))
 
 
 def _by_name(
     path: str, found: T.StructType, expected: T.StructType, mode: StructMode
-) -> list[Drift]:
+) -> Iterator[Drift]:
     """Unordered by-name comparer (SparkCore.scala:93-127,
     ContractsCore.scala:237-284).  Names that collide under the mode's
     normalization make the by-name index ill-defined, so each colliding
@@ -216,19 +215,17 @@ def _by_name(
     # with duplicates, the last of each group stands for it
     fnd_by = {mode.norm(f.name): f for f in found.fields}
     exp_by = {mode.norm(f.name): f for f in expected.fields}
-    drifts = [
-        Drift(
-            "mismatch",
-            _join(path, names[0]),
-            f"duplicate field names in {side}: {names}",
-        )
-        for side, schema, by_name in (
-            ("found", found, fnd_by),
-            ("expected", expected, exp_by),
-        )
-        if len(by_name) != len(schema.fields)
-        for names in duplicate_names(schema, mode.case_insensitive)
-    ]
+    for side, schema, by_name in (
+        ("found", found, fnd_by),
+        ("expected", expected, exp_by),
+    ):
+        if len(by_name) != len(schema.fields):
+            for names in duplicate_names(schema, mode.case_insensitive):
+                yield Drift(
+                    "mismatch",
+                    _join(path, names[0]),
+                    f"duplicate field names in {side}: {names}",
+                )
     if mode.kind != "forward":
         for key, ef in exp_by.items():
             if key in fnd_by:
@@ -237,28 +234,25 @@ def _by_name(
             if mode.kind == "unordered" or not (
                 missing.missing_is_optional or missing.missing_has_default
             ):
-                drifts.append(missing)
+                yield missing
     if mode.kind != "backward":
         for key, ff in fnd_by.items():
             if key not in exp_by:
-                drifts.append(
-                    Drift("extra", _join(path, ff.name), _render(ff.dataType))
-                )
+                yield Drift("extra", _join(path, ff.name), _render(ff.dataType))
     for key, ef in exp_by.items():
         ff = fnd_by.get(key)
         if ff is not None:
-            drifts += _drifts(_join(path, ef.name), ff.dataType, ef.dataType, mode)
-    return drifts
+            yield from _drifts(_join(path, ef.name), ff.dataType, ef.dataType, mode)
 
 
-def schema_drifts(
+def _policy_drifts(
     found: T.StructType, expected: T.StructType, policy: SchemaPolicy
-) -> list[Drift]:
-    """Every drift of ``found`` against ``expected`` under ``policy``
-    (policy dispatch, SparkCore.scala:150-189 and
+) -> Iterator[Drift]:
+    """The drifts of ``found`` against ``expected`` under ``policy``,
+    lazily (policy dispatch, SparkCore.scala:150-189 and
     ContractsCore.scala:224-234); Full has none."""
     if policy is SchemaPolicy.FULL:
-        return []
+        return iter(())
     if policy.by_position:
         kind = "by_position"
     elif policy.ordered:
@@ -272,6 +266,14 @@ def schema_drifts(
     return _drifts("", found, expected, StructMode(kind, policy.case_insensitive))
 
 
+def schema_drifts(
+    found: T.StructType, expected: T.StructType, policy: SchemaPolicy
+) -> list[Drift]:
+    """Every drift of ``found`` against ``expected`` under ``policy``, in
+    report order; Full has none."""
+    return list(_policy_drifts(found, expected, policy))
+
+
 def compare_data_type(
     found: T.DataType, expected: T.DataType, mode: StructMode = _ORDERED_CS
 ) -> bool:
@@ -280,7 +282,7 @@ def compare_data_type(
     Do NOT replace with ``found == expected`` — Spark's equality includes
     struct-field nullability and metadata.
     """
-    return not _drifts("", found, expected, mode)
+    return next(_drifts("", found, expected, mode), None) is None
 
 
 class RuntimeSchemaComparator:
@@ -339,4 +341,4 @@ class RuntimeSchemaComparator:
         expected: T.StructType, found: T.StructType, policy: SchemaPolicy
     ) -> bool:
         """Policy -> comparator dispatch (SparkCore.scala:150-189)."""
-        return not schema_drifts(found, expected, policy)
+        return next(_policy_drifts(found, expected, policy), None) is None

@@ -15,7 +15,7 @@ import typing
 
 from pyspark.sql import types as T
 
-from ..contracts.conforms import drift_report
+from ..contracts.conforms import DriftReport, drift_report
 from ..contracts.policies import SchemaPolicy
 from ..contracts.schema import spark_schema
 from .comparator import RuntimeSchemaComparator, duplicate_names
@@ -37,6 +37,7 @@ class SchemaMismatchError(Exception):
         policy: SchemaPolicy,
         expected: T.StructType,
         found: T.StructType,
+        report: DriftReport,
     ):
         self.context = context
         self.policy = policy
@@ -52,7 +53,7 @@ class SchemaMismatchError(Exception):
         super().__init__(
             f"Schema mismatch at {context} under policy {policy.value}:"
             f"{dup_note}\n"
-            f"{drift_report(found, expected, policy).render()}\n"
+            f"{report.render()}\n"
             f"Found schema:\n{found.treeString()}"
             f"Expected schema:\n{expected.treeString()}"
         )
@@ -67,7 +68,11 @@ def assert_matches_contract(
     """Assert the live schema matches the contract under ``policy``; raise
     SchemaMismatchError otherwise.  The default pin is the unordered-CI
     comparator regardless of sink policy, matching the reference's
-    post-transform pin (SparkCore.scala:404-415, README.md:58-59)."""
+    post-transform pin (SparkCore.scala:404-415, README.md:58-59).
+
+    The verdict stops at the first drift; only a failing pin builds the
+    drift report, once, for its message."""
     expected = spark_schema(contract)
     if not RuntimeSchemaComparator.matches(expected, found, policy):
-        raise SchemaMismatchError(context, policy, expected, found)
+        report = drift_report(found, expected, policy)
+        raise SchemaMismatchError(context, policy, expected, found, report)

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 import pytest
 
@@ -37,25 +36,30 @@ def sf_dir() -> str:
 
 @pytest.fixture
 def marker_job(spark):
-    """``marker_job(tag)`` runs a one-task job in its own group and
-    returns its id once the status store has recorded it, and so every
-    earlier job.  Job ids are global and sequential, so the difference
-    of two markers' ids, less one, counts the jobs between them."""
+    """``marker_job()`` is the benchmark's own job counter,
+    ``perfbench/probes.py:JobCounter.marker``: it runs a one-task job in
+    its own group and returns its id once the status store has recorded
+    it, and so every earlier job.  Job ids are global and sequential, so
+    the difference of two markers' ids, less one, counts the jobs
+    between them."""
+    return _probes().JobCounter(spark).marker
 
-    def run(tag: str) -> int:
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        sc.parallelize([1], 1).count()
-        sc._jsc.clearJobGroup()
-        deadline = time.monotonic() + 10.0
-        while time.monotonic() < deadline:
-            ids = sc.statusTracker().getJobIdsForGroup(tag)
-            if ids and sc.statusTracker().getJobInfo(ids[0]).status == "SUCCEEDED":
-                return ids[0]
-            time.sleep(0.002)
-        raise RuntimeError(f"marker job {tag} never finished")
 
-    return run
+def _probes():
+    """``perfbench/probes.py``, loaded once without importing the rest of
+    the benchmark."""
+    import importlib.util
+
+    name = "perfbench_probes"
+    if name not in sys.modules:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        spec = importlib.util.spec_from_file_location(
+            name, os.path.join(root, "perfbench", "probes.py")
+        )
+        module = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(module)
+        sys.modules[name] = module
+    return sys.modules[name]
 
 
 @pytest.fixture

@@ -32,6 +32,9 @@ def test_micro_bench_runs_and_reports():
         "custom_exact_unordered_mismatch",
         "custom_by_position_match",
         "spark_structtype_eq",
+        "spark_structtype_eq_distinct",
+        "ratio_unordered_vs_eq",
+        "ratio_by_position_vs_eq",
     ):
         assert results[case] > 0, case
     for n_pairs in (10, 25, 50):

@@ -1278,9 +1278,9 @@ def test_q101_job_count(spark, sf_dir, marker_job):
 
     q101 = queries()["q101_components_deep_chain"]
     q101(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    first = marker_job("t_q101_jobs_first")
+    first = marker_job()
     q101(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    assert marker_job("t_q101_jobs_last") - first - 1 == 4
+    assert marker_job() - first - 1 == 4
 
 
 def test_connected_components_star_self_loops_and_singletons(

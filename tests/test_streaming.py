@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 import shutil
 from typing import Optional
 
@@ -617,18 +618,50 @@ def _process_starts(spark, tmp_path, run) -> list[str]:
 
 
 def test_q44_gate_process_budget(spark, tmp_path):
-    """q44's gate owns its checkpoint, so no offset, commit or state
+    """q44's stream, run through ``run_gate`` on a checkpoint in a
+    ``scratch_dir``, owns that checkpoint, so no offset, commit or state
     file goes through FileContext, which starts a ``readlink`` for each
     rename and existence check (64 for this gate) on a Hadoop client
-    without its native library.  What is left is one ``chmod`` per file
-    or directory created (25) and at most one ``rm`` of the temporary
-    checkpoint.  The count is deterministic for this plan."""
-    run_stream_to_memory(spark, SF_DIR)  # warm: first-use processes
-    commands = _process_starts(
-        spark, tmp_path, lambda: run_stream_to_memory(spark, SF_DIR)
+    without its native library.  What is left is Hadoop's local
+    ``setPermission``: exactly one ``chmod`` for every file or directory
+    the gate created there, ``.crc`` sidecars included, where an atomic
+    write chmods its temporary file (``.<name>.<uuid>.tmp``, and
+    ``..<name>.<uuid>.tmp.crc`` for the sidecar) before renaming it."""
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
     )
+    from compile_time_data_contracts_spark.streaming.windows import run_gate
+
+    base = scratch_dir("t-q44-budget-")
+
+    def gate():
+        stream = tumbling_counts(events_stream(spark, SF_DIR, glob="events.parquet"))
+        spark.catalog.dropTempView("t_q44_budget")
+        writer = (
+            stream.writeStream.format("memory")
+            .queryName("t_q44_budget")
+            .outputMode("complete")
+        )
+        run_gate(stream, writer, f"{base}/ckpt")
+
+    run_stream_to_memory(spark, SF_DIR)  # warm: first-use processes
+    commands = _process_starts(spark, tmp_path, gate)
     assert [c for c in commands if "readlink" in c] == []
-    assert len(commands) <= 26, commands
+    renamed = re.compile(r"(.*/)\.\.?(.+)\.[0-9a-f-]{36}\.tmp(\.crc)?")
+    chmodded = []
+    # processes outside the checkpoint (an earlier test's session
+    # cleanup runs `rm -rf` asynchronously) are not the gate's
+    for c in (c for c in commands if base in c):
+        assert c.startswith("chmod "), commands
+        path = c.split(" ", 2)[2]
+        m = renamed.fullmatch(path)
+        if m is not None:
+            path = m[1] + (f".{m[2]}.crc" if m[3] else m[2])
+        chmodded.append(path)
+    created = [
+        os.path.join(d, n) for d, dirs, files in os.walk(base) for n in dirs + files
+    ]
+    assert sorted(chmodded) == sorted(created)
 
 
 def test_owned_checkpoint_restart_commits_nothing(spark):
@@ -672,16 +705,16 @@ def test_q44_gate_job_count(spark, marker_job):
     bracket also counts the streaming query's own thread."""
     from compile_time_data_contracts_spark import catalog
 
-    def jobs(tag):
-        first = marker_job(f"t_q44_jobs_{tag}_first")
+    def jobs():
+        first = marker_job()
         result = run_stream_to_memory(spark, SF_DIR)
         result.write.format("noop").mode("overwrite").save()
-        return marker_job(f"t_q44_jobs_{tag}_last") - first - 1
+        return marker_job() - first - 1
 
     run_stream_to_memory(spark, SF_DIR)  # warm: the footer probe caches
-    assert jobs("warm") == 2
+    assert jobs() == 2
     catalog._EVENTS_LAYOUT_CACHE.clear()
-    assert jobs("cold") == 2
+    assert jobs() == 2
 
 
 def test_events_layout_probe_reads_the_footer(spark, tmp_path):

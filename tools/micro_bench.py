@@ -127,6 +127,10 @@ def main() -> None:
         ("custom_by_position_match",
          lambda: C.by_position(expected, renamed), True),
         ("spark_structtype_eq", lambda: expected == expected, True),
+        # what a pin would pay for Spark's own equality: df.schema is a
+        # fresh object, so `==` walks every field instead of returning
+        # on identity
+        ("spark_structtype_eq_distinct", lambda: expected == clone, True),
     ]
     results = {}
     for name, fn, verdict in cases:
@@ -134,6 +138,17 @@ def main() -> None:
         if fn() is not verdict:
             raise AssertionError(f"{name}: expected {verdict}, got {not verdict}")
         results[name] = run_case(name, fn, ops)
+    # BASELINE.md's custom/Spark ratios, against `==` on a distinct clone
+    eq = results["spark_structtype_eq_distinct"]
+    for label, case, reference in (
+        ("unordered", "custom_exact_unordered_match_distinct", "~17-25x"),
+        ("by_position", "custom_by_position_match", "~0.4-0.5x"),
+    ):
+        results[f"ratio_{label}_vs_eq"] = results[case] / eq
+        print(
+            f"{'custom/== ratio (' + label + ')':45s} "
+            f"{results[case] / eq:12.2f} x    (reference {reference})"
+        )
 
     # R30 analogue in the reference's A/B form (run-benchmarks.sh:94-200):
     # generate N synthetic producer/contract pairs as SOURCE TEXT, then
@@ -144,6 +159,10 @@ def main() -> None:
     # baseline/contract delta BASELINE.md tabulates for scalac.
     import gc
 
+    # 3 warm-up and 9 timed execs of each mode at the default op count,
+    # scaled down with it (at least one timed exec) for smoke runs
+    warmups = min(3, 3 * ops // 20000)
+    repeats = max(1, min(9, 9 * ops // 20000))
     for n_pairs in (10, 25, 50):
         codes = {
             mode: compile(
@@ -153,14 +172,14 @@ def main() -> None:
         }
         runs = {"baseline": [], "contract": []}
         for mode, code in codes.items():  # warmup both before timing either
-            for _ in range(3):
+            for _ in range(warmups):
                 exec(code, _bench_globals())
         gc.collect()
         gc.disable()  # GC pauses from class-object churn swamp the delta
         try:
             # interleave modes so allocator/heap drift cancels instead of
             # biasing whichever mode runs second
-            for _ in range(9):
+            for _ in range(repeats):
                 for mode, code in codes.items():
                     t0 = time.perf_counter()
                     exec(code, _bench_globals())
