@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .similarity import _ivf_fingerprint
+
 __all__ = [
     "normalize_text",
     "exact_dedup",
@@ -595,19 +597,6 @@ def minhash_near_dup_pairs(
     )
 
 
-def _minhash_index_fingerprint(df: DataFrame, id_col: str) -> tuple[int, str]:
-    """Cheap content fingerprint of the corpus: (row count, max id as
-    string) — same scheme as the IVF index
-    (:func:`..similarity._ivf_fingerprint`): count comes from parquet
-    footers, the max is one column-pruned partial-agg scan, and it
-    catches a regenerated corpus that a path-exists check would miss."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.max(F.col(id_col).cast("string")).alias("mx"),
-    ).first()
-    return int(row["n"]), (row["mx"] if row["mx"] is not None else "")
-
-
 def minhash_index_build(
     df: DataFrame,
     index_path: str,
@@ -648,7 +637,7 @@ def minhash_index_build(
     fp = (
         fingerprint
         if fingerprint is not None
-        else _minhash_index_fingerprint(df, id_col)
+        else _ivf_fingerprint(df, id_col)
     )
     from ..sources.layout import write_tiny_parquet
 
@@ -678,7 +667,7 @@ def minhash_index_reuse_or_build(
     from pyspark.errors import AnalysisException
 
     spark = df.sparkSession
-    fp = _minhash_index_fingerprint(df, id_col)
+    fp = _ivf_fingerprint(df, id_col)
     try:
         m = spark.read.parquet(f"{index_path}/meta").first()
         stale = m is None or (

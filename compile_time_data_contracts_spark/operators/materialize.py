@@ -1,12 +1,39 @@
-"""Per-call materialization helpers: reliable checkpoints and
-observe()-fused convergence signatures.
+"""The engine's one home for where data lands outside a caller's
+paths: per-call scratch directories, build-once reuse caches, and
+reliable checkpoints with observe()-fused convergence signatures.
 
-One shared home for the ensure-dir + ``checkpoint(eager=True)`` pattern
-that ~20 call sites used to inline (the round-10 self-review's deferred
-refactor), plus the round-11 job-count optimization: iterative operators
-that need a convergence signature of the frame they just materialized
-used to pay a SEPARATE aggregation job per round (checkpoint action,
-then a count/xor-hash action re-reading the checkpoint).
+Paths and reuse.  This module is the only one that asks the OS for a
+temp location (``gettempdir``/``mkdtemp``) or decides whether a cache
+may be reused:
+
+* :func:`scratch_dir` — a fresh directory per call, removed at process
+  exit: every per-call output (a round-trip sink, a replay feed, a
+  gate's checkpoint) goes here, so concurrent runs never share a path.
+* :func:`reuse_dir` — the deterministic ``ctdc-<kind>-<md5(key)[:12]>``
+  name of a cache that outlives the process, for the library operators
+  that take a caller path (below).
+* :func:`reuse` — build once, search many: the cache at
+  ``reuse_dir(kind, key)`` is reused while its ``meta.json`` matches the
+  caller's ``want`` fields (a content fingerprint plus any version
+  token), else rebuilt in a unique staging sibling and published by
+  rename, so no reader ever sees a half-built cache.
+
+What stays in place, on purpose: the library operators whose path the
+caller supplies — ``ivf_build_or_reuse``, ``ivf_pq_build_or_reuse``
+and ``minhash_index_reuse_or_build`` — keep their parquet meta and
+build in place, because a caller path may be remote storage that a
+local rename cannot publish to (queries hand them a :func:`reuse_dir`
+path).  Mutation after publish also stays with its owner: ``ivf_drift``
+records its ``drift_baseline`` into an existing index, and q136 merges
+into its published snapshot and re-checks the row count it recorded.
+
+Checkpoints.  :func:`pin` is the ensure-dir +
+``checkpoint(eager=True)`` pattern that ~20 call sites used to inline
+(the round-10 self-review's deferred refactor), plus the round-11
+job-count optimization: iterative operators that need a convergence
+signature of the frame they just materialized used to pay a SEPARATE
+aggregation job per round (checkpoint action, then a count/xor-hash
+action re-reading the checkpoint).
 :func:`pin_with_signature` collects the (count, order-independent
 xor-hash) signature from the SAME job via ``DataFrame.observe`` —
 metrics accumulate on the driver while the checkpoint job computes each
@@ -35,6 +62,8 @@ __all__ = [
     "pin",
     "pin_if_input_large",
     "pin_with_signature",
+    "reuse",
+    "reuse_dir",
     "scan_input_bytes",
     "scratch_dir",
     "under_scratch_dir",
@@ -58,6 +87,88 @@ def scratch_dir(prefix: str) -> str:
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     _SCRATCH_DIRS.add(path)
     return path
+
+
+def reuse_dir(kind: str, key: str) -> str:
+    """The fixed temp path of the ``kind`` cache for ``key``:
+    ``<gettempdir()>/ctdc-<kind>-<md5(key)[:12]>``.  Every process that
+    asks with the same pair gets the same path, which is what lets a
+    cache outlive the call that built it."""
+    import hashlib
+    import os
+    import tempfile
+
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"ctdc-{kind}-{tag}")
+
+
+def _read_meta(root: str) -> dict | None:
+    import json
+    import os
+
+    try:
+        with open(os.path.join(root, "meta.json")) as fh:
+            meta = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return meta if isinstance(meta, dict) else None
+
+
+def _matches(meta: dict | None, want: dict) -> bool:
+    return meta is not None and all(meta.get(k) == v for k, v in want.items())
+
+
+def reuse(kind: str, key: str, want: dict, build) -> tuple[str, dict, bool]:
+    """Build once, search many: return ``(root, meta, built)`` for the
+    cache at :func:`reuse_dir` ``(kind, key)``.
+
+    The cache is reused when every ``want`` field (JSON values: a
+    content fingerprint, a version token) equals the one recorded in
+    ``root/meta.json``.  Otherwise ``build(staging)`` fills a unique
+    sibling ``<root>.build-<pid>-<token>``; ``meta.json`` — the ``want``
+    fields plus any dict ``build`` returns — is written last, and the
+    staging directory is published by rename, replacing a stale root.
+    If another process published a matching root first, the staging
+    copy is discarded and that root is used (``built`` is False).  If
+    ``build`` raises, the staging directory is removed and the
+    exception propagates; the root is left as it was."""
+    import json
+    import os
+    import secrets
+    import shutil
+
+    want = json.loads(json.dumps(want))  # tuples compare as JSON lists
+    root = reuse_dir(kind, key)
+    meta = _read_meta(root)
+    if _matches(meta, want):
+        return root, meta, False
+    staging = f"{root}.build-{os.getpid()}-{secrets.token_hex(4)}"
+    os.makedirs(staging)
+    try:
+        meta = {**want, **(build(staging) or {})}
+        with open(os.path.join(staging, "meta.json"), "w") as fh:
+            json.dump(meta, fh)
+        while True:
+            try:
+                os.rename(staging, root)
+                return root, meta, True
+            except OSError:
+                have = _read_meta(root)
+                if _matches(have, want):
+                    shutil.rmtree(staging, ignore_errors=True)
+                    return root, have, False
+                if not os.path.isdir(root):
+                    raise
+            # a stale root is in the way: move it aside, then retry
+            old = f"{root}.stale-{os.getpid()}-{secrets.token_hex(4)}"
+            try:
+                os.rename(root, old)
+            except FileNotFoundError:
+                continue
+            shutil.rmtree(old, ignore_errors=True)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
 
 
 def under_scratch_dir(path: str) -> bool:

@@ -703,8 +703,9 @@ def _assign_with_centroids(
 
 
 def _ivf_fingerprint(df: DataFrame, id_col: str) -> tuple[int, str]:
-    """Cheap content fingerprint of the vector table: (row count, max id
-    rendered as string).  Count comes from parquet footers; the max is a
+    """Cheap content fingerprint of an indexed table — the IVF, IVF-PQ
+    and MinHash indexes' reuse check: (row count, max id rendered as
+    string).  Count comes from parquet footers; the max is a
     single column-pruned partial-agg scan — negligible next to a k-means
     fit, and it catches a regenerated source table that a bare
     path-exists check would silently miss."""
@@ -1968,9 +1969,9 @@ def ivf_build_or_reuse(
     """
     spark = df.sparkSession
     if index_path is None:
-        import tempfile
+        from .materialize import scratch_dir
 
-        index_path = tempfile.mkdtemp(prefix="ctdc-ivf-")
+        index_path = scratch_dir("ctdc-ivf-")
     fp = _ivf_fingerprint(df, id_col)
     try:
         m, stored_cols, stored_k, legacy = _ivf_meta(spark, index_path)
@@ -2646,9 +2647,9 @@ def ivf_pq_build_or_reuse(
 
     spark = df.sparkSession
     if index_path is None:
-        import tempfile
+        from .materialize import scratch_dir
 
-        index_path = tempfile.mkdtemp(prefix="ctdc-ivfpq-")
+        index_path = scratch_dir("ctdc-ivfpq-")
     fp = _ivf_fingerprint(df, id_col)
 
     def _ivf_stale() -> bool:

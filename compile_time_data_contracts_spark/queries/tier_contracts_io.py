@@ -233,8 +233,6 @@ def q115(spark: SparkSession, sf: str) -> DataFrame:
          so the evolution dance provably loses no rows/values.
     """
     import dataclasses
-    import hashlib
-    import tempfile
 
     from ..contracts.schema import spark_schema
     from ..contracts.shape import contract
@@ -270,8 +268,7 @@ def q115(spark: SparkSession, sf: str) -> DataFrame:
         F.substring("o_orderpriority", 1, 1).alias("segment"),
         F.lit(1).cast("long").alias("extra_flag"),
     )
-    tag = hashlib.md5(f"{sf}|q115".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/ctdc-q115-{tag}"
+    path = scratch_dir("ctdc-q115-")
     # Backward: priority_note (defaulted) absent from the produced frame
     write_df(produced, Sink(OrderEvolved, path), SchemaPolicy.BACKWARD)
     back = spark.read.parquet(path)
@@ -304,12 +301,8 @@ def q120(spark: SparkSession, sf: str) -> DataFrame:
     loses no lines or characters against the parquet original.  Text
     scans split by line across tasks, so ingestion parallelism is
     file-size-, not file-count-, bound."""
-    import hashlib
-    import tempfile
-
     docs = load_table(spark, sf, "documents")
-    tag = hashlib.md5(f"{sf}|q120".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/ctdc-q120-{tag}"
+    path = scratch_dir("ctdc-q120-")
     docs.select("text").write.mode("overwrite").text(path)
     lines = spark.read.text(path)
     return lines.agg(
@@ -365,12 +358,8 @@ def q127(spark: SparkSession, sf: str) -> DataFrame:
     explicit schema — entity escaping in the writer must round-trip
     text content losslessly, proven by character-count conservation
     against the parquet original."""
-    import hashlib
-    import tempfile
-
     docs = load_table(spark, sf, "documents")
-    tag = hashlib.md5(f"{sf}|q127".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/ctdc-q127-{tag}"
+    path = scratch_dir("ctdc-q127-")
     docs.select("doc_id", "text", "n_chars").write.mode("overwrite").format(
         "xml"
     ).option("rootTag", "docs").option("rowTag", "doc").save(path)
@@ -585,26 +574,26 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     overwrite; untouched buckets stay byte-identical, asserted by test)
     — and the post-merge snapshot must aggregate identically to q133's
     full-outer rewrite, which is exactly what the oracle recomputes.
-    The snapshot persists behind a content fingerprint (the feed/index
-    convention): the MERGE here is IDEMPOTENT — updates derive from the
+    The snapshot persists behind a content fingerprint
+    (``materialize.reuse``, the feed/index convention): the MERGE here
+    is IDEMPOTENT — updates derive from the
     immutable customer table and apply replace-by-key, so the
     post-merge snapshot is a fixed point and re-merging on a reused
     snapshot reproduces the identical state.  The merge itself
     (bucket-pruned read + 2-of-64 directory rewrite) still executes on
     every call — reuse removes only the redundant fresh 64-bucket
-    snapshot build; a changed source rebuilds.  meta.json is written
-    only AFTER the first merge completes and records the post-merge row
-    count; the reuse path re-verifies that count against the on-disk
-    snapshot (parquet footers — cheap), so a crash mid-merge (dynamic
-    partition overwrite is atomic per directory, not across the 2
-    rewritten buckets) leaves either no meta or a count mismatch, and
-    the next call rebuilds instead of silently merging onto a
-    partially merged baseline."""
-    import hashlib
-    import json
+    snapshot build; a changed source rebuilds.  The build merges once
+    before it publishes and records the post-merge row count; the
+    reuse path merges IN PLACE into the published snapshot, so it first
+    re-verifies that count against the on-disk snapshot (parquet
+    footers — cheap): a crash mid-merge (dynamic partition overwrite is
+    atomic per directory, not across the 2 rewritten buckets) leaves a
+    count mismatch, and the call rebuilds instead of silently merging
+    onto a partially merged baseline."""
     import os
-    import tempfile
+    import shutil
 
+    from ..operators.materialize import reuse
     from ..operators.merge import merge_upsert, snapshot_read, snapshot_write
 
     cust = load_table(spark, sf, "customer").select(
@@ -639,45 +628,37 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
         "n": int(fp_row["n"]), "bal": str(fp_row["bal"]),
         "mx": int(fp_row["mx"]), "version": 2,
     }
-    tag = hashlib.md5(f"{sf}|merge64".encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"ctdc-merge-{tag}")
-    path = os.path.join(root, "snap")
-    meta_path = os.path.join(root, "meta.json")
-    try:
-        with open(meta_path) as fh:
-            have = json.load(fh)
-    except (OSError, ValueError):
-        have = None
-    def _snapshot_count_matches() -> bool:
+
+    def build(stage: str) -> dict:
+        path = os.path.join(stage, "snap")
+        snapshot_write(cust, path, "c_custkey", num_buckets=64)
+        merge_upsert(spark, path, updates)
+        return {"merged_n": snapshot_read(spark, path).count()}
+
+    def snapshot_count_matches(path: str, merged_n: int) -> bool:
         # on-disk integrity: a crash between the two bucket rewrites of
-        # a previous merge leaves a fingerprint-valid but partially
-        # merged snapshot — the post-merge row count catches it.  A
-        # missing/corrupt snapshot under a surviving meta.json (e.g. a
-        # /tmp reaper deleted the older data files but kept the newer
-        # meta) must read as NOT REUSABLE, not crash the gate
+        # a previous in-place merge leaves a fingerprint-valid but
+        # partially merged snapshot — the post-merge row count catches
+        # it.  A missing/corrupt snapshot under a surviving meta.json
+        # (e.g. a /tmp reaper deleted the older data files but kept the
+        # newer meta) must read as NOT REUSABLE, not crash the gate
         from pyspark.errors import AnalysisException
 
         try:
-            return snapshot_read(spark, path).count() == have.get(
-                "merged_n"
-            )
+            return snapshot_read(spark, path).count() == merged_n
         except AnalysisException:
             return False
 
-    reuse = (
-        have is not None
-        and {k: have.get(k) for k in want} == want
-        and _snapshot_count_matches()
-    )
-    if not reuse:
-        os.makedirs(root, exist_ok=True)
-        snapshot_write(cust, path, "c_custkey", num_buckets=64)
-    merge_upsert(spark, path, updates)
+    key = f"{sf}|merge64"
+    root, meta, built = reuse("merge", key, want, build)
+    path = os.path.join(root, "snap")
+    if not built and not snapshot_count_matches(path, meta["merged_n"]):
+        shutil.rmtree(root, ignore_errors=True)
+        root, meta, built = reuse("merge", key, want, build)
+        path = os.path.join(root, "snap")
+    if not built:
+        merge_upsert(spark, path, updates)
     merged = snapshot_read(spark, path)
-    if not reuse:
-        # meta written LAST — only a fully merged snapshot is reusable
-        with open(meta_path, "w") as fh:
-            json.dump({**want, "merged_n": merged.count()}, fh)
     return merged.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum(F.when(F.col("c_mktsegment") == "NEW", 1).otherwise(0))
@@ -752,12 +733,11 @@ def q144(spark: SparkSession, sf: str) -> DataFrame:
     pins the file-count contract: a single file afterwards, fewer than
     before."""
     import glob
-    import tempfile
 
     from ..sources.layout import compact_parquet
 
     cust = load_table(spark, sf, "customer")
-    p = tempfile.mkdtemp(prefix="ctdc-compact-") + "/t"
+    p = scratch_dir("ctdc-compact-") + "/t"
     cust.repartition(40).write.parquet(p)
     n_before = len(glob.glob(p + "/*.parquet"))
     stats = compact_parquet(spark, p, target_file_bytes=1 << 30)
@@ -1204,9 +1184,6 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
     inside a query, lifted across queries via the state table).  The
     oracle recomputes the rollup from ALL events in one pass — merge
     ≡ recompute is exactly the algebraic-correctness claim."""
-    import hashlib
-    import tempfile
-
     from ..operators.incremental import (
         aggregate_state,
         merge_aggregate_states,
@@ -1227,8 +1204,7 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
     )
     base = keyed.filter(F.col("event_id") % 4 != 3)
     batch = keyed.filter(F.col("event_id") % 4 == 3)
-    tag = hashlib.md5(f"{sf}|rollup-v1".encode()).hexdigest()[:12]
-    state_path = f"{tempfile.gettempdir()}/ctdc-rollup-state-{tag}"
+    state_path = scratch_dir("ctdc-rollup-state-")
     aggregate_state(base, keys, **spec).write.mode("overwrite").parquet(
         state_path
     )
@@ -1331,9 +1307,6 @@ def q214(spark: SparkSession, sf: str) -> DataFrame:
     columns and the contract flag — q130 proves sketch mergeability
     inside one query, this proves it across PERSISTED state
     refreshes."""
-    import hashlib
-    import tempfile
-
     from ..operators.incremental import (
         aggregate_state,
         finalize_state,
@@ -1345,8 +1318,7 @@ def q214(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
     base = ev.filter(F.col("event_id") % 4 != 3)
     batch = ev.filter(F.col("event_id") % 4 == 3)
-    tag = hashlib.md5(f"{sf}|hllrollup-v1".encode()).hexdigest()[:12]
-    state_path = f"{tempfile.gettempdir()}/ctdc-hll-state-{tag}"
+    state_path = scratch_dir("ctdc-hll-state-")
     aggregate_state(base, keys, **spec).write.mode(
         "overwrite"
     ).parquet(state_path)

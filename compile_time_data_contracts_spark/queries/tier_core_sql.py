@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ._shared import _ORACLES, _QUERIES, _ts_str, q  # noqa: F401
+from ..operators.materialize import reuse, scratch_dir
 from ..operators.stats import gini_best_split, mann_whitney_u
 from ..operators.timeseries import clamped_running_balance, peak_concurrency
 
@@ -851,31 +852,19 @@ def q81(spark: SparkSession, sf: str) -> DataFrame:
     hash-bucketed on custkey (shuffle paid once at write), the join reads
     co-located buckets (zero Exchange on either side when the sort-merge
     path is chosen — asserted in tools/plan_audit.py with broadcast off).
-    Tables live in an explicit /tmp-located database so the gate never
-    writes into the caller's cwd warehouse."""
-    import hashlib
-    import tempfile
-
+    Tables live in a database located in a scratch directory, so the
+    gate never writes into the caller's cwd warehouse and no other run
+    shares its table directories."""
     from ..sources.bucketing import bucketed_join_ready, write_bucketed
 
-    tag = hashlib.md5(sf.encode()).hexdigest()[:10]
     db = "ctdc_bucket"
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} "
-        f"LOCATION '{tempfile.gettempdir()}/ctdc-bucket-warehouse'"
-    )
-    cust_t = f"{db}.customer_{tag}"
-    ord_t = f"{db}.orders_{tag}"
-    # the session catalog is in-memory: a table dir left by a previous
-    # session is an orphan the catalog won't overwrite — drop both ways
-    import shutil
-
-    for t, leaf in ((cust_t, f"customer_{tag}"), (ord_t, f"orders_{tag}")):
+    if not spark.catalog.databaseExists(db):
+        warehouse = scratch_dir("ctdc-bucket-warehouse-")
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{warehouse}'")
+    cust_t = f"{db}.customer"
+    ord_t = f"{db}.orders"
+    for t in (cust_t, ord_t):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(
-            f"{tempfile.gettempdir()}/ctdc-bucket-warehouse/{leaf}",
-            ignore_errors=True,
-        )
     cust = load_table(spark, sf, "customer").withColumnRenamed(
         "c_custkey", "custkey"
     )
@@ -1114,9 +1103,7 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     directories are read.  At 100 TB this is the difference between
     scanning 2 partitions and scanning all of them."""
     import dataclasses
-    import hashlib
     import os
-    import tempfile
 
     from ..contracts.shape import contract
     from ..sources.io import Sink, write_df
@@ -1132,32 +1119,29 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tag = hashlib.md5(f"{sf}|dpp".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/ctdc-dpp-{tag}"
-    # reuse the partitioned copy only when its content fingerprint (row
-    # count + max event_id — footer metadata + one pruned-column agg)
-    # still matches the source: a regenerated sf dir must trigger a
-    # rewrite, not silently serve the stale layout
+    # reuse the partitioned copy only while the source's content
+    # fingerprint (row count + max event_id — footer metadata + one
+    # pruned-column agg) still matches: a regenerated sf dir must
+    # trigger a rewrite, not silently serve the stale layout
     src_fp = ev.agg(
         F.count("*").alias("n"), F.max("event_id").alias("mx")
     ).first()
-    stale = True
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        try:
-            cp = (
-                spark.read.parquet(path)
-                .agg(F.count("*").alias("n"), F.max("event_id").alias("mx"))
-                .first()
-            )
-            stale = (cp["n"], cp["mx"]) != (src_fp["n"], src_fp["mx"])
-        except Exception:
-            stale = True
-    if stale:
+
+    def build(stage: str) -> None:
         write_df(
             ev,
-            Sink(EventsSlim, path, partition_by=("event_type",)),
+            Sink(
+                EventsSlim,
+                os.path.join(stage, "events"),
+                partition_by=("event_type",),
+            ),
             SchemaPolicy.EXACT,
         )
+
+    root, _, _ = reuse(
+        "dpp", f"{sf}|dpp", {"n": src_fp["n"], "mx": src_fp["mx"]}, build
+    )
+    path = os.path.join(root, "events")
     part = spark.read.parquet(path)
     dim = spark.createDataFrame(
         [("click", 1.5), ("purchase", 2.0), ("view", 0.5)],

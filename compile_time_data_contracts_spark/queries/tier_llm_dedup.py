@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ._shared import _ORACLES, _QUERIES, _ts_str, q  # noqa: F401
+from ..operators.materialize import reuse_dir, scratch_dir
 
 
 # =========================================================================
@@ -386,14 +387,10 @@ def q135(spark: SparkSession, sf: str) -> DataFrame:
     Mirrors daily-crawl ingest at 100 TB: per-batch cost is one
     broadcast-join scan of the ids+longs band table, never a corpus
     re-shingle or corpus shuffle."""
-    import hashlib
-    import tempfile
-
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    tag = hashlib.md5(f"{sf}|nd-even".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ndidx-{tag}"
+    idx = reuse_dir("ndidx", f"{sf}|nd-even")
     minhash_index_reuse_or_build(corpus, idx)
     pairs = near_dup_against(spark, idx, batch, threshold=0.5)
     return pairs.select(
@@ -964,9 +961,6 @@ def q204(spark: SparkSession, sf: str) -> DataFrame:
     by design; the oracle computes the hot set from the corpus
     partition only).  Per-source batch rollup pins the reassembly, as
     q203 does for the one-shot operator."""
-    import hashlib
-    import tempfile
-
     from ..operators.text import (
         boilerplate_index_build,
         remove_boilerplate_against,
@@ -982,8 +976,7 @@ def q204(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = lined.filter(F.col("doc_id") % 5 != 0)
     batch = lined.filter(F.col("doc_id") % 5 == 0)
-    tag = hashlib.md5(f"{sf}|bp-df3".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpidx-{tag}"
+    idx = scratch_dir("ctdc-bpidx-")
     boilerplate_index_build(
         corpus, idx, "doc_id", "text", max_doc_freq=3
     )

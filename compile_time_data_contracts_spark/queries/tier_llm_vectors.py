@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ._shared import _ORACLES, _QUERIES, _ts_str, q  # noqa: F401
+from ..operators.materialize import reuse, reuse_dir, scratch_dir
 
 
 def _pin_topk(df):
@@ -20,6 +21,15 @@ def _pin_topk(df):
     from ..operators.materialize import pin
 
     return pin(df)
+
+
+def _index_want(df) -> dict:
+    """The ``reuse`` want of a gate index built from ``df``: its
+    content fingerprint (row count, max vec_id)."""
+    from ..operators.similarity import _ivf_fingerprint
+
+    n, max_id = _ivf_fingerprint(df, "vec_id")
+    return {"n": n, "max_id": max_id}
 
 
 # embeddings are float32 on disk; both engines must do the cosine in
@@ -79,15 +89,11 @@ def q67(spark: SparkSession, sf: str) -> DataFrame:
     nprobe nearest cells scanned via a partition-pruned scan of the
     persisted cluster-partitioned index (built once per sf dir and
     reused).  q50 (brute force) is the exact audit."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_topk
 
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
-    tag = hashlib.md5(f"{sf}|c32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ivf-{tag}"
+    idx = reuse_dir("ivf", f"{sf}|c32")
     top = ivf_topk(
         emb, query, k=10, n_clusters=32, nprobe=8, index_path=idx
     )
@@ -316,16 +322,12 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
     brute force) annotated with whether the partition-pruned IVF search
     recovered >= 7 of them — the rows-only q67 path's oracle-checked
     companion."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_topk, topk_cosine
 
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(emb, query, k=10))
-    tag = hashlib.md5(f"{sf}|c32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ivf-{tag}"
+    idx = reuse_dir("ivf", f"{sf}|c32")
     approx = ivf_topk(
         emb, query, k=10, n_clusters=32, nprobe=8, index_path=idx
     ).select("vec_id")
@@ -467,16 +469,11 @@ def q143(spark: SparkSession, sf: str) -> DataFrame:
     stationary distribution.
 
     Build-once-search-many, the q67/q107/q376 convention: the appended
-    index persists at a deterministic path and is REUSED while the full
-    corpus fingerprint still matches (after the append the stored meta
-    covers build half + appended half, i.e. the full table), so repeat
-    calls measure steady-state search; `ivf_append`'s byte-identical
+    index persists through ``materialize.reuse`` and is REUSED while
+    the full corpus fingerprint still matches, so repeat calls measure
+    steady-state search; `ivf_append`'s byte-identical
     untouched partitions are asserted in tests/test_operators.py."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_append,
         ivf_build,
         ivf_search,
@@ -486,27 +483,15 @@ def q143(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(emb, query, k=10))
-    tag = hashlib.md5(f"{sf}|append32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ivfappend-{tag}"
-    fp = _ivf_fingerprint(emb, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        stale = m is None or (int(m["n"]), m["max_id"]) != fp
-    except Exception:
-        # broad on purpose, unlike the library operators' narrowed
-        # AnalysisException: this path is a /tmp-scoped gate index, so
-        # any read problem (missing, corrupt, half-written by a killed
-        # run) should just rebuild
-        stale = True
-    if stale:
-        import shutil
 
-        shutil.rmtree(idx, ignore_errors=True)
+    def build(stage: str) -> None:
         ivf_build(
-            emb.filter(F.col("vec_id") % 2 == 0), idx, n_clusters=32,
+            emb.filter(F.col("vec_id") % 2 == 0), stage, n_clusters=32,
             sample_size=10000, seed=42,
         )
-        ivf_append(spark, idx, emb.filter(F.col("vec_id") % 2 == 1))
+        ivf_append(spark, stage, emb.filter(F.col("vec_id") % 2 == 1))
+
+    idx, _, _ = reuse("ivfappend", f"{sf}|append32", _index_want(emb), build)
     approx = ivf_search(spark, idx, query, k=10, nprobe=8).select("vec_id")
     overlap = exact.join(approx, "vec_id", "semi").count()
     return exact.select(
@@ -633,9 +618,6 @@ def q193(spark: SparkSession, sf: str) -> DataFrame:
     compression means the hot scan reads ~0.4% of the raw corpus
     bytes, and the code table is partition-pruned per query exactly
     like the vector table (PartitionFilters on cluster)."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_pq_topk, topk_cosine
 
     emb = load_table(spark, sf, "embeddings")
@@ -646,8 +628,7 @@ def q193(spark: SparkSession, sf: str) -> DataFrame:
     # the SEARCH, which is the amortized production posture.  Assumes
     # one gate runner at a time (as q67/q107 do): concurrent first-runs
     # could race the build; production indexes live behind a writer lock
-    tag = hashlib.md5(f"{sf}|c16-m8-k16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ivfpq-{tag}"
+    idx = reuse_dir("ivfpq", f"{sf}|c16-m8-k16")
     approx = ivf_pq_topk(
         emb, query, k=10, n_clusters=16, nprobe=8, m=8, ksub=16,
         rerank=200, index_path=idx,
@@ -1265,17 +1246,13 @@ def q376(spark: SparkSession, sf: str) -> DataFrame:
     reads 6 of 1,284 (cluster, label) directories at recall 1.0 — that
     probe, not this near-exhaustive gate probe, is the production
     shape."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_topk, topk_cosine
 
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     ql = query.select("label").first()[0]
     exact = _pin_topk(topk_cosine(emb.where(F.col("label") == ql), query, k=10))
-    tag = hashlib.md5(f"{sf}|fl32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-fivf-{tag}"
+    idx = reuse_dir("fivf", f"{sf}|fl32")
     approx = ivf_topk(
         emb, query, k=10, n_clusters=32, nprobe=24, index_path=idx,
         meta_cols=("label",), filters={"label": ql},
@@ -1324,9 +1301,6 @@ def q377(spark: SparkSession, sf: str) -> DataFrame:
     searches (``ivf_build_or_reuse`` on the shared fingerprinted path)
     — build-once-search-many across gate queries, the q67/q107/q376
     convention."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_build_or_reuse,
         ivf_search_batch,
@@ -1340,9 +1314,8 @@ def q377(spark: SparkSession, sf: str) -> DataFrame:
     # +0.2-0.5 s against the ~0.15 s corpus pass it saves at gate scale
     # (multi-query Arrow pass; see OPTIMIZATION_r10.md batch 4)
     exact = topk_cosine_multi(emb, queries, k=10, query_id_col="vec_id")
-    tag = hashlib.md5(f"{sf}|c32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-ivf-{tag}", n_clusters=32
+        emb, reuse_dir("ivf", f"{sf}|c32"), n_clusters=32
     )
     # nprobe 16/32 at gate scale (measured: per-query recall floor 7/10
     # at sf0.001, 8/10 at sf0.01 — q107's nprobe=8 leaves two of the
@@ -1410,17 +1383,13 @@ def q378(spark: SparkSession, sf: str) -> DataFrame:
     so the floor is deterministic on the small fixture); the pruning
     claim is the scale probe's (filtered_ivfpq probe: 256 cells,
     nprobe 16), same split as q376/q377."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_pq_topk, topk_cosine
 
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 23)
     ql = query.select("label").first()[0]
     exact = _pin_topk(topk_cosine(emb.where(F.col("label") == ql), query, k=10))
-    tag = hashlib.md5(f"{sf}|fpq16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-fivfpq-{tag}"
+    idx = reuse_dir("fivfpq", f"{sf}|fpq16-8-16")
     approx = ivf_pq_topk(
         emb, query, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -1473,9 +1442,6 @@ def q379(spark: SparkSession, sf: str) -> DataFrame:
     query at nprobe 24/32 (measured 9-10/10 at both gate SFs).  The
     index is q376's persisted artifact (`ivf_build_or_reuse` on the
     shared fingerprinted path) — build-once-search-many across gates."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_build_or_reuse,
         ivf_search_batch,
@@ -1488,9 +1454,8 @@ def q379(spark: SparkSession, sf: str) -> DataFrame:
     qids = [r.vec_id for r in sub.orderBy("vec_id").limit(4).collect()]
     queries = emb.filter(F.col("vec_id").isin(qids))
     exact = topk_cosine_multi(sub, queries, k=10, query_id_col="vec_id")
-    tag = hashlib.md5(f"{sf}|fl32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-fivf-{tag}", n_clusters=32,
+        emb, reuse_dir("fivf", f"{sf}|fl32"), n_clusters=32,
         meta_cols=("label",),
     )
     approx = ivf_search_batch(
@@ -1549,9 +1514,6 @@ def q380(spark: SparkSession, sf: str) -> DataFrame:
     side value-checked against the DuckDB window oracle.  The index is
     q380's own fingerprinted artifact (16 cells, m=8, ksub=16 — the
     q193 family's shape)."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_pq_search_batch,
         topk_cosine_multi,
@@ -1564,8 +1526,7 @@ def q380(spark: SparkSession, sf: str) -> DataFrame:
     # +0.2-0.5 s against the ~0.15 s corpus pass it saves at gate scale
     # (multi-query Arrow pass; see OPTIMIZATION_r10.md batch 4)
     exact = topk_cosine_multi(emb, queries, k=10, query_id_col="vec_id")
-    tag = hashlib.md5(f"{sf}|bpq16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpq-{tag}"
+    idx = reuse_dir("bpq", f"{sf}|bpq16-8-16")
     approx = ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
         rerank=200, index_path=idx, query_id_col="vec_id",
@@ -1625,9 +1586,6 @@ def q381(spark: SparkSession, sf: str) -> DataFrame:
     quantization at 10 labels × 16 cells is the binding recall factor,
     hence one notch under q379's raw-IVF floor).  Exact side
     value-checked against the DuckDB window oracle."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_pq_search_batch,
         topk_cosine_multi,
@@ -1639,8 +1597,7 @@ def q381(spark: SparkSession, sf: str) -> DataFrame:
     qids = [r.vec_id for r in sub.orderBy("vec_id").limit(4).collect()]
     queries = emb.filter(F.col("vec_id").isin(qids))
     exact = topk_cosine_multi(sub, queries, k=10, query_id_col="vec_id")
-    tag = hashlib.md5(f"{sf}|bpqf16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpqf-{tag}"
+    idx = reuse_dir("bpqf", f"{sf}|bpqf16-8-16")
     approx = ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=14, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -1713,9 +1670,6 @@ def q382(spark: SparkSession, sf: str) -> DataFrame:
     attribution).  The index is q379's persisted artifact
     (``ivf_build_or_reuse`` on the shared fingerprinted path) —
     build-once-search-many across gates."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_build_or_reuse,
         ivf_search_batch,
@@ -1743,9 +1697,8 @@ def q382(spark: SparkSession, sf: str) -> DataFrame:
             query_id_col="vec_id",
         )
         exact = part if exact is None else exact.unionByName(part)
-    tag = hashlib.md5(f"{sf}|fl32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-fivf-{tag}", n_clusters=32,
+        emb, reuse_dir("fivf", f"{sf}|fl32"), n_clusters=32,
         meta_cols=("label",),
     )
     approx = ivf_search_batch(
@@ -1827,9 +1780,6 @@ def q383(spark: SparkSession, sf: str) -> DataFrame:
     measured PQ-bound margin — same index artifact, same probe shape).
     Exact side value-checked against the DuckDB window oracle.  The
     index is q381's persisted artifact — build-once-search-many."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
         ivf_pq_search_batch,
         topk_cosine_multi,
@@ -1856,8 +1806,7 @@ def q383(spark: SparkSession, sf: str) -> DataFrame:
             query_id_col="vec_id",
         )
         exact = part if exact is None else exact.unionByName(part)
-    tag = hashlib.md5(f"{sf}|bpqf16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpqf-{tag}"
+    idx = reuse_dir("bpqf", f"{sf}|bpqf16-8-16")
     approx = ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=14, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -1928,11 +1877,7 @@ def q384(spark: SparkSession, sf: str) -> DataFrame:
     distribution even though the codebooks never saw the appended
     half.  Build-once-search-many: the appended index persists behind
     the full-corpus fingerprint, so repeat calls are pure searches."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_pq_build_or_reuse,
         ivf_pq_topk,
         pq_append,
@@ -1942,25 +1887,17 @@ def q384(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(emb, query, k=10))
-    tag = hashlib.md5(f"{sf}|pqappend16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-pqappend-{tag}"
-    fp = _ivf_fingerprint(emb, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        stale = m is None or (int(m["n"]), m["max_id"]) != fp
-    except Exception:
-        # /tmp-scoped gate index: any read problem (missing, corrupt,
-        # half-appended by a killed run) should just rebuild
-        stale = True
-    if stale:
-        import shutil
 
-        shutil.rmtree(idx, ignore_errors=True)
+    def build(stage: str) -> None:
         ivf_pq_build_or_reuse(
-            emb.filter(F.col("vec_id") % 2 == 0), idx, n_clusters=16,
+            emb.filter(F.col("vec_id") % 2 == 0), stage, n_clusters=16,
             m=8, ksub=16,
         )
-        pq_append(spark, idx, emb.filter(F.col("vec_id") % 2 == 1))
+        pq_append(spark, stage, emb.filter(F.col("vec_id") % 2 == 1))
+
+    idx, _, _ = reuse(
+        "pqappend", f"{sf}|pqappend16-8-16", _index_want(emb), build
+    )
     approx = ivf_pq_topk(
         emb, query, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
         rerank=200, index_path=idx,
@@ -2006,11 +1943,7 @@ def q385(spark: SparkSession, sf: str) -> DataFrame:
     EQUALS the surviving corpus's fingerprint, so repeat calls (and the
     composite's internal build_or_reuse over the survivor frame) reuse
     the erased artifact; a regenerated source rebuilds + re-erases."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_delete,
         ivf_pq_build_or_reuse,
         ivf_pq_topk,
@@ -2021,23 +1954,12 @@ def q385(spark: SparkSession, sf: str) -> DataFrame:
     surv = emb.filter(F.col("vec_id") % 10 != 3)
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(surv, query, k=10))
-    tag = hashlib.md5(f"{sf}|erase16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-erase-{tag}"
-    fp = _ivf_fingerprint(surv, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        stale = m is None or (int(m["n"]), m["max_id"]) != fp
-    except Exception:
-        # /tmp-scoped gate index: any read problem should just rebuild
-        stale = True
-    if stale:
-        import shutil
 
-        shutil.rmtree(idx, ignore_errors=True)
-        ivf_pq_build_or_reuse(emb, idx, n_clusters=16, m=8, ksub=16)
-        ivf_delete(
-            spark, idx, emb.filter(F.col("vec_id") % 10 == 3)
-        )
+    def build(stage: str) -> None:
+        ivf_pq_build_or_reuse(emb, stage, n_clusters=16, m=8, ksub=16)
+        ivf_delete(spark, stage, emb.filter(F.col("vec_id") % 10 == 3))
+
+    idx, _, _ = reuse("erase", f"{sf}|erase16-8-16", _index_want(surv), build)
     approx = _pin_topk(
         ivf_pq_topk(
             surv, query, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
@@ -2087,12 +2009,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
     partitions).  Build-once-stream-once-search-many: the maintained
     index persists behind the full-corpus fingerprint; warm calls are
     pure searches."""
-    import hashlib
-    import tempfile
-
-    from ..operators.materialize import scratch_dir
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_build,
         ivf_search,
         ivf_stream_maintainer,
@@ -2103,26 +2020,16 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(emb, query, k=10))
-    tag = hashlib.md5(f"{sf}|simnt32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-simnt-{tag}"
-    fp = _ivf_fingerprint(emb, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        stale = m is None or (int(m["n"]), m["max_id"]) != fp
-    except Exception:
-        # /tmp-scoped gate index: any read problem should just rebuild
-        stale = True
-    if stale:
-        import shutil
+    want = _index_want(emb)
 
-        shutil.rmtree(idx, ignore_errors=True)
+    def build(stage: str) -> None:
         evens = emb.filter(F.col("vec_id") % 2 == 0).select(
             "vec_id", "embedding"
         )
         odds = emb.filter(F.col("vec_id") % 2 == 1).select(
             "vec_id", "embedding"
         )
-        ivf_build(evens, idx, n_clusters=32)
+        ivf_build(evens, stage, n_clusters=32)
         feed = scratch_dir("ctdc-simnt-feed-")
         b0 = odds.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 1)
         b1 = odds.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 3)
@@ -2130,7 +2037,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
         # and the two odd-half passes write at natural parallelism
         # instead of through the coalesce(1) single-writer funnel
         mft = write_ordered_feed_parallel([b0, b1], feed)
-        handler = ivf_stream_maintainer(idx)
+        handler = ivf_stream_maintainer(stage)
         stream = (
             spark.readStream.schema(b0.schema)
             .option("maxFilesPerTrigger", str(mft))
@@ -2140,8 +2047,10 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
         run_gate(stream, writer, scratch_dir("ctdc-simnt-ckpt-"))
         # explicit epoch redelivery: committed batch 0 must be skipped
         handler(b0, 0)
+
+    idx, _, _ = reuse("simnt", f"{sf}|simnt32", want, build)
     m_after = spark.read.parquet(f"{idx}/meta").first()
-    redelivery_noop = (int(m_after["n"]), m_after["max_id"]) == fp
+    redelivery_noop = {"n": m_after["n"], "max_id": m_after["max_id"]} == want
     # nprobe 16/32: measured 9/10 at sf0.001, 10/10 at sf0.01 — q143's
     # nprobe=8 landed exactly ON the 7/10 floor at sf0.001 here (the
     # stream slices the append half differently, so cell fill differs),
@@ -2185,11 +2094,7 @@ def q387(spark: SparkSession, sf: str) -> DataFrame:
     centroids, so compaction cannot move recall at all — the floor
     guards the composition, the equality lives in
     tests/test_round10_ops.py)."""
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_append,
         ivf_build,
         ivf_compact,
@@ -2200,33 +2105,27 @@ def q387(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 7)
     exact = _pin_topk(topk_cosine(emb, query, k=10))
-    tag = hashlib.md5(f"{sf}|compact32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-compactivf-{tag}"
-    fp = _ivf_fingerprint(emb, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        stale = m is None or (int(m["n"]), m["max_id"]) != fp
-    except Exception:
-        # /tmp-scoped gate index: any read problem should just rebuild
-        stale = True
-    if stale:
-        import shutil
 
-        shutil.rmtree(idx, ignore_errors=True)
-        ivf_build(emb.filter(F.col("vec_id") % 2 == 0), idx, n_clusters=32)
+    def build(stage: str) -> dict:
+        ivf_build(emb.filter(F.col("vec_id") % 2 == 0), stage, n_clusters=32)
         odd = F.pmod(F.col("vec_id"), F.lit(4))
-        ivf_append(spark, idx, emb.filter(odd == 1))
-        ivf_append(spark, idx, emb.filter(odd == 3))
-        c = ivf_compact(spark, idx)
-        compact_proof = (
-            c["partitions_compacted"] > 0
+        ivf_append(spark, stage, emb.filter(odd == 1))
+        ivf_append(spark, stage, emb.filter(odd == 3))
+        c = ivf_compact(spark, stage)
+        return {
+            "compacted": c["partitions_compacted"] > 0
             and c["files_after"] < c["files_before"]
-        )
-    else:
-        # steady state: an already-compacted index must be a no-op
-        compact_proof = (
-            ivf_compact(spark, idx)["partitions_compacted"] == 0
-        )
+        }
+
+    idx, meta, built = reuse(
+        "compactivf", f"{sf}|compact32", _index_want(emb), build
+    )
+    # steady state: an already-compacted index must be a no-op
+    compact_proof = (
+        meta["compacted"]
+        if built
+        else ivf_compact(spark, idx)["partitions_compacted"] == 0
+    )
     approx = ivf_search(spark, idx, query, k=10, nprobe=16).select("vec_id")
     overlap = exact.join(approx, "vec_id", "semi").count()
     return exact.select(
@@ -2260,11 +2159,7 @@ def q388(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.similarity import ivf_build_or_reuse, ivf_drift
 
     emb = load_table(spark, sf, "embeddings")
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(f"{sf}|drift16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-driftivf-{tag}"
+    idx = reuse_dir("driftivf", f"{sf}|drift16")
     ivf_build_or_reuse(emb, idx, n_clusters=16)
     in_dist = emb.filter(F.col("vec_id") % 2 == 0)
     shifted = emb.select(
@@ -2308,11 +2203,7 @@ def q389(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.similarity import ivf_build_or_reuse, ivf_stats
 
     emb = load_table(spark, sf, "embeddings")
-    import hashlib
-    import tempfile
-
-    tag = hashlib.md5(f"{sf}|drift16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-driftivf-{tag}"
+    idx = reuse_dir("driftivf", f"{sf}|drift16")
     ivf_build_or_reuse(emb, idx, n_clusters=16)
     st = ivf_stats(spark, idx)
     n = emb.count()
@@ -2363,12 +2254,7 @@ def q390(spark: SparkSession, sf: str) -> DataFrame:
     in-distribution batches stay clean, a never-applied shift is
     still flagged, compaction is a no-op, recall holds.  Recall floor
     >= 7/10 vs exact over the union corpus (measured 10/10)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from ..operators.similarity import (
-        _ivf_fingerprint,
         ivf_build,
         ivf_compact,
         ivf_drift,
@@ -2388,29 +2274,27 @@ def q390(spark: SparkSession, sf: str) -> DataFrame:
     union = emb.select("vec_id", fvec).unionByName(
         shifted.select("vec_id", fvec)
     )
-    tag = hashlib.md5(f"{sf}|ap16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-autopilot-{tag}"
-    want = _ivf_fingerprint(union, "vec_id")
-    try:
-        m = spark.read.parquet(f"{idx}/meta").first()
-        steady = m is not None and (int(m["n"]), m["max_id"]) == want
-    except Exception:
-        steady = False  # unreadable /tmp gate index: rebuild below
-    if not steady:
-        shutil.rmtree(idx, ignore_errors=True)
-        ivf_build(emb.filter(F.col("vec_id") % 2 == 0), idx, n_clusters=16)
+
+    def build(stage: str) -> dict:
+        ivf_build(emb.filter(F.col("vec_id") % 2 == 0), stage, n_clusters=16)
         r1 = ivf_maintain(
-            spark, idx, emb.filter(F.col("vec_id") % 2 == 1),
+            spark, stage, emb.filter(F.col("vec_id") % 2 == 1),
             distortion_ratio_max=1.6,
         )
-        r2 = ivf_maintain(spark, idx, shifted, distortion_ratio_max=1.6)
-        closure = ivf_drift(spark, idx, shifted, distortion_ratio_max=1.6)
-        maintained = (
-            r1["action"] == "append"
+        r2 = ivf_maintain(spark, stage, shifted, distortion_ratio_max=1.6)
+        closure = ivf_drift(spark, stage, shifted, distortion_ratio_max=1.6)
+        return {
+            "maintained": r1["action"] == "append"
             and r2["action"] == "rebuild"
             and closure["distortion_ratio"] < 1.6
             and r2["compaction"]["partitions_compacted"] == 0
-        )
+        }
+
+    idx, meta, built = reuse(
+        "autopilot", f"{sf}|ap16", _index_want(union), build
+    )
+    if built:
+        maintained = meta["maintained"]
     else:
         # steady state: re-assert every non-mutating claim
         d_in = ivf_drift(

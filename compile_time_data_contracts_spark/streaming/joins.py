@@ -230,24 +230,21 @@ def outer_interval_join_gate(
     subset of the same rows, so most left rows are unmatched.
 
     Feed build follows the index convention (q67/q107): the two feeds
-    are deterministic functions of the events table, so they persist at
-    a path keyed on ``sf_dir`` and are REBUILT only when the table's
-    content fingerprint (row count + max ts) changes — the same
-    build-once contract as the IVF index, with the meta written LAST so
-    a half-built feed is never reused.  The STREAMING REPLAY itself
-    (state store, watermark flush, exactly-once accounting) still runs
-    on every call — reuse removes the redundant feed materialization,
-    never the semantics under test.  Feeds are written at natural
+    are deterministic functions of the events table, so they persist
+    through :func:`~..operators.materialize.reuse` keyed on ``sf_dir``
+    and are REBUILT only when the table's content fingerprint changes —
+    the same build-once contract as the IVF index.  The STREAMING
+    REPLAY itself (state store, watermark flush, exactly-once
+    accounting) still runs on every call — reuse removes the redundant
+    feed materialization, never the semantics under test.  Feeds are written at natural
     parallelism (:func:`write_ordered_feed_parallel`), not through a
     one-task ``coalesce(1)`` funnel.
     """
     import datetime
-    import hashlib
-    import json
     import os
-    import tempfile
 
     from ..catalog import load_table
+    from ..operators.materialize import reuse
     from .windows import run_gate_to_memory, write_ordered_feed_parallel
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -285,13 +282,6 @@ def outer_interval_join_gate(
         [(-2, -999, sentinel, "sentinel")], ev.schema
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    feed_root = os.path.join(
-        tempfile.gettempdir(), f"ctdc-ossjoin-{tag}"
-    )
-    lbase = os.path.join(feed_root, "left")
-    rbase = os.path.join(feed_root, "right")
-    meta_path = os.path.join(feed_root, "meta.json")
     want = {
         "n": int(row["n"]),
         "max_ts": str(max_ts),
@@ -300,22 +290,21 @@ def outer_interval_join_gate(
         "id_sum": str(row["id_sum"]),
         "version": 3,
     }
-    meta = None
-    try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        meta = None
-    if meta is None or {
-        k: meta.get(k) for k in want
-    } != want:
-        os.makedirs(feed_root, exist_ok=True)
-        mft_l = write_ordered_feed_parallel([left, sent_l], lbase)
-        mft_r = write_ordered_feed_parallel([right, sent_r], rbase)
-        with open(meta_path, "w") as fh:
-            json.dump({**want, "mft_l": mft_l, "mft_r": mft_r}, fh)
-    else:
-        mft_l, mft_r = meta["mft_l"], meta["mft_r"]
+
+    def build(stage: str) -> dict:
+        return {
+            "mft_l": write_ordered_feed_parallel(
+                [left, sent_l], os.path.join(stage, "left")
+            ),
+            "mft_r": write_ordered_feed_parallel(
+                [right, sent_r], os.path.join(stage, "right")
+            ),
+        }
+
+    feed_root, meta, _ = reuse("ossjoin", sf_dir, want, build)
+    lbase = os.path.join(feed_root, "left")
+    rbase = os.path.join(feed_root, "right")
+    mft_l, mft_r = meta["mft_l"], meta["mft_r"]
 
     def source(base: str, max_files: int) -> DataFrame:
         return (

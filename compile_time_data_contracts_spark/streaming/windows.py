@@ -31,7 +31,6 @@ __all__ = [
     "run_gate",
     "run_gate_to_memory",
     "gate_state_partitions",
-    "write_ordered_feed",
     "write_ordered_feed_parallel",
     "write_sliced_feed",
     "late_drop_counts",
@@ -293,31 +292,26 @@ def write_ordered_feed_parallel(
     gates assert.)  Empty parquet padding is read as 0 rows and cannot
     move a watermark.
 
-    :func:`write_ordered_feed`'s ``coalesce(1)`` funnels the whole feed
-    materialization through ONE task — measured 11 s for the q199 feeds
-    at sf0.1 on local[32] vs ~2 s at natural parallelism — and at 100 TB
-    a single-writer feed build is simply impossible; batch ORDER is the
+    A ``coalesce(1)`` writer funnels the whole feed materialization
+    through ONE task — measured 11 s for the q199 feeds at sf0.1 on
+    local[32] vs ~2 s at natural parallelism — and at 100 TB a
+    single-writer feed build is simply impossible; batch ORDER is the
     semantic (watermarks advance between micro-batches), not
     one-file-per-batch.
 
     Returns N (files per padded batch) — pass as ``maxFilesPerTrigger``.
 
-    The whole feed is STAGED in a pid-suffixed sibling directory and
-    swapped into ``base`` only when complete: a concurrent process
-    reading a shared feed root never observes a half-built feed (the
-    delete→rename swap is the only window, microseconds vs the
-    seconds-long data write that used to happen in place after an
-    up-front rmtree).
+    ``base`` must be a directory no one else reads or writes: a
+    :func:`~..operators.materialize.scratch_dir`, or the staging
+    directory of a :func:`~..operators.materialize.reuse` build, which
+    publishes the finished feed.
     """
     import os
-    import shutil
 
-    build = f"{base}.build-{os.getpid()}"
-    shutil.rmtree(build, ignore_errors=True)
-    os.makedirs(build)
+    os.makedirs(base, exist_ok=True)
     stage_dirs: list[str] = []
     for i, df in enumerate(dfs):
-        tmp = os.path.join(build, f"_stage{i}")
+        tmp = os.path.join(base, f"_stage{i}")
         # natural parallelism, deliberately WITHOUT a spread/repartition:
         # a slice of a single-row-group fixture scans as one task either
         # way (the shuffle a spread adds parallelizes nothing upstream of
@@ -327,16 +321,14 @@ def write_ordered_feed_parallel(
         # writes wide here with zero added exchanges
         df.write.mode("overwrite").parquet(tmp)
         stage_dirs.append(tmp)
-    return _finalize_feed(build, stage_dirs, dfs[0].limit(0), base)
+    return _finalize_feed(stage_dirs, dfs[0].limit(0), base)
 
 
-def _finalize_feed(
-    build: str, stage_dirs: list[str], pad_template, base: str
-) -> int:
+def _finalize_feed(stage_dirs: list[str], pad_template, base: str) -> int:
     """Shared feed-assembly tail: pad every staged batch directory to
     the same file count N with empty schema-only parquet files, stamp
-    ascending mtimes (batch i strictly older than batch i+1), and swap
-    the completed build into ``base`` atomically.  Returns N (pass as
+    ascending mtimes (batch i strictly older than batch i+1), and move
+    the batches into ``base``.  Returns N (pass as
     ``maxFilesPerTrigger``)."""
     import os
     import shutil
@@ -351,7 +343,7 @@ def _finalize_feed(
     ]
     n_files = max(1, max(len(p) for p in staged))
     # one empty schema-only parquet file as the padding template
-    pad_tmp = os.path.join(build, "_stage_pad")
+    pad_tmp = os.path.join(base, "_stage_pad")
     pad_template.coalesce(1).write.mode("overwrite").parquet(pad_tmp)
     pad_src = os.path.join(
         pad_tmp,
@@ -363,7 +355,7 @@ def _finalize_feed(
     step = min(0.001, 9.0 / n_files)
     for i, parts in enumerate(staged):
         for j in range(n_files):
-            dst = os.path.join(build, f"batch{i}_{j:07d}.parquet")
+            dst = os.path.join(base, f"batch{i}_{j:07d}.parquet")
             if j < len(parts):
                 shutil.move(os.path.join(stage_dirs[i], parts[j]), dst)
             else:
@@ -371,15 +363,13 @@ def _finalize_feed(
             os.utime(dst, (t0 + i * 10 + j * step,) * 2)
         shutil.rmtree(stage_dirs[i], ignore_errors=True)
     # drop every staging leftover (the pad template, the sliced form's
-    # partitioned parent with its _SUCCESS marker) before the swap; the
-    # file stream would ignore _-prefixed entries anyway, but the feed
-    # dir should hold exactly the replay files
-    for leftover in os.listdir(build):
-        p = os.path.join(build, leftover)
+    # partitioned parent with its _SUCCESS marker); the file stream
+    # would ignore _-prefixed entries anyway, but the feed dir should
+    # hold exactly the replay files
+    for leftover in os.listdir(base):
+        p = os.path.join(base, leftover)
         if leftover.startswith("_stage") and os.path.isdir(p):
             shutil.rmtree(p, ignore_errors=True)
-    shutil.rmtree(base, ignore_errors=True)
-    os.rename(build, base)
     return n_files
 
 
@@ -396,9 +386,10 @@ def write_sliced_feed(
     replay batch, and a single ``partitionBy`` write materializes every
     slice in ONE job — the list form re-scans the source once per slice
     (3 scan+write jobs for the mod-3 gate feeds; guide §1.2: one
-    unavoidable pass, not one per batch).  Padding, mtime ordering and
-    the atomic swap are identical (shared ``_finalize_feed`` tail), so
-    one batch == one trigger structurally, exactly as before.
+    unavoidable pass, not one per batch).  Padding and mtime ordering
+    are identical (shared ``_finalize_feed`` tail), so one batch == one
+    trigger structurally, exactly as before; ``base`` follows the same
+    rule as the list form's.
 
     ``payload_cols`` restricts the written columns (default: all of
     ``df``'s) — callers that pre-derive the batch number with an
@@ -407,13 +398,9 @@ def write_sliced_feed(
     in the data files, so the on-disk schema equals the list form's.
     """
     import os
-    import shutil
 
     cols = payload_cols if payload_cols is not None else df.columns
-    build = f"{base}.build-{os.getpid()}"
-    shutil.rmtree(build, ignore_errors=True)
-    os.makedirs(build)
-    stage = os.path.join(build, "_stage")
+    stage = os.path.join(base, "_stage")
     (
         df.select(*cols, batch_no.cast("int").alias("__batch"))
         .write.mode("overwrite")
@@ -423,9 +410,7 @@ def write_sliced_feed(
     stage_dirs = [
         os.path.join(stage, f"__batch={i}") for i in range(n_batches)
     ]
-    return _finalize_feed(
-        build, stage_dirs, df.select(*cols).limit(0), base
-    )
+    return _finalize_feed(stage_dirs, df.select(*cols).limit(0), base)
 
 
 def persistent_event_slices_feed(
@@ -433,13 +418,12 @@ def persistent_event_slices_feed(
 ) -> tuple[str, int]:
     """The shared ordered replay feed five exactly-once gates use: the
     events table sliced into ``n_slices`` batches by
-    ``pmod(event_id, n_slices)``, persisted at a path keyed on
-    ``sf_dir`` behind a content fingerprint (row count + max event_id +
-    max ts + sum(event_id) as a content proxy, so a REGENERATED events
-    table with identical shape is caught, not silently replayed as
-    stale slices; meta written LAST so a half-built feed is never
-    reused) and written at natural parallelism via
-    :func:`write_ordered_feed_parallel`.
+    ``pmod(event_id, n_slices)``, persisted by
+    :func:`~..operators.materialize.reuse` behind a content fingerprint
+    (row count + max event_id + max ts + sum(event_id) as a content
+    proxy, so a REGENERATED events table with identical shape is
+    caught, not silently replayed as stale slices) and written at
+    natural parallelism via :func:`write_sliced_feed`.
 
     The feed is a deterministic function of the source table, so
     rebuilding it per gate call was five redundant data-sized writes
@@ -448,12 +432,10 @@ def persistent_event_slices_feed(
     per-call fresh at every call site: only the immutable INPUT feed
     is shared.  Returns (feed_path, maxFilesPerTrigger).
     """
-    import hashlib
-    import json
     import os
-    import tempfile
 
     from ..catalog import load_table
+    from ..operators.materialize import reuse
 
     ev = load_table(spark, sf_dir, "events")
     row = ev.agg(
@@ -468,52 +450,20 @@ def persistent_event_slices_feed(
         # version 3: feed written by the one-pass sliced writer (same
         # batches, same padding contract; bumped so the r10 feed is
         # regenerated once through the new code path)
-        "n_slices": n_slices, "version": 3,
+        "version": 3,
     }
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = os.path.join(
-        tempfile.gettempdir(), f"ctdc-evslices-{tag}-{n_slices}"
-    )
-    feed = os.path.join(root, "feed")
-    meta_path = os.path.join(root, "meta.json")
-    try:
-        with open(meta_path) as fh:
-            have = json.load(fh)
-    except (OSError, ValueError):
-        have = None
-    if have is None or {k: have.get(k) for k in want} != want:
-        os.makedirs(root, exist_ok=True)
+
+    def build(stage: str) -> dict:
         # one-pass sliced write (r11): one partitioned job instead of
         # n_slices scan+write jobs on every (re)build
         mft = write_sliced_feed(
-            ev, F.pmod(F.col("event_id"), F.lit(n_slices)), n_slices, feed
+            ev, F.pmod(F.col("event_id"), F.lit(n_slices)), n_slices,
+            os.path.join(stage, "feed"),
         )
-        with open(meta_path, "w") as fh:
-            json.dump({**want, "mft": mft}, fh)
-    else:
-        mft = have["mft"]
-    return feed, mft
+        return {"mft": mft}
 
-
-def write_ordered_feed(dfs: list[DataFrame], base: str) -> None:
-    """Materialize one parquet file per batch with ascending mtimes so a
-    ``maxFilesPerTrigger=1`` file stream replays them in a deterministic
-    order (the file source lists by modification time)."""
-    import os
-    import shutil
-    import time
-
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-    t0 = time.time() - 1000
-    for i, df in enumerate(dfs):
-        tmp = os.path.join(base, f"_stage{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(base, f"batch{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (t0 + i * 10, t0 + i * 10))
+    root, meta, _ = reuse("evslices", f"{sf_dir}|{n_slices}", want, build)
+    return os.path.join(root, "feed"), meta["mft"]
 
 
 def late_drop_counts(

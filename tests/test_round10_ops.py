@@ -402,7 +402,7 @@ def test_stream_maintainer_exactly_once(spark, tmp_path):
         topk_cosine,
     )
     from compile_time_data_contracts_spark.streaming.windows import (
-        write_ordered_feed,
+        write_ordered_feed_parallel,
     )
 
     rows = [(i, _vec(i % 2, i)) for i in range(80)]
@@ -415,11 +415,11 @@ def test_stream_maintainer_exactly_once(spark, tmp_path):
     feed = str(tmp_path / "feed")
     b0 = odds.filter(F.col("vec_id") < 40)
     b1 = odds.filter(F.col("vec_id") >= 40)
-    write_ordered_feed([b0, b1], feed)
+    mft = write_ordered_feed_parallel([b0, b1], feed)
     handler = ivf_stream_maintainer(idx)
     q = (
         spark.readStream.schema(odds.schema)
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(mft))
         .parquet(feed)
         .writeStream.foreachBatch(handler)
         .option("checkpointLocation", str(tmp_path / "ckpt"))

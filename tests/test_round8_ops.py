@@ -4,9 +4,7 @@ the q67/q107/q376 convention it joined this round."""
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 import pytest
 
@@ -54,8 +52,11 @@ def test_q143_reuses_appended_index_and_rebuilds_on_change(
     _write_embeddings(spark, sf_dir)
     q143 = entrymod.queries()["q143_ivf_append_contract"]
 
-    tag = hashlib.md5(f"{sf_dir}|append32".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-ivfappend-{tag}"
+    from compile_time_data_contracts_spark.operators.materialize import (
+        reuse_dir,
+    )
+
+    idx = reuse_dir("ivfappend", f"{sf_dir}|append32")
 
     first = sorted(map(tuple, q143(spark, sf_dir).collect()))
     assert len(first) == 10

@@ -3,7 +3,8 @@ under a watermark, stateful dedup.
 
 The feed is a temp directory of parquet files with controlled
 modification times so the file source's batch order is deterministic
-(`maxFilesPerTrigger=1` + mtime ordering).
+(every batch padded to the same file count N, `maxFilesPerTrigger=N`
++ mtime ordering).
 """
 
 from __future__ import annotations
@@ -51,13 +52,15 @@ def test_stream_equals_batch_tumbling(spark):
 
 
 def _write_feed(spark, base, batches):
-    """Write one parquet file per batch with increasing mtimes so the
-    file stream processes them in order (library write_ordered_feed)."""
+    """Write each batch as the same number of parquet files, with
+    increasing mtimes, so a file stream with ``maxFilesPerTrigger`` set
+    to the returned count processes one batch per trigger, in order
+    (library write_ordered_feed_parallel)."""
     from compile_time_data_contracts_spark.streaming.windows import (
-        write_ordered_feed,
+        write_ordered_feed_parallel,
     )
 
-    write_ordered_feed(
+    return write_ordered_feed_parallel(
         [
             spark.createDataFrame(
                 rows, "event_id long, user_id long, ts timestamp, value double"
@@ -77,7 +80,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
     base = str(tmp_path / "feed")
     ts = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
-    _write_feed(
+    mft = _write_feed(
         spark,
         base,
         [
@@ -106,7 +109,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     )
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(mft))
         .parquet(base)
     )
     agg = (
@@ -137,7 +140,7 @@ def test_dedup_within_watermark(spark, tmp_path):
 
     base = str(tmp_path / "dedup_feed")
     ts = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
-    _write_feed(
+    mft = _write_feed(
         spark,
         base,
         [
@@ -157,7 +160,7 @@ def test_dedup_within_watermark(spark, tmp_path):
     )
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(mft))
         .parquet(base)
     )
     out = dedup_within_watermark(stream, ["event_id"], watermark="2 hours")
@@ -195,7 +198,7 @@ def test_stateful_running_totals(spark, tmp_path):
 
     base = str(tmp_path / "state_feed")
     ts = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
-    _write_feed(
+    mft = _write_feed(
         spark,
         base,
         [
@@ -215,7 +218,7 @@ def test_stateful_running_totals(spark, tmp_path):
     )
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(mft))
         .parquet(base)
     )
     q = (

@@ -82,9 +82,11 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     # a private temp dir per run, inherited by the Python workers: the
-    # registry keeps fingerprinted reuse caches (IVF indexes, merge
-    # snapshots, state stores) under gettempdir(), and two concurrent
-    # runs writing one cache path break each other
+    # registry's build-once caches live under gettempdir()
+    # (materialize.reuse_dir).  Those built by materialize.reuse publish
+    # by rename, but the library index operators build in place at their
+    # path and q136 merges into its published snapshot, so two
+    # concurrent runs sharing one cache path could still break each other
     tempfile.tempdir = os.environ["TMPDIR"] = scratch_dir("ctdc-oracle-")
     spark = local_session("ctdc-oracle-compare", cores=8)
 

@@ -19,6 +19,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from compile_time_data_contracts_spark.operators.materialize import (  # noqa: E402
+    reuse_dir,
+)
+
 CHECKS = {
     "q216_distributed_centroids": [
         ("per-(label, dim) sums partial-aggregated (shuffle carries "
@@ -3011,9 +3015,6 @@ def _walk_step_pipeline(spark, sf_dir):
 
 
 def _filtered_ivf_search_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3023,8 +3024,7 @@ def _filtered_ivf_search_pipeline(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     query = emb.filter(F.col("vec_id") == 7)
     ql = query.select("label").first()[0]
-    tag = hashlib.md5(f"{sf_dir}|fl32audit".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-fivfa-{tag}"
+    idx = reuse_dir("fivfa", f"{sf_dir}|fl32audit")
     return ivf_topk(
         emb, query, k=10, n_clusters=32, nprobe=16, index_path=idx,
         meta_cols=("label",), filters={"label": ql},
@@ -3032,9 +3032,6 @@ def _filtered_ivf_search_pipeline(spark, sf_dir):
 
 
 def _batch_ivf_search_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3046,9 +3043,8 @@ def _batch_ivf_search_pipeline(spark, sf_dir):
     queries = emb.filter(
         F.col("vec_id").isin([1, 2, 3, 7, 11, 13, 17, 19])
     )
-    tag = hashlib.md5(f"{sf_dir}|c32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-ivf-{tag}", n_clusters=32
+        emb, reuse_dir("ivf", f"{sf_dir}|c32"), n_clusters=32
     )
     return ivf_search_batch(
         spark, idx, queries, k=10, nprobe=16, query_id_col="vec_id"
@@ -3056,9 +3052,6 @@ def _batch_ivf_search_pipeline(spark, sf_dir):
 
 
 def _filtered_ivfpq_search_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3068,8 +3061,7 @@ def _filtered_ivfpq_search_pipeline(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     query = emb.filter(F.col("vec_id") == 23)
     ql = query.select("label").first()[0]
-    tag = hashlib.md5(f"{sf_dir}|fpq16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-fivfpq-{tag}"
+    idx = reuse_dir("fivfpq", f"{sf_dir}|fpq16-8-16")
     return ivf_pq_topk(
         emb, query, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -3078,9 +3070,6 @@ def _filtered_ivfpq_search_pipeline(spark, sf_dir):
 
 
 def _batch_filtered_ivf_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3098,9 +3087,8 @@ def _batch_filtered_ivf_pipeline(spark, sf_dir):
         .collect()
     ]
     queries = emb.filter(F.col("vec_id").isin(qids))
-    tag = hashlib.md5(f"{sf_dir}|fl32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-fivf-{tag}", n_clusters=32,
+        emb, reuse_dir("fivf", f"{sf_dir}|fl32"), n_clusters=32,
         meta_cols=("label",),
     )
     return ivf_search_batch(
@@ -3110,9 +3098,6 @@ def _batch_filtered_ivf_pipeline(spark, sf_dir):
 
 
 def _batch_filtered_ivfpq_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3129,8 +3114,7 @@ def _batch_filtered_ivfpq_pipeline(spark, sf_dir):
         .collect()
     ]
     queries = emb.filter(F.col("vec_id").isin(qids))
-    tag = hashlib.md5(f"{sf_dir}|bpqf16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpqf-{tag}"
+    idx = reuse_dir("bpqf", f"{sf_dir}|bpqf16-8-16")
     return ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=14, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -3159,18 +3143,14 @@ def _mixed_queries(spark, sf_dir):
 
 
 def _mixed_label_batch_ivf_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_build_or_reuse,
         ivf_search_batch,
     )
 
     emb, queries = _mixed_queries(spark, sf_dir)
-    tag = hashlib.md5(f"{sf_dir}|fl32".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-fivf-{tag}", n_clusters=32,
+        emb, reuse_dir("fivf", f"{sf_dir}|fl32"), n_clusters=32,
         meta_cols=("label",),
     )
     return ivf_search_batch(
@@ -3183,9 +3163,6 @@ def _erasure_slice_pipeline(spark, sf_dir):
     """The data-sized core of ivf_delete: the touched-slice survivor
     frame (partition-pruned scan × broadcast anti-join) that the
     dynamic-overwrite rewrite materializes."""
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3194,9 +3171,8 @@ def _erasure_slice_pipeline(spark, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    tag = hashlib.md5(f"{sf_dir}|eraseaudit".encode()).hexdigest()[:12]
     idx = ivf_build_or_reuse(
-        emb, f"{tempfile.gettempdir()}/ctdc-erasea-{tag}", n_clusters=16
+        emb, reuse_dir("erasea", f"{sf_dir}|eraseaudit"), n_clusters=16
     )
     ids = F.broadcast(
         emb.filter(F.col("vec_id") % 10 == 3).select("vec_id").distinct()
@@ -3216,16 +3192,12 @@ def _erasure_slice_pipeline(spark, sf_dir):
 
 
 def _mixed_label_batch_ivfpq_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_pq_search_batch,
     )
 
     emb, queries = _mixed_queries(spark, sf_dir)
-    tag = hashlib.md5(f"{sf_dir}|bpqf16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpqf-{tag}"
+    idx = reuse_dir("bpqf", f"{sf_dir}|bpqf16-8-16")
     return ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=14, m=8, ksub=16,
         rerank=200, index_path=idx, meta_cols=("label",),
@@ -3234,9 +3206,6 @@ def _mixed_label_batch_ivfpq_pipeline(spark, sf_dir):
 
 
 def _batch_ivfpq_search_pipeline(spark, sf_dir):
-    import hashlib
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -3245,8 +3214,7 @@ def _batch_ivfpq_search_pipeline(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id").isin([1, 7, 23, 42]))
-    tag = hashlib.md5(f"{sf_dir}|bpq16-8-16".encode()).hexdigest()[:12]
-    idx = f"{tempfile.gettempdir()}/ctdc-bpq-{tag}"
+    idx = reuse_dir("bpq", f"{sf_dir}|bpq16-8-16")
     return ivf_pq_search_batch(
         emb, queries, k=10, n_clusters=16, nprobe=12, m=8, ksub=16,
         rerank=200, index_path=idx, query_id_col="vec_id",

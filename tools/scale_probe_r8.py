@@ -264,7 +264,7 @@ def main() -> int:
         versioned_state_merger,
     )
     from compile_time_data_contracts_spark.streaming.windows import (
-        write_ordered_feed,
+        write_sliced_feed,
     )
 
     # planted arm sizes: 5.5% / 4.5% of the event count (550k/450k at
@@ -282,16 +282,13 @@ def main() -> int:
     )
     base = tempfile.mkdtemp(prefix="ctdc-srm-probe-")
     feed, state, ckpt = f"{base}/feed", f"{base}/state", f"{base}/ckpt"
-    slices = [
-        ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)
-    ]
     t0 = time.perf_counter()
-    write_ordered_feed(slices, feed)
+    mft = write_sliced_feed(ev, F.pmod(F.col("event_id"), F.lit(3)), 3, feed)
     handler = versioned_state_merger(state, ["user_id"])
     qh = (
         spark.readStream.schema("event_id long, user_id long")
         .format("parquet")
-        .option("maxFilesPerTrigger", "1")
+        .option("maxFilesPerTrigger", str(mft))
         .load(feed)
         .select("user_id")
         .writeStream.foreachBatch(handler)
@@ -302,7 +299,10 @@ def main() -> int:
     qh.awaitTermination()
     # crash-window redelivery: same batch, same epoch — the versioned
     # merger rewrites v1 idempotently; an append sink would double-count
-    handler(slices[1].select("user_id"), 1)
+    handler(
+        ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1).select("user_id"),
+        1,
+    )
     users = spark.read.parquet(f"{state}/v2").select("user_id")
     a2 = users.agg(
         F.count("*").cast("bigint").alias("n"),
