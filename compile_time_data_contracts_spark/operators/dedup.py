@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _ivf_fingerprint
+from .similarity import _hadoop_exists, _ivf_fingerprint
 
 __all__ = [
     "normalize_text",
@@ -668,16 +668,18 @@ def minhash_index_reuse_or_build(
 
     spark = df.sparkSession
     fp = _ivf_fingerprint(df, id_col)
+    stale = not _hadoop_exists(spark, f"{index_path}/meta")
     try:
-        m = spark.read.parquet(f"{index_path}/meta").first()
-        stale = m is None or (
-            (int(m["n_docs"]), m["max_id"]) != fp
-            or m["id_col"] != id_col
-            or (int(m["shingle_n"]), int(m["num_hashes"]), int(m["bands"]))
-            != (n, num_hashes, bands)
-        )
+        if not stale:
+            m = spark.read.parquet(f"{index_path}/meta").first()
+            stale = m is None or (
+                (int(m["n_docs"]), m["max_id"]) != fp
+                or m["id_col"] != id_col
+                or (int(m["shingle_n"]), int(m["num_hashes"]), int(m["bands"]))
+                != (n, num_hashes, bands)
+            )
     except AnalysisException:
-        # missing index / unreadable-as-parquet meta -> build.  ONLY the
+        # unreadable-as-parquet meta -> build.  ONLY the
         # analysis error: a transient storage fault (permissions,
         # network) must surface, not silently trigger a full-corpus
         # rebuild over a perfectly valid index

@@ -913,13 +913,41 @@ def _leaf_dir(spark, root: str, t, meta_cols: tuple) -> str:
     return root + "/" + "/".join(parts)
 
 
-def _hadoop_delete(spark, path: str) -> bool:
-    """Recursively delete ``path`` via the Hadoop FS API (works for any
-    scheme the session can reach).  Returns whether the path existed —
-    callers that KNOW it must exist treat False as an error instead of
-    silently skipping (the leaf-path-mismatch failure mode)."""
+def _hadoop_fs(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the Hadoop FS API, which
+    works for any scheme the session can reach."""
     p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _hadoop_exists(spark, path: str) -> bool:
+    """Whether ``path`` exists.  The cold-index probes ask this before
+    reading an index's meta: a failing ``spark.read`` is not silent
+    once the session has run an ``observe()`` — Spark's observation
+    listener logs its full stack trace at ERROR."""
+    fs, p = _hadoop_fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def _read_optional(spark, path: str):
+    """``spark.read.parquet(path)`` of an optional index table (a PQ
+    layer, stream bookkeeping), or None when the path does not exist or
+    does not read as parquet.  Existence is asked first, for the reason
+    :func:`_hadoop_exists` gives."""
+    if not _hadoop_exists(spark, path):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def _hadoop_delete(spark, path: str) -> bool:
+    """Recursively delete ``path`` via the Hadoop FS API.  Returns
+    whether the path existed — callers that KNOW it must exist treat
+    False as an error instead of silently skipping (the
+    leaf-path-mismatch failure mode)."""
+    fs, p = _hadoop_fs(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
         return True
@@ -988,11 +1016,9 @@ def ivf_delete(
     from .materialize import pin as _pin
     pred = _partition_pred(touched, meta_cols)
     layers = [(f"{index_path}/vectors", vecs)]
-    try:
-        codes = spark.read.parquet(f"{index_path}/pq/codes")
+    codes = _read_optional(spark, f"{index_path}/pq/codes")
+    if codes is not None:  # else a plain IVF index: no compressed layer
         layers.append((f"{index_path}/pq/codes", codes))
-    except AnalysisException:
-        pass  # plain IVF index — no compressed layer to rewrite
 
     n_deleted = (
         vecs.filter(pred).join(ids, id_col, "semi").count()
@@ -1081,11 +1107,8 @@ def ivf_compact(
         "partitions_compacted": 0, "files_before": 0, "files_after": 0,
     }
     roots = [f"{index_path}/vectors"]
-    try:
-        spark.read.parquet(f"{index_path}/pq/codes").schema
-        roots.append(f"{index_path}/pq/codes")
-    except AnalysisException:
-        pass  # plain IVF index
+    if _read_optional(spark, f"{index_path}/pq/codes") is not None:
+        roots.append(f"{index_path}/pq/codes")  # else a plain IVF index
     for root in roots:
         st = compact_parquet(
             spark, root, target_file_bytes, partitioned=True
@@ -1147,12 +1170,8 @@ def ivf_stream_maintainer(
     """
 
     def _ids(spark, path: str) -> set:
-        try:
-            return {
-                int(r.batch_id) for r in spark.read.parquet(path).collect()
-            }
-        except AnalysisException:
-            return set()
+        ids = _read_optional(spark, path)
+        return set() if ids is None else {int(r.batch_id) for r in ids.collect()}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1172,12 +1191,7 @@ def ivf_stream_maintainer(
                 spark.createDataFrame(
                     [(int(batch_id),)], "batch_id long"
                 ).write.mode("append").parquet(started_path)
-            has_pq = True
-            try:
-                spark.read.parquet(f"{index_path}/pq/meta").schema
-            except AnalysisException:
-                has_pq = False
-            if has_pq:
+            if _read_optional(spark, f"{index_path}/pq/meta") is not None:
                 pq_append(spark, index_path, batch_df, id_col, vec_col)
             else:
                 ivf_append(spark, index_path, batch_df, id_col, vec_col)
@@ -1311,7 +1325,8 @@ def ivf_drift(
     base_rows = None
     reused = False
     try:
-        cached = spark.read.parquet(base_path).collect()
+        cached_df = _read_optional(spark, base_path)
+        cached = cached_df.collect() if cached_df is not None else []
         if cached and all(
             int(r["fp_n"]) == fp_n and str(r["fp_max"]) == fp_max
             for r in cached
@@ -1461,10 +1476,8 @@ def ivf_stats(spark, index_path: str) -> dict:
     sizes = [int(r["count"]) for r in leaf]
     nonempty_clusters = len({r["cluster"] for r in leaf})
     n_files, n_leaves, _ = _leaf_file_stats(f"{index_path}/vectors")
-    try:
-        pm = spark.read.parquet(f"{index_path}/pq/meta").first()
-    except AnalysisException:
-        pm = None  # plain IVF index
+    pm_df = _read_optional(spark, f"{index_path}/pq/meta")
+    pm = pm_df.first() if pm_df is not None else None  # None: plain IVF
     # a present pq/meta missing m/ksub is a malformed layer — surface
     # the KeyError rather than reporting has_pq=False over real codes
     pq_meta = (
@@ -1581,19 +1594,17 @@ def ivf_maintain(
         spark, index_path, batch_df, id_col, vec_col,
         distortion_ratio_max, tvd_max,
     )
-    try:
-        pq = spark.read.parquet(f"{index_path}/pq/meta").first()
-        if pq is None:
-            # a present-but-empty pq/meta is a torn write, not "no PQ
-            # layer": appending only the vector layer would silently
-            # exclude the batch from compressed searches forever (the
-            # pq_append / stream-maintainer failure convention)
-            raise ValueError(
-                f"ivf_maintain: empty pq/meta at {index_path}; "
-                "rebuild the PQ layer with ivf_pq_build_or_reuse"
-            )
-    except AnalysisException:
-        pq = None
+    pq_df = _read_optional(spark, f"{index_path}/pq/meta")
+    pq = pq_df.first() if pq_df is not None else None
+    if pq_df is not None and pq is None:
+        # a present-but-empty pq/meta is a torn write, not "no PQ
+        # layer": appending only the vector layer would silently
+        # exclude the batch from compressed searches forever (the
+        # pq_append / stream-maintainer failure convention)
+        raise ValueError(
+            f"ivf_maintain: empty pq/meta at {index_path}; "
+            "rebuild the PQ layer with ivf_pq_build_or_reuse"
+        )
     if drift["needs_refit"]:
         fvec = F.col(vec_col).cast("array<float>").alias(vec_col)
         vecs = spark.read.parquet(f"{index_path}/vectors").select(
@@ -1973,17 +1984,19 @@ def ivf_build_or_reuse(
 
         index_path = scratch_dir("ctdc-ivf-")
     fp = _ivf_fingerprint(df, id_col)
+    stale = not _hadoop_exists(spark, f"{index_path}/meta")
     try:
-        m, stored_cols, stored_k, legacy = _ivf_meta(spark, index_path)
-        stale = (
-            m is None
-            or legacy
-            or (int(m["n"]), m["max_id"]) != fp
-            or stored_cols != tuple(meta_cols)
-            or stored_k != n_clusters
-        )
+        if not stale:
+            m, stored_cols, stored_k, legacy = _ivf_meta(spark, index_path)
+            stale = (
+                m is None
+                or legacy
+                or (int(m["n"]), m["max_id"]) != fp
+                or stored_cols != tuple(meta_cols)
+                or stored_k != n_clusters
+            )
     except AnalysisException:
-        # missing/unreadable index -> build; transient storage faults
+        # unreadable index -> build; transient storage faults
         # (permissions, network) surface instead of silently triggering
         # a rebuild over a valid index (the minhash reuse convention)
         stale = True
@@ -2380,48 +2393,6 @@ def embedding_dim_stats(
     )
 
 
-def normalize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "z_embedding",
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Dimension-wise z-score normalization: x -> (x - mean_d)/std_d.
-
-    The stats table (from :func:`embedding_dim_stats`, or passed in when
-    already persisted) is dims-sized, so it collapses to an array
-    BROADCAST back to every row — the corpus is touched once, no join
-    shuffle.  Zero-variance dims pass through centered (std 0 -> z 0).
-    """
-    stats = stats if stats is not None else embedding_dim_stats(df, vec_col)
-    # collect_list order is not preserved across the agg shuffle;
-    # array_sort on (dim, ...) structs pins dimension order
-    packed = stats.agg(
-        F.array_sort(
-            F.collect_list(F.struct("dim", "mean", "std"))
-        ).alias("__s")
-    ).select(
-        F.transform("__s", lambda s: s["mean"]).alias("__means"),
-        F.transform("__s", lambda s: s["std"]).alias("__stds"),
-    )
-    return (
-        df.crossJoin(F.broadcast(packed))
-        .withColumn(
-            out_col,
-            F.zip_with(
-                F.zip_with(
-                    F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                    F.col("__means"),
-                    lambda x, m: x - m,
-                ),
-                F.col("__stds"),
-                lambda c, s: F.when(s > 0, c / s).otherwise(F.lit(0.0)),
-            ),
-        )
-        .drop("__means", "__stds")
-    )
-
-
 # =========================================================================
 # Product quantization (PQ) — compressed-domain ANN
 # =========================================================================
@@ -2653,6 +2624,8 @@ def ivf_pq_build_or_reuse(
     fp = _ivf_fingerprint(df, id_col)
 
     def _ivf_stale() -> bool:
+        if not _hadoop_exists(spark, f"{index_path}/meta"):
+            return True
         try:
             meta, stored_cols, stored_k, legacy = _ivf_meta(
                 spark, index_path
@@ -2668,6 +2641,8 @@ def ivf_pq_build_or_reuse(
             return True
 
     def _pq_stale() -> bool:
+        if not _hadoop_exists(spark, f"{index_path}/pq/meta"):
+            return True
         try:
             pq_meta = spark.read.parquet(f"{index_path}/pq/meta").first()
             pq_d = pq_meta.asDict() if pq_meta is not None else {}
@@ -2781,10 +2756,8 @@ def pq_append(
     schedule a periodic full rebuild as the compaction step, the same
     guidance as ``ivf_append``.
     """
-    try:
-        pq_meta = spark.read.parquet(f"{index_path}/pq/meta").first()
-    except AnalysisException:
-        pq_meta = None
+    pq_df = _read_optional(spark, f"{index_path}/pq/meta")
+    pq_meta = pq_df.first() if pq_df is not None else None
     if pq_meta is None:
         raise ValueError(
             f"pq_append: no PQ layer at {index_path} — build one with "

@@ -29,13 +29,12 @@ Run:  PYTHONPATH=. python examples/ann_lifecycle_demo.py [sf_dir]
 
 from __future__ import annotations
 
-import shutil
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
 from compile_time_data_contracts_spark.catalog import load_table
+from compile_time_data_contracts_spark.operators.materialize import scratch_dir
 from compile_time_data_contracts_spark.operators.similarity import (
     ivf_build,
     ivf_compact,
@@ -55,8 +54,7 @@ def main() -> None:
     spark = local_session("ctdc-ann-lifecycle", cores=8)
 
     emb = load_table(spark, sf, "embeddings")
-    idx = tempfile.mkdtemp(prefix="ctdc_ann_demo_")
-    shutil.rmtree(idx)
+    idx = scratch_dir("ctdc_ann_demo_")
 
     # 1. build on the initial corpus (the even half)
     initial = emb.filter(F.col("vec_id") % 2 == 0)
@@ -137,7 +135,6 @@ def main() -> None:
     overlap = exact.join(approx, "vec_id", "semi").count()
     print(f"final recall vs exact: {overlap}/5")
 
-    shutil.rmtree(idx, ignore_errors=True)
     spark.stop()
 
 

@@ -9,7 +9,6 @@ Run:  PYTHONPATH=. python examples/demo_pipeline.py
 from __future__ import annotations
 
 import os
-import tempfile
 from dataclasses import dataclass
 from typing import Optional
 
@@ -22,6 +21,7 @@ from compile_time_data_contracts_spark import (
     contract,
 )
 from compile_time_data_contracts_spark.contracts.types import int32
+from compile_time_data_contracts_spark.operators.materialize import scratch_dir
 
 
 # CtdcPoc.scala:20-24 — the producer and contract record shapes
@@ -56,7 +56,7 @@ def main() -> None:
 
     from compile_time_data_contracts_spark.session import local_session
 
-    tmp = tempfile.mkdtemp(prefix="ctdc_demo_")
+    tmp = scratch_dir("ctdc_demo_")
     csv = os.path.join(tmp, "users.csv")
     with open(csv, "w") as f:
         f.write("id,email,age,segment\n1,a@b.com,21,S\n2,b@c.com,,L\n")

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import dataclasses
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -32,6 +31,7 @@ from compile_time_data_contracts_spark.catalog import load_table
 from compile_time_data_contracts_spark.contracts.policies import SchemaPolicy
 from compile_time_data_contracts_spark.contracts.shape import contract
 from compile_time_data_contracts_spark.contracts.types import int32
+from compile_time_data_contracts_spark.operators.materialize import scratch_dir
 from compile_time_data_contracts_spark.operators.dedup import (
     connected_components_star,
     keep_best_dedup,
@@ -152,7 +152,7 @@ def main() -> None:
 
     # 8. contract-pinned sink: the schema proof runs BEFORE the write;
     # then compact the output (streaming appends fragment over time)
-    dest = tempfile.mkdtemp(prefix="ctdc-curated-")
+    dest = scratch_dir("ctdc-curated-")
     write_df(out, Sink(CuratedDoc, dest), SchemaPolicy.EXACT)
     from compile_time_data_contracts_spark.sources.layout import compact_parquet
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -48,19 +47,19 @@ def test_zorder_value_interleaves_bits(spark):
     assert z == (1 << 2) | (1 << 6) | (1 << 3) | (1 << 5)
 
 
-def test_zorder_layout_bounds_both_dimensions(spark):
+def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
     # uniform 64x64 grid
     grid = spark.range(64 * 64).select(
         (F.col("id") % 64).alias("a"),
         (F.col("id") / 64).cast("long").alias("b"),
     )
-    zdir = tempfile.mkdtemp(prefix="ctdc-zorder-")
+    zdir = str(tmp_path / "zorder")
     write_zordered(grid, zdir, "a", "b", bits=6, n_files=16)
     zranges = _file_ranges(zdir, ("a", "b"))
     assert len(zranges) >= 8
 
     # single-key layout for contrast: sorted by a only
-    ldir = tempfile.mkdtemp(prefix="ctdc-linear-")
+    ldir = str(tmp_path / "linear")
     (
         grid.repartitionByRange(16, "a")
         .sortWithinPartitions("a")

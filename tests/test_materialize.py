@@ -124,16 +124,18 @@ def test_reuse_race_publishes_one_complete_root(temp_root):
 
 
 def test_temp_paths_have_one_home():
-    """Only operators/materialize.py asks the OS for a temp location."""
-    pkg = pathlib.Path(__file__).resolve().parents[1] / (
-        "compile_time_data_contracts_spark"
-    )
+    """Only operators/materialize.py asks the OS for a temp location or
+    names a fixed one, across the package, the tools and the examples."""
+    repo = pathlib.Path(__file__).resolve().parents[1]
     callers = sorted(
-        str(p.relative_to(pkg))
-        for p in pkg.rglob("*.py")
-        if "gettempdir" in p.read_text() or "mkdtemp" in p.read_text()
+        str(p.relative_to(repo))
+        for d in ("compile_time_data_contracts_spark", "tools", "examples")
+        for p in (repo / d).rglob("*.py")
+        if any(t in p.read_text() for t in ("gettempdir", "mkdtemp", '"/tmp/'))
     )
-    assert callers == [os.path.join("operators", "materialize.py")]
+    assert callers == [
+        os.path.join("compile_time_data_contracts_spark", "operators", "materialize.py")
+    ]
 
 
 # every registry query whose cache goes through materialize.reuse

@@ -43,10 +43,15 @@ def _write_embeddings(spark, sf_dir, extra_rows=()):
 
 
 def test_q143_reuses_appended_index_and_rebuilds_on_change(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
+    import tempfile
+
     import __spark_entry__ as entrymod
 
+    # a private gettempdir() (as test_materialize's temp_root does): the
+    # index cache is found only by this test and removed with tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     sf_dir = str(tmp_path / "sf_e")
     os.makedirs(sf_dir)
     _write_embeddings(spark, sf_dir)

@@ -347,7 +347,7 @@ def test_contract_pinned_streaming_sink(spark, tmp_path):
     assert "surprise" in str(exc.value) or "SchemaMismatch" in str(exc.value)
 
 
-def test_transform_with_state_gated_on_protobuf(spark):
+def test_transform_with_state_gated_on_protobuf(spark, tmp_path):
     """The transformWithState path needs protobuf (its Python
     state-server protocol).  When absent the operator must refuse with
     a clear error instead of crashing the streaming runner; when
@@ -361,9 +361,7 @@ def test_transform_with_state_gated_on_protobuf(spark):
     )
 
     if not tws_available():
-        import tempfile
-
-        feed = tempfile.mkdtemp(prefix="ctdc-tws-guard-")
+        feed = str(tmp_path / "tws-guard")
         spark.createDataFrame(
             [(1, 1.0)], "user_id long, value double"
         ).write.mode("overwrite").parquet(feed)

@@ -82,7 +82,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     # a private temp dir per run, inherited by the Python workers: the
-    # registry's build-once caches live under gettempdir()
+    # registry's build-once caches live in the temp dir
     # (materialize.reuse_dir).  Those built by materialize.reuse publish
     # by rename, but the library index operators build in place at their
     # path and q136 merges into its published snapshot, so two

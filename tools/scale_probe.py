@@ -6,9 +6,9 @@ auto-bits sizing never execute at representative n.  This probe runs
 them at >= 100k x 64:
 
   1. generates a seeded synthetic embedding table (100k vectors, 64-dim,
-     with 1,000 planted near-duplicate pairs at cosine >= ~0.95) to a
-     /tmp parquet — /root/testdata is read-only and has no table this
-     size,
+     with 1,000 planted near-duplicate pairs at cosine >= ~0.95),
+     built once per (n, dim) through `materialize.reuse` — the fixture
+     tables have none this size,
   2. runs the `cosine_pairs` dispatcher with a lowered broadcast bound
      so it provably takes the block-grid path (plan-asserted:
      FlatMapGroupsInPandas cells, no full-matrix broadcast MapInPandas),
@@ -34,20 +34,19 @@ Usage: python tools/scale_probe.py [n_vectors] [dim]   (default 100000 64)
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_DEFAULT = 100_000
-DIM_DEFAULT = 64
+from scalebench import args, finish, timed  # noqa: E402
+
 PLANTED_PAIRS = 1_000
 THRESHOLD = 0.9
 SEED = 20260813
+# bump when generate() changes, so the cached corpus is rebuilt
+VERSION = 2
 # above this, the all-pairs exact block grid is O(n^2) and the probe
 # switches to planted-pair recall + independent sample re-verification
 BLOCKED_MAX = 200_000
@@ -104,12 +103,15 @@ def generate(spark, path: str, n: int, dim: int) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else DIM_DEFAULT
+def main() -> int:
+    n, dim = args(100_000, 64)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import (
+        reuse,
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.similarity import (
         cosine_pairs,
@@ -120,12 +122,14 @@ def main() -> None:
     spark = local_session("ctdc-scale-probe", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n": n + PLANTED_PAIRS, "dim": dim, "threshold": THRESHOLD}
-    path = f"/tmp/ctdc-scale-probe-v2-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
+
+    def build(stage: str) -> None:
+        with timed(results, "generate_sec"):
+            generate(spark, os.path.join(stage, "data"), n, dim)
+
+    want = {"n": n, "dim": dim, "seed": SEED, "version": VERSION}
+    root, _, _ = reuse("probe-vectors", f"{n}x{dim}", want, build)
+    emb = spark.read.parquet(os.path.join(root, "data"))
     total = emb.count()
     assert total == n + PLANTED_PAIRS
 
@@ -136,17 +140,19 @@ def main() -> None:
     planted_found = PLANTED_PAIRS
     if not big:
         # --- 1. exact block-grid path, forced below the broadcast bound
-        t0 = time.perf_counter()
-        blocked = cosine_pairs(
-            emb, THRESHOLD, max_broadcast_bytes=16 << 20, n=total, dim=dim
-        )
-        plan = plan_of(blocked)
-        results["blocked_plan_cells"] = "FlatMapGroupsInPandas" in plan
-        results["blocked_plan_no_full_broadcast"] = "MapInPandas" not in plan
-        exact_pairs = {
-            (r.vec_a, r.vec_b) for r in blocked.collect()
-        }
-        results["blocked_sec"] = round(time.perf_counter() - t0, 2)
+        with timed(results, "blocked_sec"):
+            blocked = cosine_pairs(
+                emb, THRESHOLD, max_broadcast_bytes=16 << 20, n=total,
+                dim=dim,
+            )
+            plan = plan_of(blocked)
+            results["blocked_plan_cells"] = "FlatMapGroupsInPandas" in plan
+            results["blocked_plan_no_full_broadcast"] = (
+                "MapInPandas" not in plan
+            )
+            exact_pairs = {
+                (r.vec_a, r.vec_b) for r in blocked.collect()
+            }
         results["exact_pairs"] = len(exact_pairs)
         # every planted pair must be found by the exact path (sanity: the
         # perturbation keeps planted cosine far above the threshold)
@@ -164,12 +170,11 @@ def main() -> None:
         20, max(6, math.ceil(math.log2(total)) - 3)
     )
     results["auto_bits_scales"] = chosen_bits > 8
-    t0 = time.perf_counter()
-    lsh = cosine_pairs_lsh(
-        emb, THRESHOLD, bits=None, tables=16, probes="auto", dim=dim
-    )
-    lsh_pairs = {(r.vec_a, r.vec_b) for r in lsh.collect()}
-    results["lsh_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "lsh_sec"):
+        lsh = cosine_pairs_lsh(
+            emb, THRESHOLD, bits=None, tables=16, probes="auto", dim=dim
+        )
+        lsh_pairs = {(r.vec_a, r.vec_b) for r in lsh.collect()}
     results["lsh_pairs"] = len(lsh_pairs)
 
     # --- 3. recall contract (q106-style) --------------------------------
@@ -212,7 +217,7 @@ def main() -> None:
     results["precision_violations"] = precision_violations
 
     # --- 4. IVF build/search at representative n ------------------------
-    import shutil
+    import re
 
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_build,
@@ -220,23 +225,19 @@ def main() -> None:
         topk_cosine,
     )
 
-    idx = f"/tmp/ctdc-scale-probe-ivf-{n}x{dim}"
-    shutil.rmtree(idx, ignore_errors=True)
-    t0 = time.perf_counter()
-    ivf_build(emb, idx, n_clusters=256, sample_size=20000)
-    results["ivf_build_sec"] = round(time.perf_counter() - t0, 2)
+    idx = scratch_dir("ctdc-probe-ivf-")
+    with timed(results, "ivf_build_sec"):
+        ivf_build(emb, idx, n_clusters=256, sample_size=20000)
     query = emb.filter(F.col("vec_id") == 0)
-    t0 = time.perf_counter()
-    approx = ivf_search(spark, idx, query, k=10, nprobe=16)
-    approx_plan = plan_of(approx)
-    approx_ids = [r.vec_id for r in approx.collect()]
-    results["ivf_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "ivf_search_sec"):
+        approx = ivf_search(spark, idx, query, k=10, nprobe=16)
+        approx_plan = plan_of(approx)
+        approx_ids = [r.vec_id for r in approx.collect()]
     results["ivf_partition_pruned"] = bool(
-        __import__("re").search(r"PartitionFilters: \[[^\]]*cluster", approx_plan)
+        re.search(r"PartitionFilters: \[[^\]]*cluster", approx_plan)
     )
-    t0 = time.perf_counter()
-    exact_ids = [r.vec_id for r in topk_cosine(emb, query, k=10).collect()]
-    results["exact_topk_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "exact_topk_sec"):
+        exact_ids = [r.vec_id for r in topk_cosine(emb, query, k=10).collect()]
     results["ivf_recall_at_10"] = round(
         len(set(approx_ids) & set(exact_ids)) / 10.0, 2
     )
@@ -259,16 +260,15 @@ def main() -> None:
     # rerank; at 10^5 the 8-byte m=8 code suffices
     pq_m = 16 if big else 8
     pq_rerank = 2000 if big else 1000
-    t0 = time.perf_counter()
-    pq_ids = [
-        r.vec_id
-        for r in pq_topk(
-            emb, query, k=10, m=pq_m, ksub=256, rerank=pq_rerank
-        ).collect()
-    ]
+    with timed(results, "pq_search_sec"):
+        pq_ids = [
+            r.vec_id
+            for r in pq_topk(
+                emb, query, k=10, m=pq_m, ksub=256, rerank=pq_rerank
+            ).collect()
+        ]
     results["pq_m"] = pq_m
     results["pq_rerank"] = pq_rerank
-    results["pq_search_sec"] = round(time.perf_counter() - t0, 2)
     results["pq_recall_at_10"] = round(
         len(set(pq_ids) & set(exact_ids)) / 10.0, 2
     )
@@ -291,10 +291,9 @@ def main() -> None:
         .otherwise(F.pmod(F.col("vec_id") - n, F.lit(64)))
         .cast("int"),
     )
-    t0 = time.perf_counter()
-    kept = semantic_dedup(labeled, threshold=THRESHOLD)
-    n_kept = kept.count()
-    results["semdedup_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "semdedup_sec"):
+        kept = semantic_dedup(labeled, threshold=THRESHOLD)
+        n_kept = kept.count()
     results["semdedup_kept"] = n_kept
     planted_dropped = total - n_kept
     results["semdedup_dropped"] = planted_dropped
@@ -321,13 +320,8 @@ def main() -> None:
             and results["blocked_plan_no_full_broadcast"]
         )
     results["ok"] = ok
-
-    from scalebench import merge_entry
-
-    doc = merge_entry(f"vectors_n{total}", results)
-    print(json.dumps(doc))
-    sys.exit(0 if ok else 1)
+    return finish(spark, {f"vectors_n{total}": results}, ok)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

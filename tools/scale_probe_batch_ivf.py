@@ -36,14 +36,15 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
     N_CLUSTERS,
     N_PLANTS,
-    generate,
+    cluster_ids,
+    corpus,
+    index_path,
 )
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 NPROBE = 16
 K = 10
@@ -51,9 +52,7 @@ RECALL_FLOOR = 0.85
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 1_000
+    n, dim, n_queries = args(1_000_000, 64, 1_000)
 
     from pyspark.sql import functions as F
 
@@ -79,25 +78,19 @@ def main() -> int:
         "nprobe": NPROBE,
         "k": K,
     }
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
+    emb = corpus(spark, n, dim, results)
 
     # build-or-reuse the shared (cluster, label) index — the same
     # artifact the filtered probe searches
-    idx = f"/tmp/ctdc-scale-probe-fivf-idx-{n}x{dim}"
-    t0 = time.perf_counter()
-    # sample_size matches scale_probe_filtered_ivf's build exactly, so
-    # the persisted artifact is IDENTICAL regardless of which probe
-    # runs first — the shared-index claim holds in both orders
-    ivf_build_or_reuse(
-        emb, idx, n_clusters=N_CLUSTERS, meta_cols=("label",),
-        sample_size=20000,
-    )
-    results["build_or_reuse_sec"] = round(time.perf_counter() - t0, 2)
+    idx = index_path(n, dim)
+    with timed(results, "build_or_reuse_sec"):
+        # sample_size matches scale_probe_filtered_ivf's build exactly,
+        # so the persisted artifact is IDENTICAL regardless of which
+        # probe runs first — the shared-index claim holds in both orders
+        ivf_build_or_reuse(
+            emb, idx, n_clusters=N_CLUSTERS, meta_cols=("label",),
+            sample_size=20000,
+        )
 
     # deterministic query batch: an id stride across the corpus, plus
     # the planted family's seed query so at least one query has a
@@ -107,44 +100,28 @@ def main() -> int:
     queries = emb.filter(F.col("vec_id").isin(qids))
 
     # --- batch search: one pruned scan for all queries -------------------
-    t0 = time.perf_counter()
-    batch = ivf_search_batch(
-        spark, idx, queries, k=K, nprobe=NPROBE, query_id_col="vec_id"
-    )
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    got: dict = {}
-    for r in batch.collect():
-        got.setdefault(r.query_id, set()).add(r.vec_id)
-    results["batch_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "batch_search_sec"):
+        batch = ivf_search_batch(
+            spark, idx, queries, k=K, nprobe=NPROBE, query_id_col="vec_id"
+        )
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        got: dict = {}
+        for r in batch.collect():
+            got.setdefault(r.query_id, set()).add(r.vec_id)
 
     results["plan_scans"] = len(
         re.findall(r"Scan parquet[^\n]*", plan)
     )
     pf = re.search(r"PartitionFilters: \[[^\]]*\]", plan)
-    pf_text = pf.group(0) if pf else ""
-    probed_ids = re.search(
-        r"cluster#\d+ (?:INSET ([0-9, ]+)|IN \(([0-9, ]*)\))", pf_text
-    )
-    results["cells_probed"] = len(
-        [
-            x
-            for x in (
-                (probed_ids.group(1) or probed_ids.group(2)).split(",")
-                if probed_ids
-                else []
-            )
-            if x.strip()
-        ]
-    )
+    results["cells_probed"] = len(cluster_ids(pf.group(0) if pf else ""))
 
     # --- exact ground truth: ONE corpus pass for every query -------------
-    t0 = time.perf_counter()
-    exact: dict = {}
-    for r in topk_cosine_multi(
-        emb, queries, k=K, query_id_col="vec_id"
-    ).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
-    results["exact_batch_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "exact_batch_sec"):
+        exact: dict = {}
+        for r in topk_cosine_multi(
+            emb, queries, k=K, query_id_col="vec_id"
+        ).collect():
+            exact.setdefault(r.query_id, set()).add(r.vec_id)
 
     recalls = [
         len(got.get(q, set()) & exact[q]) / len(exact[q])
@@ -187,9 +164,7 @@ def main() -> int:
         and results["speedup_vs_sequential_est"] > 1
     )
     results["ok"] = bool(ok)
-    merge_entry(f"batch_ivf_n{total}_q{n_queries}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(spark, {f"batch_ivf_n{total}_q{n_queries}": results}, ok)
 
 
 if __name__ == "__main__":

@@ -33,14 +33,14 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
     N_CLUSTERS,
     N_PLANTS,
-    generate,
+    corpus,
+    index_path,
 )
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 NPROBE = 16
 K = 10
@@ -62,9 +62,7 @@ RECALL_FLOOR = 0.85
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 200
+    n, dim, n_queries = args(1_000_000, 64, 200)
 
     from pyspark.sql import functions as F
 
@@ -86,52 +84,43 @@ def main() -> int:
         "n_clusters": N_CLUSTERS, "nprobe": NPROBE, "k": K,
         "m": M, "ksub": KSUB, "rerank": RERANK,
     }
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
-    idx = f"/tmp/ctdc-scale-probe-fivf-idx-{n}x{dim}"
+    emb = corpus(spark, n, dim, results)
+    idx = index_path(n, dim)
 
     stride = max(1, n // n_queries)
     qids = [i * stride for i in range(n_queries - 1)] + [n]
     queries = emb.filter(F.col("vec_id").isin(qids))
 
+    def search(qs):
+        return ivf_pq_search_batch(
+            emb, qs, k=K, n_clusters=N_CLUSTERS, nprobe=NPROBE,
+            m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
+            meta_cols=("label",), query_id_col="vec_id",
+        )
+
     # first call pays any missing index layer; time it apart from the
     # steady-state batch search
-    t0 = time.perf_counter()
-    ivf_pq_search_batch(
-        emb, queries.limit(1), k=K, n_clusters=N_CLUSTERS, nprobe=NPROBE,
-        m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
-        meta_cols=("label",), query_id_col="vec_id",
-    ).collect()
-    results["ensure_index_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "ensure_index_sec"):
+        search(queries.limit(1)).collect()
 
-    t0 = time.perf_counter()
-    batch = ivf_pq_search_batch(
-        emb, queries, k=K, n_clusters=N_CLUSTERS, nprobe=NPROBE,
-        m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
-        meta_cols=("label",), query_id_col="vec_id",
-    )
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    got: dict = {}
-    for r in batch.collect():
-        got.setdefault(r.query_id, set()).add(r.vec_id)
-    results["batch_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "batch_search_sec"):
+        batch = search(queries)
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        got: dict = {}
+        for r in batch.collect():
+            got.setdefault(r.query_id, set()).add(r.vec_id)
 
     results["plan_scans"] = len(re.findall(r"Scan parquet[^\n]*", plan))
     results["plan_prunes_codes_on_cluster"] = bool(
         re.search(r"PartitionFilters: \[[^\]]*cluster", plan)
     )
 
-    t0 = time.perf_counter()
-    exact: dict = {}
-    for r in topk_cosine_multi(
-        emb, queries, k=K, query_id_col="vec_id"
-    ).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
-    results["exact_batch_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "exact_batch_sec"):
+        exact: dict = {}
+        for r in topk_cosine_multi(
+            emb, queries, k=K, query_id_col="vec_id"
+        ).collect():
+            exact.setdefault(r.query_id, set()).add(r.vec_id)
 
     recalls = [
         len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact
@@ -169,9 +158,9 @@ def main() -> int:
         and results["speedup_vs_sequential_est"] > 1
     )
     results["ok"] = bool(ok)
-    merge_entry(f"batch_ivfpq_n{total}_q{n_queries}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(
+        spark, {f"batch_ivfpq_n{total}_q{n_queries}": results}, ok
+    )
 
 
 if __name__ == "__main__":

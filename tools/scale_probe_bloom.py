@@ -7,8 +7,9 @@ The direct evidence is shuffle volume, which the Spark UI REST API
 exposes per stage (`shuffleWriteRecords`).  This probe:
 
   1. generates a 2x10^7-row fact table over 10^6 join keys plus a
-     10^6-row dimension, to /tmp parquet (generation outside the timed
-     region); a selective dim filter keeps ~2% of the keys,
+     10^6-row dimension, built once per scale through
+     `materialize.reuse` (outside the timed region); a selective dim
+     filter keeps ~2% of the keys,
   2. runs the SAME shuffle join twice — Bloom filter off, then on —
      with auto-broadcast disabled in both runs (the 100 TB regime where
      the filtered dim is past the broadcast threshold; with a broadcast
@@ -29,16 +30,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_DEFAULT = 20_000_000
+from scalebench import args, finish, timed  # noqa: E402
+
 N_KEYS = 1_000_000
 DIM_MOD = 50  # dim filter keeps keys where key % DIM_MOD == 0 (~2%)
 SHUFFLE_PARTITIONS = 256
+# bump when either generator changes, so the cached tables are rebuilt
+VERSION = 1
 
 
 def rest_json(base: str, path: str):
@@ -71,11 +73,12 @@ def group_shuffle(spark, group: str) -> tuple[int, int]:
     return records, nbytes
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
+def main() -> int:
+    (n,) = args(20_000_000)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import reuse
     from compile_time_data_contracts_spark.session import local_session
 
     spark = local_session(
@@ -104,16 +107,14 @@ def main() -> None:
         "shuffle_partitions": SHUFFLE_PARTITIONS,
     }
 
-    fact_path = f"/tmp/ctdc-scale-probe-bloom-{n}"
-    if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        spark.range(n).select(
-            F.pmod(F.xxhash64("id"), F.lit(N_KEYS)).cast("long").alias("key"),
-            F.col("id").alias("v"),
-        ).write.mode("overwrite").parquet(fact_path)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    dim_path = f"/tmp/ctdc-scale-probe-bloom-dim-{N_KEYS}"
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
+    def build_fact(stage: str) -> None:
+        with timed(results, "generate_sec"):
+            spark.range(n).select(
+                F.pmod(F.xxhash64("id"), F.lit(N_KEYS)).cast("long").alias("key"),
+                F.col("id").alias("v"),
+            ).write.parquet(os.path.join(stage, "data"))
+
+    def build_dim(stage: str) -> None:
         # The selective predicate must live on a NON-key attribute: a
         # filter on the join key itself (e.g. key % 50 == 0) is
         # transitively inferred onto the fact side by Catalyst's
@@ -125,7 +126,15 @@ def main() -> None:
             F.col("id").alias("key"),
             (F.col("id") * 2).alias("w"),
             F.pmod(F.xxhash64("id"), F.lit(DIM_MOD)).alias("attr"),
-        ).write.mode("overwrite").parquet(dim_path)
+        ).write.parquet(os.path.join(stage, "data"))
+
+    want = {"n_keys": N_KEYS, "dim_mod": DIM_MOD, "version": VERSION}
+    fact_root, _, _ = reuse(
+        "probe-bloom", str(n), {"n": n, **want}, build_fact
+    )
+    dim_root, _, _ = reuse("probe-bloom-dim", str(N_KEYS), want, build_dim)
+    fact_path = os.path.join(fact_root, "data")
+    dim_path = os.path.join(dim_root, "data")
 
     def run(group: str, bloom: bool):
         spark.conf.set(
@@ -140,22 +149,19 @@ def main() -> None:
             F.expr("bit_xor(xxhash64(key, v, w))").alias("chk"),
         )
         sc.setJobGroup(group, f"bloom={bloom}")
-        t0 = time.perf_counter()
-        (row,) = agg.collect()
-        wall = round(time.perf_counter() - t0, 2)
+        with timed(results, f"{group}_wall_sec"):
+            (row,) = agg.collect()
         plan = joined._jdf.queryExecution().executedPlan().toString()
-        return row.n, row.chk, wall, "might_contain" in plan
+        return row.n, row.chk, "might_contain" in plan
 
-    plain_n, plain_chk, plain_wall, plain_mc = run("plain", bloom=False)
-    bloom_n, bloom_chk, bloom_wall, bloom_mc = run("bloom", bloom=True)
+    plain_n, plain_chk, plain_mc = run("plain", bloom=False)
+    bloom_n, bloom_chk, bloom_mc = run("bloom", bloom=True)
     sc.setJobGroup("probe-misc", "probe bookkeeping")
 
     results["rows"] = plain_n
     results["results_equal"] = bool(
         plain_n == bloom_n and plain_chk == bloom_chk
     )
-    results["plain_wall_sec"] = plain_wall
-    results["bloom_wall_sec"] = bloom_wall
     results["plain_plan_has_might_contain"] = plain_mc
     results["bloom_plan_has_might_contain"] = bloom_mc
 
@@ -176,13 +182,8 @@ def main() -> None:
         and 0 < br < pr / 2
     )
     results["ok"] = ok
-
-    from scalebench import merge_entry
-
-    merge_entry(f"bloom_filter_n{n}", results)
-    print(json.dumps({"metric": "scale_probe_bloom", "results": results}))
-    sys.exit(0 if ok else 1)
+    return finish(spark, {f"bloom_filter_n{n}": results}, ok)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

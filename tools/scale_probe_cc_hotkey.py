@@ -32,15 +32,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
+    (n,) = args(1_000_000)
 
     from pyspark.sql import functions as F
 
@@ -93,30 +92,28 @@ def main() -> int:
             spark.sparkContext.setJobDescription(
                 f"cc-hotkey {kind} {strat} n={n}"
             )
-            t0 = time.time()
-            labels = connected_components_star(
-                pairs, windowed_min_max_edges=threshold
-            )
-            row = labels.agg(
-                F.count("*").alias("n_nodes"),
-                F.sum(
-                    (F.col("cluster_id") == F.lit(comp_min)).cast("long")
-                ).alias("n_in_star"),
-                F.countDistinct("cluster_id").alias("n_components"),
-            ).first()
-            dt = round(time.time() - t0, 3)
+            with timed(results[kind], f"sec_{strat}"):
+                labels = connected_components_star(
+                    pairs, windowed_min_max_edges=threshold
+                )
+                row = labels.agg(
+                    F.count("*").alias("n_nodes"),
+                    F.sum(
+                        (F.col("cluster_id") == F.lit(comp_min)).cast("long")
+                    ).alias("n_in_star"),
+                    F.countDistinct("cluster_id").alias("n_components"),
+                ).first()
             # star (n leaves + hub) + chain (64 nodes) = n + 65 nodes,
             # 2 components
             assert row["n_nodes"] == n + 65, row
             assert row["n_in_star"] == n + 1, row
             assert row["n_components"] == 2, row
-            results[kind][f"sec_{strat}"] = dt
-            print(f"{kind} [{strat}]: {dt} s, verified exact labeling")
 
-    for kind, res in results.items():
-        merge_entry(f"cc_hotkey_{kind}_n{n}", res)
-    spark.stop()
-    return 0
+    return finish(
+        spark,
+        {f"cc_hotkey_{kind}_n{n}": res for kind, res in results.items()},
+        True,
+    )
 
 
 if __name__ == "__main__":

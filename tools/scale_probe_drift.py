@@ -30,17 +30,16 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
     N_CLUSTERS,
     SEED,
-    generate,
+    VERSION,
+    corpus,
 )
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 BATCH = 50_000
 N_NEW_COMPONENTS = 8
@@ -78,52 +77,48 @@ def drifted_batch(spark, n: int, dim: int):
     return base.mapInPandas(gen, "vec_id long, embedding array<float>")
 
 
-def load_probe_frames(spark, n: int, dim: int, held_slices: int = 1):
-    """(emb, base, held_out, drifted) for the drift/autopilot probes:
-    the cached mixture corpus, its base slice, and the two
-    MATERIALIZED probe batches (a production drift check receives an
-    arrival batch as its own table — deriving them lazily would bill a
-    full-corpus filter scan to every timed call).  ``held_slices``
-    widens the held-out pool (each slice is ~5% of the corpus, capped
-    at BATCH rows per slice) for probes that need several full-size
-    batches; the base excludes every held slice.
+def load_probe_frames(spark, n: int, dim: int):
+    """(base, held_out, drifted) for the drift probe: the cached
+    mixture corpus's base slice, and the two MATERIALIZED probe
+    batches (a production drift check receives an arrival batch as its
+    own table — deriving them lazily would bill a full-corpus filter
+    scan to every timed call).  The base excludes the held slice.
 
     NOTE: the held-out slice must be COMPONENT-BLIND — vec_id % 20
     aliases with the 64-component mixture (gcd 4: the slice would
     cover only 16 components, a genuine mass relocation that ivf_drift
     correctly flags).  The id is hashed so the batch spans every
-    component.  Shared by scale_probe_drift and scale_probe_autopilot
-    so a fix to the slicing or cache paths cannot diverge."""
+    component."""
     from pyspark.sql import functions as F
 
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        generate(spark, path, n, dim)
-    emb = spark.read.parquet(path).select("vec_id", "embedding")
+    from compile_time_data_contracts_spark.operators.materialize import reuse
+
+    emb = corpus(spark, n, dim, {}).select("vec_id", "embedding")
     slice_col = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(20))
-    held_vals = list(range(7, 7 + held_slices))
-    base = emb.filter(~slice_col.isin(held_vals))
-    suffix = "" if held_slices == 1 else f"-s{held_slices}"
-    held_path = f"/tmp/ctdc-scale-probe-drift-batch-{n}x{dim}{suffix}"
-    if not os.path.exists(os.path.join(held_path, "_SUCCESS")):
-        parts = [
-            emb.filter(slice_col == v).limit(BATCH) for v in held_vals
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(held_path)
-    held_out = spark.read.parquet(held_path)
-    drift_path = f"/tmp/ctdc-scale-probe-drift-new-{n}x{dim}"
-    if not os.path.exists(os.path.join(drift_path, "_SUCCESS")):
-        drifted_batch(spark, n, dim).write.mode("overwrite").parquet(
-            drift_path
+    base = emb.filter(slice_col != 7)
+    want = {"n": n, "dim": dim, "seed": SEED, "version": VERSION}
+
+    def held(stage: str) -> None:
+        emb.filter(slice_col == 7).limit(BATCH).write.parquet(
+            os.path.join(stage, "data")
         )
-    drifted = spark.read.parquet(drift_path)
-    return emb, base, held_out, drifted
+
+    def new(stage: str) -> None:
+        drifted_batch(spark, n, dim).write.parquet(os.path.join(stage, "data"))
+
+    frames = [base]
+    for kind, build in (("probe-drift-held", held), ("probe-drift-new", new)):
+        root, _, _ = reuse(kind, f"{n}x{dim}", want, build)
+        frames.append(spark.read.parquet(os.path.join(root, "data")))
+    return frames
 
 
-def main(n: int = 1_000_000, dim: int = 64) -> None:
+def main() -> int:
+    n, dim = args(1_000_000, 64)
+
+    from compile_time_data_contracts_spark.operators.materialize import (
+        reuse_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
 
     from compile_time_data_contracts_spark.operators.similarity import (
@@ -137,39 +132,34 @@ def main(n: int = 1_000_000, dim: int = 64) -> None:
         "n": n, "dim": dim, "n_clusters": N_CLUSTERS, "batch": BATCH,
         "new_components": N_NEW_COMPONENTS,
     }
-    t0 = time.perf_counter()
-    _emb, base, held_out, drifted = load_probe_frames(spark, n, dim)
-    results["setup_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "setup_sec"):
+        base, held_out, drifted = load_probe_frames(spark, n, dim)
     # the index under watch: built on 95%, fingerprint-cached across
     # probe runs (drift never mutates it — only the baseline cache
     # inside it advances)
-    idx = f"/tmp/ctdc-scale-probe-drift-{n}x{dim}"
-    t0 = time.perf_counter()
-    ivf_build_or_reuse(base, idx, n_clusters=N_CLUSTERS)
-    results["build_or_reuse_sec"] = round(time.perf_counter() - t0, 2)
+    idx = reuse_dir("probe-drift-idx", f"{n}x{dim}|v{VERSION}")
+    with timed(results, "build_or_reuse_sec"):
+        ivf_build_or_reuse(base, idx, n_clusters=N_CLUSTERS)
 
     # drop any previous run's baseline so cold cost is really measured
     import shutil
 
     shutil.rmtree(f"{idx}/drift_baseline", ignore_errors=True)
 
-    t0 = time.perf_counter()
-    d_cold = ivf_drift(spark, idx, held_out)
-    results["baseline_cold_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "baseline_cold_sec"):
+        d_cold = ivf_drift(spark, idx, held_out)
     assert not d_cold["reused_baseline"]
     assert not d_cold["needs_refit"], d_cold
     results["in_dist_ratio"] = round(d_cold["distortion_ratio"], 4)
     results["in_dist_tvd"] = round(d_cold["assignment_tvd"], 4)
 
-    t0 = time.perf_counter()
-    d_warm = ivf_drift(spark, idx, held_out)
-    results["check_warm_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "check_warm_sec"):
+        d_warm = ivf_drift(spark, idx, held_out)
     assert d_warm["reused_baseline"]
     assert not d_warm["needs_refit"], d_warm
 
-    t0 = time.perf_counter()
-    d_new = ivf_drift(spark, idx, drifted)
-    results["drift_check_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "drift_check_sec"):
+        d_new = ivf_drift(spark, idx, drifted)
     assert d_new["reused_baseline"]
     assert d_new["needs_refit"], d_new
     assert d_new["distortion_ratio"] > 1.25, d_new
@@ -183,11 +173,8 @@ def main(n: int = 1_000_000, dim: int = 64) -> None:
     assert speedup >= 3.0, results  # floor; the honest number is recorded
 
     results["ok"] = True
-    merge_entry(f"drift_n{n}", results)
-    print(results)
+    return finish(spark, {f"drift_n{n}": results}, True)
 
 
 if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    main(n, dim)
+    raise SystemExit(main())

@@ -41,14 +41,15 @@ import os
 import re
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 SEED = 20260816
+# bump when generate() changes: the cached corpus and the shared index
+# built from it are then rebuilt
+VERSION = 1
 N_COMPONENTS = 64
 N_LABELS = 10
 N_CLUSTERS = 256
@@ -102,9 +103,41 @@ def generate(spark, path: str, n: int, dim: int) -> None:
     ).write.mode("overwrite").parquet(path)
 
 
+def corpus(spark, n: int, dim: int, results: dict):
+    """The mixture corpus (n vectors plus both plant families), built
+    once per (n, dim, generator version); ``results["generate_sec"]``
+    records a build."""
+    from compile_time_data_contracts_spark.operators.materialize import reuse
+
+    def build(stage: str) -> None:
+        with timed(results, "generate_sec"):
+            generate(spark, os.path.join(stage, "data"), n, dim)
+
+    want = {"n": n, "dim": dim, "seed": SEED, "version": VERSION}
+    root, _, _ = reuse("probe-fivf", f"{n}x{dim}", want, build)
+    return spark.read.parquet(os.path.join(root, "data"))
+
+
+def index_path(n: int, dim: int) -> str:
+    """The (cluster, label) IVF index over :func:`corpus`, shared by the
+    filtered, batch and PQ probes."""
+    from compile_time_data_contracts_spark.operators.materialize import (
+        reuse_dir,
+    )
+
+    return reuse_dir("probe-fivf-idx", f"{n}x{dim}|v{VERSION}")
+
+
+def cluster_ids(pf_text: str) -> list[int]:
+    """The cluster ids a plan's PartitionFilters text keeps."""
+    found = re.search(r"cluster#\d+ (?:INSET ([0-9, ]+)|IN \(([0-9, ]*)\))", pf_text)
+    if not found:
+        return []
+    return [int(x) for x in (found.group(1) or found.group(2)).split(",") if x.strip()]
+
+
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    n, dim = args(1_000_000, 64)
 
     from pyspark.sql import functions as F
 
@@ -133,23 +166,17 @@ def main() -> int:
         "n_clusters": N_CLUSTERS,
         "nprobe": NPROBE,
     }
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
+    emb = corpus(spark, n, dim, results)
     assert emb.count() == total
 
     # --- index build: partitioned by (cluster, label) --------------------
-    idx = f"/tmp/ctdc-scale-probe-fivf-idx-{n}x{dim}"
+    idx = index_path(n, dim)
     shutil.rmtree(idx, ignore_errors=True)
-    t0 = time.perf_counter()
-    ivf_build(
-        emb, idx, n_clusters=N_CLUSTERS, sample_size=20000,
-        meta_cols=("label",),
-    )
-    results["build_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "build_sec"):
+        ivf_build(
+            emb, idx, n_clusters=N_CLUSTERS, sample_size=20000,
+            meta_cols=("label",),
+        )
     leaf_dirs = 0
     for cdir in os.listdir(f"{idx}/vectors"):
         if cdir.startswith("cluster="):
@@ -162,14 +189,13 @@ def main() -> int:
 
     # --- filtered search: must recover the in-label plants ---------------
     query = emb.filter(F.col("vec_id") == n)  # an in-label plant near v0
-    t0 = time.perf_counter()
-    approx = ivf_search(
-        spark, idx, query, k=N_PLANTS + 1, nprobe=NPROBE,
-        filters={"label": 0},
-    )
-    plan = approx._jdf.queryExecution().executedPlan().toString()
-    approx_ids = {r.vec_id for r in approx.collect()}
-    results["filtered_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "filtered_search_sec"):
+        approx = ivf_search(
+            spark, idx, query, k=N_PLANTS + 1, nprobe=NPROBE,
+            filters={"label": 0},
+        )
+        plan = approx._jdf.queryExecution().executedPlan().toString()
+        approx_ids = {r.vec_id for r in approx.collect()}
 
     planted = set(range(n, n + N_PLANTS))
     results["filtered_recall"] = round(
@@ -184,30 +210,20 @@ def main() -> int:
     # filter, then each surviving (cluster=c, label=0) directory is
     # checked on disk — if label pruning regressed to a post-read
     # filter, this count would jump to nprobe x |labels| and `ok` flips
-    probed_ids = re.search(
-        r"cluster#\d+ (?:INSET ([0-9, ]+)|IN \(([0-9, ]*)\))", pf_text
-    )
-    probed_clusters = [
-        int(x)
-        for x in ((probed_ids.group(1) or probed_ids.group(2)).split(",")
-                  if probed_ids else [])
-        if x.strip()
-    ]
     results["dirs_probed"] = sum(
         1
-        for c in probed_clusters
+        for c in cluster_ids(pf_text)
         if os.path.isdir(f"{idx}/vectors/cluster={c}/label=0")
     )
 
     # --- exact ground truth + the post-filter starvation count -----------
-    t0 = time.perf_counter()
-    exact_filtered = {
-        r.vec_id
-        for r in topk_cosine(
-            emb.filter(F.col("label") == 0), query, k=N_PLANTS + 1
-        ).collect()
-    }
-    results["exact_filtered_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "exact_filtered_sec"):
+        exact_filtered = {
+            r.vec_id
+            for r in topk_cosine(
+                emb.filter(F.col("label") == 0), query, k=N_PLANTS + 1
+            ).collect()
+        }
     results["exact_match"] = approx_ids == exact_filtered
 
     unfiltered_top = topk_cosine(emb, query, k=N_PLANTS + 1)
@@ -230,9 +246,7 @@ def main() -> int:
         and 0 < results["dirs_probed"] <= NPROBE
     )
     results["ok"] = bool(ok)
-    merge_entry(f"filtered_ivf_n{total}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(spark, {f"filtered_ivf_n{total}": results}, ok)
 
 
 if __name__ == "__main__":

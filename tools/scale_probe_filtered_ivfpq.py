@@ -31,17 +31,17 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
     N_CLUSTERS,
     N_PLANTS,
-    generate,
+    cluster_ids,
+    corpus,
+    index_path,
 )
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 NPROBE = 16
 M = 8
@@ -50,8 +50,7 @@ RERANK = 200
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    n, dim = args(1_000_000, 64)
 
     from pyspark.sql import functions as F
 
@@ -76,37 +75,28 @@ def main() -> int:
         "ksub": KSUB,
         "rerank": RERANK,
     }
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
+    emb = corpus(spark, n, dim, results)
 
-    idx = f"/tmp/ctdc-scale-probe-fivf-idx-{n}x{dim}"
+    idx = index_path(n, dim)
     query = emb.filter(F.col("vec_id") == n)  # in-label plant near v0
+
+    def search():
+        return ivf_pq_topk(
+            emb, query, k=N_PLANTS + 1, n_clusters=N_CLUSTERS,
+            nprobe=NPROBE, m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
+            meta_cols=("label",), filters={"label": 0},
+        )
 
     # first call pays the PQ train/encode (the IVF layer is reused if
     # the filtered-IVF probe already built it); time it separately from
     # the steady-state search
-    t0 = time.perf_counter()
-    approx_df = ivf_pq_topk(
-        emb, query, k=N_PLANTS + 1, n_clusters=N_CLUSTERS,
-        nprobe=NPROBE, m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
-        meta_cols=("label",), filters={"label": 0},
-    )
-    approx_ids = {r.vec_id for r in approx_df.collect()}
-    results["first_call_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "first_call_sec"):
+        search().collect()
 
-    t0 = time.perf_counter()
-    approx_df = ivf_pq_topk(
-        emb, query, k=N_PLANTS + 1, n_clusters=N_CLUSTERS,
-        nprobe=NPROBE, m=M, ksub=KSUB, rerank=RERANK, index_path=idx,
-        meta_cols=("label",), filters={"label": 0},
-    )
-    plan = approx_df._jdf.queryExecution().executedPlan().toString()
-    approx_ids = {r.vec_id for r in approx_df.collect()}
-    results["filtered_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "filtered_search_sec"):
+        approx_df = search()
+        plan = approx_df._jdf.queryExecution().executedPlan().toString()
+        approx_ids = {r.vec_id for r in approx_df.collect()}
 
     planted = set(range(n, n + N_PLANTS))
     results["filtered_recall"] = round(
@@ -120,17 +110,9 @@ def main() -> int:
     results["plan_scans_pruning_label"] = sum(
         1 for p in pfs if "label" in p
     )
-    probed_ids = None
-    for p in pfs:
-        probed_ids = probed_ids or re.search(
-            r"cluster#\d+ (?:INSET ([0-9, ]+)|IN \(([0-9, ]*)\))", p
-        )
-    probed_clusters = [
-        int(x)
-        for x in ((probed_ids.group(1) or probed_ids.group(2)).split(",")
-                  if probed_ids else [])
-        if x.strip()
-    ]
+    probed_clusters = next(
+        (ids for ids in map(cluster_ids, pfs) if ids), []
+    )
     results["code_dirs_probed"] = sum(
         1
         for c in probed_clusters
@@ -147,14 +129,13 @@ def main() -> int:
     results["code_dirs_total"] = code_dirs
 
     # exact filtered ground truth + post-filter starvation
-    t0 = time.perf_counter()
-    exact_filtered = {
-        r.vec_id
-        for r in topk_cosine(
-            emb.filter(F.col("label") == 0), query, k=N_PLANTS + 1
-        ).collect()
-    }
-    results["exact_filtered_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "exact_filtered_sec"):
+        exact_filtered = {
+            r.vec_id
+            for r in topk_cosine(
+                emb.filter(F.col("label") == 0), query, k=N_PLANTS + 1
+            ).collect()
+        }
     results["exact_match"] = approx_ids == exact_filtered
 
     unfiltered = topk_cosine(emb, query, k=N_PLANTS + 1)
@@ -180,9 +161,7 @@ def main() -> int:
         and 0 < results["code_dirs_probed"] <= NPROBE
     )
     results["ok"] = bool(ok)
-    merge_entry(f"filtered_ivfpq_n{total}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(spark, {f"filtered_ivfpq_n{total}": results}, ok)
 
 
 if __name__ == "__main__":

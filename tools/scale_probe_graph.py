@@ -25,15 +25,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
+    (n,) = args(1_000_000)
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.session import local_session
@@ -63,23 +62,19 @@ def main() -> int:
     nodes = nodes.persist()
     nodes.count()
 
-    t0 = time.time()
-    pr = pagerank(nodes, edges, iters=3, damping=0.85)
-    stats = pr.agg(
-        F.sum("pr").alias("mass"),
-        F.max(F.when(F.col("id") == 0, F.col("pr"))).alias("hub"),
-        F.expr("percentile_approx(pr, 0.5)").alias("median"),
-    ).collect()[0]
-    wall = round(time.time() - t0, 2)
+    results = {"n_nodes": n, "n_edges": int(n_edges), "iters": 3}
+    with timed(results, "pagerank_sec"):
+        pr = pagerank(nodes, edges, iters=3, damping=0.85)
+        stats = pr.agg(
+            F.sum("pr").alias("mass"),
+            F.max(F.when(F.col("id") == 0, F.col("pr"))).alias("hub"),
+            F.expr("percentile_approx(pr, 0.5)").alias("median"),
+        ).collect()[0]
 
     plan = pr._sc._jvm.PythonSQLUtils.explainString(
         pr._jdf.queryExecution(), "formatted"
     )
-    results = {
-        "n_nodes": n,
-        "n_edges": int(n_edges),
-        "iters": 3,
-        "pagerank_sec": wall,
+    results |= {
         "mass": float(stats.mass),
         "mass_conserved": abs(float(stats.mass) - 1.0) < 1e-6,
         "hub_pr": float(stats.hub),
@@ -97,13 +92,12 @@ def main() -> int:
     # degree-annotated edge list, so a long run neither re-derives the
     # join tower per round nor grows an O(iters)-deep plan; the graph
     # has outdeg >= 9 everywhere so mass must still sum to 1
-    t0 = time.time()
-    pr20 = pagerank(
-        nodes, edges, iters=20, damping=0.85,
-        n_nodes=n, checkpoint_every=5,
-    )
-    stats20 = pr20.agg(F.sum("pr").alias("mass")).collect()[0]
-    results["pagerank20_sec"] = round(time.time() - t0, 2)
+    with timed(results, "pagerank20_sec"):
+        pr20 = pagerank(
+            nodes, edges, iters=20, damping=0.85,
+            n_nodes=n, checkpoint_every=5,
+        )
+        stats20 = pr20.agg(F.sum("pr").alias("mass")).collect()[0]
     results["pagerank20_mass"] = float(stats20.mass)
     results["pagerank20_mass_conserved"] = (
         abs(float(stats20.mass) - 1.0) < 1e-6
@@ -126,25 +120,26 @@ def main() -> int:
         .persist()
     )
     n_seeds = seeds.count()
-    t0 = time.time()
-    lpa = label_propagation(edges, seeds, iters=2)
-    lpa_stats = (
-        lpa.join(seeds.withColumnRenamed("label", "seed_label"), "id", "left")
-        .agg(
-            F.count("*").alias("labeled"),
-            F.sum(
-                F.when(
-                    F.col("seed_label").isNotNull()
-                    & (F.col("label") != F.col("seed_label")),
-                    1,
-                ).otherwise(0)
-            ).alias("seed_flips"),
-            F.max("label").alias("max_label"),
-            F.min("label").alias("min_label"),
+    with timed(results, "lpa_sec"):
+        lpa = label_propagation(edges, seeds, iters=2)
+        lpa_stats = (
+            lpa.join(
+                seeds.withColumnRenamed("label", "seed_label"), "id", "left"
+            )
+            .agg(
+                F.count("*").alias("labeled"),
+                F.sum(
+                    F.when(
+                        F.col("seed_label").isNotNull()
+                        & (F.col("label") != F.col("seed_label")),
+                        1,
+                    ).otherwise(0)
+                ).alias("seed_flips"),
+                F.max("label").alias("max_label"),
+                F.min("label").alias("min_label"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    results["lpa_sec"] = round(time.time() - t0, 2)
     results["lpa_seeds"] = int(n_seeds)
     results["lpa_labeled"] = int(lpa_stats.labeled)
     results["lpa_seeds_clamped"] = int(lpa_stats.seed_flips) == 0
@@ -173,12 +168,11 @@ def main() -> int:
         .persist()
     )
     var_edges.count()
-    t0 = time.time()
-    core = k_core(var_edges, k=8, max_peels=14).persist()
-    core_stats = core.agg(
-        F.count("*").alias("survivors"), F.min("degree").alias("min_deg")
-    ).collect()[0]
-    results["kcore_sec"] = round(time.time() - t0, 2)
+    with timed(results, "kcore_sec"):
+        core = k_core(var_edges, k=8, max_peels=14).persist()
+        core_stats = core.agg(
+            F.count("*").alias("survivors"), F.min("degree").alias("min_deg")
+        ).collect()[0]
     results["kcore_k"] = 8
     results["kcore_survivors"] = int(core_stats.survivors)
     results["kcore_min_deg"] = (
@@ -202,12 +196,11 @@ def main() -> int:
     )
 
     seed1 = spark.range(1).select(F.lit(12345).cast("long").alias("id"))
-    t0 = time.time()
-    bfs = bfs_levels(edges, seed1, max_hops=3).persist()
-    bfs_stats = bfs.agg(
-        F.count("*").alias("reached"), F.max("hop").alias("maxhop")
-    ).collect()[0]
-    results["bfs_sec"] = round(time.time() - t0, 2)
+    with timed(results, "bfs_sec"):
+        bfs = bfs_levels(edges, seed1, max_hops=3).persist()
+        bfs_stats = bfs.agg(
+            F.count("*").alias("reached"), F.max("hop").alias("maxhop")
+        ).collect()[0]
     results["bfs_reached"] = int(bfs_stats.reached)
     results["bfs_reaches_all"] = int(bfs_stats.reached) == n
     results["bfs_max_hop"] = int(bfs_stats.maxhop)
@@ -217,13 +210,12 @@ def main() -> int:
     # emit exactly 6 rows (outdeg >= 9 everywhere, walks never die)
     # and be reproducible — run twice, hash both, compare.
     starts = spark.range(n).where(F.col("id") % (n // 10_000) == 7)
-    t0 = time.time()
-    w1 = deterministic_random_walks(edges, starts.select("id"), steps=5)
-    h1 = w1.agg(
-        F.count("*").alias("rows"),
-        F.sum(F.hash("walk", "step", "node").cast("long")).alias("sig"),
-    ).collect()[0]
-    results["walks_sec"] = round(time.time() - t0, 2)
+    with timed(results, "walks_sec"):
+        w1 = deterministic_random_walks(edges, starts.select("id"), steps=5)
+        h1 = w1.agg(
+            F.count("*").alias("rows"),
+            F.sum(F.hash("walk", "step", "node").cast("long")).alias("sig"),
+        ).collect()[0]
     w2 = deterministic_random_walks(edges, starts.select("id"), steps=5)
     h2 = w2.agg(
         F.count("*").alias("rows"),
@@ -258,10 +250,7 @@ def main() -> int:
     )
     edges.unpersist()
     nodes.unpersist()
-    merge_entry(f"graph_n{n}", results)
-    print(results)
-    spark.stop()
-    return 0 if results["ok"] else 1
+    return finish(spark, {f"graph_n{n}": results}, results["ok"])
 
 
 if __name__ == "__main__":

@@ -28,14 +28,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 SEED = 20260814
+# bump when generate() changes, so the cached corpus and batch rebuild
+VERSION = 1
 VOCAB = 50_000
 DOC_TOKENS = 60
 PLANTED = 1_000
@@ -74,11 +74,14 @@ def generate(spark, path: str, lo: int, hi: int, corpus_n: int) -> None:
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    b = int(sys.argv[2]) if len(sys.argv) > 2 else 51_000
+    n, b = args(1_000_000, 51_000)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import (
+        reuse,
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
         minhash_index_build,
@@ -91,26 +94,27 @@ def main() -> int:
         **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
 
-    cpath = f"/tmp/ctdc-incr-corpus-{n}"
-    bpath = f"/tmp/ctdc-incr-batch-{n}-{b}"
-    if not os.path.exists(os.path.join(cpath, "_SUCCESS")):
-        generate(spark, cpath, 0, n, corpus_n=n)
-    if not os.path.exists(os.path.join(bpath, "_SUCCESS")):
-        generate(spark, bpath, n, n + b, corpus_n=n)
-    corpus = spark.read.parquet(cpath)
-    batch = spark.read.parquet(bpath)
+    def docs(kind: str, key: str, lo: int, hi: int):
+        def build(stage: str) -> None:
+            generate(spark, os.path.join(stage, "data"), lo, hi, corpus_n=n)
+
+        want = {"lo": lo, "hi": hi, "corpus_n": n, "seed": SEED,
+                "version": VERSION}
+        root, _, _ = reuse(kind, key, want, build)
+        return spark.read.parquet(os.path.join(root, "data"))
+
+    corpus = docs("probe-incr-corpus", str(n), 0, n)
+    batch = docs("probe-incr-batch", f"{n}-{b}", n, n + b)
 
     results: dict = {"corpus_n": n, "batch_n": b, "threshold": 0.5}
-    ipath = f"/tmp/ctdc-incr-index-{n}"
+    ipath = scratch_dir("ctdc-probe-incr-index-")
 
-    t0 = time.perf_counter()
-    minhash_index_build(corpus, ipath)
-    results["index_build_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "index_build_sec"):
+        minhash_index_build(corpus, ipath)
 
-    t0 = time.perf_counter()
-    incr = near_dup_against(spark, ipath, batch, threshold=0.5).persist()
-    n_incr = incr.count()
-    results["incremental_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "incremental_sec"):
+        incr = near_dup_against(spark, ipath, batch, threshold=0.5).persist()
+        n_incr = incr.count()
     results["incremental_pairs"] = n_incr
 
     planted_hit = incr.filter(
@@ -119,12 +123,11 @@ def main() -> int:
     results["planted_recall"] = round(planted_hit / PLANTED, 4)
     results["unplanted_pairs"] = n_incr - planted_hit
 
-    t0 = time.perf_counter()
-    full = minhash_near_dup_pairs(corpus.union(batch), threshold=0.5)
-    cross_full = full.filter(
-        (F.col("doc_a") < n) & (F.col("doc_b") >= n)
-    ).count()
-    results["full_recompute_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "full_recompute_sec"):
+        full = minhash_near_dup_pairs(corpus.union(batch), threshold=0.5)
+        cross_full = full.filter(
+            (F.col("doc_a") < n) & (F.col("doc_b") >= n)
+        ).count()
     results["full_cross_pairs"] = cross_full
 
     results["ok"] = (
@@ -133,10 +136,7 @@ def main() -> int:
         and cross_full == n_incr
         and results["incremental_sec"] < results["full_recompute_sec"]
     )
-    merge_entry(f"incremental_n{n}_b{b}", results)
-    print(results)
-    spark.stop()
-    return 0 if results["ok"] else 1
+    return finish(spark, {f"incremental_n{n}_b{b}": results}, results["ok"])
 
 
 if __name__ == "__main__":

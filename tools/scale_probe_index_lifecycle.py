@@ -38,17 +38,15 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_probe_filtered_ivf import (  # noqa: E402
     N_CLUSTERS,
     N_PLANTS,
-    generate,
+    corpus,
 )
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 M = 8
 KSUB = 256
@@ -75,11 +73,13 @@ def _leaf_dirs(root: str) -> dict:
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
+    n, dim = args(1_000_000, 64)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_delete,
@@ -99,36 +99,25 @@ def main() -> int:
         "n": total, "dim": dim, "n_clusters": N_CLUSTERS, "m": M,
         "ksub": KSUB, "nprobe": NPROBE, "k": K, "rerank": RERANK,
     }
-    path = f"/tmp/ctdc-scale-probe-fivf-{n}x{dim}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n, dim)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    emb = spark.read.parquet(path)
-    idx = f"/tmp/ctdc-scale-probe-lifecycle-{n}x{dim}"
-
-    import shutil
-
-    shutil.rmtree(idx, ignore_errors=True)  # lifecycle measured fresh
+    emb = corpus(spark, n, dim, results)
+    idx = scratch_dir("ctdc-probe-lifecycle-")  # lifecycle measured fresh
 
     # ---- 1. build on 95% (every vec_id % 20 != 7), measured
     base = emb.filter(F.pmod(F.col("vec_id"), F.lit(20)) != 7)
     newbies = emb.filter(F.pmod(F.col("vec_id"), F.lit(20)) == 7)
-    t0 = time.perf_counter()
-    ivf_pq_build_or_reuse(
-        base, idx, n_clusters=N_CLUSTERS, m=M, ksub=KSUB,
-        meta_cols=("label",),
-    )
-    results["build_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "build_sec"):
+        ivf_pq_build_or_reuse(
+            base, idx, n_clusters=N_CLUSTERS, m=M, ksub=KSUB,
+            meta_cols=("label",),
+        )
 
     before = _leaf_dirs(f"{idx}/pq/codes")
     results["dirs_total"] = len(before)
     results["build_files"] = sum(len(v) for v in before.values())
 
     # ---- 2. append the held-out 5%, measured
-    t0 = time.perf_counter()
-    pq_append(spark, idx, newbies)
-    results["append_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "append_sec"):
+        pq_append(spark, idx, newbies)
     after = _leaf_dirs(f"{idx}/pq/codes")
     results["append_code_dirs_touched"] = sum(
         1 for d in after if after[d] != before.get(d)
@@ -144,12 +133,12 @@ def main() -> int:
     # neighbor through the composite, and post-append recall holds
     probe_id = 7  # 7 % 20 == 7 -> lives in the appended slice
     qdf = emb.filter(F.col("vec_id") == probe_id)
-    t0 = time.perf_counter()
-    got = ivf_pq_topk(
-        emb, qdf, k=K, n_clusters=N_CLUSTERS, nprobe=NPROBE, m=M,
-        ksub=KSUB, rerank=RERANK, index_path=idx, meta_cols=("label",),
-    ).collect()
-    results["post_append_search_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "post_append_search_sec"):
+        got = ivf_pq_topk(
+            emb, qdf, k=K, n_clusters=N_CLUSTERS, nprobe=NPROBE, m=M,
+            ksub=KSUB, rerank=RERANK, index_path=idx,
+            meta_cols=("label",),
+        ).collect()
     self_hit = bool(got) and got[0].vec_id == probe_id
     exact = {
         r.vec_id for r in topk_cosine(emb, qdf, k=K).collect()
@@ -168,9 +157,8 @@ def main() -> int:
     ).select("vec_id")
     n_cohort = cohort.count()
     results["delete_cohort_size"] = int(n_cohort)
-    t0 = time.perf_counter()
-    stats = ivf_delete(spark, idx, cohort)
-    results["delete_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "delete_sec"):
+        stats = ivf_delete(spark, idx, cohort)
     results["delete_n_deleted"] = stats["n_deleted"]
     results["delete_partitions_rewritten"] = stats["rewritten_partitions"]
     results["delete_partitions_fraction"] = round(
@@ -211,9 +199,7 @@ def main() -> int:
         and results["post_delete_recall"] >= RECALL_FLOOR
     )
     results["ok"] = bool(ok)
-    merge_entry(f"index_lifecycle_n{total}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(spark, {f"index_lifecycle_n{total}": results}, ok)
 
 
 if __name__ == "__main__":

@@ -29,14 +29,11 @@ Writes `merge_n{n}` into SCALEBENCH.json.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 N_UPDATES = 5_000
 N_INSERTS = 5_000
@@ -44,11 +41,13 @@ TARGET_BUCKETS = (3, 7)
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-    n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 256
+    n, n_buckets = args(10_000_000, 256)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.merge import (
         _bucket_of,
@@ -60,15 +59,13 @@ def main() -> int:
     spark = local_session("ctdc-scale-probe-merge", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n": n, "n_buckets": n_buckets}
-    path = f"/tmp/ctdc-scale-probe-merge-{n}x{n_buckets}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(scratch_dir("ctdc-probe-merge-"), "snapshot")
 
     base = spark.range(0, n).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("val")
     )
-    t0 = time.perf_counter()
-    snapshot_write(base, path, "k", num_buckets=n_buckets)
-    results["snapshot_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "snapshot_sec"):
+        snapshot_write(base, path, "k", num_buckets=n_buckets)
 
     # batch keys concentrated in TARGET_BUCKETS: updates from existing
     # keys, inserts from the key space above N — both bucket-filtered
@@ -104,9 +101,8 @@ def main() -> int:
 
     before = {b: dir_state(b) for b in range(n_buckets)}
 
-    t0 = time.perf_counter()
-    touched = merge_upsert(spark, path, batch)
-    results["merge_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "merge_sec"):
+        touched = merge_upsert(spark, path, batch)
     results["touched_buckets"] = touched
     results["touched_fraction"] = round(len(touched) / n_buckets, 4)
 
@@ -148,9 +144,7 @@ def main() -> int:
         and results["merge_sec"] < results["snapshot_sec"] / 3
     )
     results["ok"] = bool(ok)
-    merge_entry(f"merge_n{n}", results)
-    print(results)
-    return 0 if ok else 1
+    return finish(spark, {f"merge_n{n}": results}, ok)
 
 
 if __name__ == "__main__":

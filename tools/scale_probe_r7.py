@@ -37,17 +37,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 
 def main() -> int:
-    kmv_n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    graph_n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
+    kmv_n, graph_n, ohlc_n = args(100_000_000, 1_000_000, 100_000_000)
     from pyspark.sql import functions as F
     from compile_time_data_contracts_spark.session import local_session
 
@@ -63,8 +60,6 @@ def main() -> int:
         "ctdc-scale-r7",
         **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-
-    ok = True
 
     # ---- 1. KMV at kmv_n keys/side -------------------------------
     K = 256
@@ -83,17 +78,17 @@ def main() -> int:
         ).alias("set_id"),
         F.col("id"),
     )
-    t0 = time.perf_counter()
-    sk = kmv_sketch(both, "set_id", "id", k=K)
-    est = kmv_union_intersection(
-        sk.filter(F.col("set_id") == "a"),
-        sk.filter(F.col("set_id") == "b"),
-        k=K,
-    ).collect()[0]
-    kmv_sec = round(time.perf_counter() - t0, 2)
+    kmv_res: dict = {}
+    with timed(kmv_res, "sec"):
+        sk = kmv_sketch(both, "set_id", "id", k=K)
+        est = kmv_union_intersection(
+            sk.filter(F.col("set_id") == "a"),
+            sk.filter(F.col("set_id") == "b"),
+            k=K,
+        ).collect()[0]
     union_rel = abs(est["est_union_r"] - exact_union) / exact_union
     inter_abs_rel = abs(est["est_intersection_r"] - exact_inter) / exact_union
-    kmv_res = {
+    kmv_res |= {
         "n_per_side": kmv_n,
         "k": K,
         "exact_union": exact_union,
@@ -102,12 +97,8 @@ def main() -> int:
         "est_intersection": est["est_intersection_r"],
         "union_rel_err": round(union_rel, 5),
         "inter_err_vs_union": round(inter_abs_rel, 5),
-        "sec": kmv_sec,
         "ok": bool(union_rel < 0.19 and inter_abs_rel < 0.19),
     }
-    merge_entry(f"kmv_n{kmv_n}", kmv_res)
-    print(kmv_res, flush=True)
-    ok = ok and kmv_res["ok"]
 
     # ---- 2. link prediction with a planted hub -------------------
     N = graph_n
@@ -126,16 +117,16 @@ def main() -> int:
         (F.col("id") * 10 % N).alias("dst"),
     )
     edges = ring.union(hub)
-    t0 = time.perf_counter()
-    pred = link_prediction_ra(edges, max_hub_degree=64, min_common=2)
-    agg = pred.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.min("ra_micro").alias("min_ra"),
-        F.max("ra_micro").alias("max_ra"),
-    ).collect()[0]
-    lp_sec = round(time.perf_counter() - t0, 2)
+    lp_res: dict = {}
+    with timed(lp_res, "sec"):
+        pred = link_prediction_ra(edges, max_hub_degree=64, min_common=2)
+        agg = pred.agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.min("ra_micro").alias("min_ra"),
+            F.max("ra_micro").alias("max_ra"),
+        ).collect()[0]
     avoided = hub_deg * (hub_deg - 1) // 2
-    lp_res = {
+    lp_res |= {
         "n_nodes": N,
         "hub_degree": hub_deg,
         "cap": 64,
@@ -144,19 +135,14 @@ def main() -> int:
         "min_ra_micro": int(agg["min_ra"]),
         "max_ra_micro": int(agg["max_ra"]),
         "avoided_hub_candidates": avoided,
-        "sec": lp_sec,
         "ok": bool(
             agg["n_pairs"] == N - 2
             and 400_000 <= agg["min_ra"]
             and agg["max_ra"] == 500_000
         ),
     }
-    merge_entry(f"linkpred_n{N}", lp_res)
-    print(lp_res, flush=True)
-    ok = ok and lp_res["ok"]
 
     # ---- 3. OHLC bars at ohlc_n ticks -----------------------------
-    ohlc_n = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000_000
     from compile_time_data_contracts_spark.operators.timeseries import (
         ohlc_bars,
     )
@@ -174,39 +160,39 @@ def main() -> int:
         ((F.col("id") / NKEYS).cast("long") % 3600).cast("double")
         .alias("v"),
     )
-    t0 = time.perf_counter()
-    bars = ohlc_bars(ticks, "key", "ts", "tick_id", "v", "hour")
-    # closed forms: every FULL hour bar has 3600 ticks, open 0,
-    # close 3599e6, low 0, high 3599e6, sum = 3600*3599/2 * 1e6
-    full = bars.filter(F.col("n_ticks") == 3600)
-    bad = full.filter(
-        (F.col("open_micro") != 0)
-        | (F.col("close_micro") != 3_599_000_000)
-        | (F.col("low_micro") != 0)
-        | (F.col("high_micro") != 3_599_000_000)
-        | (F.col("sum_micro") != 3600 * 3599 // 2 * 1_000_000)
-    ).count()
-    counts = bars.agg(
-        F.count(F.lit(1)).alias("n_bars"),
-        F.sum("n_ticks").alias("n_ticks"),
-    ).collect()[0]
-    ohlc_sec = round(time.perf_counter() - t0, 2)
-    ohlc_res = {
+    ohlc_res: dict = {}
+    with timed(ohlc_res, "sec"):
+        bars = ohlc_bars(ticks, "key", "ts", "tick_id", "v", "hour")
+        # closed forms: every FULL hour bar has 3600 ticks, open 0,
+        # close 3599e6, low 0, high 3599e6, sum = 3600*3599/2 * 1e6
+        full = bars.filter(F.col("n_ticks") == 3600)
+        bad = full.filter(
+            (F.col("open_micro") != 0)
+            | (F.col("close_micro") != 3_599_000_000)
+            | (F.col("low_micro") != 0)
+            | (F.col("high_micro") != 3_599_000_000)
+            | (F.col("sum_micro") != 3600 * 3599 // 2 * 1_000_000)
+        ).count()
+        counts = bars.agg(
+            F.count(F.lit(1)).alias("n_bars"),
+            F.sum("n_ticks").alias("n_ticks"),
+        ).collect()[0]
+    ohlc_res |= {
         "n_ticks": ohlc_n,
         "n_keys": NKEYS,
         "n_bars": int(counts["n_bars"]),
         "bad_full_bars": int(bad),
         "ticks_accounted": int(counts["n_ticks"]),
         "compaction_ratio": round(ohlc_n / counts["n_bars"], 1),
-        "sec": ohlc_sec,
         "ok": bool(bad == 0 and counts["n_ticks"] == ohlc_n),
     }
-    merge_entry(f"ohlc_n{ohlc_n}", ohlc_res)
-    print(ohlc_res, flush=True)
-    ok = ok and ohlc_res["ok"]
 
-    spark.stop()
-    return 0 if ok else 1
+    entries = {
+        f"kmv_n{kmv_n}": kmv_res,
+        f"linkpred_n{N}": lp_res,
+        f"ohlc_n{ohlc_n}": ohlc_res,
+    }
+    return finish(spark, entries, all(r["ok"] for r in entries.values()))
 
 
 if __name__ == "__main__":

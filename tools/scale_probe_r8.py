@@ -42,29 +42,27 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 
 def main() -> int:
-    graph_n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    kn_m = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000_000
-    srm_m = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000_000
+    graph_n, kn_m, srm_m = args(1_000_000, 100_000_000, 10_000_000)
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import (
+        scratch_dir,
+    )
     from compile_time_data_contracts_spark.session import local_session
 
     spark = local_session(
         "ctdc-scale-r8",
         **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
-    ok = True
 
     # ---- 1. capped two-hop reach with a planted megahub -----------
     N = graph_n
@@ -81,45 +79,45 @@ def main() -> int:
         (F.col("id") * 10 % N).alias("dst"),
     )
     e0 = ring.union(hub).where(F.col("src") != F.col("dst")).distinct()
-    t0 = time.perf_counter()
-    sym = (
-        e0.union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    mid = sym.join(
-        deg.select(F.col("node").alias("dst"), "d"), "dst"
-    ).where(F.col("d") <= 64).select("src", "dst")
-    a = mid.where(F.col("src") % 100 == 0).select(
-        F.col("src").alias("seed"), F.col("dst").alias("via")
-    )
-    b = mid.select(F.col("src").alias("via"), F.col("dst").alias("nbr"))
-    hop2 = (
-        a.join(b, "via")
-        .where(F.col("nbr") != F.col("seed"))
-        .select("seed", "nbr")
-        .union(
-            sym.where(F.col("src") % 100 == 0).select(
-                F.col("src").alias("seed"), F.col("dst").alias("nbr")
+    twohop_res: dict = {}
+    with timed(twohop_res, "sec"):
+        sym = (
+            e0.union(
+                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
+            .distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        .distinct()
-    )
-    reach = hop2.groupBy("seed").agg(
-        F.count("*").cast("bigint").alias("reach2")
-    )
-    agg = reach.agg(
-        F.count("*").cast("bigint").alias("n_seeds"),
-        F.sum("reach2").cast("bigint").alias("total_reach"),
-        F.min("reach2").cast("bigint").alias("min_reach"),
-        F.max("reach2").cast("bigint").alias("max_reach"),
-    ).collect()[0]
-    twohop_sec = round(time.perf_counter() - t0, 2)
+        deg = sym.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("d")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        mid = sym.join(
+            deg.select(F.col("node").alias("dst"), "d"), "dst"
+        ).where(F.col("d") <= 64).select("src", "dst")
+        a = mid.where(F.col("src") % 100 == 0).select(
+            F.col("src").alias("seed"), F.col("dst").alias("via")
+        )
+        b = mid.select(F.col("src").alias("via"), F.col("dst").alias("nbr"))
+        hop2 = (
+            a.join(b, "via")
+            .where(F.col("nbr") != F.col("seed"))
+            .select("seed", "nbr")
+            .union(
+                sym.where(F.col("src") % 100 == 0).select(
+                    F.col("src").alias("seed"), F.col("dst").alias("nbr")
+                )
+            )
+            .distinct()
+        )
+        reach = hop2.groupBy("seed").agg(
+            F.count("*").cast("bigint").alias("reach2")
+        )
+        agg = reach.agg(
+            F.count("*").cast("bigint").alias("n_seeds"),
+            F.sum("reach2").cast("bigint").alias("total_reach"),
+            F.min("reach2").cast("bigint").alias("min_reach"),
+            F.max("reach2").cast("bigint").alias("max_reach"),
+        ).collect()[0]
     # two-hop expansion THROUGH over-cap intermediates: must be zero in
     # the capped plan; the avoided fan-out is measured from the degree
     # table (each hub-adjacent seed would emit deg(hub) candidates)
@@ -145,8 +143,7 @@ def main() -> int:
     n_seeds = N // 100
     exp_hub_reach = 5 * (hub_fan - 1) + 8  # mod-10 classes + stragglers
     exp_total = exp_hub_reach + (n_seeds - 1) * 9
-    exp_mean_milli = (1000 * exp_total) // n_seeds
-    twohop_res = {
+    twohop_res |= {
         "n_nodes": N,
         "hub_degree": hub_deg,
         "cap": 64,
@@ -158,7 +155,6 @@ def main() -> int:
         "expected_hub_reach": exp_hub_reach,
         "twohop_rows_through_hub": int(through_hub),
         "avoided_hub_candidates": int(avoided),
-        "sec": twohop_sec,
         "ok": bool(
             agg["n_seeds"] == n_seeds
             and agg["total_reach"] == exp_total
@@ -168,9 +164,6 @@ def main() -> int:
             and avoided == (n_seeds - 1) * hub_deg
         ),
     }
-    merge_entry(f"twohop_n{N}", twohop_res)
-    print(twohop_res, flush=True)
-    ok = ok and twohop_res["ok"]
     sym.unpersist()
     deg.unpersist()
 
@@ -183,57 +176,57 @@ def main() -> int:
             F.lit("c"), ((F.col("id") % (V * K)) / V).cast("long").cast("string")
         ).alias("w2"),
     )
-    t0 = time.perf_counter()
-    c = toks.groupBy("w1", "w2").agg(
-        F.count("*").cast("bigint").alias("n_pair")
-    )
-    plan = c._sc._jvm.PythonSQLUtils.explainString(
-        c._jdf.queryExecution(), "formatted"
-    )
-    one_pass = (
-        "partial_count" in plan
-        and "EvalPython" not in plan
-        and "InPandas" not in plan
-    )
-    c = c.persist(StorageLevel.MEMORY_AND_DISK)
-    uni = c.groupBy("w1").agg(
-        F.sum("n_pair").cast("bigint").alias("c1"),
-        F.count("*").cast("bigint").alias("n1plus_fw"),
-    )
-    cont = c.groupBy("w2").agg(
-        F.count("*").cast("bigint").alias("n1plus_bw")
-    )
-    tt = c.agg(F.count("*").cast("bigint").alias("T"))
-    p = (
-        c.join(uni, "w1")
-        .join(cont, "w2")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            F.round(
-                (
-                    F.greatest(
-                        F.col("n_pair") - F.lit(D_NUM) / F.lit(D_DEN),
-                        F.lit(0.0),
-                    )
-                    / F.col("c1")
-                )
-                + (F.lit(D_NUM) / F.lit(D_DEN))
-                * F.col("n1plus_fw")
-                / F.col("c1")
-                * (F.col("n1plus_bw") / F.col("T").cast("double")),
-                6,
-            ).alias("p_kn_r")
+    kn_res: dict = {}
+    with timed(kn_res, "sec"):
+        c = toks.groupBy("w1", "w2").agg(
+            F.count("*").cast("bigint").alias("n_pair")
         )
-    )
-    stats = p.agg(
-        F.count("*").cast("bigint").alias("n_pairs"),
-        F.countDistinct("p_kn_r").cast("bigint").alias("n_distinct"),
-        F.min("p_kn_r").alias("pmin"),
-        F.max("p_kn_r").alias("pmax"),
-    ).collect()[0]
-    kn_sec = round(time.perf_counter() - t0, 2)
+        plan = c._sc._jvm.PythonSQLUtils.explainString(
+            c._jdf.queryExecution(), "formatted"
+        )
+        one_pass = (
+            "partial_count" in plan
+            and "EvalPython" not in plan
+            and "InPandas" not in plan
+        )
+        c = c.persist(StorageLevel.MEMORY_AND_DISK)
+        uni = c.groupBy("w1").agg(
+            F.sum("n_pair").cast("bigint").alias("c1"),
+            F.count("*").cast("bigint").alias("n1plus_fw"),
+        )
+        cont = c.groupBy("w2").agg(
+            F.count("*").cast("bigint").alias("n1plus_bw")
+        )
+        tt = c.agg(F.count("*").cast("bigint").alias("T"))
+        p = (
+            c.join(uni, "w1")
+            .join(cont, "w2")
+            .crossJoin(F.broadcast(tt))
+            .select(
+                F.round(
+                    (
+                        F.greatest(
+                            F.col("n_pair") - F.lit(D_NUM) / F.lit(D_DEN),
+                            F.lit(0.0),
+                        )
+                        / F.col("c1")
+                    )
+                    + (F.lit(D_NUM) / F.lit(D_DEN))
+                    * F.col("n1plus_fw")
+                    / F.col("c1")
+                    * (F.col("n1plus_bw") / F.col("T").cast("double")),
+                    6,
+                ).alias("p_kn_r")
+            )
+        )
+        stats = p.agg(
+            F.count("*").cast("bigint").alias("n_pairs"),
+            F.countDistinct("p_kn_r").cast("bigint").alias("n_distinct"),
+            F.min("p_kn_r").alias("pmin"),
+            F.max("p_kn_r").alias("pmax"),
+        ).collect()[0]
     c.unpersist()
-    kn_res = {
+    kn_res |= {
         "n_bigrams": M,
         "vocab_contexts": V,
         "continuations": K,
@@ -243,7 +236,6 @@ def main() -> int:
         "p_kn_value": float(stats["pmin"]),
         "expected_p": 0.1,
         "corpus_pass_one_partial_agg": bool(one_pass),
-        "sec": kn_sec,
         "ok": bool(
             stats["n_pairs"] == V * K
             and stats["n_distinct"] == 1
@@ -252,14 +244,8 @@ def main() -> int:
             and one_pass
         ),
     }
-    merge_entry(f"kneserney_n{M}", kn_res)
-    print(kn_res, flush=True)
-    ok = ok and kn_res["ok"]
 
     # ---- 3. streaming SRM at srm_m events, 3-batch replay ---------
-    import shutil
-    import tempfile
-
     from compile_time_data_contracts_spark.operators.incremental import (
         versioned_state_merger,
     )
@@ -280,48 +266,48 @@ def main() -> int:
         .otherwise(2 * (((F.col("id") - 1) / 2).cast("long") % O) + 1)
         .alias("user_id"),
     )
-    base = tempfile.mkdtemp(prefix="ctdc-srm-probe-")
+    base = scratch_dir("ctdc-srm-probe-")
     feed, state, ckpt = f"{base}/feed", f"{base}/state", f"{base}/ckpt"
-    t0 = time.perf_counter()
-    mft = write_sliced_feed(ev, F.pmod(F.col("event_id"), F.lit(3)), 3, feed)
-    handler = versioned_state_merger(state, ["user_id"])
-    qh = (
-        spark.readStream.schema("event_id long, user_id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", str(mft))
-        .load(feed)
-        .select("user_id")
-        .writeStream.foreachBatch(handler)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    qh.awaitTermination()
-    # crash-window redelivery: same batch, same epoch — the versioned
-    # merger rewrites v1 idempotently; an append sink would double-count
-    handler(
-        ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1).select("user_id"),
-        1,
-    )
-    users = spark.read.parquet(f"{state}/v2").select("user_id")
-    a2 = users.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-    ).collect()[0]
-    n, n0, n1 = int(a2["n"]), int(a2["n0"]), int(a2["n1"])
-    chi2_micro = (
-        1_000_000 * ((2 * n0 - n) ** 2 + (2 * n1 - n) ** 2)
-    ) // (2 * n)
-    srm_sec = round(time.perf_counter() - t0, 2)
+    srm_res: dict = {}
+    with timed(srm_res, "sec"):
+        mft = write_sliced_feed(ev, F.pmod(F.col("event_id"), F.lit(3)), 3, feed)
+        handler = versioned_state_merger(state, ["user_id"])
+        qh = (
+            spark.readStream.schema("event_id long, user_id long")
+            .format("parquet")
+            .option("maxFilesPerTrigger", str(mft))
+            .load(feed)
+            .select("user_id")
+            .writeStream.foreachBatch(handler)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        qh.awaitTermination()
+        # crash-window redelivery: same batch, same epoch — the versioned
+        # merger rewrites v1 idempotently; an append sink would double-count
+        handler(
+            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == 1).select("user_id"),
+            1,
+        )
+        users = spark.read.parquet(f"{state}/v2").select("user_id")
+        a2 = users.agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n0"),
+            F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n1"),
+        ).collect()[0]
+        n, n0, n1 = int(a2["n"]), int(a2["n0"]), int(a2["n1"])
+        chi2_micro = (
+            1_000_000 * ((2 * n0 - n) ** 2 + (2 * n1 - n) ** 2)
+        ) // (2 * n)
     exp_chi2 = (
         1_000_000 * ((2 * E - n_users) ** 2 + (2 * O - n_users) ** 2)
     ) // (2 * n_users)
-    srm_res = {
+    srm_res |= {
         "n_events": srm_m,
         "n_batches": 3,
         "redelivered_epoch": 1,
@@ -332,7 +318,6 @@ def main() -> int:
         "chi2_micro": chi2_micro,
         "expected_chi2_micro": exp_chi2,
         "srm_flag": bool(chi2_micro > 3_841_459),
-        "sec": srm_sec,
         "ok": bool(
             n == n_users
             and n0 == E
@@ -341,14 +326,13 @@ def main() -> int:
             and chi2_micro > 3_841_459
         ),
     }
-    merge_entry(f"srm_n{srm_m}", srm_res)
-    print(srm_res, flush=True)
-    ok = ok and srm_res["ok"]
-    shutil.rmtree(base, ignore_errors=True)
 
-    spark.stop()
-    print("ALL OK" if ok else "FAILURES", flush=True)
-    return 0 if ok else 1
+    entries = {
+        f"twohop_n{N}": twohop_res,
+        f"kneserney_n{M}": kn_res,
+        f"srm_n{srm_m}": srm_res,
+    }
+    return finish(spark, entries, all(r["ok"] for r in entries.values()))
 
 
 if __name__ == "__main__":

@@ -22,12 +22,10 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 HOT_PCT = 5
 KEYSPACE = 10_000_000
@@ -35,7 +33,7 @@ EPS = 1e-4
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
+    (n,) = args(100_000_000)
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.session import local_session
@@ -60,28 +58,26 @@ def main() -> int:
         "eps": EPS,
     }
 
-    t0 = time.perf_counter()
-    hll = rows.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("uid")).alias("est")
-    ).collect()[0].est
-    results["hll_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "hll_sec"):
+        hll = rows.agg(
+            F.hll_sketch_estimate(F.hll_sketch_agg("uid")).alias("est")
+        ).collect()[0].est
     results["hll_estimate"] = int(hll)
     results["hll_rel_err"] = round(abs(hll - n) / n, 5)
 
-    t0 = time.perf_counter()
-    row = rows.selectExpr(
-        f"count_min_sketch(key, {EPS}d, 0.99d, 42) AS s",
-        "sum(CASE WHEN key = 0 THEN 1 ELSE 0 END) AS hot_true",
-        "sum(CASE WHEN key = 12345 THEN 1 ELSE 0 END) AS cold_true",
-    ).collect()[0]
-    jvm = spark._jvm
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        jvm.java.io.ByteArrayInputStream(bytes(row.s))
-    )
-    bound = math.ceil(EPS * n)
-    hot_est = int(cms.estimateCount(0))
-    cold_est = int(cms.estimateCount(12345))
-    results["cms_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "cms_sec"):
+        row = rows.selectExpr(
+            f"count_min_sketch(key, {EPS}d, 0.99d, 42) AS s",
+            "sum(CASE WHEN key = 0 THEN 1 ELSE 0 END) AS hot_true",
+            "sum(CASE WHEN key = 12345 THEN 1 ELSE 0 END) AS cold_true",
+        ).collect()[0]
+        jvm = spark._jvm
+        cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+            jvm.java.io.ByteArrayInputStream(bytes(row.s))
+        )
+        bound = math.ceil(EPS * n)
+        hot_est = int(cms.estimateCount(0))
+        cold_est = int(cms.estimateCount(12345))
     results["hot_true"] = int(row.hot_true)
     results["hot_est"] = hot_est
     results["cold_true"] = int(row.cold_true)
@@ -93,10 +89,7 @@ def main() -> int:
         and row.hot_true <= hot_est <= row.hot_true + bound
         and row.cold_true <= cold_est <= row.cold_true + bound
     )
-    merge_entry(f"sketch_n{n}", results)
-    print(results)
-    spark.stop()
-    return 0 if results["ok"] else 1
+    return finish(spark, {f"sketch_n{n}": results}, results["ok"])
 
 
 if __name__ == "__main__":

@@ -7,8 +7,8 @@ flattens the task-time distribution.  This probe:
 
   1. generates a 2x10^7-row fact table where ONE key owns 5% of all rows
      (1M rows) and the rest spread uniformly over 100k keys, plus a
-     100k-row dimension, to /tmp parquet (generation outside the timed
-     region),
+     100k-row dimension (the fact table built once per scale through
+     `materialize.reuse`, outside the timed region),
   2. runs the PLAIN shuffle join (auto-broadcast off, AQE skew-join
      splitting off — the regime the operator docstring targets: cases
      AQE's splitter does not cover, e.g. stateful streaming joins or
@@ -31,17 +31,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_DEFAULT = 20_000_000
+from scalebench import args, finish, timed  # noqa: E402
+
 N_KEYS = 100_000
 HOT_PCT = 5  # one key owns this % of all fact rows
 SALT = 32
 SHUFFLE_PARTITIONS = 256  # cluster-realistic; hot key ~14x the median task
+# bump when the fact generator changes, so the cached table is rebuilt
+VERSION = 1
 
 
 def rest_json(base: str, path: str):
@@ -71,11 +72,12 @@ def max_task_ms(spark, group: str) -> float:
     return worst
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
+def main() -> int:
+    (n,) = args(20_000_000)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import reuse
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.skew import salted_join
 
@@ -100,23 +102,25 @@ def main() -> None:
         "shuffle_partitions": SHUFFLE_PARTITIONS,
     }
 
-    fact_path = f"/tmp/ctdc-scale-probe-skew-{n}"
-    if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        fact = spark.range(n).select(
-            F.when(
-                F.pmod(F.xxhash64("id"), F.lit(100)) < F.lit(HOT_PCT), F.lit(0)
-            )
-            .otherwise(
-                F.pmod(F.xxhash64(F.col("id") + F.lit(1)), F.lit(N_KEYS)) + 1
-            )
-            .cast("long")
-            .alias("key"),
-            F.col("id").alias("v"),
-        )
-        fact.write.mode("overwrite").parquet(fact_path)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    fact = spark.read.parquet(fact_path)
+    def build(stage: str) -> None:
+        with timed(results, "generate_sec"):
+            spark.range(n).select(
+                F.when(
+                    F.pmod(F.xxhash64("id"), F.lit(100)) < F.lit(HOT_PCT),
+                    F.lit(0),
+                )
+                .otherwise(
+                    F.pmod(F.xxhash64(F.col("id") + F.lit(1)), F.lit(N_KEYS))
+                    + 1
+                )
+                .cast("long")
+                .alias("key"),
+                F.col("id").alias("v"),
+            ).write.parquet(os.path.join(stage, "data"))
+
+    want = {"n": n, "n_keys": N_KEYS, "hot_pct": HOT_PCT, "version": VERSION}
+    root, _, _ = reuse("probe-skew", str(n), want, build)
+    fact = spark.read.parquet(os.path.join(root, "data"))
     dim = spark.range(N_KEYS + 1).select(
         F.col("id").alias("key"), (F.col("id") * 2).alias("w")
     )
@@ -131,13 +135,13 @@ def main() -> None:
         return row.n, row.chk
 
     sc.setJobGroup("plain", "plain shuffle join")
-    t0 = time.perf_counter()
-    plain_n, plain_chk = checksum(fact.join(dim, "key"))
-    results["plain_wall_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "plain_wall_sec"):
+        plain_n, plain_chk = checksum(fact.join(dim, "key"))
     sc.setJobGroup("salted", "salted join")
-    t0 = time.perf_counter()
-    salt_n, salt_chk = checksum(salted_join(fact, dim, on=["key"], salt=SALT))
-    results["salted_wall_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "salted_wall_sec"):
+        salt_n, salt_chk = checksum(
+            salted_join(fact, dim, on=["key"], salt=SALT)
+        )
     sc.setJobGroup("probe-misc", "probe bookkeeping")
 
     results["rows"] = plain_n
@@ -153,13 +157,8 @@ def main() -> None:
 
     ok = results["results_equal"] and 0 < salted_ms < plain_ms
     results["ok"] = ok
-
-    from scalebench import merge_entry
-
-    merge_entry(f"skew_join_n{n}", results)
-    print(json.dumps({"metric": "scale_probe_skew", "results": results}))
-    sys.exit(0 if ok else 1)
+    return finish(spark, {f"skew_join_n{n}": results}, ok)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -32,12 +32,10 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 
 def expected_nearest_rank(n: int, m: int, q: float) -> int:
@@ -54,7 +52,7 @@ def expected_nearest_rank(n: int, m: int, q: float) -> int:
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
+    (n,) = args(100_000_000)
     from pyspark.sql import functions as F
 
     from compile_time_data_contracts_spark.session import local_session
@@ -74,163 +72,149 @@ def main() -> int:
         **{"spark.sql.shuffle.partitions": "64", "spark.driver.memory": "48g"},
     )
     results: dict = {"n_rows": n}
+    # one dict per section; each records its own "secs"
+    bands, zs, boot, kmr, fpr, mir = (
+        results.setdefault(name, {})
+        for name in (
+            "percentile_bands", "prefix_zscore", "poisson_bootstrap",
+            "kaplan_meier", "table_fingerprint", "mutual_information",
+        )
+    )
 
     # ---- percentile bands: closed-form nearest-rank over a cycle
     M = 1_000_001
-    t0 = time.time()
-    df = spark.range(n).select(
-        F.lit("g").alias("g"),
-        (F.col("id") % M).cast("double").alias("v"),
-    )
-    row = percentile_bands(df, "v", ["g"], scale=1).collect()[0]
-    bands_ok = all(
-        row[f"{name}_r"] == float(expected_nearest_rank(n, M, q))
-        for name, q in [("p50", 0.5), ("p90", 0.9), ("p99", 0.99)]
-    )
-    results["percentile_bands"] = {
-        "secs": round(time.time() - t0, 1),
-        "exact_closed_form": bands_ok,
-    }
+    with timed(bands, "secs"):
+        df = spark.range(n).select(
+            F.lit("g").alias("g"),
+            (F.col("id") % M).cast("double").alias("v"),
+        )
+        row = percentile_bands(df, "v", ["g"], scale=1).collect()[0]
+        bands_ok = all(
+            row[f"{name}_r"] == float(expected_nearest_rank(n, M, q))
+            for name, q in [("p50", 0.5), ("p90", 0.9), ("p99", 0.99)]
+        )
+    bands["exact_closed_form"] = bands_ok
 
     # ---- prefix z-score: planted spikes, zero false positives
     nz = n // 10
     spike_mod = 1_000_003
-    t0 = time.time()
-    ev = spark.range(nz).select(
-        (F.col("id") % 10).cast("string").alias("k"),
-        F.col("id").alias("seq"),
-        F.col("id").alias("tb"),
-        F.when(F.col("id") % spike_mod == 17, F.lit(10000.0))
-        .otherwise(100.0 + (F.col("id") % 7).cast("double"))
-        .alias("v"),
-    )
-    flagged = prefix_zscore_anomalies(
-        ev, "k", "seq", "tb", "v", min_history=30, z_threshold=3.0
-    )
-    got = [r["tb"] for r in flagged.collect()]
-    planted = {i for i in range(nz) if i % spike_mod == 17}
-    # spikes inside a key's first 30 observations are legitimately
-    # unflagged (cold start); keys interleave mod 10, so a spike at
-    # global position p is that key's (p // 10)-th observation
-    expected = {p for p in planted if (p // 10) >= 30}
-    results["prefix_zscore"] = {
-        "secs": round(time.time() - t0, 1),
-        "n_planted_scoreable": len(expected),
-        "all_planted_flagged": expected.issubset(set(got)),
-        "false_positives": len(set(got) - planted),
-    }
+    with timed(zs, "secs"):
+        ev = spark.range(nz).select(
+            (F.col("id") % 10).cast("string").alias("k"),
+            F.col("id").alias("seq"),
+            F.col("id").alias("tb"),
+            F.when(F.col("id") % spike_mod == 17, F.lit(10000.0))
+            .otherwise(100.0 + (F.col("id") % 7).cast("double"))
+            .alias("v"),
+        )
+        flagged = prefix_zscore_anomalies(
+            ev, "k", "seq", "tb", "v", min_history=30, z_threshold=3.0
+        )
+        got = [r["tb"] for r in flagged.collect()]
+        planted = {i for i in range(nz) if i % spike_mod == 17}
+        # spikes inside a key's first 30 observations are legitimately
+        # unflagged (cold start); keys interleave mod 10, so a spike at
+        # global position p is that key's (p // 10)-th observation
+        expected = {p for p in planted if (p // 10) >= 30}
+    zs["n_planted_scoreable"] = len(expected)
+    zs["all_planted_flagged"] = expected.issubset(set(got))
+    zs["false_positives"] = len(set(got) - planted)
 
     # ---- Poisson bootstrap: CI brackets the exact mean, CLT width
     nb_rows, B = 1_000_000, 200
-    t0 = time.time()
-    vals = spark.range(nb_rows).select(
-        F.col("id").alias("k"),
-        ((F.col("id") % 1000) / 100.0 + 5.0).alias("v"),  # mean 9.995
+    with timed(boot, "secs"):
+        vals = spark.range(nb_rows).select(
+            F.col("id").alias("k"),
+            ((F.col("id") % 1000) / 100.0 + 5.0).alias("v"),  # mean 9.995
+        )
+        ci = poisson_bootstrap_mean_ci(vals, "v", "k", n_boot=B).collect()[0]
+        true_mean = sum((i % 1000) / 100.0 + 5.0 for i in range(1000)) / 1000
+        sd = math.sqrt(
+            sum(((i % 1000) / 100.0 + 5.0 - true_mean) ** 2 for i in range(1000))
+            / 1000
+        )
+        clt_half = 1.96 * sd / math.sqrt(nb_rows)
+        width = ci["ci_hi_r"] - ci["ci_lo_r"]
+    boot["exploded_rows"] = nb_rows * B
+    boot["ci_brackets_true_mean"] = (
+        ci["ci_lo_r"] <= round(true_mean, 4) <= ci["ci_hi_r"]
     )
-    ci = poisson_bootstrap_mean_ci(vals, "v", "k", n_boot=B).collect()[0]
-    true_mean = sum((i % 1000) / 100.0 + 5.0 for i in range(1000)) / 1000
-    sd = math.sqrt(
-        sum(((i % 1000) / 100.0 + 5.0 - true_mean) ** 2 for i in range(1000))
-        / 1000
-    )
-    clt_half = 1.96 * sd / math.sqrt(nb_rows)
-    width = ci["ci_hi_r"] - ci["ci_lo_r"]
-    results["poisson_bootstrap"] = {
-        "secs": round(time.time() - t0, 1),
-        "exploded_rows": nb_rows * B,
-        "ci_brackets_true_mean": ci["ci_lo_r"]
-        <= round(true_mean, 4)
-        <= ci["ci_hi_r"],
-        "width": round(width, 4),
-        "clt_width": round(2 * clt_half, 4),
-        "width_within_4x_clt": width <= 4 * 2 * clt_half,
-    }
+    boot["width"] = round(width, 4)
+    boot["clt_width"] = round(2 * clt_half, 4)
+    boot["width_within_4x_clt"] = width <= 4 * 2 * clt_half
 
     # ---- Kaplan-Meier: closed-form n_risk/d_events at probe times
     nk = n // 10
-    t0 = time.time()
-    subj = spark.range(nk).select(
-        (F.col("id") % 1000).alias("dur"),
-        (F.col("id") % 10 > 0).cast("int").alias("ev"),
-    )
-    km = {r["t"]: r for r in kaplan_meier(subj, "dur", "ev").collect()}
-    # duration d is taken by ids with id % 1000 == d: count = nk/1000
-    # (nk divisible by 1000).  Because d fixes id mod 10, censoring is
-    # all-or-nothing per duration: d % 10 == 0 durations are fully
-    # censored (no KM row), every other duration is fully events —
-    # exactly 900 event times, d_events = per_t each, and
-    # n_risk(t) = nk - t*per_t regardless of censoring.
-    per_t = nk // 1000
-    km_ok = len(km) == 900 and 500 not in km
-    for t in (1, 501, 999):
-        r = km.get(t)
-        if r is None or r["d_events"] != per_t or r["n_risk"] != (
-            nk - t * per_t
-        ):
-            km_ok = False
-    results["kaplan_meier"] = {
-        "secs": round(time.time() - t0, 1),
-        "subjects": nk,
-        "closed_form_counts": km_ok,
-        "distinct_event_times": len(km),
-    }
+    with timed(kmr, "secs"):
+        subj = spark.range(nk).select(
+            (F.col("id") % 1000).alias("dur"),
+            (F.col("id") % 10 > 0).cast("int").alias("ev"),
+        )
+        km = {r["t"]: r for r in kaplan_meier(subj, "dur", "ev").collect()}
+        # duration d is taken by ids with id % 1000 == d: count = nk/1000
+        # (nk divisible by 1000).  Because d fixes id mod 10, censoring
+        # is all-or-nothing per duration: d % 10 == 0 durations are fully
+        # censored (no KM row), every other duration is fully events —
+        # exactly 900 event times, d_events = per_t each, and
+        # n_risk(t) = nk - t*per_t regardless of censoring.
+        per_t = nk // 1000
+        km_ok = len(km) == 900 and 500 not in km
+        for t in (1, 501, 999):
+            r = km.get(t)
+            if r is None or r["d_events"] != per_t or r["n_risk"] != (
+                nk - t * per_t
+            ):
+                km_ok = False
+    kmr["subjects"] = nk
+    kmr["closed_form_counts"] = km_ok
+    kmr["distinct_event_times"] = len(km)
 
     # ---- table fingerprint: order-invariant, edit-sensitive
-    t0 = time.time()
-    base = spark.range(n).select(
-        F.col("id"), (F.col("id") % 97).cast("string").alias("s")
-    )
-    fp1 = table_fingerprint(base, ["id", "s"]).collect()[0]
-    fp2 = table_fingerprint(base.repartition(97), ["id", "s"]).collect()[0]
-    edited = spark.range(n).select(
-        F.col("id"),
-        F.when(F.col("id") == n // 2, F.lit("EDITED"))
-        .otherwise((F.col("id") % 97).cast("string"))
-        .alias("s"),
-    )
-    fp3 = table_fingerprint(edited, ["id", "s"]).collect()[0]
-    results["table_fingerprint"] = {
-        "secs": round(time.time() - t0, 1),
-        "order_invariant": tuple(fp1) == tuple(fp2),
-        "single_row_edit_detected": tuple(fp3) != tuple(fp1),
-    }
+    with timed(fpr, "secs"):
+        base = spark.range(n).select(
+            F.col("id"), (F.col("id") % 97).cast("string").alias("s")
+        )
+        fp1 = table_fingerprint(base, ["id", "s"]).collect()[0]
+        fp2 = table_fingerprint(base.repartition(97), ["id", "s"]).collect()[0]
+        edited = spark.range(n).select(
+            F.col("id"),
+            F.when(F.col("id") == n // 2, F.lit("EDITED"))
+            .otherwise((F.col("id") % 97).cast("string"))
+            .alias("s"),
+        )
+        fp3 = table_fingerprint(edited, ["id", "s"]).collect()[0]
+    fpr["order_invariant"] = tuple(fp1) == tuple(fp2)
+    fpr["single_row_edit_detected"] = tuple(fp3) != tuple(fp1)
 
     # ---- mutual information: exact-zero and exact-one contracts
-    t0 = time.time()
-    grid = spark.range((n // 16) * 16).select(
-        (F.col("id") % 4).cast("string").alias("x"),
-        ((F.col("id") / 4).cast("bigint") % 4).cast("string").alias("y"),
-    )
-    mi0 = mutual_information(grid, "x", "y").collect()[0]
-    ident = spark.range(n // 10).select(
-        (F.col("id") % 4).cast("string").alias("x"),
-        (F.col("id") % 4).cast("string").alias("y"),
-    )
-    mi1 = mutual_information(ident, "x", "y").collect()[0]
-    results["mutual_information"] = {
-        "secs": round(time.time() - t0, 1),
-        "independent_mi_zero": abs(mi0["mi_r"]) < 1e-9,
-        "identity_nmi_one": abs(mi1["nmi_r"] - 1.0) < 1e-9,
-    }
+    with timed(mir, "secs"):
+        grid = spark.range((n // 16) * 16).select(
+            (F.col("id") % 4).cast("string").alias("x"),
+            ((F.col("id") / 4).cast("bigint") % 4).cast("string").alias("y"),
+        )
+        mi0 = mutual_information(grid, "x", "y").collect()[0]
+        ident = spark.range(n // 10).select(
+            (F.col("id") % 4).cast("string").alias("x"),
+            (F.col("id") % 4).cast("string").alias("y"),
+        )
+        mi1 = mutual_information(ident, "x", "y").collect()[0]
+    mir["independent_mi_zero"] = abs(mi0["mi_r"]) < 1e-9
+    mir["identity_nmi_one"] = abs(mi1["nmi_r"] - 1.0) < 1e-9
 
     ok = (
         bands_ok
-        and results["prefix_zscore"]["all_planted_flagged"]
-        and results["prefix_zscore"]["false_positives"] == 0
-        and results["poisson_bootstrap"]["ci_brackets_true_mean"]
-        and results["poisson_bootstrap"]["width_within_4x_clt"]
+        and zs["all_planted_flagged"]
+        and zs["false_positives"] == 0
+        and boot["ci_brackets_true_mean"]
+        and boot["width_within_4x_clt"]
         and km_ok
-        and results["table_fingerprint"]["order_invariant"]
-        and results["table_fingerprint"]["single_row_edit_detected"]
-        and results["mutual_information"]["independent_mi_zero"]
-        and results["mutual_information"]["identity_nmi_one"]
+        and fpr["order_invariant"]
+        and fpr["single_row_edit_detected"]
+        and mir["independent_mi_zero"]
+        and mir["identity_nmi_one"]
     )
     results["ok"] = ok
-    merge_entry(f"stats_f_n{n}", results)
-    import json
-
-    print(json.dumps({"metric": "scale_probe_stats_f", "results": results}))
-    return 0 if ok else 1
+    return finish(spark, {f"stats_f_n{n}": results}, ok)
 
 
 if __name__ == "__main__":

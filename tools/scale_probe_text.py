@@ -28,19 +28,19 @@ Usage: python tools/scale_probe_text.py [n_docs]   (default 100000)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_DEFAULT = 100_000
+from scalebench import args, finish, timed  # noqa: E402
+
 PLANTED = 1_000
 SEED = 20260813
 DOC_TOKENS = 60
 VOCAB = 50_000
+# bump when generate() changes, so the cached corpus is rebuilt
+VERSION = 1
 
 
 def generate(spark, path: str, n: int) -> None:
@@ -70,11 +70,12 @@ def generate(spark, path: str, n: int) -> None:
     ).parquet(path)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
+def main() -> int:
+    (n,) = args(100_000)
 
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import reuse
     from compile_time_data_contracts_spark.session import local_session
     from compile_time_data_contracts_spark.operators.dedup import (
         connected_components_star,
@@ -84,17 +85,18 @@ def main() -> None:
     spark = local_session("ctdc-scale-probe-text", **{"spark.driver.memory": "16g"})
 
     results: dict = {"n_docs": n + PLANTED, "threshold": 0.5}
-    path = f"/tmp/ctdc-scale-probe-text-{n}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t0 = time.perf_counter()
-        generate(spark, path, n)
-        results["generate_sec"] = round(time.perf_counter() - t0, 2)
-    docs = spark.read.parquet(path)
 
-    t0 = time.perf_counter()
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5).persist()
-    n_pairs = pairs.count()
-    results["minhash_sec"] = round(time.perf_counter() - t0, 2)
+    def build(stage: str) -> None:
+        with timed(results, "generate_sec"):
+            generate(spark, os.path.join(stage, "data"), n)
+
+    want = {"n": n, "seed": SEED, "version": VERSION}
+    root, _, _ = reuse("probe-text", str(n), want, build)
+    docs = spark.read.parquet(os.path.join(root, "data"))
+
+    with timed(results, "minhash_sec"):
+        pairs = minhash_near_dup_pairs(docs, threshold=0.5).persist()
+        n_pairs = pairs.count()
     results["pairs_found"] = n_pairs
 
     planted_hit = pairs.filter(
@@ -106,12 +108,11 @@ def main() -> None:
     # corpus is built so random pairs sit far below 0.5
     results["unplanted_pairs"] = n_pairs - planted_hit
 
-    t0 = time.perf_counter()
-    clusters = connected_components_star(pairs)
-    n_clusters = clusters.filter(
-        F.col("doc_id") == F.col("cluster_id")
-    ).count()
-    results["cc_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "cc_sec"):
+        clusters = connected_components_star(pairs)
+        n_clusters = clusters.filter(
+            F.col("doc_id") == F.col("cluster_id")
+        ).count()
     results["clusters"] = n_clusters
 
     # leakage-safe split over the full corpus: every near-dup cluster
@@ -123,24 +124,23 @@ def main() -> None:
         split_by_cluster,
     )
 
-    t0 = time.perf_counter()
-    allc = (
-        docs.select("doc_id")
-        .join(clusters, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
+    with timed(results, "split_sec"):
+        allc = (
+            docs.select("doc_id")
+            .join(clusters, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
+            )
         )
-    )
-    lab = split_by_cluster(allc)
-    agg = lab.groupBy("cluster_id").agg(
-        F.count("*").alias("sz"),
-        F.countDistinct("split").alias("n_safe"),
-        F.countDistinct("naive_split").alias("n_naive"),
-    )
-    straddling_safe = agg.filter("n_safe > 1").count()
-    leaked_naive = agg.filter("sz > 1 AND n_naive > 1").count()
-    results["split_sec"] = round(time.perf_counter() - t0, 2)
+        lab = split_by_cluster(allc)
+        agg = lab.groupBy("cluster_id").agg(
+            F.count("*").alias("sz"),
+            F.countDistinct("split").alias("n_safe"),
+            F.countDistinct("naive_split").alias("n_naive"),
+        )
+        straddling_safe = agg.filter("n_safe > 1").count()
+        leaked_naive = agg.filter("sz > 1 AND n_naive > 1").count()
     results["split_straddling_clusters"] = straddling_safe
     results["split_leaked_clusters_naive"] = leaked_naive
 
@@ -152,14 +152,9 @@ def main() -> None:
         and leaked_naive > 0  # naive split demonstrably would
     )
     results["ok"] = ok
-
-    # merge into SCALEBENCH.json next to the vector probe, keyed by scale
-    from scalebench import merge_entry
-
-    merge_entry(f"text_n{n + PLANTED}", results)
-    print(json.dumps({"metric": "scale_probe_text", "results": results}))
-    sys.exit(0 if ok else 1)
+    # keyed by scale, next to the vector probe's entries
+    return finish(spark, {f"text_n{n + PLANTED}": results}, ok)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -27,22 +27,23 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scalebench import merge_entry  # noqa: E402
+from scalebench import args, finish, timed  # noqa: E402
 
 EVENTS_PER_USER = 100
 SESSION_EVERY = 50  # every 50th event opens a new session (45-min gap)
 SPIKE_EVERY = 25  # by event index within user stream
+# bump when the event generator changes, so the cached stream rebuilds
+VERSION = 1
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    (n,) = args(10_000_000)
     from pyspark.sql import functions as F
 
+    from compile_time_data_contracts_spark.operators.materialize import reuse
     from compile_time_data_contracts_spark.session import local_session
 
     spark = local_session(
@@ -79,42 +80,47 @@ def main() -> int:
             ).alias("value"),
         )
     )
-    path = f"/tmp/ctdc-window-events-{n}-s{SPIKE_EVERY}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.write.mode("overwrite").parquet(path)
-    events = spark.read.parquet(path)
+    want = {
+        "n": n, "events_per_user": EVENTS_PER_USER,
+        "session_every": SESSION_EVERY, "spike_every": SPIKE_EVERY,
+        "version": VERSION,
+    }
+    root, _, _ = reuse(
+        "probe-window", str(n), want,
+        lambda stage: ev.write.parquet(os.path.join(stage, "data")),
+    )
+    events = spark.read.parquet(os.path.join(root, "data"))
 
     results: dict = {"n_events": n, "n_users": n_users}
 
     # --- q169 shape: trailing z-score over the previous 20 per user
-    t0 = time.perf_counter()
     from pyspark.sql import Window
 
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-20, -1)
-    )
-    z = events.select(
-        "event_id",
-        "seq",
-        F.when(
-            (F.count("*").over(w) >= 5)
-            & (F.stddev_samp("value").over(w) > 1e-12),
-            F.abs(F.col("value") - F.avg("value").over(w))
-            / F.stddev_samp("value").over(w),
-        ).alias("zscore"),
-    ).filter(F.col("zscore").isNotNull())
-    flagged = z.filter(F.col("zscore") > 3.0)
-    spiked = flagged.filter(
-        (F.col("seq") % SPIKE_EVERY == 0) & (F.col("seq") > 0)
-    ).count()
-    false_pos = flagged.count() - spiked
-    n_planted = events.filter(
-        (F.col("seq") % SPIKE_EVERY == 0) & (F.col("seq") > 0)
-    ).count()
-    n_scored = z.count()
-    results["anomaly_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "anomaly_sec"):
+        w = (
+            Window.partitionBy("user_id")
+            .orderBy("ts", "event_id")
+            .rowsBetween(-20, -1)
+        )
+        z = events.select(
+            "event_id",
+            "seq",
+            F.when(
+                (F.count("*").over(w) >= 5)
+                & (F.stddev_samp("value").over(w) > 1e-12),
+                F.abs(F.col("value") - F.avg("value").over(w))
+                / F.stddev_samp("value").over(w),
+            ).alias("zscore"),
+        ).filter(F.col("zscore").isNotNull())
+        flagged = z.filter(F.col("zscore") > 3.0)
+        spiked = flagged.filter(
+            (F.col("seq") % SPIKE_EVERY == 0) & (F.col("seq") > 0)
+        ).count()
+        false_pos = flagged.count() - spiked
+        n_planted = events.filter(
+            (F.col("seq") % SPIKE_EVERY == 0) & (F.col("seq") > 0)
+        ).count()
+        n_scored = z.count()
     results["planted_spikes"] = int(n_planted)
     results["spikes_flagged"] = int(spiked)
     results["false_positives"] = int(false_pos)
@@ -131,24 +137,23 @@ def main() -> int:
     )
 
     # --- q170 shape: 30-min-gap sessionization
-    t0 = time.perf_counter()
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_s = (
-        F.when(F.lag("ts").over(wo).isNull(), 1)
-        .when(
-            F.col("ts").cast("long") - F.lag("ts").over(wo).cast("long")
-            > 1800,
-            1,
+    with timed(results, "sessionize_sec"):
+        wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        new_s = (
+            F.when(F.lag("ts").over(wo).isNull(), 1)
+            .when(
+                F.col("ts").cast("long") - F.lag("ts").over(wo).cast("long")
+                > 1800,
+                1,
+            )
+            .otherwise(0)
         )
-        .otherwise(0)
-    )
-    sess = events.withColumn("new_s", new_s).withColumn(
-        "sid", F.sum("new_s").over(wo)
-    )
-    n_sessions = sess.agg(
-        F.count_distinct("user_id", "sid").alias("c")
-    ).collect()[0].c
-    results["sessionize_sec"] = round(time.perf_counter() - t0, 2)
+        sess = events.withColumn("new_s", new_s).withColumn(
+            "sid", F.sum("new_s").over(wo)
+        )
+        n_sessions = sess.agg(
+            F.count_distinct("user_id", "sid").alias("c")
+        ).collect()[0].c
     results["sessions"] = int(n_sessions)
     expected_sessions = n_users * (
         (EVENTS_PER_USER + SESSION_EVERY - 1) // SESSION_EVERY
@@ -160,13 +165,12 @@ def main() -> int:
         ewma_trailing,
     )
 
-    t0 = time.perf_counter()
-    ew = ewma_trailing(
-        events, "user_id", ["ts", "event_id"], "value",
-        alpha=0.1, window=8, decimals=6,
-    )
-    ew_sum = ew.agg(F.sum("ewma").alias("s")).collect()[0].s
-    results["ewma_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "ewma_sec"):
+        ew = ewma_trailing(
+            events, "user_id", ["ts", "event_id"], "value",
+            alpha=0.1, window=8, decimals=6,
+        )
+        ew_sum = ew.agg(F.sum("ewma").alias("s")).collect()[0].s
     results["ewma_checksum"] = round(float(ew_sum), 2)
 
     plan = ew._sc._jvm.PythonSQLUtils.explainString(
@@ -208,15 +212,14 @@ def main() -> int:
     # merge) and planted breaks are 2,760 s (> both gaps, always
     # break), so the dynamic session count must equal the lag-based
     # count above.
-    t0 = time.perf_counter()
-    gap = F.when(
-        F.col("event_id") % 2 == 0, F.lit("30 minutes")
-    ).otherwise(F.lit("10 minutes"))
-    dyn = events.groupBy(
-        "user_id", F.session_window("ts", gap)
-    ).agg(F.count("*"))
-    n_dyn = dyn.count()
-    results["dyn_session_sec"] = round(time.perf_counter() - t0, 2)
+    with timed(results, "dyn_session_sec"):
+        gap = F.when(
+            F.col("event_id") % 2 == 0, F.lit("30 minutes")
+        ).otherwise(F.lit("10 minutes"))
+        dyn = events.groupBy(
+            "user_id", F.session_window("ts", gap)
+        ).agg(F.count("*"))
+        n_dyn = dyn.count()
     results["dyn_sessions"] = int(n_dyn)
     dplan = dyn._sc._jvm.PythonSQLUtils.explainString(
         dyn._jdf.queryExecution(), "formatted"
@@ -236,10 +239,7 @@ def main() -> int:
         and n_dyn == expected_sessions
         and results["dyn_session_merging_plan"]
     )
-    merge_entry(f"window_n{n}", results)
-    print(results)
-    spark.stop()
-    return 0 if results["ok"] else 1
+    return finish(spark, {f"window_n{n}": results}, results["ok"])
 
 
 if __name__ == "__main__":

@@ -1,4 +1,6 @@
-"""Shared SCALEBENCH.json writer for the tools/scale_probe* scripts.
+"""The one harness of the tools/scale_probe* scripts: their positional
+arguments (`args`), their timers (`timed`), and their SCALEBENCH.json
+write and exit code (`finish`, over `merge_entry`).
 
 SCALEBENCH.json holds one entry per (probe family, scale), keyed like
 `vectors_n101000` / `text_n1001000` / `skew_join_n10000000`, so probes
@@ -16,6 +18,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import time
+from contextlib import contextmanager
 
 BENCH_PATH = os.path.join(os.path.dirname(__file__), "..", "SCALEBENCH.json")
 
@@ -72,3 +77,30 @@ def merge_entry(key: str, results: dict) -> dict:
         finally:
             fcntl.flock(lock, fcntl.LOCK_UN)
     return doc
+
+
+def args(*defaults: int) -> list[int]:
+    """The script's positional integer arguments, each falling back to
+    its default when not given."""
+    given = sys.argv[1:]
+    return [int(given[i]) if i < len(given) else d for i, d in enumerate(defaults)]
+
+
+@contextmanager
+def timed(results: dict, key: str):
+    """Record the block's wall time, in seconds to 2 places, as
+    ``results[key]``."""
+    t0 = time.perf_counter()
+    yield
+    results[key] = round(time.perf_counter() - t0, 2)
+
+
+def finish(spark, entries: dict, ok: bool) -> int:
+    """Merge every ``{key: results}`` entry into SCALEBENCH.json, print
+    them as one JSON line, stop Spark, and return the exit code: 0 only
+    when ``ok``."""
+    for key, results in entries.items():
+        merge_entry(key, results)
+    print(json.dumps(entries))
+    spark.stop()
+    return 0 if ok else 1
