@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _hadoop_exists, _ivf_fingerprint
+from .materialize import content_fingerprint, meta_matches, read_meta
 
 __all__ = [
     "normalize_text",
@@ -58,6 +58,14 @@ __all__ = [
 # MB of shingle strings) fall back to a shuffle anti-join rather than
 # ship an unbounded set to the driver and every executor.
 _HOT_BROADCAST_MAX = 1_000_000
+
+
+def anti_join_hot(df: DataFrame, hot: DataFrame, on: str, n_hot: int) -> DataFrame:
+    """``df`` without the rows whose ``on`` value is in ``hot`` (a list
+    of ``n_hot`` rows): a broadcast anti-join while the list is at most
+    ``_HOT_BROADCAST_MAX`` rows, a shuffle anti-join past it."""
+    side = F.broadcast(hot) if n_hot <= _HOT_BROADCAST_MAX else hot
+    return df.join(side, on, "left_anti")
 
 
 def normalize_text(col: str = "text") -> F.Column:
@@ -184,10 +192,7 @@ def _capped_pair_scores(
         # postings, reused by the log line below) and only broadcast
         # under the threshold; above it, a plain shuffle anti-join
         n_hot = hot.count()
-        if n_hot <= _HOT_BROADCAST_MAX:
-            kept = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        else:
-            kept = sh.join(hot, "shingle", "left_anti")
+        kept = anti_join_hot(sh, hot, "shingle", n_hot)
         a, b = kept.alias("a"), kept.alias("b")
         cand = (
             a.join(
@@ -637,17 +642,26 @@ def minhash_index_build(
     fp = (
         fingerprint
         if fingerprint is not None
-        else _ivf_fingerprint(df, id_col)
+        else content_fingerprint(df, id_col)
     )
     from ..sources.layout import write_tiny_parquet
 
     write_tiny_parquet(
         spark,
-        [(fp[0], fp[1], id_col, n, num_hashes, bands)],
+        [tuple(_minhash_meta_row(fp, id_col, n, num_hashes, bands).values())],
         "n_docs long, max_id string, id_col string, shingle_n int, "
         "num_hashes int, bands int",
         f"{index_path}/meta",
     )
+
+
+def _minhash_meta_row(fp, id_col, n, num_hashes, bands) -> dict:
+    """The MinHash index ``meta`` row: the corpus content fingerprint
+    and the shingle/hash/band parameters, in column order."""
+    return {
+        "n_docs": fp[0], "max_id": fp[1], "id_col": id_col,
+        "shingle_n": n, "num_hashes": num_hashes, "bands": bands,
+    }
 
 
 def minhash_index_reuse_or_build(
@@ -664,30 +678,9 @@ def minhash_index_reuse_or_build(
     current corpus, mirroring ``ivf_topk``'s reuse contract — a
     regenerated corpus at the same path triggers a rebuild instead of
     silently serving stale candidates."""
-    from pyspark.errors import AnalysisException
-
-    spark = df.sparkSession
-    fp = _ivf_fingerprint(df, id_col)
-    stale = not _hadoop_exists(spark, f"{index_path}/meta")
-    try:
-        if not stale:
-            m = spark.read.parquet(f"{index_path}/meta").first()
-            stale = m is None or (
-                (int(m["n_docs"]), m["max_id"]) != fp
-                or m["id_col"] != id_col
-                or (int(m["shingle_n"]), int(m["num_hashes"]), int(m["bands"]))
-                != (n, num_hashes, bands)
-            )
-    except AnalysisException:
-        # unreadable-as-parquet meta -> build.  ONLY the
-        # analysis error: a transient storage fault (permissions,
-        # network) must surface, not silently trigger a full-corpus
-        # rebuild over a perfectly valid index
-        stale = True
-    except (KeyError, ValueError, TypeError):
-        # meta exists but predates a field or carries junk -> rebuild
-        stale = True
-    if stale:
+    fp = content_fingerprint(df, id_col)
+    want = _minhash_meta_row(fp, id_col, n, num_hashes, bands)
+    if not meta_matches(read_meta(df.sparkSession, f"{index_path}/meta"), want):
         minhash_index_build(
             df, index_path, id_col, text_col, n, num_hashes, bands,
             fingerprint=fp,
@@ -722,7 +715,9 @@ def near_dup_against(
     :func:`minhash_near_dup_pairs` on the batch for those.  Parameters
     (shingle n, hashes, bands) come from the index meta so batch
     signatures are always computed compatibly."""
-    m = spark.read.parquet(f"{index_path}/meta").first()
+    m = read_meta(spark, f"{index_path}/meta")
+    if m is None:
+        raise ValueError(f"near_dup_against: no index meta at {index_path}")
     if m["id_col"] != id_col:
         raise ValueError(
             f"index at {index_path} was built on id column "

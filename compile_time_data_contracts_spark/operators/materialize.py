@@ -18,9 +18,11 @@ may be reused:
   token), else rebuilt in a unique staging sibling and published by
   rename, so no reader ever sees a half-built cache.
 
-What stays in place, on purpose: the library operators whose path the
-caller supplies — ``ivf_build_or_reuse``, ``ivf_pq_build_or_reuse``
-and ``minhash_index_reuse_or_build`` — keep their parquet meta and
+The library indexes whose path the caller supplies —
+``ivf_build_or_reuse``, ``ivf_pq_build_or_reuse`` and
+``minhash_index_reuse_or_build`` — keep a one-row Parquet ``meta``
+table, read by :func:`read_meta`, and reuse it by the rule
+:func:`reuse` applies to ``meta.json`` (:func:`meta_matches`).  They
 build in place, because a caller path may be remote storage that a
 local rename cannot publish to (queries hand them a :func:`reuse_dir`
 path).  Mutation after publish also stays with its owner: ``ivf_drift``
@@ -53,19 +55,27 @@ the only cut that also resets the plan.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = [
+    "content_fingerprint",
     "ensure_checkpoint_dir",
+    "hadoop_delete",
+    "hadoop_exists",
+    "meta_matches",
     "path_bytes",
     "pin",
     "pin_if_input_large",
     "pin_with_signature",
+    "read_meta",
+    "read_optional",
     "reuse",
     "reuse_dir",
     "scan_input_bytes",
     "scratch_dir",
+    "training_sample",
     "under_scratch_dir",
 ]
 
@@ -102,7 +112,7 @@ def reuse_dir(kind: str, key: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"ctdc-{kind}-{tag}")
 
 
-def _read_meta(root: str) -> dict | None:
+def _read_json_meta(root: str) -> dict | None:
     import json
     import os
 
@@ -114,7 +124,10 @@ def _read_meta(root: str) -> dict | None:
     return meta if isinstance(meta, dict) else None
 
 
-def _matches(meta: dict | None, want: dict) -> bool:
+def meta_matches(meta: dict | None, want: dict) -> bool:
+    """The one staleness rule: a cache or index whose recorded ``meta``
+    holds every ``want`` field with an equal value is reused; any other
+    (no meta, a missing field, a changed value) is rebuilt."""
     return meta is not None and all(meta.get(k) == v for k, v in want.items())
 
 
@@ -139,8 +152,8 @@ def reuse(kind: str, key: str, want: dict, build) -> tuple[str, dict, bool]:
 
     want = json.loads(json.dumps(want))  # tuples compare as JSON lists
     root = reuse_dir(kind, key)
-    meta = _read_meta(root)
-    if _matches(meta, want):
+    meta = _read_json_meta(root)
+    if meta_matches(meta, want):
         return root, meta, False
     staging = f"{root}.build-{os.getpid()}-{secrets.token_hex(4)}"
     os.makedirs(staging)
@@ -153,8 +166,8 @@ def reuse(kind: str, key: str, want: dict, build) -> tuple[str, dict, bool]:
                 os.rename(staging, root)
                 return root, meta, True
             except OSError:
-                have = _read_meta(root)
-                if _matches(have, want):
+                have = _read_json_meta(root)
+                if meta_matches(have, want):
                     shutil.rmtree(staging, ignore_errors=True)
                     return root, have, False
                 if not os.path.isdir(root):
@@ -169,6 +182,95 @@ def reuse(kind: str, key: str, want: dict, build) -> tuple[str, dict, bool]:
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
+
+
+def _hadoop_fs(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the Hadoop FS API, which
+    works for any scheme the session can reach."""
+    p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def hadoop_exists(spark, path: str) -> bool:
+    """Whether ``path`` exists.  The cold-index probes ask this before
+    reading an index table: a failing ``spark.read`` is not silent once
+    the session has run an ``observe()`` — Spark's observation listener
+    logs its full stack trace at ERROR."""
+    fs, p = _hadoop_fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def hadoop_delete(spark, path: str) -> bool:
+    """Recursively delete ``path`` via the Hadoop FS API.  Returns
+    whether the path existed — callers that KNOW it must exist treat
+    False as an error instead of silently skipping (the
+    leaf-path-mismatch failure mode)."""
+    fs, p = _hadoop_fs(spark, path)
+    if fs.exists(p):
+        fs.delete(p, True)
+        return True
+    return False
+
+
+def read_optional(spark, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)`` of an optional table, or None when
+    the path does not exist (asked first, for the reason
+    :func:`hadoop_exists` gives) or does not read as Parquet."""
+    if not hadoop_exists(spark, path):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def read_meta(spark, path: str) -> dict | None:
+    """The one-row Parquet meta table at ``path`` as a dict, or None
+    when the path does not exist, does not read as Parquet, or holds no
+    row.  Reuse is ``meta_matches(read_meta(spark, path), want)``.  Any
+    other error (a storage fault) surfaces: it must not trigger a
+    rebuild over a valid index."""
+    df = read_optional(spark, path)
+    row = df.first() if df is not None else None
+    return row.asDict() if row is not None else None
+
+
+def content_fingerprint(df: DataFrame, id_col: str) -> tuple[int, str]:
+    """Cheap content fingerprint of an indexed table — the IVF, IVF-PQ
+    and MinHash indexes' reuse check: (row count, max id rendered as
+    string).  Count comes from parquet footers; the max is a
+    single column-pruned partial-agg scan — negligible next to a k-means
+    fit, and it catches a regenerated source table that a bare
+    path-exists check would silently miss."""
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.max(F.col(id_col).cast("string")).alias("mx"),
+    ).first()
+    return int(row["n"]), (row["mx"] if row["mx"] is not None else "")
+
+
+def training_sample(
+    df: DataFrame, id_col: str, vec_col: str, n: int, seed: int
+) -> "np.ndarray":
+    """The ``vec_col`` vectors of up to ``n`` rows of ``df`` as one
+    matrix: the rows with the smallest ``xxhash64(id, seed)``, stacked
+    in ``df``'s own row order, so a table of at most ``n`` rows trains
+    on itself as given.  The same input files give the same matrix on
+    every run, so k-means centroids and PQ codebooks trained on it are
+    reproducible (a ``sample(frac).limit(n)`` draw takes rows in
+    shuffle-arrival order).  Spark plans the ordered limit as a
+    per-partition top-``n`` (``TakeOrderedAndProject``); no row count."""
+    import numpy as np
+
+    pdf = (
+        df.withColumn("__pos", F.monotonically_increasing_id())
+        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
+        .limit(n)
+        .select("__pos", vec_col)
+        .toPandas()
+        .sort_values("__pos")
+    )
+    return np.vstack(pdf[vec_col].to_numpy())
 
 
 def under_scratch_dir(path: str) -> bool:

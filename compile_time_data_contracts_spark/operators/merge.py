@@ -120,9 +120,13 @@ def merge_upsert(
          parquet caveat: concurrent writers to the SAME bucket still
          need an external lock or a table format).
     """
-    meta = spark.read.parquet(f"{path}/meta").first()
+    from .materialize import read_meta
+
+    meta = read_meta(spark, f"{path}/meta")
+    if meta is None:
+        raise ValueError(f"merge_upsert: no snapshot meta at {path}")
     key_col = meta["key_col"]
-    num_buckets = int(meta["num_buckets"])
+    num_buckets = meta["num_buckets"]
     if key_col not in updates.columns:
         raise ValueError(
             f"updates lack the snapshot key column {key_col!r} "

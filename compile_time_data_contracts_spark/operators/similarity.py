@@ -19,11 +19,19 @@ from __future__ import annotations
 
 import math
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.layout import write_tiny_parquet
+from .materialize import (
+    content_fingerprint,
+    hadoop_delete,
+    hadoop_exists,
+    meta_matches,
+    read_meta,
+    read_optional,
+    training_sample,
+)
 
 __all__ = [
     "dot",
@@ -634,21 +642,16 @@ def ivf_assign(
     broadcast matmul per Arrow batch.
 
     Returns (assigned_df with a ``cluster`` column, centroids array).
-    The driver never holds more than ``sample_size`` vectors; assignment
+    The driver never holds more than ``sample_size`` vectors, the same
+    ones on every run (:func:`.materialize.training_sample`); assignment
     streams.  At 100 TB the assigned table is written partitioned by
     ``cluster`` so a query touches only nprobe/k of the data.
     """
     import numpy as np
-    import pandas as pd
 
-    frac_df = df.select(id_col, vec_col)
-    n = frac_df.count()
-    sample = (
-        frac_df.sample(min(1.0, sample_size / max(n, 1)), seed=seed)
-        .limit(sample_size)
-        .toPandas()
+    X = training_sample(df, id_col, vec_col, sample_size, seed).astype(
+        np.float64
     )
-    X = np.vstack(sample[vec_col].to_numpy()).astype(np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     k = min(n_clusters, len(X))
     rng = np.random.default_rng(seed)
@@ -702,18 +705,55 @@ def _assign_with_centroids(
     )
 
 
-def _ivf_fingerprint(df: DataFrame, id_col: str) -> tuple[int, str]:
-    """Cheap content fingerprint of an indexed table — the IVF, IVF-PQ
-    and MinHash indexes' reuse check: (row count, max id rendered as
-    string).  Count comes from parquet footers; the max is a
-    single column-pruned partial-agg scan — negligible next to a k-means
-    fit, and it catches a regenerated source table that a bare
-    path-exists check would silently miss."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.max(F.col(id_col).cast("string")).alias("mx"),
-    ).first()
-    return int(row["n"]), (row["mx"] if row["mx"] is not None else "")
+def _ivf_meta_row(n: int, max_id: str, meta_cols, n_clusters: int) -> dict:
+    """The IVF ``meta`` row, in column order: the content fingerprint
+    and the partition layout.  Reuse compares it with the stored row."""
+    return {
+        "n": int(n), "max_id": max_id,
+        "meta_cols": ",".join(meta_cols), "n_clusters": int(n_clusters),
+    }
+
+
+def _write_ivf_meta(spark, index_path: str, row: dict) -> None:
+    write_tiny_parquet(
+        spark, [tuple(row.values())],
+        "n long, max_id string, meta_cols string, n_clusters int",
+        f"{index_path}/meta",
+    )
+
+
+def _split_cols(meta_cols: str | None) -> tuple:
+    return tuple(c for c in (meta_cols or "").split(",") if c)
+
+
+def _ivf_layout(spark, index_path: str, op: str) -> tuple[dict, tuple]:
+    """(meta, meta_cols) of the index at ``index_path``.  A missing,
+    empty or legacy meta (no layout fields) leaves the directory depth
+    UNKNOWN, and writing at a guessed depth into a meta-partitioned
+    index breaks partition discovery for every later read: refuse."""
+    meta = read_meta(spark, f"{index_path}/meta")
+    if meta is None or "meta_cols" not in meta or meta.get("n_clusters") is None:
+        raise ValueError(
+            f"{op}: index at {index_path} has no recorded partition "
+            "layout (missing, empty, or written by an older ivf_build); "
+            "rebuild it with ivf_build"
+        )
+    return meta, _split_cols(meta["meta_cols"])
+
+
+def _pq_layer(spark, index_path: str, op: str) -> dict | None:
+    """The index's ``pq/meta``, or None for a plain IVF index.  A
+    ``pq/meta`` that exists but reads as None is a torn write, not "no
+    PQ layer": growing only the vectors would silently exclude the batch
+    from compressed searches forever, so it raises."""
+    path = f"{index_path}/pq/meta"
+    meta = read_meta(spark, path)
+    if meta is None and hadoop_exists(spark, path):
+        raise ValueError(
+            f"{op}: empty or unreadable pq/meta at {index_path}; "
+            "rebuild the PQ layer with ivf_pq_build_or_reuse"
+        )
+    return meta
 
 
 def ivf_build(
@@ -773,29 +813,8 @@ def ivf_build(
     # default-args append into a (cluster, label)-partitioned index
     # would write at the wrong directory depth and break partition
     # discovery for every subsequent read)
-    fp = fingerprint if fingerprint is not None else _ivf_fingerprint(df, id_col)
-    write_tiny_parquet(
-        spark,
-        [(fp[0], fp[1], ",".join(meta_cols), int(n_clusters))],
-        "n long, max_id string, meta_cols string, n_clusters int",
-        f"{index_path}/meta",
-    )
-
-
-def _ivf_meta(spark, index_path: str):
-    """(row_or_None, meta_cols tuple, n_clusters_or_None, legacy) from
-    the index's meta table.  ``legacy`` is True when the meta predates
-    the layout fields: the actual on-disk layout is then UNKNOWN —
-    meta_cols=() is an assumption, not a fact — so ivf_append must
-    refuse (appending at a guessed directory depth can corrupt a
-    meta-partitioned index) and ivf_topk treats the index as stale."""
-    row = spark.read.parquet(f"{index_path}/meta").first()
-    if row is None:
-        return None, (), None, True
-    d = row.asDict()
-    legacy = "meta_cols" not in d
-    mc = tuple(c for c in (d.get("meta_cols") or "").split(",") if c)
-    return row, mc, d.get("n_clusters"), legacy
+    fp = fingerprint if fingerprint is not None else content_fingerprint(df, id_col)
+    _write_ivf_meta(spark, index_path, _ivf_meta_row(*fp, meta_cols, n_clusters))
 
 
 def ivf_append(
@@ -830,17 +849,7 @@ def ivf_append(
     """
     import numpy as np
 
-    old, stored_cols, stored_k, legacy = _ivf_meta(spark, index_path)
-    if old is None or legacy:
-        # meta predates the layout fields (or is empty): the on-disk
-        # directory depth is unknown, and appending at a guessed depth
-        # into a meta-partitioned index mixes depths and breaks
-        # partition discovery for every subsequent read — refuse
-        raise ValueError(
-            f"ivf_append: index at {index_path} has no recorded "
-            "partition layout (built by an older ivf_build, or empty "
-            "meta); rebuild it with ivf_build before appending"
-        )
+    old, stored_cols = _ivf_layout(spark, index_path, "ivf_append")
     if meta_cols is not None and tuple(meta_cols) != stored_cols:
         raise ValueError(
             f"ivf_append: index at {index_path} is partitioned by "
@@ -862,18 +871,11 @@ def ivf_append(
     assigned.repartition("cluster", *[F.col(c) for c in meta_cols]).write.mode(
         "append"
     ).partitionBy("cluster", *meta_cols).parquet(f"{index_path}/vectors")
-    add_n, add_mx = _ivf_fingerprint(new_df, id_col)
-    write_tiny_parquet(
-        spark,
-        [(
-            int(old["n"]) + add_n,
-            max(old["max_id"] or "", add_mx),
-            ",".join(meta_cols),
-            stored_k,
-        )],
-        "n long, max_id string, meta_cols string, n_clusters int",
-        f"{index_path}/meta",
-    )
+    add_n, add_mx = content_fingerprint(new_df, id_col)
+    _write_ivf_meta(spark, index_path, _ivf_meta_row(
+        old["n"] + add_n, max(old["max_id"] or "", add_mx), meta_cols,
+        old["n_clusters"],
+    ))
 
 
 def _partition_pred(touched, meta_cols: tuple):
@@ -911,47 +913,6 @@ def _leaf_dir(spark, root: str, t, meta_cols: tuple) -> str:
         else:
             parts.append(f"{c}={utils.escapePathName(str(v))}")
     return root + "/" + "/".join(parts)
-
-
-def _hadoop_fs(spark, path: str):
-    """``(FileSystem, Path)`` for ``path`` via the Hadoop FS API, which
-    works for any scheme the session can reach."""
-    p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _hadoop_exists(spark, path: str) -> bool:
-    """Whether ``path`` exists.  The cold-index probes ask this before
-    reading an index's meta: a failing ``spark.read`` is not silent
-    once the session has run an ``observe()`` — Spark's observation
-    listener logs its full stack trace at ERROR."""
-    fs, p = _hadoop_fs(spark, path)
-    return bool(fs.exists(p))
-
-
-def _read_optional(spark, path: str):
-    """``spark.read.parquet(path)`` of an optional index table (a PQ
-    layer, stream bookkeeping), or None when the path does not exist or
-    does not read as parquet.  Existence is asked first, for the reason
-    :func:`_hadoop_exists` gives."""
-    if not _hadoop_exists(spark, path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
-
-
-def _hadoop_delete(spark, path: str) -> bool:
-    """Recursively delete ``path`` via the Hadoop FS API.  Returns
-    whether the path existed — callers that KNOW it must exist treat
-    False as an error instead of silently skipping (the
-    leaf-path-mismatch failure mode)."""
-    fs, p = _hadoop_fs(spark, path)
-    if fs.exists(p):
-        fs.delete(p, True)
-        return True
-    return False
 
 
 def ivf_delete(
@@ -996,12 +957,7 @@ def ivf_delete(
     unchanged; searches just stop seeing the erased ids (gate-checked
     across the single, batch, and filtered search paths).
     """
-    old, meta_cols, stored_k, legacy = _ivf_meta(spark, index_path)
-    if old is None or legacy:
-        raise ValueError(
-            f"ivf_delete: index at {index_path} has no recorded "
-            "partition layout; rebuild it with ivf_build first"
-        )
+    old, meta_cols = _ivf_layout(spark, index_path, "ivf_delete")
     ids = F.broadcast(delete_ids.select(id_col).distinct())
     vecs = spark.read.parquet(f"{index_path}/vectors")
     touched = (
@@ -1016,7 +972,7 @@ def ivf_delete(
     from .materialize import pin as _pin
     pred = _partition_pred(touched, meta_cols)
     layers = [(f"{index_path}/vectors", vecs)]
-    codes = _read_optional(spark, f"{index_path}/pq/codes")
+    codes = read_optional(spark, f"{index_path}/pq/codes")
     if codes is not None:  # else a plain IVF index: no compressed layer
         layers.append((f"{index_path}/pq/codes", codes))
 
@@ -1043,7 +999,7 @@ def ivf_delete(
         for t in touched:
             if tuple(t[c] for c in ("cluster", *meta_cols)) not in kept:
                 leaf = _leaf_dir(spark, root, t, meta_cols)
-                if not _hadoop_delete(spark, leaf):
+                if not hadoop_delete(spark, leaf):
                     # the partition had rows (it was touched) and no
                     # survivors, so its directory MUST exist — a miss
                     # means the constructed path doesn't match the
@@ -1058,14 +1014,11 @@ def ivf_delete(
                 emptied += 1
 
     # fingerprint recomputed from the post-delete index, written LAST
-    fp_n, fp_mx = _ivf_fingerprint(
+    fp = content_fingerprint(
         spark.read.parquet(f"{index_path}/vectors"), id_col
     )
-    write_tiny_parquet(
-        spark,
-        [(fp_n, fp_mx, ",".join(meta_cols), stored_k)],
-        "n long, max_id string, meta_cols string, n_clusters int",
-        f"{index_path}/meta",
+    _write_ivf_meta(
+        spark, index_path, _ivf_meta_row(*fp, meta_cols, old["n_clusters"])
     )
     return {
         "n_deleted": int(n_deleted),
@@ -1107,7 +1060,7 @@ def ivf_compact(
         "partitions_compacted": 0, "files_before": 0, "files_after": 0,
     }
     roots = [f"{index_path}/vectors"]
-    if _read_optional(spark, f"{index_path}/pq/codes") is not None:
+    if read_optional(spark, f"{index_path}/pq/codes") is not None:
         roots.append(f"{index_path}/pq/codes")  # else a plain IVF index
     for root in roots:
         st = compact_parquet(
@@ -1170,7 +1123,7 @@ def ivf_stream_maintainer(
     """
 
     def _ids(spark, path: str) -> set:
-        ids = _read_optional(spark, path)
+        ids = read_optional(spark, path)
         return set() if ids is None else {int(r.batch_id) for r in ids.collect()}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -1191,7 +1144,7 @@ def ivf_stream_maintainer(
                 spark.createDataFrame(
                     [(int(batch_id),)], "batch_id long"
                 ).write.mode("append").parquet(started_path)
-            if _read_optional(spark, f"{index_path}/pq/meta") is not None:
+            if _pq_layer(spark, index_path, "ivf_stream_maintainer") is not None:
                 pq_append(spark, index_path, batch_df, id_col, vec_col)
             else:
                 ivf_append(spark, index_path, batch_df, id_col, vec_col)
@@ -1297,10 +1250,10 @@ def ivf_drift(
     ``{index_path}/drift_baseline`` keyed by the index content
     fingerprint — every subsequent drift check is O(batch): one
     assignment pass over the candidate batch plus two k-row collects.
-    A torn/corrupt baseline write reads as unreadable-or-mismatched and
-    recomputes (derived cache, same convention as the feed/index reuse
-    paths); concurrent builders share the non-transactional-parquet
-    caveat documented on :func:`..sources.layout.compact_parquet`.
+    An absent, empty, non-Parquet or mismatched baseline recomputes
+    (derived cache, the index reuse rule); concurrent builders share
+    the non-transactional-parquet caveat documented on
+    :func:`..sources.layout.compact_parquet`.
 
     Returns ``{baseline_distortion, batch_distortion, distortion_ratio,
     assignment_tvd, needs_refit, reused_baseline, n_batch}``; an empty
@@ -1309,10 +1262,10 @@ def ivf_drift(
     """
     import numpy as np
 
-    row, _mc, _k, _legacy = _ivf_meta(spark, index_path)
+    row = read_meta(spark, f"{index_path}/meta")
     if row is None:
         raise ValueError(f"ivf_drift: no index meta at {index_path}")
-    fp_n, fp_max = int(row["n"]), str(row["max_id"])
+    fp_n, fp_max = row["n"], row["max_id"]
     base_path = f"{index_path}/drift_baseline"
 
     cents = spark.read.parquet(f"{index_path}/centroids").collect()
@@ -1322,20 +1275,14 @@ def ivf_drift(
     for r in cents:
         C[r.cluster] = r.centroid
 
-    base_rows = None
-    reused = False
-    try:
-        cached_df = _read_optional(spark, base_path)
-        cached = cached_df.collect() if cached_df is not None else []
-        if cached and all(
-            int(r["fp_n"]) == fp_n and str(r["fp_max"]) == fp_max
-            for r in cached
-        ):
-            base_rows = [(r["cluster"], r["cnt"], r["sum_dist"]) for r in cached]
-            reused = True
-    except Exception:
-        base_rows = None  # unreadable/absent cache: recompute below
-    if base_rows is None:
+    # every baseline row carries the fingerprint it was computed under
+    cached_df = read_optional(spark, base_path)
+    cached = cached_df.collect() if cached_df is not None else []
+    want = {"fp_n": fp_n, "fp_max": fp_max}
+    reused = bool(cached) and all(meta_matches(r.asDict(), want) for r in cached)
+    if reused:
+        base_rows = [(r["cluster"], r["cnt"], r["sum_dist"]) for r in cached]
+    else:
         vecs = spark.read.parquet(f"{index_path}/vectors")
         base_rows = _distortion_partials(
             vecs, C, vec_col, cluster_col="cluster"
@@ -1466,7 +1413,8 @@ def ivf_stats(spark, index_path: str) -> dict:
     scale — the same local-FS stand-in as
     :func:`..sources.layout.compact_parquet`).  Bounded collects:
     leaves x partition values."""
-    row, mc, n_clusters, legacy = _ivf_meta(spark, index_path)
+    row = read_meta(spark, f"{index_path}/meta") or {}
+    mc = _split_cols(row.get("meta_cols"))
     leaf = (
         spark.read.parquet(f"{index_path}/vectors")
         .groupBy("cluster", *mc)
@@ -1476,8 +1424,7 @@ def ivf_stats(spark, index_path: str) -> dict:
     sizes = [int(r["count"]) for r in leaf]
     nonempty_clusters = len({r["cluster"] for r in leaf})
     n_files, n_leaves, _ = _leaf_file_stats(f"{index_path}/vectors")
-    pm_df = _read_optional(spark, f"{index_path}/pq/meta")
-    pm = pm_df.first() if pm_df is not None else None  # None: plain IVF
+    pm = read_meta(spark, f"{index_path}/pq/meta")  # None: plain IVF
     # a present pq/meta missing m/ksub is a malformed layer — surface
     # the KeyError rather than reporting has_pq=False over real codes
     pq_meta = (
@@ -1485,9 +1432,9 @@ def ivf_stats(spark, index_path: str) -> dict:
     )
     mean_leaf = (sum(sizes) / len(sizes)) if sizes else 0.0
     return {
-        "n_vectors": int(row["n"]) if row is not None else sum(sizes),
-        "max_id": str(row["max_id"]) if row is not None else None,
-        "n_clusters": int(n_clusters) if n_clusters is not None else None,
+        "n_vectors": row.get("n", sum(sizes)),
+        "max_id": row.get("max_id"),
+        "n_clusters": row.get("n_clusters"),
         "nonempty_clusters": nonempty_clusters,
         "max_leaf": max(sizes) if sizes else 0,
         "mean_leaf": mean_leaf,
@@ -1496,7 +1443,7 @@ def ivf_stats(spark, index_path: str) -> dict:
         "leaf_dirs": n_leaves,
         "avg_files_per_leaf": (n_files / n_leaves) if n_leaves else 0.0,
         "meta_cols": list(mc),
-        "legacy_meta": bool(legacy),
+        "legacy_meta": "meta_cols" not in row,
         "has_pq": pq_meta is not None,
         "pq": pq_meta,
     }
@@ -1557,12 +1504,8 @@ def ivf_maintain(
     import shutil
     import uuid
 
-    row, meta_cols, n_clusters, legacy = _ivf_meta(spark, index_path)
-    if row is None or legacy:
-        raise ValueError(
-            f"ivf_maintain: index at {index_path} has no recorded "
-            "layout; rebuild it with ivf_build first"
-        )
+    row, meta_cols = _ivf_layout(spark, index_path, "ivf_maintain")
+
     def _maybe_compact() -> dict:
         # gate on the worst leaf's EXCESS over its byte need (the same
         # criterion compact_parquet rewrites on): a mean-files/leaf
@@ -1594,17 +1537,7 @@ def ivf_maintain(
         spark, index_path, batch_df, id_col, vec_col,
         distortion_ratio_max, tvd_max,
     )
-    pq_df = _read_optional(spark, f"{index_path}/pq/meta")
-    pq = pq_df.first() if pq_df is not None else None
-    if pq_df is not None and pq is None:
-        # a present-but-empty pq/meta is a torn write, not "no PQ
-        # layer": appending only the vector layer would silently
-        # exclude the batch from compressed searches forever (the
-        # pq_append / stream-maintainer failure convention)
-        raise ValueError(
-            f"ivf_maintain: empty pq/meta at {index_path}; "
-            "rebuild the PQ layer with ivf_pq_build_or_reuse"
-        )
+    pq = _pq_layer(spark, index_path, "ivf_maintain")
     if drift["needs_refit"]:
         fvec = F.col(vec_col).cast("array<float>").alias(vec_col)
         vecs = spark.read.parquet(f"{index_path}/vectors").select(
@@ -1616,13 +1549,13 @@ def ivf_maintain(
         staging = index_path.rstrip("/") + f".rebuild-{uuid.uuid4().hex[:8]}"
         if pq is not None:
             ivf_pq_build_or_reuse(
-                union, staging, n_clusters=int(pq["n_clusters"]),
-                m=int(pq["m"]), ksub=int(pq["ksub"]), id_col=id_col,
+                union, staging, n_clusters=pq["n_clusters"],
+                m=pq["m"], ksub=pq["ksub"], id_col=id_col,
                 vec_col=vec_col, meta_cols=tuple(meta_cols),
             )
         else:
             ivf_build(
-                union, staging, n_clusters=int(n_clusters),
+                union, staging, n_clusters=row["n_clusters"],
                 id_col=id_col, vec_col=vec_col, meta_cols=tuple(meta_cols),
             )
         # COPY (not move) the stream bookkeeping into staging: a crash
@@ -1651,7 +1584,7 @@ def ivf_maintain(
         # recompute from disk would differ only by the float32 storage
         # rounding of the vectors, ~1e-7 relative against thresholds
         # of 1.25
-        new_meta, _, _, _ = _ivf_meta(spark, index_path)
+        new_meta = read_meta(spark, f"{index_path}/meta")
         merged: dict = {}
         for c, n, s in drift["base_rows"] + drift["batch_rows"]:
             cn, cs = merged.get(c, (0, 0.0))
@@ -1659,8 +1592,8 @@ def ivf_maintain(
         write_tiny_parquet(
             spark,
             [
-                (int(c), int(n), float(s), int(new_meta["n"]),
-                 str(new_meta["max_id"]))
+                (int(c), int(n), float(s), new_meta["n"],
+                 new_meta["max_id"])
                 for c, (n, s) in sorted(merged.items())
             ],
             "cluster int, cnt long, sum_dist double, fp_n long, "
@@ -1983,26 +1916,9 @@ def ivf_build_or_reuse(
         from .materialize import scratch_dir
 
         index_path = scratch_dir("ctdc-ivf-")
-    fp = _ivf_fingerprint(df, id_col)
-    stale = not _hadoop_exists(spark, f"{index_path}/meta")
-    try:
-        if not stale:
-            m, stored_cols, stored_k, legacy = _ivf_meta(spark, index_path)
-            stale = (
-                m is None
-                or legacy
-                or (int(m["n"]), m["max_id"]) != fp
-                or stored_cols != tuple(meta_cols)
-                or stored_k != n_clusters
-            )
-    except AnalysisException:
-        # unreadable index -> build; transient storage faults
-        # (permissions, network) surface instead of silently triggering
-        # a rebuild over a valid index (the minhash reuse convention)
-        stale = True
-    except (KeyError, ValueError, TypeError):
-        stale = True
-    if stale:
+    fp = content_fingerprint(df, id_col)
+    want = _ivf_meta_row(*fp, meta_cols, n_clusters)
+    if not meta_matches(read_meta(spark, f"{index_path}/meta"), want):
         ivf_build(
             df, index_path, n_clusters, id_col, vec_col,
             sample_size=sample_size, seed=seed, fingerprint=fp,
@@ -2566,17 +2482,11 @@ def pq_topk(
     returned rows because of the re-rank; PQ affects recall only.
     Recall is governed by m/ksub/rerank; `topk_cosine` is the audit.
     """
-    import numpy as np
-
     vecs = df.select(id_col, vec_col)
-    n = vecs.count()
-    sample = (
-        vecs.sample(min(1.0, sample_size / max(n, 1)), seed=seed)
-        .limit(sample_size)
-        .toPandas()
+    books = pq_train(
+        training_sample(vecs, id_col, vec_col, sample_size, seed),
+        m=m, ksub=ksub, seed=seed,
     )
-    X = np.vstack(sample[vec_col].to_numpy())
-    books = pq_train(X, m=m, ksub=ksub, seed=seed)
     codes = pq_encode(df, books, id_col, vec_col)
     qv = query.select(vec_col).first()[0]
     cand = (
@@ -2609,66 +2519,30 @@ def ivf_pq_build_or_reuse(
     Staleness is split per layer: a PQ-parameter change (m/ksub)
     retrains and re-encodes ONLY the PQ tables — re-running the k-means
     fit + full-corpus partitioned rewrite for a codebook change would
-    be pure waste.  Reads catch AnalysisException narrowly
-    (missing/unreadable -> rebuild) so transient storage faults surface
-    instead of silently rebuilding over a valid index.  Shared by
+    be pure waste.  Each layer is stale exactly when its meta does not
+    match (:func:`.materialize.meta_matches`); the PQ layer is also
+    stale when its codebook table is present but empty.  Shared by
     ``ivf_pq_topk`` (single query) and ``ivf_pq_search_batch``.
     """
-    import numpy as np
-
     spark = df.sparkSession
     if index_path is None:
         from .materialize import scratch_dir
 
         index_path = scratch_dir("ctdc-ivfpq-")
-    fp = _ivf_fingerprint(df, id_col)
-
-    def _ivf_stale() -> bool:
-        if not _hadoop_exists(spark, f"{index_path}/meta"):
-            return True
-        try:
-            meta, stored_cols, stored_k, legacy = _ivf_meta(
-                spark, index_path
-            )
-            return (
-                meta is None
-                or legacy
-                or (int(meta["n"]), meta["max_id"]) != fp
-                or stored_k != n_clusters
-                or stored_cols != tuple(meta_cols)
-            )
-        except (AnalysisException, KeyError, ValueError, TypeError):
-            return True
-
-    def _pq_stale() -> bool:
-        if not _hadoop_exists(spark, f"{index_path}/pq/meta"):
-            return True
-        try:
-            pq_meta = spark.read.parquet(f"{index_path}/pq/meta").first()
-            pq_d = pq_meta.asDict() if pq_meta is not None else {}
-            stored_pq_cols = tuple(
-                c
-                for c in (pq_d.get("meta_cols") or "").split(",")
-                if c
-            )
-            if pq_meta is None or (
-                int(pq_meta["n_clusters"]),
-                int(pq_meta["m"]),
-                int(pq_meta["ksub"]),
-                stored_pq_cols,
-            ) != (n_clusters, m, ksub, tuple(meta_cols)):
-                return True
-            # an existing-but-EMPTY books table must rebuild, not crash
-            # the max() over zero codebook rows later
-            return (
-                spark.read.parquet(f"{index_path}/pq/books").first()
-                is None
-            )
-        except (AnalysisException, KeyError, ValueError, TypeError):
-            return True
-
-    ivf_stale = _ivf_stale()
-    pq_stale = ivf_stale or _pq_stale()
+    fp = content_fingerprint(df, id_col)
+    want = _ivf_meta_row(*fp, meta_cols, n_clusters)
+    want_pq = {
+        "n_clusters": n_clusters, "m": m, "ksub": ksub,
+        "meta_cols": want["meta_cols"],
+    }
+    ivf_stale = not meta_matches(read_meta(spark, f"{index_path}/meta"), want)
+    pq_stale = (
+        ivf_stale
+        or not meta_matches(read_meta(spark, f"{index_path}/pq/meta"), want_pq)
+        # an existing-but-EMPTY books table must rebuild, not crash the
+        # max() over zero codebook rows later
+        or read_meta(spark, f"{index_path}/pq/books") is None
+    )
     if ivf_stale:
         ivf_build(
             df, index_path, n_clusters, id_col, vec_col,
@@ -2677,15 +2551,9 @@ def ivf_pq_build_or_reuse(
         )
     if pq_stale:
         vecs = spark.read.parquet(f"{index_path}/vectors")
-        # fp[0] IS the vectors row count (the fingerprint just counted
-        # the source table the index was built from)
-        sample = (
-            vecs.sample(min(1.0, sample_size / max(fp[0], 1)), seed=seed)
-            .limit(sample_size)
-            .toPandas()
-        )
         books = pq_train(
-            np.vstack(sample[vec_col].to_numpy()), m=m, ksub=ksub, seed=seed
+            training_sample(vecs, id_col, vec_col, sample_size, seed),
+            m=m, ksub=ksub, seed=seed,
         )
         # one writer per cluster directory (same layout shuffle as
         # ivf_build — without it every encoder partition appends a file
@@ -2711,8 +2579,7 @@ def ivf_pq_build_or_reuse(
             f"{index_path}/pq/books",
         )
         write_tiny_parquet(
-            spark,
-            [(n_clusters, m, ksub, ",".join(meta_cols))],
+            spark, [tuple(want_pq.values())],
             "n_clusters int, m int, ksub int, meta_cols string",
             f"{index_path}/pq/meta",
         )
@@ -2756,30 +2623,25 @@ def pq_append(
     schedule a periodic full rebuild as the compaction step, the same
     guidance as ``ivf_append``.
     """
-    pq_df = _read_optional(spark, f"{index_path}/pq/meta")
-    pq_meta = pq_df.first() if pq_df is not None else None
+    pq_meta = read_meta(spark, f"{index_path}/pq/meta")
     if pq_meta is None:
         raise ValueError(
             f"pq_append: no PQ layer at {index_path} — build one with "
             "ivf_pq_build_or_reuse before appending"
         )
-    stored_cols = tuple(
-        c
-        for c in (pq_meta.asDict().get("meta_cols") or "").split(",")
-        if c
-    )
+    stored_cols = _split_cols(pq_meta.get("meta_cols"))
     if meta_cols is not None and tuple(meta_cols) != stored_cols:
         raise ValueError(
             f"pq_append: PQ codes at {index_path} are partitioned by "
             f"(cluster, {', '.join(stored_cols) or 'nothing'}) but the "
             f"caller expected meta_cols={tuple(meta_cols)}"
         )
-    _, ivf_cols, _, legacy = _ivf_meta(spark, index_path)
-    if legacy or ivf_cols != stored_cols:
+    _, ivf_cols = _ivf_layout(spark, index_path, "pq_append")
+    if ivf_cols != stored_cols:
         raise ValueError(
             f"pq_append: index layers at {index_path} disagree on the "
-            f"partition layout (vectors: {ivf_cols if not legacy else 'unrecorded'}, "
-            f"codes: {stored_cols}) — rebuild with ivf_pq_build_or_reuse"
+            f"partition layout (vectors: {ivf_cols}, codes: "
+            f"{stored_cols}) — rebuild with ivf_pq_build_or_reuse"
         )
     C, books = _ivf_pq_load(spark, index_path)
     assigned = _assign_with_centroids(

@@ -794,8 +794,14 @@ def remove_boilerplate_against(
     never O(corpus).  Same output contract as
     :func:`remove_boilerplate_lines`.  Raises if the index was built
     with a different ``sep`` (different line semantics)."""
+    from .materialize import read_meta
+
     spark = batch.sparkSession
-    meta = spark.read.parquet(f"{index_path}/meta").first()
+    meta = read_meta(spark, f"{index_path}/meta")
+    if meta is None:
+        raise ValueError(
+            f"remove_boilerplate_against: no index meta at {index_path}"
+        )
     if meta["sep"] != sep:
         raise ValueError(
             f"remove_boilerplate_against: index at {index_path} was "
@@ -836,13 +842,11 @@ def _drop_lines(
 ) -> DataFrame:
     """Anti-join a document frame's lines against a hot-line frame
     (column ``__norm``) and reassemble survivors in original order."""
-    from .dedup import _HOT_BROADCAST_MAX
+    from .dedup import anti_join_hot
 
     out_col = out_col or text_col
     lines = _line_table(df, id_col, text_col, sep)
-    n_hot = hot.count()
-    hot_side = F.broadcast(hot) if n_hot <= _HOT_BROADCAST_MAX else hot
-    kept = lines.join(hot_side, "__norm", "left_anti")
+    kept = anti_join_hot(lines, hot, "__norm", hot.count())
     reassembled = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(

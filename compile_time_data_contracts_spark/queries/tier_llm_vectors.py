@@ -6,7 +6,14 @@ from __future__ import annotations
 
 from ._shared import *  # noqa: F401,F403
 from ._shared import _ORACLES, _QUERIES, _ts_str, q  # noqa: F401
-from ..operators.materialize import reuse, reuse_dir, scratch_dir
+from ..operators.materialize import (
+    content_fingerprint,
+    meta_matches,
+    read_meta,
+    reuse,
+    reuse_dir,
+    scratch_dir,
+)
 
 
 def _pin_topk(df):
@@ -26,9 +33,7 @@ def _pin_topk(df):
 def _index_want(df) -> dict:
     """The ``reuse`` want of a gate index built from ``df``: its
     content fingerprint (row count, max vec_id)."""
-    from ..operators.similarity import _ivf_fingerprint
-
-    n, max_id = _ivf_fingerprint(df, "vec_id")
+    n, max_id = content_fingerprint(df, "vec_id")
     return {"n": n, "max_id": max_id}
 
 
@@ -2049,8 +2054,7 @@ def q386(spark: SparkSession, sf: str) -> DataFrame:
         handler(b0, 0)
 
     idx, _, _ = reuse("simnt", f"{sf}|simnt32", want, build)
-    m_after = spark.read.parquet(f"{idx}/meta").first()
-    redelivery_noop = {"n": m_after["n"], "max_id": m_after["max_id"]} == want
+    redelivery_noop = meta_matches(read_meta(spark, f"{idx}/meta"), want)
     # nprobe 16/32: measured 9/10 at sf0.001, 10/10 at sf0.01 — q143's
     # nprobe=8 landed exactly ON the 7/10 floor at sf0.001 here (the
     # stream slices the append half differently, so cell fill differs),

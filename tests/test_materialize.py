@@ -138,6 +138,42 @@ def test_temp_paths_have_one_home():
     ]
 
 
+def test_index_meta_has_one_home():
+    """Only operators/materialize.py reads an index's ``meta`` or
+    ``pq/meta`` table (through ``read_meta``), and no package module
+    imports an underscore name from another operators module: a private
+    helper that two modules need belongs in a public home.  Tests and
+    tools may still read the raw tables, since they check the on-disk
+    format."""
+    import ast
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    home = os.path.join("compile_time_data_contracts_spark", "operators", "materialize.py")
+    meta_read = re.compile(r"\.read\.parquet\([^)]*/meta\b", re.DOTALL)
+    found = []
+    for p in sorted((repo / "compile_time_data_contracts_spark").rglob("*.py")):
+        rel = str(p.relative_to(repo))
+        src = p.read_text()
+        if rel != home and meta_read.search(src):
+            found.append(f"{rel}: reads a meta table")
+        parts = rel[: -len(".py")].split(os.sep)
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.ImportFrom) or not node.level:
+                continue
+            base = parts[: len(parts) - node.level]
+            source = ".".join(base + ([node.module] if node.module else []))
+            private = [
+                a.name for a in node.names
+                if a.name.startswith("_") and not a.name.startswith("__")
+            ]
+            if private and source != ".".join(parts) and source.startswith(
+                "compile_time_data_contracts_spark.operators."
+            ):
+                found.append(f"{rel}:{node.lineno}: {source} {private}")
+    assert found == []
+
+
 # every registry query whose cache goes through materialize.reuse
 _REUSE_QUERIES = [
     "q112_dynamic_partition_pruning",

@@ -2019,13 +2019,47 @@ def test_near_dup_index_reuse_and_stale_rebuild(docs, tmp_path, spark):
     assert _index_file_state(idx) != st2
 
 
+def _set_meta_state(spark, path, state, keep=()):
+    """Turn the meta table at ``path`` into an ``empty`` table (its
+    schema, no row), a ``legacy`` one (only the ``keep`` columns), or an
+    ``unreadable`` one (a directory with no Parquet file in it)."""
+    import os
+    import shutil
+
+    meta = spark.read.parquet(path)
+    if state == "empty":
+        new = spark.createDataFrame([], meta.schema)
+    elif state == "legacy":
+        old = meta.select(*keep)
+        new = spark.createDataFrame([old.first()], old.schema)
+    shutil.rmtree(path)
+    if state == "unreadable":
+        os.makedirs(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+    else:
+        new.write.parquet(path)
+
+
+# per kind: the meta table the states are applied to, the columns a
+# legacy meta keeps, and the parameter change that must rebuild
+_INDEX_KINDS = {
+    "ivf": ("meta", ("n", "max_id"), {"n_clusters": 3}),
+    "ivfpq": ("pq/meta", ("n_clusters", "m", "ksub"), {"ksub": 2}),
+    "minhash": ("meta", ("n_docs", "max_id", "shingle_n"), {"bands": 8}),
+}
+
+
 @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "minhash"])
 def test_cold_index_probe_after_observe_reads_no_missing_meta(
     docs, tmp_path, spark, monkeypatch, kind
 ):
     """Once a session has run an ``observe()``, Spark's observation
     listener logs every failed read's stack trace at ERROR, so a cold
-    index probe must build without first reading the meta it lacks."""
+    index probe must build without first reading the meta it lacks.
+
+    Then every meta state on the reuse path: a matching meta is reused
+    with no index file rewritten; an empty, legacy (a field missing),
+    unreadable or parameter-changed meta rebuilds."""
     import os
 
     from pyspark.errors import AnalysisException
@@ -2053,14 +2087,107 @@ def test_cold_index_probe_after_observe_reads_no_missing_meta(
         [(i, [float(i % 5), float(i % 3), 1.0, float(i % 7)]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    if kind == "ivf":
-        ivf_build_or_reuse(vecs, idx, n_clusters=2)
-    elif kind == "ivfpq":
-        ivf_pq_build_or_reuse(vecs, idx, n_clusters=2, m=2, ksub=4)
-    else:
-        minhash_index_reuse_or_build(docs, idx)
+
+    def probe(**changed):
+        if kind == "ivf":
+            ivf_build_or_reuse(vecs, idx, **{"n_clusters": 2, **changed})
+        elif kind == "ivfpq":
+            ivf_pq_build_or_reuse(
+                vecs, idx, **{"n_clusters": 2, "m": 2, "ksub": 4, **changed}
+            )
+        else:
+            minhash_index_reuse_or_build(docs, idx, **changed)
+
+    probe()
     assert failed == []
     assert os.path.isdir(os.path.join(idx, "meta"))
+
+    table, keep, change = _INDEX_KINDS[kind]
+    for state in ("matching", "empty", "legacy", "unreadable", "changed"):
+        if state in ("empty", "legacy", "unreadable"):
+            _set_meta_state(spark, f"{idx}/{table}", state, keep)
+        before = _index_file_state(idx)
+        probe(**(change if state == "changed" else {}))
+        rebuilt = _index_file_state(idx) != before
+        assert rebuilt == (state != "matching"), state
+
+
+def test_layout_operations_refuse_an_unrecorded_layout(spark, tmp_path):
+    """Appending, erasing or maintaining an index whose meta records no
+    partition layout (legacy) would write at a guessed directory depth,
+    so each raises the one layout error; so does ``pq_append`` when the
+    vector and code layers record different layouts."""
+    from compile_time_data_contracts_spark.operators.similarity import (
+        ivf_append,
+        ivf_build,
+        ivf_delete,
+        ivf_maintain,
+        ivf_pq_build_or_reuse,
+        pq_append,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0, float(i % 7)], f"l{i % 2}")
+         for i in range(40)],
+        "vec_id long, embedding array<float>, label string",
+    )
+    batch = vecs.filter(F.col("vec_id") < 4).withColumn(
+        "vec_id", F.col("vec_id") + 100
+    )
+    idx = str(tmp_path / "ivf")
+    ivf_build(vecs, idx, n_clusters=2)
+    _set_meta_state(spark, f"{idx}/meta", "legacy", ("n", "max_id"))
+    layout = "no recorded partition layout"
+    with pytest.raises(ValueError, match=layout):
+        ivf_append(spark, idx, batch)
+    with pytest.raises(ValueError, match=layout):
+        ivf_delete(spark, idx, batch.select("vec_id"))
+    with pytest.raises(ValueError, match=layout):
+        ivf_maintain(spark, idx, batch)
+
+    pq = str(tmp_path / "ivfpq")
+    ivf_pq_build_or_reuse(
+        vecs, pq, n_clusters=2, m=2, ksub=4, meta_cols=("label",)
+    )
+    meta = spark.read.parquet(f"{pq}/meta")
+    spark.createDataFrame(
+        [meta.first().asDict() | {"meta_cols": ""}], meta.schema
+    ).write.mode("overwrite").parquet(f"{pq}/meta")
+    with pytest.raises(ValueError, match="disagree on the partition layout"):
+        pq_append(spark, pq, batch)
+    _set_meta_state(spark, f"{pq}/meta", "legacy", ("n", "max_id"))
+    with pytest.raises(ValueError, match=layout):
+        pq_append(spark, pq, batch)
+
+
+def test_index_training_is_reproducible(spark, tmp_path):
+    """Two builds of the same multi-file, multi-partition frame in one
+    session train on the same sample and write identical centroids and
+    codebooks."""
+    import numpy as np
+
+    from compile_time_data_contracts_spark.operators.similarity import (
+        ivf_pq_build_or_reuse,
+    )
+
+    rng = np.random.default_rng(5)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(3000)],
+        "vec_id long, embedding array<float>",
+    ).repartition(8).write.parquet(src)
+    df = spark.read.parquet(src)
+
+    def trained(path):
+        ivf_pq_build_or_reuse(
+            df, path, n_clusters=6, m=2, ksub=8, sample_size=400
+        )
+        return (
+            spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect(),
+            spark.read.parquet(f"{path}/pq/books").orderBy("s", "c").collect(),
+        )
+
+    assert trained(str(tmp_path / "a")) == trained(str(tmp_path / "b"))
 
 
 def test_near_dup_against_rejects_wrong_id_col(docs, tmp_path, spark):
