@@ -215,21 +215,29 @@ def hadoop_delete(spark, path: str) -> bool:
 def read_optional(spark, path: str) -> DataFrame | None:
     """``spark.read.parquet(path)`` of an optional table, or None when
     the path does not exist (asked first, for the reason
-    :func:`hadoop_exists` gives) or does not read as Parquet."""
+    :func:`hadoop_exists` gives) or holds no Parquet to read: no data
+    file (``AnalysisException``) or a file that is not Parquet, such as
+    a part file a torn write truncated (a footer-read failure).  Any
+    other error (a storage fault) surfaces: it must not trigger a
+    rebuild over a valid index."""
+    from py4j.protocol import Py4JJavaError
+
     if not hadoop_exists(spark, path):
         return None
     try:
         return spark.read.parquet(path)
     except AnalysisException:
         return None
+    except Py4JJavaError as e:
+        if "is not a Parquet file" in str(e):
+            return None
+        raise
 
 
 def read_meta(spark, path: str) -> dict | None:
     """The one-row Parquet meta table at ``path`` as a dict, or None
-    when the path does not exist, does not read as Parquet, or holds no
-    row.  Reuse is ``meta_matches(read_meta(spark, path), want)``.  Any
-    other error (a storage fault) surfaces: it must not trigger a
-    rebuild over a valid index."""
+    when :func:`read_optional` finds no table there or it holds no row.
+    Reuse is ``meta_matches(read_meta(spark, path), want)``."""
     df = read_optional(spark, path)
     row = df.first() if df is not None else None
     return row.asDict() if row is not None else None
@@ -250,7 +258,12 @@ def content_fingerprint(df: DataFrame, id_col: str) -> tuple[int, str]:
 
 
 def training_sample(
-    df: DataFrame, id_col: str, vec_col: str, n: int, seed: int
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n: int,
+    seed: int,
+    rows: int | None = None,
 ) -> "np.ndarray":
     """The ``vec_col`` vectors of up to ``n`` rows of ``df`` as one
     matrix: the rows with the smallest ``xxhash64(id, seed)``, stacked
@@ -258,13 +271,24 @@ def training_sample(
     on itself as given.  The same input files give the same matrix on
     every run, so k-means centroids and PQ codebooks trained on it are
     reproducible (a ``sample(frac).limit(n)`` draw takes rows in
-    shuffle-arrival order).  Spark plans the ordered limit as a
-    per-partition top-``n`` (``TakeOrderedAndProject``); no row count."""
+    shuffle-arrival order).
+
+    The driver receives about ``n`` rows, not one top-``n`` per
+    partition: rows are first kept by a hash range sized from the row
+    count (``rows`` when the caller knows it, else counted) to hold
+    ``n`` with five standard deviations to spare, and the ordered limit
+    runs over those."""
     import numpy as np
 
+    h = F.xxhash64(F.col(id_col), F.lit(seed))
+    rows = df.count() if rows is None else rows
+    frac = (n + 5 * n**0.5 + 20) / max(rows, 1)
+    if frac < 1.0:
+        # xxhash64 is uniform over the signed 64-bit range
+        df = df.where(h < F.lit(-(2**63) + int(frac * 2**64)))
     pdf = (
         df.withColumn("__pos", F.monotonically_increasing_id())
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
+        .orderBy(h, F.col(id_col))
         .limit(n)
         .select("__pos", vec_col)
         .toPandas()

@@ -642,10 +642,11 @@ def ivf_assign(
     broadcast matmul per Arrow batch.
 
     Returns (assigned_df with a ``cluster`` column, centroids array).
-    The driver never holds more than ``sample_size`` vectors, the same
-    ones on every run (:func:`.materialize.training_sample`); assignment
-    streams.  At 100 TB the assigned table is written partitioned by
-    ``cluster`` so a query touches only nprobe/k of the data.
+    The driver receives about ``sample_size`` vectors and keeps at most
+    that many, the same ones on every run
+    (:func:`.materialize.training_sample`); assignment streams.  At
+    100 TB the assigned table is written partitioned by ``cluster`` so a
+    query touches only nprobe/k of the data.
     """
     import numpy as np
 
@@ -756,6 +757,21 @@ def _pq_layer(spark, index_path: str, op: str) -> dict | None:
     return meta
 
 
+def _load_centroids(spark, index_path: str, op: str) -> "np.ndarray":
+    """The index's centroid matrix, row ``c`` holding cluster ``c``:
+    sized by the max cluster id, not the row count, so an index whose
+    empty cells were dropped still fits ``C[r.cluster]``."""
+    import numpy as np
+
+    cent = spark.read.parquet(f"{index_path}/centroids").collect()
+    if not cent:
+        raise ValueError(f"{op}: no centroids at {index_path}")
+    C = np.zeros((max(r.cluster for r in cent) + 1, len(cent[0].centroid)))
+    for r in cent:
+        C[r.cluster] = r.centroid
+    return C
+
+
 def ivf_build(
     df: DataFrame,
     index_path: str,
@@ -847,8 +863,6 @@ def ivf_append(
     scan cost — so schedule a periodic `ivf_build` as the compaction
     step (the persisted layout makes that a drop-in overwrite).
     """
-    import numpy as np
-
     old, stored_cols = _ivf_layout(spark, index_path, "ivf_append")
     if meta_cols is not None and tuple(meta_cols) != stored_cols:
         raise ValueError(
@@ -857,14 +871,7 @@ def ivf_append(
             f"caller expected meta_cols={tuple(meta_cols)}"
         )
     meta_cols = stored_cols
-    cents = (
-        spark.read.parquet(f"{index_path}/centroids")
-        .orderBy("cluster")
-        .collect()
-    )
-    if not cents:
-        raise ValueError(f"ivf_append: no centroids at {index_path}")
-    C = np.vstack([np.asarray(r.centroid, dtype=np.float64) for r in cents])
+    C = _load_centroids(spark, index_path, "ivf_append")
     assigned = _assign_with_centroids(new_df, C, id_col, vec_col, meta_cols)
     # same one-writer-per-leaf shuffle as ivf_build: an append batch
     # otherwise adds O(batch_partitions) files to every touched cell
@@ -1260,20 +1267,13 @@ def ivf_drift(
     batch carries no signal and reports ``needs_refit=False`` with null
     batch stats.
     """
-    import numpy as np
-
     row = read_meta(spark, f"{index_path}/meta")
     if row is None:
         raise ValueError(f"ivf_drift: no index meta at {index_path}")
     fp_n, fp_max = row["n"], row["max_id"]
     base_path = f"{index_path}/drift_baseline"
 
-    cents = spark.read.parquet(f"{index_path}/centroids").collect()
-    if not cents:
-        raise ValueError(f"ivf_drift: no centroids at {index_path}")
-    C = np.zeros((len(cents), len(cents[0].centroid)))
-    for r in cents:
-        C[r.cluster] = r.centroid
+    C = _load_centroids(spark, index_path, "ivf_drift")
 
     # every baseline row carries the fingerprint it was computed under
     cached_df = read_optional(spark, base_path)
@@ -1413,7 +1413,11 @@ def ivf_stats(spark, index_path: str) -> dict:
     scale — the same local-FS stand-in as
     :func:`..sources.layout.compact_parquet`).  Bounded collects:
     leaves x partition values."""
-    row = read_meta(spark, f"{index_path}/meta") or {}
+    row = read_meta(spark, f"{index_path}/meta")
+    if row is None:
+        if not hadoop_exists(spark, f"{index_path}/meta"):
+            raise ValueError(f"ivf_stats: no index meta at {index_path}")
+        row = {}  # an empty or unreadable meta: report what is on disk
     mc = _split_cols(row.get("meta_cols"))
     leaf = (
         spark.read.parquet(f"{index_path}/vectors")
@@ -1637,10 +1641,7 @@ def ivf_search(
     selective filter cannot under-deliver results."""
     import numpy as np
 
-    cent = spark.read.parquet(f"{index_path}/centroids").collect()
-    C = np.zeros((len(cent), len(cent[0].centroid)))
-    for r in cent:
-        C[r.cluster] = r.centroid
+    C = _load_centroids(spark, index_path, "ivf_search")
     qv = np.array(query.select(vec_col).first()[0], dtype=np.float64)
     qn = qv / max(np.linalg.norm(qv), 1e-12)
     # stable: centroid-score ties resolve identically to the batch
@@ -1741,13 +1742,7 @@ def ivf_search_batch(
 
     query_id_col = query_id_col or id_col
     query_filter_cols = tuple(query_filter_cols)
-    cent = spark.read.parquet(f"{index_path}/centroids").collect()
-    if not cent:
-        raise ValueError(f"ivf_search_batch: no centroids at {index_path}")
-    n_clusters = max(r.cluster for r in cent) + 1
-    C = np.zeros((n_clusters, len(cent[0].centroid)))
-    for r in cent:
-        C[r.cluster] = r.centroid
+    C = _load_centroids(spark, index_path, "ivf_search_batch")
 
     q_ids, Q, probe_mask, _union, qf_vals = _probe_union(
         C, queries, nprobe, vec_col, query_id_col, "ivf_search_batch",
@@ -2551,8 +2546,12 @@ def ivf_pq_build_or_reuse(
         )
     if pq_stale:
         vecs = spark.read.parquet(f"{index_path}/vectors")
+        # fp[0] IS the vectors row count: the index was built from the
+        # table the fingerprint just counted
         books = pq_train(
-            training_sample(vecs, id_col, vec_col, sample_size, seed),
+            training_sample(
+                vecs, id_col, vec_col, sample_size, seed, rows=fp[0]
+            ),
             m=m, ksub=ksub, seed=seed,
         )
         # one writer per cluster directory (same layout shuffle as
@@ -2665,14 +2664,7 @@ def _ivf_pq_load(spark, index_path: str):
     index — both metadata-sized (n_clusters x dim; m x ksub x dsub)."""
     import numpy as np
 
-    cent = spark.read.parquet(f"{index_path}/centroids").collect()
-    if not cent:
-        raise ValueError(f"_ivf_pq_load: no centroids at {index_path}")
-    # size by max id, not row count: a future append/compaction that
-    # drops empty cells must not make C too small for C[r.cluster]
-    C = np.zeros((max(r.cluster for r in cent) + 1, len(cent[0].centroid)))
-    for r in cent:
-        C[r.cluster] = r.centroid
+    C = _load_centroids(spark, index_path, "_ivf_pq_load")
     book_rows = spark.read.parquet(f"{index_path}/pq/books").collect()
     mm = max(r.s for r in book_rows) + 1
     kk = max(r.c for r in book_rows) + 1

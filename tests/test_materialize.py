@@ -234,3 +234,45 @@ def test_reuse_path_job_count(
     first = marker_job()
     q(spark, sf_dir).write.format("noop").mode("overwrite").save()
     assert marker_job() - first - 1 == jobs
+
+
+def test_training_sample_sends_the_driver_about_n_rows(spark):
+    """Eight partitions of 1 000 rows and n = 500 vectors of 64 doubles:
+    a per-partition top-n would send the driver 4 000 vectors (about
+    2 MB), past a 1 MB ``spark.driver.maxResultSize``.  The hash range
+    sends about n, and the sample is still the n rows with the smallest
+    hash, in the frame's row order."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from compile_time_data_contracts_spark.operators.materialize import (
+        training_sample,
+    )
+
+    df = spark.range(0, 8000, 1, 8).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(64)), lambda x: F.rand(7) + x
+        ).alias("embedding"),
+    )
+    # the live SparkConf: each new task set reads its result-size limit
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.driver.maxResultSize"
+    had = conf.getOption(key)
+    conf.set(key, "1m")
+    try:
+        X = training_sample(df, "vec_id", "embedding", 500, 42)
+    finally:
+        if had.isDefined():
+            conf.set(key, had.get())
+        else:
+            conf.remove(key)
+    ids = [
+        r.vec_id
+        for r in df.orderBy(F.xxhash64("vec_id", F.lit(42)), "vec_id")
+        .limit(500)
+        .select("vec_id")
+        .collect()
+    ]
+    want = df.where(F.col("vec_id").isin(ids)).orderBy("vec_id").collect()
+    assert np.array_equal(X, np.array([r.embedding for r in want]))

@@ -2021,8 +2021,10 @@ def test_near_dup_index_reuse_and_stale_rebuild(docs, tmp_path, spark):
 
 def _set_meta_state(spark, path, state, keep=()):
     """Turn the meta table at ``path`` into an ``empty`` table (its
-    schema, no row), a ``legacy`` one (only the ``keep`` columns), or an
-    ``unreadable`` one (a directory with no Parquet file in it)."""
+    schema, no row), a ``legacy`` one (only the ``keep`` columns), an
+    ``unreadable`` one (a directory with no Parquet file in it), or a
+    ``not_parquet`` one (a part file that is not Parquet, as a torn
+    write leaves)."""
     import os
     import shutil
 
@@ -2036,6 +2038,10 @@ def _set_meta_state(spark, path, state, keep=()):
     if state == "unreadable":
         os.makedirs(path)
         open(os.path.join(path, "_SUCCESS"), "w").close()
+    elif state == "not_parquet":
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0.parquet"), "w") as fh:
+            fh.write("truncated")
     else:
         new.write.parquet(path)
 
@@ -2059,7 +2065,7 @@ def test_cold_index_probe_after_observe_reads_no_missing_meta(
 
     Then every meta state on the reuse path: a matching meta is reused
     with no index file rewritten; an empty, legacy (a field missing),
-    unreadable or parameter-changed meta rebuilds."""
+    unreadable, not-Parquet or parameter-changed meta rebuilds."""
     import os
 
     from pyspark.errors import AnalysisException
@@ -2103,8 +2109,9 @@ def test_cold_index_probe_after_observe_reads_no_missing_meta(
     assert os.path.isdir(os.path.join(idx, "meta"))
 
     table, keep, change = _INDEX_KINDS[kind]
-    for state in ("matching", "empty", "legacy", "unreadable", "changed"):
-        if state in ("empty", "legacy", "unreadable"):
+    states = ("matching", "empty", "legacy", "unreadable", "not_parquet")
+    for state in (*states, "changed"):
+        if state in states[1:]:
             _set_meta_state(spark, f"{idx}/{table}", state, keep)
         before = _index_file_state(idx)
         probe(**(change if state == "changed" else {}))

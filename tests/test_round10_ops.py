@@ -727,6 +727,30 @@ def test_drift_empty_batch_carries_no_signal(spark, drift_index):
     assert d["batch_distortion"] is None
 
 
+def test_drift_recomputes_a_torn_baseline(spark, drift_index):
+    """A baseline whose part file is not Parquet (a torn write) is a
+    stale derived cache: the next check recomputes and rewrites it."""
+    import os
+    import shutil
+
+    from compile_time_data_contracts_spark.operators.similarity import (
+        ivf_drift,
+    )
+
+    idx, df = drift_index
+    in_dist = df.filter(F.col("vec_id") % 4 < 2)
+    first = ivf_drift(spark, idx, in_dist)
+    base = os.path.join(idx, "drift_baseline")
+    shutil.rmtree(base)
+    os.makedirs(base)
+    with open(os.path.join(base, "part-0.parquet"), "w") as fh:
+        fh.write("truncated")
+    d = ivf_drift(spark, idx, in_dist)
+    assert not d["reused_baseline"]
+    assert d["baseline_distortion"] == first["baseline_distortion"]
+    assert ivf_drift(spark, idx, in_dist)["reused_baseline"]
+
+
 def test_ivf_stats_fresh_build(spark, drift_index):
     from compile_time_data_contracts_spark.operators.similarity import (
         ivf_stats,
@@ -761,6 +785,15 @@ def test_ivf_stats_leaf_unit_is_the_partition_dir(spark, tenant_index):
     assert st["leaf_dirs"] == 4  # 2 clusters x 2 labels
     assert abs(st["mean_leaf"] * 4 - 40) < 1e-9
     assert st["meta_cols"] == ["label"]
+
+
+def test_ivf_stats_refuses_a_path_with_no_index(spark, tmp_path):
+    from compile_time_data_contracts_spark.operators.similarity import (
+        ivf_stats,
+    )
+
+    with pytest.raises(ValueError, match="no index meta"):
+        ivf_stats(spark, str(tmp_path / "no_index"))
 
 
 def test_ivf_stats_sees_pq_layer(spark, tmp_path):
